@@ -453,7 +453,7 @@ def pipeline_throughput(spark, sf_dir: str, tmp_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from kafka_stream_service_spark.codec import encode_message, message_struct
-    from kafka_stream_service_spark.pipeline import run_pipeline_batch, run_pipeline_fused
+    from kafka_stream_service_spark.pipeline import run_pipeline_batch
     from kafka_stream_service_spark.tables import tables
     from kafka_stream_service_spark.transform import uppercase_function
 
@@ -467,9 +467,8 @@ def pipeline_throughput(spark, sf_dir: str, tmp_dir: str) -> dict:
     framed = spark.read.parquet(tmp_dir)
     n = framed.count()
 
-    # headline = the fused one-Arrow-pass pipeline (production replication
-    # path, byte-identical to staged — parity-tested in test_pipeline.py);
-    # the staged 3-crossing form is reported alongside for comparison
+    # the spine's one-Arrow-pass body (parity-tested against a driver-side
+    # codec loop in test_pipeline.py)
     def best_of(fn, runs: int = 3) -> float:
         sec = None
         for _ in range(runs):
@@ -479,8 +478,7 @@ def pipeline_throughput(spark, sf_dir: str, tmp_dir: str) -> dict:
             sec = elapsed if sec is None else min(sec, elapsed)
         return sec
 
-    fused = best_of(run_pipeline_fused)
-    staged = best_of(run_pipeline_batch)
+    sec = best_of(run_pipeline_batch)
 
     # the reference's ACTUAL architecture: the per-record function hosted
     # in an external server, reached over a real gRPC/HTTP-2 TCP hop
@@ -509,9 +507,8 @@ def pipeline_throughput(spark, sf_dir: str, tmp_dir: str) -> dict:
         srv.close()
     return {
         "msgs": n,
-        "sec": round(fused, 3),
-        "msgs_per_sec": round(n / fused),
-        "staged_msgs_per_sec": round(n / staged),
+        "sec": round(sec, 3),
+        "msgs_per_sec": round(n / sec),
         "remote_grpc_hop_msgs_per_sec": round(n / remote_sec),
     }
 

@@ -11,11 +11,13 @@ SURVEY.md §1.2):
                     value blob = JSON array of strings (UTF-8)
     rest          : opaque payload bytes
 
-The codec runs as Arrow-batched pandas UDFs (`encode_message` /
-`decode_message`) so the per-record Python cost is amortized per batch; the
-pure-Python `encode_py` / `decode_py` pair is the single source of truth
-and what the unit tests golden-check against the reference's round-trip
-test (MessageSerializerTests.java:37-49).
+The spine's body (pipeline.py) calls the prefix-cached pair
+`decode_with_prefix_cache` / `encode_with_prefix_cache` per record inside
+its one Arrow-batched map; `encode_message` / `decode_message` wrap the
+same pair as pandas UDFs for queries that frame a column outside the
+spine. The pure-Python `encode_py` / `decode_py` pair is the single source
+of truth and what the unit tests golden-check against the reference's
+round-trip test (MessageSerializerTests.java:37-49).
 """
 
 from __future__ import annotations
@@ -91,30 +93,50 @@ def decode_py(data: bytes) -> tuple[dict[str, list[str]], bytes]:
     return headers, data[pos:]
 
 
+# Each prefix cache holds at most this many header shapes; past it, new
+# shapes are still coded, just not memoized, so a stream whose every
+# record carries a unique header (a correlation id) keeps the cache — and
+# the Python worker — at a fixed size for the life of a task.
+PREFIX_CACHE_MAX = 1024
+
+
+def _prefix_len(data: bytes) -> int:
+    """Length of the marker + header section, found by walking the
+    length fields alone (no UTF-8 or JSON work)."""
+    pos = 2
+    for _ in range(data[1]):
+        pos += 1 + data[pos]
+        pos += 4 + int.from_bytes(data[pos : pos + 4], "big", signed=True)
+    return pos
+
+
 def decode_with_prefix_cache(data: bytes, cache: dict) -> tuple[dict[str, list[str]], bytes]:
     """Decode one message, memoizing parsed headers per distinct wire
     PREFIX (marker + header section) — the decode-side mirror of
     ``encode_with_prefix_cache``. Real streams carry a handful of header
     shapes across millions of records; after the first full parse of a
-    shape, every later frame with the same prefix decodes as one
-    ``startswith`` + payload slice (measured ~6x over ``decode_py`` on
-    the bench frame mix).
+    shape, every later frame with the same prefix decodes as a walk over
+    the length fields, one dict lookup and a payload slice. A miss costs
+    the same walk on top of ``decode_py``.
 
-    Safety: a header section parses UNIQUELY — the count byte and the
-    per-header length fields delimit it — so if ``data`` starts with a
-    cached prefix, a full parse would reproduce exactly that prefix's
-    headers and payload offset; at most one cached prefix can match.
+    Safety: the walk reads only bytes inside the prefix it delimits, so
+    a frame whose walked prefix equals a cached one starts with it, and
+    a full parse would reproduce exactly that prefix's headers and
+    payload offset. A malformed frame never matches: only prefixes that
+    ``decode_py`` parsed are cached, and it raises its own error.
     The returned dict is SHARED across frames with the same prefix:
-    callers must treat it as frozen. Both MessageFunction paths already
-    satisfy this (uppercase builds a new frame; RemoteFunction copies
-    before the wire) — in-place header mutation has never been part of
-    the transform contract.
+    callers must treat it as frozen (see ``transform.MessageFunction``).
     """
-    for prefix, hdrs in cache.items():
-        if data.startswith(prefix):
-            return hdrs, data[len(prefix):]
+    if data[:1] == b"\xff":
+        try:
+            n = _prefix_len(data)
+        except IndexError:  # truncated header section
+            n = -1
+        hdrs = cache.get(data[:n]) if 0 < n <= len(data) else None
+        if hdrs is not None:
+            return hdrs, data[n:]
     h, p = decode_py(data)
-    if len(cache) < 1024:  # bound the per-worker cache; past it, parse
+    if len(cache) < PREFIX_CACHE_MAX:
         cache[data[: len(data) - len(p)]] = h
     return h, p
 
@@ -123,14 +145,15 @@ def encode_with_prefix_cache(headers, payload, cache: dict) -> bytes:
     """Encode one message, memoizing the wire prefix (marker + header
     section) per distinct header set — the prefix is a pure function of
     the headers, which repeat across records, so only the payload concat
-    runs per record. SINGLE implementation shared by the staged
-    `encode_message` UDF and the fused pipeline: the byte-parity
-    contract between them depends on this being one code path."""
+    runs per record. SINGLE implementation shared by the
+    `encode_message` UDF and the pipeline body, so both emit the same
+    bytes for the same message. Bounded like the decode cache."""
     key = tuple((k, tuple(v)) for k, v in (headers or {}).items())
     prefix = cache.get(key)
     if prefix is None:
         prefix = encode_py(headers, b"")
-        cache[key] = prefix
+        if len(cache) < PREFIX_CACHE_MAX:
+            cache[key] = prefix
     return prefix + (bytes(payload) if payload is not None else b"")
 
 
@@ -153,42 +176,6 @@ def decode_message(value: pd.Series) -> pd.DataFrame:
         headers.append(h)
         payloads.append(p)
     return pd.DataFrame({"headers": headers, "payload": payloads})
-
-
-# struct<headers, payload, error string> — the lenient decode shape
-# (a StructType, not a DDL string: pandas_udf decorators at import time
-# have no active session to parse DDL with)
-MESSAGE_SCHEMA_LENIENT = T.StructType(
-    list(MESSAGE_SCHEMA.fields) + [T.StructField("error", T.StringType())]
-)
-
-
-@F.pandas_udf(MESSAGE_SCHEMA_LENIENT)
-def decode_message_lenient(value: pd.Series) -> pd.DataFrame:
-    """binary -> struct<headers, payload, error> that never throws.
-
-    The reference deserializer raises on a malformed frame
-    (MessageDeserializer.java:52 asserts the 0xff marker), which kills
-    the whole stream — and a DETERMINISTIC poison message would then
-    trap the R14 restart loop in an infinite crash cycle. The
-    production-grade behavior at scale is a dead-letter lane: decode
-    failures become (null, null, error-string) rows the pipeline routes
-    to a DLQ sink while good rows flow on (see
-    pipeline.run_pipeline_with_dlq). ``error`` is NULL on success, so
-    filtering is a plain column predicate.
-    """
-    headers, payloads, errors = [], [], []
-    for data in value:
-        try:
-            h, p = decode_py(bytes(data) if data is not None else b"")
-            headers.append(h)
-            payloads.append(p)
-            errors.append(None)
-        except Exception as exc:  # malformed frame — capture, don't crash
-            headers.append(None)
-            payloads.append(None)
-            errors.append(f"{type(exc).__name__}: {exc}")
-    return pd.DataFrame({"headers": headers, "payload": payloads, "error": errors})
 
 
 def message_struct(headers: Column, payload: Column) -> Column:

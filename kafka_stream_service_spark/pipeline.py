@@ -4,11 +4,15 @@ This is the reference's entire dataflow (StreamsApplication.java:146-163)
 as a composable Spark pipeline:
 
     Kafka/file source (R1-R5)
-      -> decode_message over `value` (R6)
-      -> project to Message (R7)
-      -> transform slot: mapInPandas function / identity bypass (R8-R9)
-      -> null key + encode_message (R10-R11)
+      -> one mapInPandas body per Arrow batch (R6-R11):
+         decode the `value` frame to a Message, apply the function slot
+         (or the identity bypass), re-key to null and encode
       -> sink: Kafka at-least-once, or foreachBatch exactly-once (R12)
+
+Streaming, batch and dead-letter pipelines all run that single body, so
+headers cross the Arrow boundary once (as wire bytes) per micro-batch.
+The reference runs decode -> fn -> encode pipelined per record the same
+way; the body keeps its 1-in-1-out order within each batch.
 
 Ordering semantics delta (documented, SURVEY.md §7 "What's hard" #2): the
 reference is globally ordered (single thread + sequential concatMap); Spark
@@ -18,16 +22,17 @@ the intentional scale upgrade.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .codec import decode_message, encode_message
+from .codec import decode_with_prefix_cache, encode_with_prefix_cache
 from .eos import ForeachBatchIdempotentWriter, kafka_transactional_batch_writer
 from .sources import stream_file_source, stream_kafka_source, write_kafka_sink, write_memory_sink
-from .transform import FunctionConfig, MessageFunction, transform_messages
+from .transform import FunctionConfig, MessageFunction
 
 
 @dataclass
@@ -59,36 +64,63 @@ class PipelineConfig:
 WIRE_FRAME_DDL = "key binary, value binary"
 
 
-def decode_stage(frames: DataFrame, observe: bool = True) -> DataFrame:
-    """R6+R7: wire frames -> Message columns (headers, payload).
+def _spine(
+    frames: DataFrame,
+    fn: MessageFunction | None,
+    enabled: bool,
+    dead_letters: bool = False,
+) -> DataFrame:
+    """The one decode -> fn -> encode body (R6-R11), as ONE mapInPandas.
 
-    Keeps only the decoded value, dropping the envelope — exactly
-    ``records.map(ConsumerRecord::value)`` (StreamsApplication.java:176).
+    Per Arrow batch: decode each ``value`` frame (``records.map(
+    ConsumerRecord::value)``, StreamsApplication.java:176), hand the
+    (headers, payload) batch to ``fn`` unless the slot is disabled (R9,
+    ``grpc.enabled=false``), then encode each message under a null key
+    (``new ProducerRecord<>("replies", null, record)``, :194). Binary
+    in, binary out: the ``map<string,array<string>>`` headers never
+    leave the Python worker. Both codec directions memoize per header
+    shape for the life of the task.
 
-    ``observe`` attaches row-level metrics (record count, payload bytes)
-    to each micro-batch — the Spark-native form of the reference's
-    ``records.log()`` tap (R17, StreamsApplication.java:147): metrics
-    surface in every QueryProgressEvent under observedMetrics["decoded"].
+    A malformed frame raises, as the reference's deserializer does
+    (MessageDeserializer.java:52), unless ``dead_letters`` is set: then
+    it becomes a row carrying the raw frame and the decode error, ``fn``
+    runs on the good rows only, and the output gains an ``error`` column
+    that is NULL on every good row.
     """
-    if observe:
-        frames = frames.observe(
-            "decoded",
-            F.count(F.lit(1)).alias("n_records"),
-            F.coalesce(F.sum(F.length("value")), F.lit(0)).alias("wire_bytes"),
-        )
-    return frames.select(decode_message(F.col("value")).alias("msg")).select(
-        "msg.headers", "msg.payload"
-    )
+    apply = fn if enabled else None
 
+    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # per-executor-task setup happens here (a RemoteFunction connects
+        # lazily on its first batch); teardown when the iterator ends
+        prefix_cache: dict[tuple, bytes] = {}
+        decode_cache: dict[bytes, dict] = {}
+        for pdf in batches:
+            headers, payloads, dead, errors = [], [], [], []
+            for data in pdf["value"]:
+                try:
+                    h, p = decode_with_prefix_cache(bytes(data), decode_cache)
+                except Exception as exc:
+                    if not dead_letters:
+                        raise
+                    dead.append(data)
+                    errors.append(f"{type(exc).__name__}: {exc}")
+                    continue
+                headers.append(h)
+                payloads.append(p)
+            batch = pd.DataFrame({"headers": headers, "payload": payloads})
+            if apply is not None and len(batch):
+                batch = apply(batch)
+            values = [
+                encode_with_prefix_cache(h, p, prefix_cache)
+                for h, p in zip(batch["headers"], batch["payload"])
+            ]
+            out = {"key": [None] * (len(values) + len(dead)), "value": values + dead}
+            if dead_letters:
+                out["error"] = [None] * len(values) + errors
+            yield pd.DataFrame(out)
 
-def encode_stage(messages: DataFrame) -> DataFrame:
-    """R10+R11: Message columns -> (null key, framed value) — the
-    ``new ProducerRecord<>("replies", null, record)`` shape
-    (StreamsApplication.java:194)."""
-    return messages.select(
-        F.lit(None).cast("binary").alias("key"),
-        encode_message(F.struct("headers", "payload")).alias("value"),
-    )
+    schema = WIRE_FRAME_DDL + (", error string" if dead_letters else "")
+    return frames.select("value").mapInPandas(body, schema=schema)
 
 
 def build_pipeline(
@@ -96,7 +128,13 @@ def build_pipeline(
     cfg: PipelineConfig,
     fn: MessageFunction | None = None,
 ) -> DataFrame:
-    """Assemble the full (streaming) dataflow; returns the sink-ready frame."""
+    """Assemble the full (streaming) dataflow; returns the sink-ready frame.
+
+    The ``decoded`` tap counts each micro-batch's frames and wire bytes
+    — the Spark-native form of the reference's ``records.log()`` (R17,
+    StreamsApplication.java:147): the metrics surface in every
+    QueryProgressEvent under ``observedMetrics["decoded"]``.
+    """
     if cfg.source == "kafka":
         frames = stream_kafka_source(
             spark,
@@ -105,18 +143,16 @@ def build_pipeline(
             max_offsets_per_trigger=cfg.max_offsets_per_trigger,
         )
     elif cfg.source == "files":
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [T.StructField("key", T.BinaryType()), T.StructField("value", T.BinaryType())]
-        )
-        frames = stream_file_source(spark, cfg.source_path, schema)
+        frames = stream_file_source(spark, cfg.source_path, WIRE_FRAME_DDL)
     else:
         raise ValueError(f"unknown source {cfg.source!r}")
 
-    messages = decode_stage(frames)
-    transformed = transform_messages(messages, fn, enabled=cfg.function.enabled)
-    return encode_stage(transformed)
+    frames = frames.observe(
+        "decoded",
+        F.count(F.lit(1)).alias("n_records"),
+        F.coalesce(F.sum(F.length("value")), F.lit(0)).alias("wire_bytes"),
+    )
+    return _spine(frames, fn, cfg.function.enabled)
 
 
 def start_pipeline(spark: SparkSession, cfg: PipelineConfig, fn: MessageFunction | None = None):
@@ -166,7 +202,7 @@ def run_pipeline_batch(
 ) -> DataFrame:
     """The same dataflow on a bounded frame (finite replay) — used by the
     parity tests and by any backfill over landed data."""
-    return encode_stage(transform_messages(decode_stage(frames), fn, enabled=enabled))
+    return _spine(frames, fn, enabled)
 
 
 def run_pipeline_with_dlq(
@@ -178,79 +214,22 @@ def run_pipeline_with_dlq(
 
     The reference's strict deserializer kills the stream on one
     malformed frame, and its restart loop (R14) would then crash-cycle
-    forever on a deterministic poison record. Here the decode is
-    lenient: failures split into a dead-letter frame carrying the raw
-    wire bytes plus the decode error (ready for a DLQ topic/path sink
-    and offline inspection), while good rows continue through
-    transform -> encode unchanged.
+    forever on a deterministic poison record. Here decode failures
+    split into a dead-letter frame carrying the raw wire bytes plus the
+    decode error (ready for a DLQ topic/path sink and offline
+    inspection), while good rows run through the same body as the
+    strict pipeline.
 
-    On the batch path the decoded frame is lineage-truncated
-    (localCheckpoint, lazy), so consuming BOTH lanes executes the
-    lenient-decode Arrow pass ONCE — without the barrier, each consumed
-    lane re-ran the decode UDF over every row (deterministic, so
-    correct, but the decode is the expensive Arrow crossing). Streaming
-    frames cannot checkpoint this way; there the split belongs inside
+    On the batch path the body's output is lineage-truncated
+    (localCheckpoint, lazy), so consuming BOTH lanes runs the body —
+    decode, ``fn`` and encode — ONCE per row; without the barrier each
+    consumed lane would re-run it over every row. Streaming frames
+    cannot checkpoint this way; there the split belongs inside
     ``foreachBatch``, where the micro-batch is materialized once.
     """
-    from .codec import decode_message_lenient
-
-    decoded = frames.select(
-        F.col("value").alias("_raw"), decode_message_lenient(F.col("value")).alias("msg")
-    )
-    if not decoded.isStreaming:
-        decoded = decoded.localCheckpoint(eager=False)
-    dead = decoded.filter(F.col("msg.error").isNotNull()).select(
-        F.col("_raw").alias("value"), F.col("msg.error").alias("error")
-    )
-    good = decoded.filter(F.col("msg.error").isNull()).select("msg.headers", "msg.payload")
-    out = encode_stage(transform_messages(good, fn, enabled=enabled))
-    return out, dead
-
-
-def run_pipeline_fused(
-    frames: DataFrame,
-    fn: MessageFunction | None = None,
-    enabled: bool = True,
-) -> DataFrame:
-    """decode -> transform -> encode FUSED into one Arrow stage.
-
-    The staged pipeline crosses the Python/Arrow boundary three times
-    (decode pandas_udf, transform mapInPandas, encode pandas_udf), and
-    each crossing serializes the ``map<string,array<string>>`` headers
-    column — the most expensive Arrow conversion in the schema. Fusing
-    runs the same three steps inside ONE mapInPandas: binary in, binary
-    out, headers never leave the Python worker. Same ``MessageFunction``
-    contract (the fn still sees a pandas batch with headers/payload), and
-    output is parity-tested byte-for-byte against the staged path.
-
-    This is standard operator fusion, not a semantic change — the
-    reference itself runs decode->fn->encode pipelined per record
-    (StreamsApplication.java:146-163). Use the staged form when the
-    intermediate Message frame is needed (observability taps, joins
-    against decoded columns); use the fused form for pure
-    source->transform->sink replication, where it is ~2x faster.
-    """
-    import pandas as pd
-
-    from .codec import decode_with_prefix_cache, encode_with_prefix_cache
-
-    def fused(batches):
-        prefix_cache: dict[tuple, bytes] = {}
-        decode_cache: dict[bytes, dict] = {}
-        for pdf in batches:
-            headers, payloads = [], []
-            for data in pdf["value"]:
-                h, p = decode_with_prefix_cache(bytes(data), decode_cache)
-                headers.append(h)
-                payloads.append(p)
-            batch = pd.DataFrame({"headers": headers, "payload": payloads})
-            if enabled and fn is not None:
-                batch = fn(batch)
-            values = [
-                encode_with_prefix_cache(h, p, prefix_cache)
-                for h, p in zip(batch["headers"], batch["payload"])
-            ]
-            # null key mirrors the reference's ProducerRecord(topic, null, value)
-            yield pd.DataFrame({"key": [None] * len(values), "value": values})
-
-    return frames.mapInPandas(fused, schema=WIRE_FRAME_DDL)
+    lanes = _spine(frames, fn, enabled, dead_letters=True)
+    if not lanes.isStreaming:
+        lanes = lanes.localCheckpoint(eager=False)
+    good = lanes.filter(F.col("error").isNull()).select("key", "value")
+    dead = lanes.filter(F.col("error").isNotNull()).select("value", "error")
+    return good, dead

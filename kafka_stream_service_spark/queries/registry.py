@@ -95,87 +95,80 @@ def query(
 
 
 # The driver's correctness gate samples the FIRST 50 entries of
-# ``queries()``. Round-16 rotation (VERDICT r15 next-steps #2),
-# computed from CORRECTNESS_r*.json (tests/test_registry_window.py
-# recomputes the same debt and fails on drift):
-# (a) 0 r15 births (the freeze held a fourth round);
-# (b) VERDICT r15 #2 (MANDATORY): every r15 plan-changed row seats
-#     THIS round instead of riding the r17/r18 plan pre-written at
-#     r15 close — the Holt recursion->Arrow rewrite, the two
-#     cpu_fanout md5 lanes, and q_knn_ivf's fan-policy move carried
-#     builder-only oracle claims for a full round, and the judge
-#     wants the driver's independent hash verdict now. 6 rows:
-#     q_holt_linear_smoothing, q_holt_winters_additive,
-#     q_forecast_backtest (verdict r10), q_knn_ivf (r14),
-#     q_benjamini_hochberg (r11), q_trigram_like_index (r10).
-# (c) q_approx_aggregates (verdict r14; r15 plan change — exact
-#     median moved onto group_exact_percentiles) and
-#     q_audio_zero_crossing (r14 plan change, exchange-kind-only
-#     delta, verdict r8, deferred from r15 by one-slot overflow).
-# (d) 42 of the 45-row r6-verdict tier (it crosses the 10-round
-#     staleness horizon at r17, so unseated rows become r17's
-#     mandatory window). 6 + 2 + 42 = 50 exactly. The 3 deferred
-#     canaries — q_null_safe_join, q_variant_shred,
-#     q_wiredump_roundtrip (stable scalar/codec rows, plans
-#     untouched since r6) — are r17 MUSTS: r17 = 3 + the 43-row r7
-#     tier = 46, four slots spare (the Holt seats r15 had booked
-#     there are freed by (b)).
-# NEW_THIS_ROUND resets to () at round open per protocol.
+# ``queries()``. Round-17 rotation (ADVICE r16 #1), computed from
+# CORRECTNESS_r*.json (tests/test_registry_window.py recomputes the
+# same debt and fails on drift):
+# (a) 0 r16 births (the freeze held a fifth round);
+# (b) the 3 canaries deferred from r16 — q_null_safe_join,
+#     q_variant_shred, q_wiredump_roundtrip (verdict r6) — cross the
+#     10-round staleness horizon this round: MANDATORY. The wiredump
+#     writers now order segment contents by task partition id, which
+#     changes no plan;
+# (c) the 43-row r7-verdict tier (its last compliant seat is r17),
+#     alphabetical; it carries the re-cert for
+#     q_stream_wiredump_sink_replay's r16 plan change (8 sink tasks);
+# (d) 4 spare seats: q_codec_dlq_split (verdict r14), whose plan
+#     changes this round — the dead-letter pipeline now runs the one
+#     spine body, a single mapInPandas, instead of a lenient decode UDF,
+#     a transform map and an encode UDF — then the 3 alphabetically
+#     first rows of the 37-row r8 tier, pulled forward to thin r18's
+#     mandatory window.
+# 3 + 43 + 4 = 50 exactly. Every seat has a DuckDB oracle: a re-cert
+# for a rows-only query seats its ``portable_twin`` instead.
 PRIORITY_ORDER: tuple[str, ...] = (
-    # (b) r15 plan-change re-certs pulled forward (VERDICT r15 #2)
-    "q_holt_linear_smoothing",
-    "q_holt_winters_additive",
-    "q_forecast_backtest",
-    "q_knn_ivf",
-    "q_benjamini_hochberg",
-    "q_trigram_like_index",
-    # (c) r14/r15 plan-change re-certs per the r15-close plan
-    "q_approx_aggregates",
-    "q_audio_zero_crossing",
-    # (d) the r6-verdict tier, 42 of 45, alphabetical (3 canaries
-    #     deferred to r17 — see the header comment)
-    "q_asof_join_forward",
-    "q_asof_join_tolerance",
-    "q_attribution_last_touch",
-    "q_autocorr_lag",
-    "q_bigram_lm_score",
-    "q_binaryfile_ingest",
-    "q_bloom_filter_audit_portable",
-    "q_chi2_independence",
-    "q_cogroup_conversion_lag",
-    "q_collated_join",
-    "q_corpus_drift_kl",
-    "q_countmin_heavy_hitters_portable",
-    "q_distributed_exact_quantiles",
-    "q_embedding_outliers",
-    "q_entity_resolution",
-    "q_entropy_by_source",
-    "q_eval_auc_pr",
-    "q_gini_concentration",
-    "q_group_kfold",
-    "q_hard_negatives",
-    "q_hll_registers_portable",
-    "q_hops_recursive_cte",
-    "q_idempotent_sink_merge",
-    "q_interval_sweepline",
-    "q_lateral_topn",
-    "q_mode_per_group",
-    "q_pq_adc_topk_portable",
-    "q_pq_encode_portable",
-    "q_referential_integrity",
-    "q_scd2_point_in_time_join",
-    "q_session_window_dynamic_gap",
-    "q_skyline_pareto",
-    "q_snapshot_time_travel",
-    "q_statestore_introspection",
-    "q_stream_available_now_incremental",
-    "q_stream_fanout_dual_sink_replay",
-    "q_stream_full_outer_join_replay",
-    "q_stream_merge_sink_replay",
-    "q_stream_topk_window_replay",
-    "q_stream_two_level_agg_replay",
-    "q_stream_wiredump_source_replay",
-    "q_triangle_oriented",
+    # (b) the deferred r6 canaries
+    "q_null_safe_join",
+    "q_variant_shred",
+    "q_wiredump_roundtrip",
+    # (c) the r7-verdict tier
+    "q02_revenue_by_nation",
+    "q_activity_bitmap",
+    "q_arrow_grouped_stats",
+    "q_basket_part_pairs",
+    "q_benford_digit_audit",
+    "q_calendar_gap_fill",
+    "q_dedup_keep_best",
+    "q_dedup_keep_first",
+    "q_event_paths_topk",
+    "q_feature_hashing",
+    "q_fuzzy_match_levenshtein",
+    "q_gdpr_delete_propagation",
+    "q_group_by_all",
+    "q_histogram_2d",
+    "q_jaccard_neighbors",
+    "q_join_hints",
+    "q_kcore_decomposition",
+    "q_knn_cosine_bruteforce",
+    "q_lorenz_curve",
+    "q_markov_transitions",
+    "q_minmax_scaling",
+    "q_mom_growth",
+    "q_ngram_novelty",
+    "q_order_total_reconciliation",
+    "q_parameterized_sql",
+    "q_percent_rank_cume",
+    "q_rank_normalize_embeddings",
+    "q_rfm_segmentation",
+    "q_run_length_islands",
+    "q_scd1_upsert",
+    "q_seasonal_weekday_deviation",
+    "q_source_overlap_matrix",
+    "q_source_quota",
+    "q_sql_udf",
+    "q_stream_hll_merge_replay",
+    "q_stream_wiredump_sink_replay",
+    "q_target_encoding",
+    "q_text_roundtrip",
+    "q_time_weighted_average",
+    "q_token_budget_allocation",
+    "q_udaf_grouped_agg",
+    "q_weighted_median",
+    "q_window_count_distinct",
+    # (d) plan-change re-cert, then the oldest r8 rows
+    "q_codec_dlq_split",
+    "q_bm25_retrieval",
+    "q_bootstrap_ci",
+    "q_bottomk_coordinated_sample",
 )
 # Queries declared for the first time in the CURRENT round (no driver
 # verdict yet, by construction — they were born after the last
@@ -185,12 +178,10 @@ PRIORITY_ORDER: tuple[str, ...] = (
 # Reset to () at each round open, after moving the previous round's
 # births into PRIORITY_ORDER.
 NEW_THIS_ROUND: tuple[str, ...] = ()
-# r17 window plan (compute, don't trust): lead with any r16 births,
-# then the 3 deferred r6 canaries (q_null_safe_join, q_variant_shred,
-# q_wiredump_roundtrip — they cross the horizon at r17, MANDATORY),
-# then the 43-row r7-verdict tier (its last compliant seat is r17 —
-# it crosses the horizon at r18), then any r16 plan-change re-certs
-# in the remaining 4 slots. 3 + 43 = 46, four slots spare.
+# r18 window plan (compute, don't trust): lead with any r17 births,
+# then the r8-verdict tier (34 rows left after (d); its last compliant
+# seat is r18, MANDATORY), then any r17 plan-change re-certs, then the
+# oldest r9 rows.
 #
 # Session-config deltas (the AQE coalesce minPartitionSize floor and
 # its per-query 1m re-pin on the iterative graph tier added in r16,
@@ -198,11 +189,8 @@ NEW_THIS_ROUND: tuple[str, ...] = ()
 # partition width) change no logical/static physical plans and book no
 # seats — the q_audio_zero_crossing "runtime conf books no seat"
 # precedent from r15.
-# r16 plan changes needing re-cert seats: q_stream_wiredump_sink_replay
-# (verdict r7 — micro-batches now fan to 8 sink tasks, one added
-# streaming Exchange; oracle-identical at sf0.01+sf0.1) rides its
-# NATURAL r17 seat with the rest of the r7 tier — no extra slot.
-# tests/test_registry_window.py fails if a deferred canary is missed.
+# tests/test_registry_window.py fails if a stale row is missed.
+
 
 def _ordered_specs() -> list[QuerySpec]:
     missing = [n for n in PRIORITY_ORDER if n not in QUERIES]

@@ -83,7 +83,7 @@ def stream_kafka_source(
 def stream_file_source(
     spark: SparkSession,
     path: str,
-    schema: T.StructType,
+    schema: T.StructType | str,
     fmt: str = "parquet",
     max_files_per_trigger: int = 1,
 ) -> DataFrame:

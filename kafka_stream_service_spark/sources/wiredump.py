@@ -148,8 +148,11 @@ class WireDumpReader(DataSourceReader):
 
 @dataclass
 class _SegmentCommit(WriterCommitMessage):
+    # the writing task's partition id: commits number segments in this
+    # order, so a segment's final name and its rows follow the frame's
+    # partitioning, not the random temp name
+    partition_id: int
     tmp_path: str
-    final_path: str
 
 
 def _write_segment_arrow(path: str, iterator) -> _SegmentCommit:
@@ -157,6 +160,8 @@ def _write_segment_arrow(path: str, iterator) -> _SegmentCommit:
     (shared by the batch and streaming writers). Column lookup is by
     NAME so projection order never matters; headers arrive as Arrow map
     values (lists of (key, value) tuples via to_pylist)."""
+    from pyspark import TaskContext
+
     from ..codec import encode_py
 
     seg = uuid.uuid4().hex[:12]
@@ -187,7 +192,7 @@ def _write_segment_arrow(path: str, iterator) -> _SegmentCommit:
                 frame = encode_py(hd, bytes(p))
                 f.write(struct.pack(">I", len(frame)))
                 f.write(frame)
-    return _SegmentCommit(tmp_path=tmp, final_path="")
+    return _SegmentCommit(partition_id=TaskContext.get().partitionId(), tmp_path=tmp)
 
 
 class WireDumpWriter(DataSourceArrowWriter):
@@ -216,7 +221,7 @@ class WireDumpWriter(DataSourceArrowWriter):
         import time as _time
 
         base = _time.time_ns()
-        for i, m in enumerate(sorted(messages, key=lambda m: m.tmp_path)):
+        for i, m in enumerate(sorted(messages, key=lambda m: m.partition_id)):
             final = os.path.join(self.path, f"part-{base:020d}-{i:05d}.wiredump")
             os.replace(m.tmp_path, final)
 
@@ -331,7 +336,7 @@ class WireDumpStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         for i, m in enumerate(
-            sorted((m for m in messages if m), key=lambda m: m.tmp_path)
+            sorted((m for m in messages if m), key=lambda m: m.partition_id)
         ):
             final = os.path.join(
                 self.path, f"part-e{int(batchId):010d}-{i:05d}.wiredump"

@@ -1,11 +1,13 @@
-"""The per-record transform slot (reference parity for R8/R9).
+"""The per-record function slot (reference parity for R8/R9).
 
 The reference streams every record through a bidirectional gRPC call to an
 external "function" process (StreamsApplication.java:179-190, host/port
 config at :54-64, identity bypass via ``grpc.enabled=false`` at :180,188).
 
-Spark-native re-expression: a ``mapInPandas`` stage whose iterator form
-gives exactly the lifecycle the reference's channel needs —
+Spark-native re-expression: the spine's single ``mapInPandas`` body
+(``pipeline._spine``) decodes each Arrow batch, calls the function on it
+and encodes the result, which gives exactly the lifecycle the reference's
+channel needs —
 
 - per-executor-task setup/teardown (the gRPC channel equivalent opens once
   per partition, not per record);
@@ -17,24 +19,23 @@ gives exactly the lifecycle the reference's channel needs —
 
 The "function" is pluggable: any ``MessageFunction`` (pandas batch ->
 pandas batch over columns ``headers``/``payload``). ``RemoteFunction``
-shows the per-executor-connection pattern with a local fallback since no
-gRPC runtime ships in this container.
+shows the per-executor-connection pattern, with a local fallback for
+when no gRPC transport is available.
 """
-
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame
 
 # A message function maps a pandas batch with columns (headers, payload) to
 # a batch with the same columns — the Spark analog of
-# transform(Flux<Message>) -> Flux<Message>.
+# transform(Flux<Message>) -> Flux<Message>. The input's header dicts are
+# read-only: the spine's decoder shares one dict among every record with
+# the same header section, so changing one in place would change them all.
+# Return new dicts for changed headers instead.
 MessageFunction = Callable[[pd.DataFrame], pd.DataFrame]
-
-MESSAGE_COLS_SCHEMA = "headers map<string,array<string>>, payload binary"
 
 
 def uppercase_function(batch: pd.DataFrame) -> pd.DataFrame:
@@ -136,33 +137,3 @@ class RemoteFunction:
         if self._channel not in (None, "local"):
             self._channel.close()
         self._channel = None
-
-
-def transform_messages(
-    messages: DataFrame,
-    fn: MessageFunction | None,
-    enabled: bool = True,
-    extra_cols: str = "",
-) -> DataFrame:
-    """Apply the transform slot to a Message-shaped DataFrame.
-
-    ``messages`` must carry ``headers``/``payload`` columns (plus any
-    passthrough columns declared in ``extra_cols`` as DDL, e.g.
-    ``"doc_id long"``). ``enabled=False`` reproduces R9: the stage is
-    skipped entirely — not even a no-op UDF node in the plan.
-    """
-    if not enabled or fn is None:
-        return messages
-    schema = MESSAGE_COLS_SCHEMA + (", " + extra_cols if extra_cols else "")
-
-    def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-executor-task setup happens here (lazy client connect on
-        # first batch); teardown when the iterator is exhausted
-        for pdf in batches:
-            out = fn(pdf[["headers", "payload"]])
-            for c in pdf.columns:
-                if c not in ("headers", "payload"):
-                    out[c] = pdf[c].values
-            yield out
-
-    return messages.mapInPandas(run_batches, schema=schema)

@@ -226,4 +226,36 @@ class TestDecodePrefixCache:
         # bound: past 1024 distinct shapes the cache stops growing
         for i in range(1100):
             decode_with_prefix_cache(encode_py({"k": [str(i)]}, b"x"), cache)
-        assert len(cache) <= 1024
+        assert len(cache) == 1024
+
+    def test_malformed_frames_raise_like_decode_py(self):
+        """A frame that is truncated inside, or just past, a cached
+        header section must not be served from the cache: it raises
+        what decode_py raises."""
+        from kafka_stream_service_spark.codec import decode_with_prefix_cache, encode_py
+
+        good = encode_py({"t": ["a"], "u": ["b", "c"]}, b"payload")
+        cache: dict = {}
+        decode_with_prefix_cache(good, cache)
+        end = len(good) - len(b"payload")
+        assert decode_with_prefix_cache(good[:end], cache) == ({"t": ["a"], "u": ["b", "c"]}, b"")
+        bad = [b"", b"\xff", b"\x00" + good[1:], good[:3], good[: end - 5], good[: end - 1]]
+        bad.append(b"\xff\x01\x01t" + struct.pack(">i", -3) + b"[]")  # negative blob length
+        for f in bad:
+            with pytest.raises(Exception) as want:
+                decode_py(f)
+            with pytest.raises(want.type):
+                decode_with_prefix_cache(f, cache)
+
+    def test_encode_cache_bound(self):
+        """More distinct header sets than the cache holds (a unique
+        correlation id per record) through one encode cache: the cache
+        stops at its limit and every frame still matches encode_py."""
+        from kafka_stream_service_spark.codec import PREFIX_CACHE_MAX, encode_with_prefix_cache
+
+        cache: dict = {}
+        for i in range(PREFIX_CACHE_MAX + 500):
+            h = {"id": [str(i)], "mod7": [str(i % 7 == 0)]}
+            assert encode_with_prefix_cache(h, b"x", cache) == encode_py(h, b"x")
+        assert len(cache) == PREFIX_CACHE_MAX
+

@@ -155,23 +155,28 @@ def test_remote_function_live_leg_stdlib_transport(server):
 
 
 def test_remote_function_pipeline_parity_over_live_hop(spark, server):
-    """End-to-end through Spark: the mapInPandas transform stage calls
-    the live function server from executor tasks and must equal the
-    in-process uppercase path byte-for-byte."""
-    from kafka_stream_service_spark.transform import transform_messages, uppercase_function
+    """End-to-end through Spark: the spine body calls the live function
+    server from executor tasks over wire frames, and must equal the
+    in-process uppercase path frame for frame, in order; the server's
+    extra ``seen`` header is the only difference."""
+    from kafka_stream_service_spark.codec import decode_py, encode_py
+    from kafka_stream_service_spark.pipeline import run_pipeline_batch
+    from kafka_stream_service_spark.transform import uppercase_function
 
-    rows = [({"k": ["v"]}, f"record {i} MiXeD".encode()) for i in range(20)]
-    df = spark.createDataFrame(rows, "headers map<string,array<string>>, payload binary")
-    port = server.port
-    remote = RemoteFunction(FunctionConfig(host="127.0.0.1", port=port, transport="h2-stdlib"))
-    got = sorted(
-        bytes(r.payload)
-        for r in transform_messages(df, remote).collect()
+    rows = [(None, bytearray(encode_py({"k": ["v"]}, f"record {i} MiXeD".encode())))
+            for i in range(20)]
+    frames = spark.createDataFrame(rows, "key binary, value binary")
+    remote = RemoteFunction(
+        FunctionConfig(host="127.0.0.1", port=server.port, transport="h2-stdlib")
     )
-    expect = sorted(
-        bytes(r.payload) for r in transform_messages(df, uppercase_function).collect()
-    )
-    assert got == expect
+    got = [decode_py(bytes(r.value)) for r in run_pipeline_batch(frames, remote).collect()]
+    expect = [
+        decode_py(bytes(r.value))
+        for r in run_pipeline_batch(frames, uppercase_function).collect()
+    ]
+    assert [p for _, p in got] == [p for _, p in expect]
+    assert all(h == {"k": ["v"], "seen": ["1"]} for h, _ in got)
+    assert all(h == {"k": ["v"]} for h, _ in expect)
 
 
 def test_streaming_pipeline_with_live_remote_function(spark, server, tmp_path):

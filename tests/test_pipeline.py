@@ -6,18 +6,24 @@ streaming, plus checkpoint restart and the fault path.
 from __future__ import annotations
 
 import glob
+import io
 import os
+from contextlib import redirect_stdout
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_stream_service_spark.codec import decode_py, encode_py
+from kafka_stream_service_spark.codec import PREFIX_CACHE_MAX, decode_py, encode_py
 from kafka_stream_service_spark.eos import ForeachBatchIdempotentWriter
 from kafka_stream_service_spark.pipeline import (
     PipelineConfig,
     run_pipeline_batch,
+    run_pipeline_with_dlq,
     start_pipeline,
 )
+from kafka_stream_service_spark.plans import physical_plan
+from kafka_stream_service_spark.plans.inspect import _PY_NODES, _tree_nodes
 from kafka_stream_service_spark.transform import (
     FunctionConfig,
     RemoteFunction,
@@ -61,8 +67,6 @@ def test_dlq_pipeline_splits_poison_messages(spark):
     exactly as in the strict pipeline — one poison message must never
     kill the stream (the reference's strict deserializer + restart loop
     would crash-cycle forever on it)."""
-    from kafka_stream_service_spark.pipeline import run_pipeline_with_dlq
-
     good_rows = [(None, bytearray(encode_py(h, p))) for h, p in MESSAGES]
     poison = [
         (None, bytearray(b"\x00not-a-frame")),  # missing 0xff marker
@@ -78,19 +82,115 @@ def test_dlq_pipeline_splits_poison_messages(spark):
     assert all(r.error for r in dead_rows)
 
 
-def test_fused_pipeline_byte_parity_with_staged(spark):
-    """The one-Arrow-pass fused pipeline (run_pipeline_fused) must be
-    byte-identical to the staged decode->transform->encode composition,
-    for both the uppercase transform and the identity bypass — it is an
-    operator-fusion optimization, not a semantic variant."""
-    from kafka_stream_service_spark.pipeline import run_pipeline_fused
+# Repeated header shapes exercise both prefix caches' hit paths; the
+# empty payload, multi-value and non-ASCII headers their edges.
+PARITY_MESSAGES = [
+    ({"type": ["click"]}, f"event {i} MiXeD".encode()) for i in range(6)
+] + [
+    ({"type": ["click"]}, b""),
+    ({"type": ["view"], "id": ["7", "8"]}, b"\xc3\xa9t\xc3\xa9"),
+    ({}, b'["a header blob"]'),
+    ({"lang": ["fran\u00e7ais"]}, b"bonjour"),
+] + MESSAGES
 
+
+def reference_outputs(messages, fn, enabled=True):
+    """The spine computed on the driver, one record at a time, with the
+    plain codec: encode_py(fn(decode_py(frame))) under a null key."""
+    out = []
+    for frame in (encode_py(h, p) for h, p in messages):
+        h, p = decode_py(frame)
+        if enabled and fn is not None:
+            row = fn(pd.DataFrame({"headers": [h], "payload": [p]}))
+            h, p = row["headers"].iloc[0], row["payload"].iloc[0]
+        out.append(encode_py(h, p))
+    return out
+
+
+@pytest.mark.parametrize(
+    "fn,enabled",
+    [(uppercase_function, True), (identity_function, True), (uppercase_function, False)],
+)
+def test_spine_byte_parity_with_driver_reference(spark, fn, enabled):
+    """The spine body must emit, frame for frame and in input order
+    (1-in-1-out), the bytes of an independent driver-side loop over
+    ``decode_py``/``encode_py`` — for the transform, the identity
+    function and the disabled slot (R9), and on the DLQ good lane."""
+    frames = wire_frames_df(spark, PARITY_MESSAGES)
+    expect = reference_outputs(PARITY_MESSAGES, fn, enabled)
+    out = run_pipeline_batch(frames, fn, enabled=enabled).collect()
+    assert all(r.key is None for r in out)
+    assert [bytes(r.value) for r in out] == expect
+
+    poison = spark.createDataFrame([(None, bytearray(b"\x00bad"))], "key binary, value binary")
+    good, dead = run_pipeline_with_dlq(frames.union(poison), fn, enabled=enabled)
+    assert [bytes(r.value) for r in good.collect()] == expect
+    assert [bytes(r.value) for r in dead.collect()] == [b"\x00bad"]
+
+
+def test_spine_past_the_prefix_cache_bound(spark):
+    """More distinct header sets in one task than its prefix caches
+    hold (a unique correlation id per record): the body keeps every
+    frame exact past the cache limit."""
+    msgs = [({"id": [str(i)]}, b"event %d" % i) for i in range(PREFIX_CACHE_MAX + 300)]
+    frames = wire_frames_df(spark, msgs).coalesce(1)
+    out = run_pipeline_batch(frames, uppercase_function).collect()
+    assert [bytes(r.value) for r in out] == reference_outputs(msgs, uppercase_function)
+
+
+def _python_nodes(df) -> list[str]:
+    """Names of the Python operators in a frame's physical plan tree."""
+    names = [title.split()[0] for _, title, _ in _tree_nodes(physical_plan(df))]
+    return [n for n in names if n in _PY_NODES]
+
+
+def _streaming_python_nodes(explained: str) -> list[str]:
+    """The same for ``StreamingQuery.explain()``, whose simple-mode tree
+    has no node ids for ``_tree_nodes`` to parse."""
+    tree = explained.split("== Physical Plan ==")[-1]
+    names = [ln.lstrip(" :+-*()0123456789").split(" ", 1)[0] for ln in tree.splitlines()]
+    return [n for n in names if n in _PY_NODES]
+
+
+def test_spine_plans_hold_one_python_map(spark, tmp_path, monkeypatch):
+    """Guard against re-forking the spine: streaming, batch and
+    dead-letter plans each run decode -> fn -> encode as exactly ONE
+    Python map node, with no per-column Arrow UDF beside it."""
     frames = wire_frames_df(spark)
-    for fn, enabled in ((uppercase_function, True), (identity_function, True), (None, False)):
-        staged = sorted(bytes(r.value) for r in run_pipeline_batch(frames, fn, enabled=enabled).collect())
-        fused = sorted(bytes(r.value) for r in run_pipeline_fused(frames, fn, enabled=enabled).collect())
-        assert fused == staged
-    assert all(r.key is None for r in run_pipeline_fused(frames, uppercase_function).collect())
+    assert _python_nodes(run_pipeline_batch(frames, uppercase_function)) == ["MapInPandas"]
+
+    # the DLQ lanes read a lazy checkpoint; the body is the frame it cuts
+    cut = []
+    checkpoint = type(frames).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        cut.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(frames), "localCheckpoint", spy)
+    good, dead = run_pipeline_with_dlq(frames, uppercase_function)
+    assert len(cut) == 1
+    assert _python_nodes(cut[0]) == ["MapInPandas"]
+    assert _python_nodes(good) == _python_nodes(dead) == []
+
+    src = tmp_path / "in"
+    frames.write.parquet(str(src))
+    cfg = PipelineConfig(
+        source="files",
+        sink="memory",
+        source_path=str(src),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        query_name="pipe_plan_test",
+    )
+    q = start_pipeline(spark, cfg, uppercase_function)
+    try:
+        q.processAllAvailable()
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            q.explain()
+    finally:
+        q.stop()
+    assert _streaming_python_nodes(buf.getvalue()) == ["MapInPandas"], buf.getvalue()
 
 
 def test_identity_bypass(spark):

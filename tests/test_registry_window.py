@@ -66,6 +66,18 @@ def test_window_is_exactly_the_gate_size():
     assert len(set(order)) == len(order), "duplicate names in PRIORITY_ORDER"
 
 
+def test_every_seat_has_an_oracle():
+    """A rows-only query (``oracle=None``) earns only a ``no_oracle``
+    verdict from the correctness gate, so a seat spent on one certifies
+    nothing (r16 seated q_knn_ivf and scored 49/50). Its re-cert seats
+    the hash-verified ``portable_twin`` instead."""
+    queries, order, _ = _registry()
+    rows_only = [(n, queries[n].portable_twin) for n in order if queries[n].oracle is None]
+    assert not rows_only, (
+        f"PRIORITY_ORDER seats rows-only queries; seat their portable twins: {rows_only}"
+    )
+
+
 def test_every_declared_query_has_a_verdict_or_a_seat():
     queries, order, new_this_round = _registry()
     latest, _ = _latest_verdicts()

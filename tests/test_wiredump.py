@@ -174,7 +174,7 @@ def test_stream_sink_epoch_replay_is_idempotent(spark, seg_dir):
                 frame = encode_py({"t": ["x"]}, f"{tag}:{i}".encode())
                 f.write(struct.pack(">I", len(frame)))
                 f.write(frame)
-            msgs.append(_SegmentCommit(tmp_path=p, final_path=""))
+            msgs.append(_SegmentCommit(partition_id=i, tmp_path=p))
         return msgs
 
     w.commit(fake_epoch_files("a"), batchId=7)
@@ -187,6 +187,44 @@ def test_stream_sink_epoch_replay_is_idempotent(spark, seg_dir):
     assert len(third) == len(second) + 2
     assert third == sorted(third)  # epoch names keep append-only order
     assert not glob.glob(os.path.join(seg_dir, "_tmp_*"))
+
+
+def test_segments_are_reproducible(spark, seg_dir, tmp_path):
+    """Writing the same repartitioned frame twice yields byte-identical
+    segments in the same order: commits number segments by task
+    partition id, not by their random temp names. The stream sink's
+    epoch names match exactly; the batch writer's names differ only in
+    the commit-time base that keeps appends sorted."""
+
+    def segments(d):
+        return [
+            (os.path.basename(p), open(p, "rb").read())
+            for p in sorted(glob.glob(os.path.join(d, "*.wiredump")))
+        ]
+
+    frames = _frames(spark, n=40).repartition(4)
+    batch = []
+    for d in ("a", "b"):
+        frames.write.format("wiredump").mode("append").save(os.path.join(seg_dir, d))
+        batch.append([(name.rsplit("-", 1)[1], data) for name, data in segments(
+            os.path.join(seg_dir, d))])
+    assert len(batch[0]) == 4 and batch[0] == batch[1]
+
+    src = str(tmp_path / "src")
+    _frames(spark, n=40).write.parquet(src)
+    stream = []
+    for d in ("c", "d"):
+        q = (
+            spark.readStream.schema(_frames(spark).schema).parquet(src)
+            .repartition(4)
+            .writeStream.format("wiredump")
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{d}"))
+            .trigger(availableNow=True)
+            .start(os.path.join(seg_dir, d))
+        )
+        q.awaitTermination()
+        stream.append(segments(os.path.join(seg_dir, d)))
+    assert len(stream[0]) == 4 and stream[0] == stream[1]
 
 
 def test_arrow_reader_chunks_large_segments(spark, seg_dir):
