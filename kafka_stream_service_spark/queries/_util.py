@@ -37,28 +37,14 @@ def revenue_expr() -> Column:
 REVENUE_SQL = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))"
 
 
-def work_dir(tag: str, sf_dir: str) -> str:
-    """Stable scratch directory for queries that materialize intermediate
-    files (format roundtrips, partitioned rewrites, streaming-replay
-    chunks): one directory per (query tag, scale factor), WIPED on entry
-    so repeated invocations overwrite instead of accumulating — a fresh
-    mkdtemp per call leaks a full table copy every run, and the driver
-    gate / bench / sweep invoke each query many times per session.
-
-    The returned DataFrames lazily read files under this path, so the
-    path must outlive the call (deletion inside the query would break
-    evaluation) — bounded reuse is the correct lifetime, not eager
-    cleanup. Single-process assumption (the harnesses run queries
-    serially); concurrent runs of the SAME query+SF would race.
-
-    The root is scoped PER USER (uid in the name, 0700, ownership
-    verified) so another user on a shared host can neither pre-create
-    nor symlink it — a world-shared fixed path would silently follow a
-    foreign symlink through rmtree/makedirs.
-    """
+def _scratch_path(name: str, sf_dir: str) -> str:
+    """``<root>/<name>_<sf key>`` under the per-user scratch root: uid in
+    the root's name, mode 0700, ownership verified, so another user on a
+    shared host can neither pre-create nor symlink it — a world-shared
+    fixed path would silently follow a foreign symlink through
+    rmtree/makedirs. Creates the root only; the caller owns the path."""
     import hashlib
     import os
-    import shutil
     import tempfile
 
     uid = os.getuid()
@@ -72,41 +58,48 @@ def work_dir(tag: str, sf_dir: str) -> str:
         )
     os.chmod(root, 0o700)  # enforce even when the dir predates this call
     sf_key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(root, f"{tag}_{sf_key}")
+    return os.path.join(root, f"{name}_{sf_key}")
+
+
+def work_dir(tag: str, sf_dir: str) -> str:
+    """Stable scratch directory for queries that materialize intermediate
+    files (format roundtrips, partitioned rewrites, streaming-replay
+    chunks): one directory per (query tag, scale factor), WIPED on entry
+    so repeated invocations overwrite instead of accumulating — a fresh
+    mkdtemp per call leaks a full table copy every run, and the driver
+    gate / bench / sweep invoke each query many times per session.
+
+    The returned DataFrames lazily read files under this path, so the
+    path must outlive the call (deletion inside the query would break
+    evaluation) — bounded reuse is the correct lifetime, not eager
+    cleanup. Single-process assumption (the harnesses run queries
+    serially); concurrent runs of the SAME query+SF would race.
+    The root is per user (see :func:`_scratch_path`).
+    """
+    import os
+    import shutil
+
+    path = _scratch_path(tag, sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     return path
 
 
 def snapshot_dir(tag: str, sf_dir: str) -> str:
-    """Like :func:`work_dir` (same per-user 0700 scratch root, same
-    squatting/symlink checks) but PERSISTENT: the per-(tag, sf) directory
-    is created if absent and NEVER wiped on entry — the lifetime contract
-    for materialized index artifacts (e.g. the verified-pair snapshot)
-    that one catalog query BUILDS and several others READ across
-    invocations in the same session or process group. Builders must
-    publish atomically — write the parquet (with its _SUCCESS marker)
-    to a temp sibling, then os.rename the complete directory into
-    place (see dedup2.build_pair_index) — so readers never observe
-    partial state even against a concurrent rebuild; cache
-    invalidation is the builder's job via a revision token PLUS a
+    """Like :func:`work_dir` (same per-user scratch root) but PERSISTENT:
+    the per-(tag, sf) directory is created if absent and NEVER wiped on
+    entry — the lifetime contract for materialized index artifacts (e.g.
+    the verified-pair snapshot) that one catalog query BUILDS and several
+    others READ across invocations in the same session or process group.
+    Builders must publish atomically — write the parquet (with its
+    _SUCCESS marker) to a temp sibling, then os.rename the complete
+    directory into place (see dedup2.build_pair_index) — so readers
+    never observe partial state even against a concurrent rebuild;
+    cache invalidation is the builder's job via a revision token PLUS a
     source-data fingerprint in the artifact subpath."""
-    import hashlib
     import os
-    import tempfile
 
-    uid = os.getuid()
-    root = os.path.join(tempfile.gettempdir(), f"kssp_work_{uid}")
-    os.makedirs(root, mode=0o700, exist_ok=True)
-    st = os.lstat(root)
-    if st.st_uid != uid or not os.path.isdir(root) or os.path.islink(root):
-        raise RuntimeError(
-            f"scratch root {root} exists but is not a directory owned by uid {uid} "
-            "— refusing to use it (possible squatting/symlink attack)"
-        )
-    os.chmod(root, 0o700)
-    sf_key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(root, f"snap_{tag}_{sf_key}")
+    path = _scratch_path(f"snap_{tag}", sf_dir)
     os.makedirs(path, exist_ok=True)
     return path
 
@@ -150,29 +143,3 @@ def publish_atomic(df, out: str, sort_cols: tuple[str, ...] = ()) -> None:
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)
 
-
-def pin_iterative_aqe_floor(spark) -> None:
-    """Re-pin AQE's coalesce floor to 1m for THIS query's execution.
-
-    The session default is a 32k floor (session.py): it keeps CPU-bound
-    small-byte md5/Python lanes from being folded onto one task. The
-    inverse pathology hits ITERATIVE many-small-stage plans (graph
-    loops, the n-gram counting family): each of their ~10-30 tiny
-    shuffle stages gets split into more sub-32k tasks whose scheduling
-    overhead multiplies per iteration — driver-confirmed >10%
-    regressions at r15 (q_triangle_oriented 0.67x, q_label_propagation
-    0.71x, q_decontaminate_ngram 0.76x). Those queries call this at
-    build time; execution (bench/driver force the returned frame right
-    after building it) then coalesces their tiny stages back to ~1
-    task each, exactly the pre-r15 behavior for these rows.
-
-    Scoping: registry._pin_session_confs restores the session default
-    on EVERY query call, so the 1m pin cannot leak into the md5 lanes
-    the 32k floor was built for. At 100 TB both floors are inert on
-    data-scale stages (they bind only when stage bytes / parallelism is
-    sub-MB); this knob only prices tiny-stage scheduling at fixture
-    scale, so the production story is unchanged either way.
-    """
-    from ..session import AQE_MIN_PARTITION_KEY
-
-    spark.conf.set(AQE_MIN_PARTITION_KEY, "1m")

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.ranks import data_sized_partitions
 from ..tables import tables
 from ._util import REVENUE_SQL, dec, dsum, revenue_expr
 from .registry import query
@@ -674,9 +675,22 @@ def q_cogroup_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
+    # the per-user pandas work is CPU-bound on a few-MB shuffle that
+    # AQE's byte-sized coalescing would fold onto one task, so both sides
+    # take the same explicit-count exchange on the key (never coalesced;
+    # the cogroup reuses it unshuffled). The count grows with the input
+    # like any data-sized exchange; while the input is no bigger than an
+    # empty one by that measure, one task per core, since a second wave
+    # of Python tasks only adds worker round trips
+    sized = data_sized_partitions(base)
+    n = (
+        sized
+        if sized > data_sized_partitions(base.limit(0))
+        else spark.sparkContext.defaultParallelism
+    )
     return (
-        clicks.groupBy("user_id")
-        .cogroup(purchases.groupBy("user_id"))
+        clicks.repartition(n, "user_id").groupBy("user_id")
+        .cogroup(purchases.repartition(n, "user_id").groupBy("user_id"))
         .applyInPandas(
             lag_stats,
             "user_id long, n_purchases long, n_matched long, total_lag_us long",

@@ -71,14 +71,6 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast hash join and only matched (doc_id, gram, bench_id)
     rows enter the counting shuffle. No corpus self-join anywhere.
     """
-    from ._util import pin_iterative_aqe_floor
-
-    # tiny-shuffle agg chain (two countDistincts over the matched rows):
-    # 1m AQE floor — the r15 driver's 0.76x regression on this row was
-    # floor collateral (r16 evidence: cross-HEAD A/B vs a464521 1.49x,
-    # focused floor A/B 1.37x, headline-wide A/B 1.28x, all same-session
-    # interleaved)
-    pin_iterative_aqe_floor(spark)
     d = tables(spark, sf_dir)["documents"]
     # materialize the token array in its OWN projection: passing the raw
     # split() expression into the trigram lambda would inline it into

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import lsh_candidate_pairs, word_shingles_from_tokens
 from ..operators.graph import connected_components
+from ..operators.ranks import data_sized_partitions
 from ..tables import tables
 from .registry import query
 
@@ -70,9 +71,20 @@ def typed_minhash_signatures(sh: DataFrame, k: int = K) -> DataFrame:
     r8 note), so this is the shared fix rather than per-query
     block-scoping. At 100 TB the type dictionary joins back by
     shuffle-hash join instead of broadcast; signature values (and every
-    downstream bucket, candidate, and verified pair) are unchanged."""
+    downstream bucket, candidate, and verified pair) are unchanged.
+
+    At fixture scale the type dictionary is a few hundred KB that costs
+    16 md5s per row, so AQE's byte-sized coalescing would fold it onto
+    one task. The distinct keeps its map-side partial aggregate (only
+    per-partition distinct shingles cross its shuffle); an explicit-count
+    round-robin exchange after it then spreads the distinct types evenly
+    over as many md5 tasks as the input warrants (AQE never coalesces a
+    repartition by number). A hash exchange on ``s`` would not do: when
+    its count equals the shuffle-partition count it is planned away as a
+    copy of the distinct's own partitioning, which AQE does coalesce."""
     inst = sh.select("doc_id", F.explode("shingles").alias("s"))
-    hashed = inst.select("s").distinct().select(
+    n = data_sized_partitions(inst)
+    hashed = inst.select("s").distinct().repartition(n).select(
         "s", *[portable_hash64(F.col("s"), i).alias(f"__h{i}") for i in range(k)]
     )
     mins = inst.join(hashed, "s").groupBy("doc_id").agg(

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import integer_pagerank
 from ..tables import tables
-from ._util import pin_iterative_aqe_floor
 from .registry import query
 
 SHINGLE_N = 4
@@ -120,8 +119,6 @@ def q_triangle_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents that are pairwise near-dup candidates (each pair shares a
     rare 4-gram). Ordered-edge algorithm — every triangle emitted exactly
     once as (doc_a < doc_b < doc_c)."""
-    # iterative/many-tiny-stage row: 1m AQE floor (r16 A/B 1.38x vs 32k)
-    pin_iterative_aqe_floor(spark)
     edges = _candidate_edges(spark, sf_dir)
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
@@ -177,8 +174,6 @@ def q_pagerank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled-CTE oracle must match exactly. High-rank documents sit in
     dense near-dup neighborhoods (the cluster centers worth human review
     in a dedup pipeline)."""
-    # iterative/many-tiny-stage row: 1m AQE floor (r16 A/B 1.50x vs 32k)
-    pin_iterative_aqe_floor(spark)
     edges = _candidate_edges(spark, sf_dir)
     ranks = integer_pagerank(
         edges,
@@ -224,8 +219,6 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination check (q_decontaminate_ngram) guards against known
     benchmarks; this guards against self-contamination. One extra
     broadcast-sized join over the edge list."""
-    # iterative/many-tiny-stage row: 1m AQE floor (r16 A/B 1.23x vs 32k)
-    pin_iterative_aqe_floor(spark)
     d = tables(spark, sf_dir)["documents"]
     edges = _candidate_edges(spark, sf_dir)
     split = d.select(
@@ -278,9 +271,6 @@ def q_triangle_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import oriented_triangles
 
-    # iterative/many-tiny-stage row: 1m AQE floor (r16 A/B 1.32x vs 32k,
-    # the VERDICT r15 #1 reclaim — driver-confirmed 0.67x collateral)
-    pin_iterative_aqe_floor(spark)
     return oriented_triangles(_candidate_edges(spark, sf_dir))
 
 
@@ -335,8 +325,6 @@ def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-increasing, equal counts == fixpoint). Peeled edge frames are
     lineage-truncated per generation like the other iterative ops.
     """
-    # iterative/many-tiny-stage row: 1m AQE floor (r16 A/B 1.58x vs 32k)
-    pin_iterative_aqe_floor(spark)
     edges = _candidate_edges(spark, sf_dir)
     adj = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
         edges.select(F.col("v").alias("a"), F.col("u").alias("b"))

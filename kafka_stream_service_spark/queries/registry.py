@@ -52,14 +52,6 @@ def _pin_session_confs(spark: SparkSession) -> None:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Perf re-pin (not oracle-critical): restore the session-default AQE
-    # coalesce floor on every query call, so the iterative graph
-    # queries' per-query 1m pin (_util.pin_iterative_aqe_floor, r16)
-    # scopes to exactly one build+execute and never leaks into the
-    # small-byte md5 lanes the 32k session floor protects.
-    from ..session import AQE_MIN_PARTITION_KEY, aqe_min_partition_size
-
-    spark.conf.set(AQE_MIN_PARTITION_KEY, aqe_min_partition_size())
     # NOTE: spark.sql.codegen.cache.maxEntries (see session.py) is a
     # STATIC conf — it cannot be pinned here on a live session; sessions
     # built outside get_spark() keep the 100-entry default (a perf,
@@ -107,12 +99,14 @@ def query(
 # (c) the 43-row r7-verdict tier (its last compliant seat is r17),
 #     alphabetical; it carries the re-cert for
 #     q_stream_wiredump_sink_replay's r16 plan change (8 sink tasks);
-# (d) 4 spare seats: q_codec_dlq_split (verdict r14), whose plan
-#     changes this round — the dead-letter pipeline now runs the one
-#     spine body, a single mapInPandas, instead of a lenient decode UDF,
-#     a transform map and an encode UDF — then the 3 alphabetically
-#     first rows of the 37-row r8 tier, pulled forward to thin r18's
-#     mandatory window.
+# (d) 4 spare seats, all plan-change re-certs: q_codec_dlq_split
+#     (verdict r14) — the dead-letter pipeline now runs the one spine
+#     body, a single mapInPandas, instead of a lenient decode UDF, a
+#     transform map and an encode UDF — then q_pair_index_snapshot,
+#     q_pair_index_delta (verdicts r11) and q_cogroup_conversion_lag
+#     (verdict r16), whose narrow CPU lanes now carry an explicit-count
+#     exchange (round-robin over the md5 shingle-type dictionary after
+#     its distinct, a hash on user_id under both cogroup sides).
 # 3 + 43 + 4 = 50 exactly. Every seat has a DuckDB oracle: a re-cert
 # for a rows-only query seats its ``portable_twin`` instead.
 PRIORITY_ORDER: tuple[str, ...] = (
@@ -164,11 +158,11 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "q_udaf_grouped_agg",
     "q_weighted_median",
     "q_window_count_distinct",
-    # (d) plan-change re-cert, then the oldest r8 rows
+    # (d) plan-change re-certs
     "q_codec_dlq_split",
-    "q_bm25_retrieval",
-    "q_bootstrap_ci",
-    "q_bottomk_coordinated_sample",
+    "q_pair_index_snapshot",
+    "q_pair_index_delta",
+    "q_cogroup_conversion_lag",
 )
 # Queries declared for the first time in the CURRENT round (no driver
 # verdict yet, by construction — they were born after the last
@@ -179,16 +173,19 @@ PRIORITY_ORDER: tuple[str, ...] = (
 # births into PRIORITY_ORDER.
 NEW_THIS_ROUND: tuple[str, ...] = ()
 # r18 window plan (compute, don't trust): lead with any r17 births,
-# then the r8-verdict tier (34 rows left after (d); its last compliant
-# seat is r18, MANDATORY), then any r17 plan-change re-certs, then the
-# oldest r9 rows.
+# then the whole 37-row r8-verdict tier (its last compliant seat is r18,
+# MANDATORY). That tier carries the re-certs for the two r8-verdict
+# rows whose plans change in r17 with the md5 lane's explicit width,
+# q_dedup_incremental_snapshot and q_lsh_recall_audit. Then any later
+# plan-change re-certs, then the oldest r9 rows.
 #
-# Session-config deltas (the AQE coalesce minPartitionSize floor and
-# its per-query 1m re-pin on the iterative graph tier added in r16,
-# the replay state-provider default, the timeout replay's state
-# partition width) change no logical/static physical plans and book no
-# seats — the q_audio_zero_crossing "runtime conf books no seat"
-# precedent from r15.
+# Session conf books no seats (the q_audio_zero_crossing "runtime conf
+# books no seat" precedent from r15): it changes no logical or static
+# physical plan. Since r17 no query sets session conf at build time;
+# the replay state-provider default and the timeout replay's state
+# partition width are set and restored around the run inside the call.
+# A width that a plan declares (repartition(n, key)) is a plan change
+# and DOES book a seat.
 # tests/test_registry_window.py fails if a stale row is missed.
 
 

@@ -63,10 +63,6 @@ def q_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     DF cap (<= 4 docs/shingle), and bounded in general by the
     degree-orientation trick q_triangle_oriented already applies. All
     joins are key-partitioned; nothing is quadratic in |V|."""
-    from ._util import pin_iterative_aqe_floor
-
-    # many-tiny-stage graph row: 1m AQE floor (r16 A/B 1.13x vs 32k)
-    pin_iterative_aqe_floor(spark)
     edges = _candidate_edges(spark, sf_dir).localCheckpoint(eager=False)
     adj = edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst")

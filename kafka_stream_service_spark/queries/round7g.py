@@ -62,10 +62,6 @@ def q_modularity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two key-partitioned joins (edge endpoints -> labels),
     two groupBys; m is a broadcast scalar. Nothing touches node-pair
     space beyond the existing bounded candidate edges."""
-    from ._util import pin_iterative_aqe_floor
-
-    # iterative/many-tiny-stage row: 1m AQE floor (r16 A/B 1.30x vs 32k)
-    pin_iterative_aqe_floor(spark)
     edges = _candidate_edges(spark, sf_dir).localCheckpoint(eager=False)
     src = tables(spark, sf_dir)["documents"].select("doc_id", "source")
     labeled = (

@@ -185,10 +185,6 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: degree is one groupBy over edge endpoints; the
     histogram is a second bounded groupBy (O(log max_degree) rows)."""
-    from ._util import pin_iterative_aqe_floor
-
-    # many-tiny-stage graph row: 1m AQE floor (r16 A/B 1.19x vs 32k)
-    pin_iterative_aqe_floor(spark)
     edges = _candidate_edges(spark, sf_dir).localCheckpoint(eager=False)
     ends = edges.select(F.col("u").alias("node")).unionAll(
         edges.select(F.col("v").alias("node"))

@@ -762,12 +762,8 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out). Fixed round count keeps the result a deterministic
     function of the input.
     """
-    from ._util import pin_iterative_aqe_floor
     from .graph_q import _candidate_edges
 
-    # iterative/many-tiny-stage row: 1m AQE floor (r16 A/B 1.43x vs 32k,
-    # the VERDICT r15 #1 reclaim — driver-confirmed 0.71x collateral)
-    pin_iterative_aqe_floor(spark)
     edges = _candidate_edges(spark, sf_dir)
     adj = (
         edges.select(F.col("u").alias("a"), F.col("v").alias("b"))

@@ -197,10 +197,6 @@ def q_basket_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter — the pruning that makes level-3 feasible when baskets are
     wide.
     """
-    from ._util import pin_iterative_aqe_floor
-
-    # many-tiny-stage row: 1m AQE floor (r16 A/B 1.42x vs 32k)
-    pin_iterative_aqe_floor(spark)
     t = tables(spark, sf_dir)
     b = (
         t["lineitem"]

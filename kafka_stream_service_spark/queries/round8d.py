@@ -450,11 +450,8 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoints); the corner credit is one explode + groupBy on vertex
     ids; degrees one more. All hash-partitioned on vertex.
     """
-    from ._util import pin_iterative_aqe_floor
     from .graph_q import _candidate_edges
 
-    # iterative/many-tiny-stage row: 1m AQE floor (r16 A/B 1.45x vs 32k)
-    pin_iterative_aqe_floor(spark)
     edges = _candidate_edges(spark, sf_dir)
     e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))

@@ -79,12 +79,6 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus word count (the canonical explode -> groupBy): token
     frequencies and document frequencies."""
-    from ._util import pin_iterative_aqe_floor
-
-    # tiny-shuffle agg chain (countDistinct = 2 sub-MB exchanges): 1m
-    # AQE floor (r16 headline A/B 1.58x vs 32k; the r15 driver's 0.83x
-    # regression on this row was floor collateral)
-    pin_iterative_aqe_floor(spark)
     d = tables(spark, sf_dir)["documents"]
     return (
         d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("token"))

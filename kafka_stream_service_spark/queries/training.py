@@ -76,11 +76,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard key, so each partition's prefix-sum is independent, which is
     what makes this shape viable at 100 TB.
     """
-    from ._util import pin_iterative_aqe_floor
-
-    # tiny-shuffle window row: 1m AQE floor (r16 headline A/B 1.22x vs
-    # 32k; the r15 driver's 0.90x regression here was floor collateral)
-    pin_iterative_aqe_floor(spark)
     d = tables(spark, sf_dir)["documents"]
     n_tokens = F.size(F.split(F.col("text"), " "))
     w = W.partitionBy("source").orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0)

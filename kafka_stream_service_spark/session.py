@@ -5,9 +5,11 @@ configs apply per-executor. Everything here is sized so the same logical
 plans scale from the sf0.001 smoke tables to a 1000-executor 100 TB run:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic broadcast)
-- shuffle partitions ~ cores locally; AQE coalesces, and on a cluster the
-  initial number is raised via ``spark.sql.adaptive.coalescePartitions.
-  initialPartitionNum`` rather than hand-tuning per query
+- shuffle partitions ~ cores locally; AQE coalesces with Spark's default
+  floor, and on a cluster the initial number is raised via
+  ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``. The one
+  exception is a narrow CPU-bound lane, which declares its width in its
+  own plan with an explicit-count repartition (SCALE.md)
 - Arrow enabled for every Python<->JVM boundary (pandas UDFs, toPandas)
 - session timezone pinned to UTC so results are oracle-comparable
 """
@@ -19,18 +21,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
-
-# AQE coalesce floor (see the minPartitionSize comment in get_spark).
-# Exposed as module-level helpers so the per-query scoping machinery
-# (queries/registry.py re-pins the session default on every query call;
-# iterative graph queries re-pin 1m for their own execution) reads the
-# SAME source of truth as the session builder.
-AQE_MIN_PARTITION_KEY = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-
-
-def aqe_min_partition_size() -> str:
-    """The session-default AQE coalesce floor, env-overridable."""
-    return os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "32k")
 
 
 def cpu_count() -> int:
@@ -62,29 +52,10 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")
+        # AQE coalesces with Spark's default floor; a narrow CPU-bound
+        # lane sets its own width in its plan (an explicit-count
+        # repartition, which AQE never coalesces), not in session conf
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE's coalescer is a BYTES heuristic: with the default 1 MB
-        # minPartitionSize it folds any sub-MB shuffle into ONE task,
-        # which serializes CPU-BOUND stages whose bytes are small — the
-        # portable tier's md5 lanes (16-permutation minhash signatures,
-        # permutation grids) lost 10-30x of the machine exactly there
-        # (optimization r15, stage profile: q_pair_index_snapshot spent
-        # 3.7 of 5.9 s in one task reading a 427 KB shuffle; interleaved
-        # A/B with 32k: 6.8 -> 3.0-3.5 s, q_dedup_incremental_snapshot
-        # 3.3-3.7 -> 2.3-2.5 s). The floor is NOT free: iterative
-        # many-small-stage rows pay more tiny-task scheduling per
-        # iteration, and the driver confirmed >10% regressions on the
-        # graph tier (VERDICT r15: q_triangle_oriented 0.67x,
-        # q_label_propagation 0.71x, q_decontaminate_ngram 0.76x) —
-        # those queries re-pin a 1m floor for their own execution via
-        # _util.pin_iterative_aqe_floor (optimization r16), while
-        # registry._pin_session_confs restores this session default on
-        # every other query call. The floor is inert at scale: it binds
-        # only while total stage bytes / parallelism is under 32 KB — a
-        # CPU-heavy-small-bytes pathology, not a throughput regime;
-        # large stages keep their guide-sized partitions via
-        # parallelismFirst + advisory size.
-        .config(AQE_MIN_PARTITION_KEY, aqe_min_partition_size())
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE re-coalesce stages that read persisted frames: iterative
         # operators (connected components, Lloyd training) persist tiny

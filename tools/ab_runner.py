@@ -1,20 +1,28 @@
-"""One whole-process leg of the r8-vs-r9 interleaved A/B (VERDICT r9 #4).
+"""One whole-process leg of an interleaved A/B between two source trees.
 
-Runs the shared-55 headline rows (names from a JSON list) against the
-code in a given worktree, with bench.py's exact methodology — one
-flagship warmup, 3 timed passes in fixed order, GC reclaim every 12
-queries, per-row MEDIAN — and appends one JSON line {row: median} to the
-output file. The orchestrator (tools/ab_bench.sh) alternates worktrees
-ABABAB so host drift averages out of the comparison instead of landing
-on one side.
+Runs the catalog rows named in a JSON list against the code in a given
+tree, with bench.py's exact methodology — one flagship warmup, 3 timed
+passes in fixed order, GC reclaim every 12 queries, per-row MEDIAN — and
+appends one JSON line {"worktree": tree, "medians": {row: s}} to the
+output file. Run legs for the two trees alternately (ABAB...) so host
+drift averages out of the comparison instead of landing on one side.
+The tree also goes first on the ``PYTHONPATH`` the Spark JVM hands its
+Python workers, so UDFs import the package from the tree under test, not
+from the working directory:
 
-Usage: python tools/ab_runner.py <worktree> <shared_names.json> <out.jsonl>
+    for i in 1 2 3 4; do
+        python tools/ab_runner.py <parent_tree> rows.json parent.jsonl
+        python tools/ab_runner.py <change_tree> rows.json change.jsonl
+    done
+
+Usage: python tools/ab_runner.py <worktree> <names.json> <out.jsonl>
 """
 
 from __future__ import annotations
 
 import gc
 import json
+import os
 import sys
 import time
 
@@ -22,6 +30,9 @@ import time
 def main() -> None:
     worktree, names_path, out_path = sys.argv[1], sys.argv[2], sys.argv[3]
     sys.path.insert(0, worktree)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (worktree, os.environ.get("PYTHONPATH")) if p
+    )
     names = json.load(open(names_path))
 
     from kafka_stream_service_spark.queries import QUERIES
