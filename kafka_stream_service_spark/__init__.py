@@ -6,6 +6,8 @@ exactly-once streaming pipeline; see SURVEY.md), re-expressed idiomatically
 on Apache Spark:
 
 - ``session``     : SparkSession factory tuned for local[N] and cluster use
+- ``pyworker``    : the Python worker daemon the session's executors fork
+                    UDF workers from
 - ``schemas``     : explicit StructType constants (Message model + tables)
 - ``codec``       : the reference's custom binary Message framing codec
                     (reference: MessageDeserializer.java:49-70,

@@ -34,6 +34,10 @@ KAFKA_FRAME_SCHEMA = T.StructType(
 )
 
 # --- Fixture tables (FIXTURES.md; verified against parquet footers) ---------
+# The date and time columns are TIMESTAMP_NTZ: the files hold parquet
+# timestamps with no time zone. ``tables.load_table`` reads a table whose
+# footer matches with these schemas, and tests/test_declared_schemas.py
+# checks them against every fixture set on the host.
 REGION = T.StructType(
     [
         T.StructField("r_regionkey", T.IntegerType()),
@@ -85,7 +89,7 @@ ORDERS = T.StructType(
         T.StructField("o_custkey", T.LongType()),
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
         T.StructField("o_orderpriority", T.StringType()),
     ]
 )
@@ -102,14 +106,14 @@ LINEITEM = T.StructType(
         T.StructField("l_tax", T.DoubleType()),
         T.StructField("l_returnflag", T.StringType()),
         T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
+        T.StructField("l_shipdate", T.TimestampNTZType()),
     ]
 )
 
 EVENTS = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
+        T.StructField("ts", T.TimestampNTZType()),
         T.StructField("user_id", T.LongType()),
         T.StructField("event_type", T.StringType()),
         T.StructField("value", T.DoubleType()),
