@@ -12,13 +12,12 @@ The reference streams records through a bidirectional gRPC call
         message HeaderValue { repeated string values = 1; }
     }
 
-Neither ``grpcio`` nor ``google.protobuf`` ships in this container, so the
-protobuf WIRE codec for ``Message`` is implemented here by hand (proto3
-wire format is a stable public spec: varint tags, length-delimited
-fields). That keeps the protocol logic pure-Python and unit-testable
-anywhere; the channel-facing ``call_stream`` uses grpc's *generic*
-stream-stream multicallable with these functions as the (de)serializers,
-so no generated stub is needed when ``grpcio`` IS present.
+The protobuf WIRE codec for ``Message`` is implemented here by hand
+(proto3 wire format is a stable public spec: varint tags,
+length-delimited fields), so neither ``google.protobuf`` nor generated
+classes are needed. That keeps the protocol logic pure-Python and
+unit-testable anywhere; ``call_stream`` hands these functions as the
+(de)serializers to ``h2grpc.H2GrpcChannel.stream_stream``.
 
 Correlation contract: responses are correlated by stream order, exactly
 one out per in (StreamsApplication.java:185-187) — ``call_stream`` yields
@@ -179,9 +178,9 @@ def call_stream(
     ``/function.MessageFunction/Call`` and yield responses in stream order
     (the protocol's only correlation mechanism — 1-in-1-out).
 
-    ``channel`` is a ``grpc.Channel``; the generic multicallable plus the
-    hand-rolled codec above means no generated protobuf classes are
-    required.
+    ``channel`` is an ``h2grpc.H2GrpcChannel``; its ``stream_stream``
+    multicallable plus the hand-rolled codec above means no generated
+    protobuf classes are required.
     """
     multicallable = channel.stream_stream(
         GRPC_METHOD,

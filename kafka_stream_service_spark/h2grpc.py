@@ -1,13 +1,11 @@
-"""A minimal stdlib HTTP/2 transport for the riff gRPC Call method —
-closing R8's "live leg needs grpcio" gap without grpcio.
+"""A minimal stdlib HTTP/2 transport for the riff gRPC Call method: the
+function slot's one wire, with no ``grpcio`` dependency.
 
 The reference's function hop is a bidirectional gRPC call
-(StreamsApplication.java:179-190). This container has no ``grpcio``, so
-round 5 could test the protobuf codec and the in-process fallback but
-never a REAL network hop. gRPC's transport is just HTTP/2 (RFC 9113) +
-HPACK (RFC 7541) + a 5-byte message prefix (the public gRPC wire spec),
-all implementable on ``socket``/``struct`` — so this module implements
-the subset both ends of a loopback hop need:
+(StreamsApplication.java:179-190). gRPC's transport is just HTTP/2
+(RFC 9113) + HPACK (RFC 7541) + a 5-byte message prefix (the public gRPC
+wire spec), all implementable on ``socket``/``struct`` — so this module
+implements the subset both ends of a loopback hop need:
 
 - connection preface / SETTINGS exchange / PING-ack / GOAWAY;
 - HEADERS with HPACK: encoder emits literal-without-indexing with plain
@@ -28,9 +26,10 @@ is a LOOPBACK/TEST transport for the riff method, not an internet-facing
 HTTP/2 implementation (no PUSH, no priorities, no padding emission, one
 concurrent stream per call).
 
-``H2GrpcChannel.stream_stream`` mirrors ``grpc.Channel.stream_stream``'s
-generic multicallable shape, so ``grpc_function.call_stream`` runs
-unchanged over either transport.
+``H2GrpcChannel.stream_stream`` has the shape of grpc's generic
+stream-stream multicallable, which is what ``grpc_function.call_stream``
+calls. ``transform.RemoteFunction`` opens one channel per call and
+closes it (GOAWAY, then the socket) when the call ends.
 """
 
 from __future__ import annotations
@@ -330,10 +329,9 @@ def _send_data_chunked(
 class H2GrpcChannel:
     """Loopback gRPC channel over the stdlib HTTP/2 subset.
 
-    Duck-types ``grpc.Channel.stream_stream`` so
-    ``grpc_function.call_stream`` works unchanged. One call at a time
-    (the riff pipeline's per-batch cadence); each call is a fresh stream
-    on the shared connection.
+    ``stream_stream`` returns grpc's generic multicallable shape, which
+    ``grpc_function.call_stream`` calls. One call at a time; each call is
+    a fresh stream on the connection.
     """
 
     def __init__(self, host: str, port: int, connect_timeout: float = 5.0):
@@ -449,10 +447,7 @@ class H2GrpcServer:
         self._lsock.listen(8)
         self.port = self._lsock.getsockname()[1]
         self._closing = False
-        self._threads: list[threading.Thread] = []
-        t = threading.Thread(target=self._accept_loop, daemon=True)
-        t.start()
-        self._threads.append(t)
+        threading.Thread(target=self._accept_loop, daemon=True).start()
 
     def _accept_loop(self):
         while not self._closing:
@@ -460,9 +455,7 @@ class H2GrpcServer:
                 conn, _ = self._lsock.accept()
             except OSError:
                 return
-            t = threading.Thread(target=self._serve_conn, args=(conn,), daemon=True)
-            t.start()
-            self._threads.append(t)
+            threading.Thread(target=self._serve_conn, args=(conn,), daemon=True).start()
 
     def _serve_conn(self, sock: socket.socket):
         import queue

@@ -90,8 +90,8 @@ def _spine(
     apply = fn if enabled else None
 
     def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-executor-task setup happens here (a RemoteFunction connects
-        # lazily on its first batch); teardown when the iterator ends
+        # the codec caches live for the task; ``fn`` owns whatever it
+        # opens per call (a RemoteFunction dials and closes one channel)
         prefix_cache: dict[tuple, bytes] = {}
         decode_cache: dict[bytes, dict] = {}
         for pdf in batches:

@@ -1,7 +1,5 @@
 from .materialize import continuous_aggregate, read_continuous_aggregate  # noqa: F401
 from .ops import (  # noqa: F401
-    accumulate_totals,
-    running_totals_tws,
     sessionized,
     stream_static_join,
     streaming_dedup,

@@ -90,77 +90,6 @@ def streaming_dedup(
     return with_wm.dropDuplicates(list(keys))
 
 
-def accumulate_totals(state, batches, value_col: str = "value"):
-    """Pure accumulate step shared by the TWS processor below: fold pandas
-    batches into a ``(total, n)`` tuple, starting from ``state`` (a prior
-    tuple, or None/falsy for a fresh key — mirrors ``ValueState.get()``
-    after an ``exists()`` check).
-
-    Factored out of the processor so the state-transition logic is
-    unit-testable without the TWS protobuf protocol
-    (``tests/test_stateful.py::test_accumulate_totals_*``)."""
-    total, n = state if state else (0.0, 0)
-    for pdf in batches:
-        total += float(pdf[value_col].sum())
-        n += len(pdf)
-    return total, n
-
-
-def running_totals_tws(
-    stream: DataFrame,
-    key: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key running totals via ``transformWithStateInPandas`` (Spark 4's
-    arbitrary-stateful API — typed per-key state on the RocksDB store,
-    successor to ``applyInPandasWithState``, which
-    ``tests/test_stateful.py`` also covers).
-
-    State is one (total, n) ValueState per key — O(active keys), stream-
-    length independent; the same processor shape extends to timers/TTL for
-    expiring idle keys at scale.
-
-    Runtime requirement: the TWS state protocol speaks protobuf, so
-    ``google.protobuf`` must be importable by the Python workers (absent in
-    this test container — the test is skipped there and
-    ``applyInPandasWithState`` covers the arbitrary-stateful surface).
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key, T.LongType()),
-            T.StructField("total", T.DoubleType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [T.StructField("total", T.DoubleType()), T.StructField("n", T.LongType())]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            prior = self._state.get() if self._state.exists() else None
-            total, n = accumulate_totals(prior, rows, value_col)
-            self._state.update((total, n))
-            yield pd.DataFrame({key: [key_tuple[0]], "total": [total], "n": [n]})
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key).transformWithStateInPandas(
-        RunningTotals(), outputStructType=out_schema, outputMode="Update", timeMode="None"
-    )
-
-
 def stream_static_join(
     events: DataFrame,
     static_dim: DataFrame,

@@ -9,8 +9,8 @@ Spark-native re-expression: the spine's single ``mapInPandas`` body
 and encodes the result, which gives exactly the lifecycle the reference's
 channel needs —
 
-- per-executor-task setup/teardown (the gRPC channel equivalent opens once
-  per partition, not per record);
+- one function call per Arrow batch of up to 10k records, not one per
+  record;
 - Arrow-batched transfer across the process boundary (the reference pays a
   per-record protobuf hop; we pay one Arrow batch per ~10k records);
 - 1-in-1-out ordering within each batch, which is the reference's only
@@ -18,9 +18,9 @@ channel needs —
   StreamsApplication.java:185-187).
 
 The "function" is pluggable: any ``MessageFunction`` (pandas batch ->
-pandas batch over columns ``headers``/``payload``). ``RemoteFunction``
-shows the per-executor-connection pattern, with a local fallback for
-when no gRPC transport is available.
+pandas batch over columns ``headers``/``payload``). An in-process function
+is passed as the slot itself; ``RemoteFunction`` reaches a function server
+over the wire, and a server it cannot reach fails the call.
 """
 from __future__ import annotations
 
@@ -28,6 +28,9 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 import pandas as pd
+
+from .grpc_function import call_stream
+from .h2grpc import H2GrpcChannel
 
 # A message function maps a pandas batch with columns (headers, payload) to
 # a batch with the same columns — the Spark analog of
@@ -57,73 +60,47 @@ class FunctionConfig:
     (StreamsApplication.java:42-64): host/port of the function server and
     the enabled flag.
 
-    ``transport`` selects the wire: "auto" uses grpcio when importable
-    and otherwise the local fallback (the safe default — the default
-    host:port points at nothing in this container); "grpcio" forces the
-    grpc.Channel path; "h2-stdlib" forces the dependency-free HTTP/2
-    transport (h2grpc.py) — a REAL loopback TCP hop speaking the public
-    gRPC wire format, which is how the live leg of R8 is exercised in
-    containers without grpcio; "local" forces the in-process fallback.
+    ``transport`` has one value, "h2-stdlib": the stdlib HTTP/2 transport
+    (h2grpc.py), a real TCP hop speaking the public gRPC wire format.
     """
 
     host: str = "localhost"
     port: int = 10382
     enabled: bool = True
-    transport: str = "auto"
+    transport: str = "h2-stdlib"
 
 
 class RemoteFunction:
-    """Per-executor remote-function client (the gRPC slot).
+    """The gRPC function slot: each call streams its batch through the riff
+    bidirectional ``Call`` (``grpc_function.call_stream``,
+    StreamsApplication.java:185-187 semantics: responses correlated by
+    stream order, 1-in-1-out) on a channel of its own, closed when the
+    call returns or fails.
 
-    The client connects lazily on first batch inside the executor task —
-    the same lifecycle as the reference's per-subscription channel
-    (StreamsApplication.java:181-184). With a live channel every batch
-    streams through the riff bidirectional ``Call``
-    (``grpc_function.call_stream``, StreamsApplication.java:185-187
-    semantics: responses correlated by stream order, 1-in-1-out); when
-    ``grpcio`` is not importable (this container) it falls back to a local
-    callable, keeping the distributed plumbing (lazy init, per-batch
-    calls, teardown) identical on both paths.
+    A channel per call, not per worker: a loopback dial costs about 1% of
+    a 1k-message call (SCALE.md, "Streaming"), and a broken channel is
+    never reused.
     """
 
-    def __init__(self, config: FunctionConfig, local_fallback: MessageFunction = uppercase_function):
+    def __init__(self, config: FunctionConfig):
+        if config.transport != "h2-stdlib":
+            raise ValueError(
+                f"unknown transport {config.transport!r}: the only one is 'h2-stdlib' "
+                "('auto', 'grpcio' and 'local' were removed; pass an in-process "
+                "function as the pipeline's fn instead)"
+            )
         self.config = config
-        self.local_fallback = local_fallback
-        self._channel = None
-
-    def connect(self):
-        if self._channel is None:
-            mode = getattr(self.config, "transport", "auto")
-            if mode == "local":
-                self._channel = "local"
-            elif mode == "h2-stdlib":
-                from .h2grpc import H2GrpcChannel
-
-                self._channel = H2GrpcChannel(self.config.host, self.config.port)
-            else:
-                try:
-                    import grpc  # type: ignore[import-not-found]
-
-                    self._channel = grpc.insecure_channel(
-                        f"{self.config.host}:{self.config.port}"
-                    )
-                except ImportError:
-                    if mode == "grpcio":
-                        raise
-                    self._channel = "local"
-        return self._channel
 
     def __call__(self, batch: pd.DataFrame) -> pd.DataFrame:
-        channel = self.connect()
-        if channel == "local" or channel is None:
-            return self.local_fallback(batch)
-        from .grpc_function import call_stream
-
         requests = (
             (dict(h) if h is not None else {}, bytes(p) if p is not None else b"")
             for h, p in zip(batch["headers"], batch["payload"])
         )
-        responses = list(call_stream(channel, requests))
+        channel = H2GrpcChannel(self.config.host, self.config.port)
+        try:
+            responses = list(call_stream(channel, requests))
+        finally:
+            channel.close()
         if len(responses) != len(batch):
             raise RuntimeError(
                 f"function server broke 1-in-1-out: sent {len(batch)}, got {len(responses)}"
@@ -132,8 +109,3 @@ class RemoteFunction:
         out["headers"] = [h for h, _ in responses]
         out["payload"] = [p for _, p in responses]
         return out
-
-    def close(self):
-        if self._channel not in (None, "local"):
-            self._channel.close()
-        self._channel = None

@@ -1,18 +1,15 @@
 """Tests for the riff function-gRPC protocol (grpc_function.py).
 
-The protobuf wire codec is pure Python and tests everywhere; the live
-bidirectional-call test needs ``grpcio`` and skips in containers without
-it (the call path is exercised end-to-end wherever grpcio exists).
+The protobuf wire codec is pure Python; the live bidirectional call over
+a real TCP hop is tested in ``test_h2grpc.py``.
 """
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from kafka_stream_service_spark.grpc_function import (
-    GRPC_METHOD,
     pb_decode_message,
     pb_encode_message,
 )
@@ -73,69 +70,3 @@ def test_pb_roundtrip_property(headers, payload):
     expect = dict(headers)
     assert got_p == payload
     assert got_h == expect
-
-
-def _has_grpc() -> bool:
-    try:
-        import grpc  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_grpc(),
-    reason="grpcio not in this container; the live bidi-call path is "
-    "exercised wherever it is installed",
-)
-def test_remote_function_roundtrip_against_fake_server():
-    """End-to-end: an in-process generic gRPC server speaking the riff
-    Call method; RemoteFunction must stream a batch through it preserving
-    order (1-in-1-out) and surface the transformed headers/payloads."""
-    from concurrent import futures
-
-    import grpc
-    import pandas as pd
-
-    from kafka_stream_service_spark.grpc_function import pb_decode_message as dec
-    from kafka_stream_service_spark.grpc_function import pb_encode_message as enc
-    from kafka_stream_service_spark.transform import FunctionConfig, RemoteFunction
-
-    def upper_behavior(request_iterator, context):
-        for raw in request_iterator:
-            headers, payload = dec(raw)
-            headers = {**headers, "seen": ["1"]}
-            yield enc(headers, payload.decode("utf-8").upper().encode("utf-8"))
-
-    method = GRPC_METHOD.strip("/").split("/")
-    handler = grpc.method_handlers_generic_handler(
-        method[0],
-        {
-            method[1]: grpc.stream_stream_rpc_method_handler(
-                upper_behavior,
-                request_deserializer=lambda b: b,
-                response_serializer=lambda b: b,
-            )
-        },
-    )
-    server = grpc.server(futures.ThreadPoolExecutor(max_workers=2))
-    server.add_generic_rpc_handlers((handler,))
-    port = server.add_insecure_port("localhost:0")
-    server.start()
-    try:
-        fn = RemoteFunction(FunctionConfig(host="localhost", port=port))
-        batch = pd.DataFrame(
-            {
-                "headers": [{"id": [str(i)]} for i in range(5)],
-                "payload": [f"msg-{i}".encode() for i in range(5)],
-            }
-        )
-        out = fn(batch)
-        fn.close()
-        assert list(out["payload"]) == [f"MSG-{i}".encode() for i in range(5)]
-        for i, h in enumerate(out["headers"]):
-            assert h["id"] == [str(i)]  # order preserved
-            assert h["seen"] == ["1"]
-    finally:
-        server.stop(0)

@@ -1,14 +1,12 @@
-"""The R8 live leg WITHOUT grpcio: a real loopback TCP hop speaking the
-public gRPC wire format (HTTP/2 + HPACK + length-prefixed messages) via
-the stdlib transport (h2grpc.py).
-
-Round 5 left "live gRPC leg needs grpcio" as environment-blocked; these
-tests remove the block by implementing the transport subset both ends
-need. The grpcio-gated test remains for containers that have it — same
-behavior, different transport stack.
+"""The R8 live leg: a real loopback TCP hop speaking the public gRPC wire
+format (HTTP/2 + HPACK + length-prefixed messages) via the stdlib
+transport (h2grpc.py), the function slot's one wire.
 """
 
 from __future__ import annotations
+
+import socket
+import threading
 
 import pandas as pd
 import pytest
@@ -36,11 +34,33 @@ def _upper_handler(request_iterator):
         yield pb_encode_message(headers, payload.decode("utf-8").upper().encode("utf-8"))
 
 
+class _TrackingServer(H2GrpcServer):
+    """Records the thread serving each accepted connection, before it
+    answers anything."""
+
+    def __init__(self, handler):
+        self.conn_threads: list[threading.Thread] = []
+        super().__init__(handler)
+
+    def _serve_conn(self, sock):
+        self.conn_threads.append(threading.current_thread())
+        super()._serve_conn(sock)
+
+
 @pytest.fixture()
 def server():
-    srv = H2GrpcServer(_upper_handler)
+    srv = _TrackingServer(_upper_handler)
     yield srv
     srv.close()
+
+
+def _batch(n: int) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "headers": [{"id": [str(i)]} for i in range(n)],
+            "payload": [f"msg-{i}".encode() for i in range(n)],
+        }
+    )
 
 
 # ----------------------------------------------------------------- hpack
@@ -134,24 +154,70 @@ def test_empty_stream_yields_no_responses(server):
 
 
 def test_remote_function_live_leg_stdlib_transport(server):
-    """The full R8 slot against a live server: RemoteFunction with
-    transport='h2-stdlib' streams a batch through a real TCP hop,
-    preserving 1-in-1-out order — the exact test that was grpcio-gated,
-    now dependency-free."""
-    fn = RemoteFunction(
-        FunctionConfig(host="127.0.0.1", port=server.port, transport="h2-stdlib")
-    )
-    batch = pd.DataFrame(
-        {
-            "headers": [{"id": [str(i)]} for i in range(5)],
-            "payload": [f"msg-{i}".encode() for i in range(5)],
-        }
-    )
-    out = fn(batch)
-    fn.close()
+    """The full R8 slot against a live server: RemoteFunction streams a
+    batch through a real TCP hop, preserving 1-in-1-out order."""
+    fn = RemoteFunction(FunctionConfig(host="127.0.0.1", port=server.port))
+    out = fn(_batch(5))
     assert list(out["payload"]) == [f"MSG-{i}".encode() for i in range(5)]
     for i, h in enumerate(out["headers"]):
         assert h["id"] == [str(i)] and h["seen"] == ["1"]
+
+
+def test_remote_function_one_channel_per_call(server):
+    """Each call dials its own channel and closes it when it returns:
+    three calls are three accepted connections, and no server connection
+    is left open after the last call."""
+    fn = RemoteFunction(FunctionConfig(host="127.0.0.1", port=server.port))
+    for n in (3, 1, 4):
+        assert list(fn(_batch(n))["payload"]) == [f"MSG-{i}".encode() for i in range(n)]
+    assert len(server.conn_threads) == 3
+    for t in server.conn_threads:
+        t.join(timeout=5)
+    assert not any(t.is_alive() for t in server.conn_threads)
+
+
+def test_remote_function_unreachable_server_raises(spark):
+    """A function slot pointed at a server that is not there fails the
+    batch; nothing runs in the server's place."""
+    from kafka_stream_service_spark.codec import encode_py
+    from kafka_stream_service_spark.pipeline import run_pipeline_batch
+
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        closed_port = s.getsockname()[1]
+    frames = spark.createDataFrame(
+        [(None, bytearray(encode_py({}, b"hello")))], "key binary, value binary"
+    )
+    fn = RemoteFunction(FunctionConfig(host="127.0.0.1", port=closed_port))
+    with pytest.raises(Exception, match="ConnectionRefusedError"):
+        run_pipeline_batch(frames, fn).collect()
+
+
+@pytest.mark.parametrize("transport", ["auto", "grpcio", "local"])
+def test_remote_function_rejects_removed_transports(transport):
+    with pytest.raises(ValueError, match="h2-stdlib"):
+        RemoteFunction(FunctionConfig(transport=transport))
+
+
+def test_remote_function_recovers_after_handler_error():
+    """A call that fails on the server raises, and the next call on the
+    same RemoteFunction gets a fresh channel and succeeds."""
+    streams = []
+
+    def fails_first(request_iterator):
+        streams.append(1)
+        if len(streams) == 1:
+            raise RuntimeError("first stream fails")
+        yield from _upper_handler(request_iterator)
+
+    srv = H2GrpcServer(fails_first)
+    try:
+        fn = RemoteFunction(FunctionConfig(host="127.0.0.1", port=srv.port))
+        with pytest.raises(ConnectionError, match="grpc-status 2"):
+            fn(_batch(2))
+        assert list(fn(_batch(2))["payload"]) == [b"MSG-0", b"MSG-1"]
+    finally:
+        srv.close()
 
 
 def test_remote_function_pipeline_parity_over_live_hop(spark, server):
@@ -166,9 +232,7 @@ def test_remote_function_pipeline_parity_over_live_hop(spark, server):
     rows = [(None, bytearray(encode_py({"k": ["v"]}, f"record {i} MiXeD".encode())))
             for i in range(20)]
     frames = spark.createDataFrame(rows, "key binary, value binary")
-    remote = RemoteFunction(
-        FunctionConfig(host="127.0.0.1", port=server.port, transport="h2-stdlib")
-    )
+    remote = RemoteFunction(FunctionConfig(host="127.0.0.1", port=server.port))
     got = [decode_py(bytes(r.value)) for r in run_pipeline_batch(frames, remote).collect()]
     expect = [
         decode_py(bytes(r.value))
@@ -184,8 +248,7 @@ def test_streaming_pipeline_with_live_remote_function(spark, server, tmp_path):
     source -> wire decode -> per-record function hosted in an EXTERNAL
     server reached over a real gRPC/HTTP-2 TCP hop -> wire encode ->
     memory sink. This is the full R1-R17 spine with the R8 leg live
-    (StreamsApplication.java:179-190), previously possible only where
-    grpcio was installed."""
+    (StreamsApplication.java:179-190)."""
     from kafka_stream_service_spark.codec import decode_py, encode_py
     from kafka_stream_service_spark.pipeline import PipelineConfig, start_pipeline
 
@@ -206,7 +269,7 @@ def test_streaming_pipeline_with_live_remote_function(spark, server, tmp_path):
         source_path=str(src),
         checkpoint_dir=str(tmp_path / "ckpt"),
         query_name="h2_live_pipe",
-        function=FunctionConfig(host="127.0.0.1", port=server.port, transport="h2-stdlib"),
+        function=FunctionConfig(host="127.0.0.1", port=server.port),
     )
     remote = RemoteFunction(cfg.function)
     q = start_pipeline(spark, cfg, remote)

@@ -25,8 +25,6 @@ from kafka_stream_service_spark.pipeline import (
 from kafka_stream_service_spark.plans import physical_plan
 from kafka_stream_service_spark.plans.inspect import _PY_NODES, _tree_nodes
 from kafka_stream_service_spark.transform import (
-    FunctionConfig,
-    RemoteFunction,
     identity_function,
     uppercase_function,
 )
@@ -201,15 +199,6 @@ def test_identity_bypass(spark):
     in_values = sorted(bytes(r.value) for r in frames.collect())
     out_values = sorted(bytes(r.value) for r in out)
     assert out_values == in_values
-
-
-def test_remote_function_local_fallback(spark):
-    """The RemoteFunction client (gRPC slot) falls back to the local
-    function when no channel is available, preserving behavior."""
-    fn = RemoteFunction(FunctionConfig(host="localhost", port=1), uppercase_function)
-    out = run_pipeline_batch(wire_frames_df(spark), fn).collect()
-    payloads = sorted(p for _, p in decode_outputs(out))
-    assert payloads == sorted(p.decode().upper().encode() for _, p in MESSAGES)
 
 
 def test_streaming_pipeline_files_to_memory(spark, tmp_path):

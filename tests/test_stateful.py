@@ -12,7 +12,6 @@ import shutil
 import time
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -92,106 +91,6 @@ def test_apply_in_pandas_with_state_running_totals(spark, sf_dir, tmp_path):
     got = spark.sql(
         "SELECT user_id, max_by(total, n) AS total, max(n) AS n "
         "FROM stateful_totals GROUP BY user_id"
-    ).collect()
-    truth = {
-        r.user_id: (r.total, r.n)
-        for r in sample.groupBy("user_id")
-        .agg(F.sum("value").alias("total"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert len(got) == len(truth)
-    for r in got:
-        t_total, t_n = truth[r.user_id]
-        assert r.n == t_n
-        assert abs(r.total - t_total) < 1e-6
-
-
-def test_accumulate_totals_fresh_key():
-    """The TWS processor's state transition (streaming/ops.py:
-    accumulate_totals) for a key with no prior state: totals start at
-    (0.0, 0) and fold every batch."""
-    import pandas as pd
-
-    from kafka_stream_service_spark.streaming.ops import accumulate_totals
-
-    batches = [pd.DataFrame({"value": [1.0, 2.0]}), pd.DataFrame({"value": [3.5]})]
-    assert accumulate_totals(None, batches) == (6.5, 3)
-    assert accumulate_totals(None, []) == (0.0, 0)
-
-
-def test_accumulate_totals_resumes_prior_state():
-    """Prior (total, n) state — the ValueState.get() tuple — is the fold
-    seed, so replaying a second micro-batch continues, not restarts."""
-    import pandas as pd
-
-    from kafka_stream_service_spark.streaming.ops import accumulate_totals
-
-    first = accumulate_totals(None, [pd.DataFrame({"value": [10.0, 20.0]})])
-    second = accumulate_totals(first, [pd.DataFrame({"value": [5.0]})])
-    assert second == (35.0, 3)
-    # custom value column name, as running_totals_tws(value_col=...) passes
-    third = accumulate_totals(second, [pd.DataFrame({"v": [1.0]})], value_col="v")
-    assert third == (36.0, 4)
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas state protocol needs google.protobuf "
-    "(not in this container); operator gated, applyInPandasWithState covers "
-    "the arbitrary-stateful surface here",
-)
-def test_transform_with_state_running_totals(spark, sf_dir, tmp_path):
-    """Spark 4 transformWithStateInPandas: same per-user running totals as
-    the applyInPandasWithState test, via the typed ValueState API
-    (streaming/ops.py:running_totals_tws); final state must equal batch
-    truth across two micro-batches."""
-    from kafka_stream_service_spark.streaming.ops import running_totals_tws
-
-    events = tables(spark, sf_dir)["events"]
-    sample = events.orderBy("ts").limit(200).select("user_id", "value", "ts")
-
-    rows = sample.collect()
-    half = len(rows) // 2
-    chunk_dir = tmp_path / "chunks"
-    chunk_dir.mkdir()
-    schema = sample.schema
-    spark.createDataFrame(rows[:half], schema).coalesce(1).write.parquet(str(tmp_path / "c0"))
-    spark.createDataFrame(rows[half:], schema).coalesce(1).write.parquet(str(tmp_path / "c1"))
-    now = time.time()
-    for i in range(2):
-        src = glob.glob(str(tmp_path / f"c{i}" / "*.parquet"))[0]
-        dst = str(chunk_dir / f"{i:02d}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (now - 30 + i * 10, now - 30 + i * 10))
-
-    stream = stream_file_source(spark, str(chunk_dir), events.schema).select(
-        "user_id", "value", "ts"
-    )
-    result = running_totals_tws(stream, key="user_id", value_col="value")
-    q = (
-        result.writeStream.format("memory")
-        .queryName("tws_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = spark.sql(
-        "SELECT user_id, max_by(total, n) AS total, max(n) AS n "
-        "FROM tws_totals GROUP BY user_id"
     ).collect()
     truth = {
         r.user_id: (r.total, r.n)
