@@ -52,7 +52,10 @@ def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
     result = 0
     shift = 0
     while True:
-        b = data[pos]
+        try:
+            b = data[pos]
+        except IndexError:
+            raise ValueError("truncated protobuf varint") from None
         pos += 1
         result |= (b & 0x7F) << shift
         if not (b & 0x80):
@@ -62,16 +65,20 @@ def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
             raise ValueError("varint too long")
 
 
-def _write_len_field(out: bytearray, field_no: int, payload: bytes) -> None:
-    _write_varint(out, (field_no << 3) | _WIRE_LEN)
-    _write_varint(out, len(payload))
-    out += payload
+# Every field of ``Message`` is length-delimited, so each one starts with
+# tag 0x0a (field 1) or 0x12 (field 2). A length under 128 is one varint
+# byte: these prefixes are precomputed, and longer lengths take the
+# general varint path.
+_PREFIX_1 = [bytes((0x0A, n)) for n in range(128)]
+_PREFIX_2 = [bytes((0x12, n)) for n in range(128)]
 
 
-def _encode_header_value(values: list[str]) -> bytes:
-    out = bytearray()
-    for v in values:
-        _write_len_field(out, 1, v.encode("utf-8"))
+def _len_prefix(prefixes: list[bytes], n: int) -> bytes:
+    """Tag and length of a field of ``n`` bytes, for the tag of ``prefixes``."""
+    if n < 128:
+        return prefixes[n]
+    out = bytearray(prefixes[0][:1])  # the tag byte
+    _write_varint(out, n)
     return bytes(out)
 
 
@@ -83,19 +90,25 @@ def pb_encode_message(headers: dict[str, list[str]] | None, payload: bytes | Non
     order (the map order is semantically irrelevant but deterministic
     here).
     """
-    out = bytearray()
+    parts: list[bytes] = []
     if payload:
-        _write_len_field(out, 1, bytes(payload))
+        payload = bytes(payload)
+        parts += (_len_prefix(_PREFIX_1, len(payload)), payload)
     for name, values in (headers or {}).items():
-        entry = bytearray()
+        entry: list[bytes] = []
         key_b = name.encode("utf-8")
         if key_b:
-            _write_len_field(entry, 1, key_b)
-        hv = _encode_header_value(list(values))
+            entry += (_len_prefix(_PREFIX_1, len(key_b)), key_b)
+        hv: list[bytes] = []
+        for v in values:
+            vb = v.encode("utf-8")
+            hv += (_len_prefix(_PREFIX_1, len(vb)), vb)
         if hv:
-            _write_len_field(entry, 2, hv)
-        _write_len_field(out, 2, bytes(entry))
-    return bytes(out)
+            hv_b = b"".join(hv)
+            entry += (_len_prefix(_PREFIX_2, len(hv_b)), hv_b)
+        entry_b = b"".join(entry)
+        parts += (_len_prefix(_PREFIX_2, len(entry_b)), entry_b)
+    return b"".join(parts)
 
 
 def _skip_field(data: bytes, pos: int, wire_type: int) -> int:
@@ -112,60 +125,68 @@ def _skip_field(data: bytes, pos: int, wire_type: int) -> int:
     raise ValueError(f"unsupported wire type {wire_type}")
 
 
-def _decode_header_value(data: bytes) -> list[str]:
-    values: list[str] = []
-    pos = 0
-    while pos < len(data):
-        tag, pos = _read_varint(data, pos)
-        field_no, wire_type = tag >> 3, tag & 7
-        if field_no == 1 and wire_type == _WIRE_LEN:
-            n, pos = _read_varint(data, pos)
-            values.append(data[pos : pos + n].decode("utf-8"))
-            pos += n
+def _next_len_field(data: bytes, pos: int, end: int) -> tuple[int, int, int]:
+    """The next field 1 or 2 of the message in ``data[pos:end]``, as
+    ``(field_no, start, stop)`` of its bytes; unknown fields are skipped
+    and ``(0, end, end)`` marks the end. A field that runs past ``end``
+    raises ``ValueError``."""
+    while pos < end:
+        tag = data[pos]
+        if (tag == 0x0A or tag == 0x12) and pos + 1 < end and data[pos + 1] < 0x80:
+            start = pos + 2
+            stop = start + data[pos + 1]
+            field_no = tag >> 3
         else:
-            pos = _skip_field(data, pos, wire_type)
+            tag, pos = _read_varint(data, pos)
+            field_no, wire_type = tag >> 3, tag & 7
+            if wire_type != _WIRE_LEN or field_no not in (1, 2):
+                pos = _skip_field(data, pos, wire_type)
+                continue
+            n, start = _read_varint(data, pos)
+            stop = start + n
+        if stop > end:
+            raise ValueError(
+                f"truncated protobuf field {field_no}: {stop - start} bytes declared, "
+                f"{end - start} left"
+            )
+        return field_no, start, stop
+    return 0, end, end
+
+
+def _decode_header_value(data: bytes, pos: int, end: int) -> list[str]:
+    values: list[str] = []
+    while pos < end:
+        field_no, start, pos = _next_len_field(data, pos, end)
+        if field_no == 1:
+            values.append(data[start:pos].decode("utf-8"))
     return values
 
 
-def _decode_map_entry(data: bytes) -> tuple[str, list[str]]:
+def _decode_map_entry(data: bytes, pos: int, end: int) -> tuple[str, list[str]]:
     key, values = "", []
-    pos = 0
-    while pos < len(data):
-        tag, pos = _read_varint(data, pos)
-        field_no, wire_type = tag >> 3, tag & 7
-        if field_no == 1 and wire_type == _WIRE_LEN:
-            n, pos = _read_varint(data, pos)
-            key = data[pos : pos + n].decode("utf-8")
-            pos += n
-        elif field_no == 2 and wire_type == _WIRE_LEN:
-            n, pos = _read_varint(data, pos)
-            values = _decode_header_value(data[pos : pos + n])
-            pos += n
-        else:
-            pos = _skip_field(data, pos, wire_type)
+    while pos < end:
+        field_no, start, pos = _next_len_field(data, pos, end)
+        if field_no == 1:
+            key = data[start:pos].decode("utf-8")
+        elif field_no == 2:
+            values = _decode_header_value(data, start, pos)
     return key, values
 
 
 def pb_decode_message(data: bytes) -> tuple[dict[str, list[str]], bytes]:
     """proto3 wire bytes -> (headers, payload); unknown fields skipped
-    (forward-compatible, per proto3 spec)."""
+    (forward-compatible, per proto3 spec). A length-delimited field that
+    runs past the end of its enclosing bytes raises ``ValueError``."""
     headers: dict[str, list[str]] = {}
     payload = b""
-    pos = 0
-    while pos < len(data):
-        tag, pos = _read_varint(data, pos)
-        field_no, wire_type = tag >> 3, tag & 7
-        if field_no == 1 and wire_type == _WIRE_LEN:
-            n, pos = _read_varint(data, pos)
-            payload = bytes(data[pos : pos + n])
-            pos += n
-        elif field_no == 2 and wire_type == _WIRE_LEN:
-            n, pos = _read_varint(data, pos)
-            key, values = _decode_map_entry(data[pos : pos + n])
+    pos, end = 0, len(data)
+    while pos < end:
+        field_no, start, pos = _next_len_field(data, pos, end)
+        if field_no == 1:
+            payload = bytes(data[start:pos])
+        elif field_no == 2:
+            key, values = _decode_map_entry(data, start, pos)
             headers[key] = values
-            pos += n
-        else:
-            pos = _skip_field(data, pos, wire_type)
     return headers, payload
 
 

@@ -16,9 +16,18 @@ implements the subset both ends of a loopback hop need:
 - DATA with gRPC length-prefixed framing, END_STREAM half-close,
   trailers (HEADERS frame with END_STREAM carrying grpc-status).
 
+Framing: a sender packs gRPC messages back to back into full 16 KB
+DATA frames, so the per-frame cost (a write, the peer's reads, its
+credit) is paid per 16 KB, not per message. The client sends its whole
+request body at once; the server holds its responses until a full frame
+is pending, and sends a partial one only when its handler is about to
+wait for a request that has not arrived (so an interactive peer always
+gets the answers to what it sent) and before the trailers.
+
 Flow control: both ends advertise SETTINGS_INITIAL_WINDOW_SIZE=2^31-1
 and lift the connection window to the same ceiling right after the
-preface, then credit every DATA frame back immediately — so senders
+preface, then credit each received DATA frame back (connection and
+stream WINDOW_UPDATE in one write) as soon as it is read — so senders
 never stall on loopback and receivers bound memory by the gRPC message
 size they are already buffering. This is the documented simplification
 that keeps the module ~400 lines instead of a general-purpose stack: it
@@ -34,6 +43,7 @@ closes it (GOAWAY, then the socket) when the call ends.
 
 from __future__ import annotations
 
+import queue
 import socket
 import struct
 import threading
@@ -283,44 +293,45 @@ class _GrpcMessageBuffer:
 
     def feed(self, data: bytes) -> list[bytes]:
         self._buf += data
-        out = []
-        while len(self._buf) >= 5:
-            if self._buf[0] != 0:
+        buf, pos, out = self._buf, 0, []
+        while len(buf) - pos >= 5:
+            if buf[pos] != 0:
                 raise ValueError("compressed gRPC frames unsupported")
-            n = int.from_bytes(self._buf[1:5], "big")
-            if len(self._buf) < 5 + n:
+            stop = pos + 5 + int.from_bytes(buf[pos + 1 : pos + 5], "big")
+            if len(buf) < stop:
                 break
-            out.append(bytes(self._buf[5 : 5 + n]))
-            del self._buf[: 5 + n]
+            out.append(bytes(buf[pos + 5 : stop]))
+            pos = stop
+        del buf[:pos]
         return out
 
 
 def _send_settings_and_lift_window(sock: socket.socket, lock: threading.Lock) -> None:
     settings = struct.pack(">HI", 4, _BIG_WINDOW) + struct.pack(">HI", 5, _MAX_FRAME)
     with lock:
-        sock.sendall(_frame(_SETTINGS, 0, 0, settings))
         sock.sendall(
-            _frame(_WINDOW_UPDATE, 0, 0, struct.pack(">I", _BIG_WINDOW - 65535))
+            _frame(_SETTINGS, 0, 0, settings)
+            + _frame(_WINDOW_UPDATE, 0, 0, struct.pack(">I", _BIG_WINDOW - 65535))
         )
 
 
-def _send_data_chunked(
-    sock: socket.socket, lock: threading.Lock, stream_id: int, payload: bytes,
-    end_stream: bool,
-) -> None:
-    offset = 0
-    if not payload and end_stream:
-        with lock:
-            sock.sendall(_frame(_DATA, _END_STREAM, stream_id, b""))
-        return
-    while offset < len(payload):
-        chunk = payload[offset : offset + _MAX_FRAME]
-        offset += len(chunk)
-        last = offset >= len(payload)
-        with lock:
-            sock.sendall(
-                _frame(_DATA, _END_STREAM if (last and end_stream) else 0, stream_id, chunk)
-            )
+def _data_frames(stream_id: int, payload: bytes, end_stream: bool) -> bytes:
+    """``payload`` as DATA frames of at most ``_MAX_FRAME`` bytes, the
+    last one carrying END_STREAM if ``end_stream``."""
+    chunks = [payload[i : i + _MAX_FRAME] for i in range(0, len(payload), _MAX_FRAME)] or [b""]
+    last = len(chunks) - 1
+    return b"".join(
+        _frame(_DATA, _END_STREAM if (end_stream and i == last) else 0, stream_id, c)
+        for i, c in enumerate(chunks)
+    )
+
+
+def _credit(stream_id: int, n: int, end_stream: bool) -> bytes:
+    """WINDOW_UPDATE frames giving back ``n`` received DATA bytes to the
+    connection and, while it is open, to the stream."""
+    upd = struct.pack(">I", n)
+    out = _frame(_WINDOW_UPDATE, 0, 0, upd)
+    return out if end_stream else out + _frame(_WINDOW_UPDATE, 0, stream_id, upd)
 
 
 # --------------------------------------------------------------- client
@@ -371,12 +382,12 @@ class H2GrpcChannel:
                 ("te", "trailers"),
             ]
         )
+        body = b"".join(_grpc_frames(serialize(req)) for req in request_iterator)
         with self._wlock:
-            self.sock.sendall(_frame(_HEADERS, _END_HEADERS, stream_id, headers))
-        body = bytearray()
-        for req in request_iterator:
-            body += _grpc_frames(serialize(req))
-        _send_data_chunked(self.sock, self._wlock, stream_id, bytes(body), True)
+            self.sock.sendall(
+                _frame(_HEADERS, _END_HEADERS, stream_id, headers)
+                + _data_frames(stream_id, body, True)
+            )
 
         # read until trailers with END_STREAM; yield messages as decoded
         buf = _GrpcMessageBuffer()
@@ -390,16 +401,13 @@ class H2GrpcChannel:
                 with self._wlock:
                     self.sock.sendall(_frame(_PING, _ACK, 0, payload))
             elif ftype == _DATA and sid == stream_id:
+                if payload:
+                    with self._wlock:
+                        self.sock.sendall(
+                            _credit(stream_id, len(payload), flags & _END_STREAM)
+                        )
                 for msg in buf.feed(payload):
                     yield deserialize(msg)
-                if payload:  # credit back immediately (conn + stream)
-                    upd = struct.pack(">I", len(payload))
-                    with self._wlock:
-                        self.sock.sendall(_frame(_WINDOW_UPDATE, 0, 0, upd))
-                        if not flags & _END_STREAM:
-                            self.sock.sendall(
-                                _frame(_WINDOW_UPDATE, 0, stream_id, upd)
-                            )
             elif ftype == _HEADERS and sid == stream_id:
                 for name, value in self._decoder.decode(payload):
                     if name == "grpc-status":
@@ -433,10 +441,14 @@ class H2GrpcServer:
 
     ``handler(request_iterator) -> response_iterator`` over RAW message
     bytes (the pb codec stays with the caller, mirroring grpc's generic
-    handler shape). Serves each connection on a thread; streams within a
-    connection are handled sequentially per arrival, responses written
-    as the handler yields (true streaming — the handler sees requests as
-    DATA frames land, via a blocking queue)."""
+    handler shape). Serves each connection on a thread and each stream
+    on a thread of its own. The connection's reader puts the messages of
+    each DATA frame on the stream's queue as one list, so the handler
+    sees requests as frames land. Responses are sent in full DATA
+    frames; what is pending is sent when the handler is about to wait on
+    an empty request queue, and before the trailers, whether the handler
+    ends or raises. The handler iterates its requests on the thread that
+    iterates its responses, as a generator does."""
 
     def __init__(self, handler: Callable[[Iterator[bytes]], Iterable[bytes]],
                  host: str = "127.0.0.1"):
@@ -458,8 +470,6 @@ class H2GrpcServer:
             threading.Thread(target=self._serve_conn, args=(conn,), daemon=True).start()
 
     def _serve_conn(self, sock: socket.socket):
-        import queue
-
         wlock = threading.Lock()
         try:
             if _read_exact(sock, len(_PREFACE)) != _PREFACE:
@@ -467,16 +477,31 @@ class H2GrpcServer:
                 return
             _send_settings_and_lift_window(sock, wlock)
             decoder = HpackDecoder()
-            streams: dict[int, queue.Queue] = {}
+            streams: dict[int, queue.SimpleQueue] = {}
             buffers: dict[int, _GrpcMessageBuffer] = {}
 
-            def run_stream(stream_id: int, q: queue.Queue):
+            def run_stream(stream_id: int, q: queue.SimpleQueue):
+                pending = bytearray()  # response messages not yet sent
+
+                def send(n: int, tail: bytes = b"") -> None:
+                    """Send the first ``n`` pending bytes as DATA frames,
+                    then ``tail``, in one write."""
+                    out = _data_frames(stream_id, bytes(pending[:n]), False) if n else b""
+                    del pending[:n]
+                    with wlock:
+                        sock.sendall(out + tail)
+
                 def request_iter():
                     while True:
-                        item = q.get()
-                        if item is None:
+                        try:
+                            batch = q.get_nowait()
+                        except queue.Empty:
+                            if pending:  # the peer may wait for these first
+                                send(len(pending))
+                            batch = q.get()
+                        if batch is None:
                             return
-                        yield item
+                        yield from batch
 
                 with wlock:
                     sock.sendall(
@@ -491,19 +516,21 @@ class H2GrpcServer:
                     )
                 try:
                     for resp in self.handler(request_iter()):
-                        _send_data_chunked(sock, wlock, stream_id, _grpc_frames(resp), False)
+                        pending += _grpc_frames(resp)
+                        if len(pending) >= _MAX_FRAME:
+                            send(len(pending) - len(pending) % _MAX_FRAME)
                     trailers = [("grpc-status", "0")]
                 except Exception as e:  # noqa: BLE001 - surfaced as grpc-status
                     trailers = [("grpc-status", "2"), ("grpc-message", str(e)[:200])]
-                with wlock:
-                    sock.sendall(
-                        _frame(
-                            _HEADERS,
-                            _END_HEADERS | _END_STREAM,
-                            stream_id,
-                            hpack_encode(trailers),
-                        )
-                    )
+                send(
+                    len(pending),
+                    _frame(
+                        _HEADERS,
+                        _END_HEADERS | _END_STREAM,
+                        stream_id,
+                        hpack_encode(trailers),
+                    ),
+                )
 
             while True:
                 ftype, flags, sid, payload = _read_frame(sock)
@@ -515,7 +542,7 @@ class H2GrpcServer:
                         sock.sendall(_frame(_PING, _ACK, 0, payload))
                 elif ftype == _HEADERS and sid:
                     decoder.decode(payload)  # keep dynamic table in sync
-                    q: queue.Queue = queue.Queue()
+                    q: queue.SimpleQueue = queue.SimpleQueue()
                     streams[sid] = q
                     buffers[sid] = _GrpcMessageBuffer()
                     t = threading.Thread(target=run_stream, args=(sid, q), daemon=True)
@@ -523,16 +550,14 @@ class H2GrpcServer:
                     if flags & _END_STREAM:
                         q.put(None)
                 elif ftype == _DATA and sid in streams:
-                    for msg in buffers[sid].feed(payload):
-                        streams[sid].put(msg)
-                    if payload:
-                        upd = struct.pack(">I", len(payload))
-                        with wlock:
-                            sock.sendall(_frame(_WINDOW_UPDATE, 0, 0, upd))
-                            if not flags & _END_STREAM:
-                                sock.sendall(_frame(_WINDOW_UPDATE, 0, sid, upd))
+                    msgs = buffers[sid].feed(payload)
+                    if msgs:
+                        streams[sid].put(msgs)
                     if flags & _END_STREAM:
                         streams[sid].put(None)
+                    if payload:
+                        with wlock:
+                            sock.sendall(_credit(sid, len(payload), flags & _END_STREAM))
                 elif ftype == _GOAWAY:
                     return
         except (ConnectionError, OSError):

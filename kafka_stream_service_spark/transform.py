@@ -77,8 +77,8 @@ class RemoteFunction:
     stream order, 1-in-1-out) on a channel of its own, closed when the
     call returns or fails.
 
-    A channel per call, not per worker: a loopback dial costs about 1% of
-    a 1k-message call (SCALE.md, "Streaming"), and a broken channel is
+    A channel per call, not per worker: a loopback dial costs about 1–3%
+    of a 1k-message call (SCALE.md, "Streaming"), and a broken channel is
     never reused.
     """
 

@@ -6,6 +6,7 @@ a real TCP hop is tested in ``test_h2grpc.py``.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -52,6 +53,46 @@ def test_pb_unknown_fields_skipped():
     headers, payload = pb_decode_message(wire + extra)
     assert headers == {"h": ["v"]}
     assert payload == b"xyz"
+
+
+@pytest.mark.parametrize(
+    "wire",
+    [
+        # payload declared 5 bytes, 2 present
+        b"\x0a\x05ab",
+        # payload declared 200 bytes (two-byte length varint), 100 present
+        b"\x0a\xc8\x01" + b"x" * 100,
+        # map entry declared 9 bytes, 3 present
+        b"\x12\x09\x0a\x01k",
+        # key declared 4 bytes inside a 3-byte map entry
+        b"\x12\x03\x0a\x04k",
+        # header value declared 5 bytes, holding 1: "v"
+        b"\x12\x08\x0a\x01k\x12\x03\x0a\x05v",
+        # HeaderValue field declared 4 bytes inside a 3-byte map entry
+        b"\x12\x03\x12\x04\x0a",
+        # a value tag with no length byte left
+        b"\x12\x06\x0a\x01k\x12\x01\x0a",
+    ],
+    ids=["payload", "payload-long", "map-entry", "key", "header-value", "value-list",
+         "varint"],
+)
+def test_pb_truncated_field_raises(wire):
+    """A length-delimited field that runs past its enclosing bytes is an
+    error, not a short slice."""
+    with pytest.raises(ValueError, match="truncated"):
+        pb_decode_message(wire)
+
+
+def test_pb_long_fields_use_multibyte_lengths():
+    """Fields of 128 bytes or more take the general varint path on both
+    sides; the wire is the hand-computed one."""
+    payload = b"p" * 300
+    wire = pb_encode_message({"k": ["v" * 130]}, payload)
+    value_field = b"\x0a\x82\x01" + b"v" * 130
+    header_value = b"\x12\x85\x01" + value_field
+    entry = b"\x0a\x01k" + header_value
+    assert wire == b"\x0a\xac\x02" + payload + b"\x12\x8b\x01" + entry
+    assert pb_decode_message(wire) == ({"k": ["v" * 130]}, payload)
 
 
 @settings(max_examples=200, deadline=None)

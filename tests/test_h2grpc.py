@@ -5,6 +5,7 @@ transport (h2grpc.py), the function slot's one wire.
 
 from __future__ import annotations
 
+import math
 import socket
 import threading
 
@@ -18,10 +19,20 @@ from kafka_stream_service_spark.grpc_function import (
     pb_encode_message,
 )
 from kafka_stream_service_spark.h2grpc import (
+    _DATA,
+    _END_HEADERS,
+    _END_STREAM,
+    _HEADERS,
+    _MAX_FRAME,
+    _PREFACE,
+    _SETTINGS,
     H2GrpcChannel,
     H2GrpcServer,
     HpackDecoder,
+    _frame,
+    _grpc_frames,
     _huffman_decode,
+    _read_frame,
     hpack_encode,
 )
 from kafka_stream_service_spark.transform import FunctionConfig, RemoteFunction
@@ -148,6 +159,153 @@ def test_empty_stream_yields_no_responses(server):
         assert list(call_stream(chan, [])) == []
     finally:
         chan.close()
+
+
+class _SentBytes:
+    """A server connection socket that keeps a copy of every byte the
+    server sends on it."""
+
+    def __init__(self, sock, sent: bytearray):
+        self._sock = sock
+        self._sent = sent
+
+    def sendall(self, data: bytes) -> None:
+        self._sent += data
+        self._sock.sendall(data)
+
+    def __getattr__(self, name):
+        return getattr(self._sock, name)
+
+
+def _frames_of(data: bytes) -> list[tuple[int, int, int, bytes]]:
+    """(type, flags, stream id, payload) of each HTTP/2 frame in ``data``."""
+    out, pos = [], 0
+    while pos < len(data):
+        n = int.from_bytes(data[pos : pos + 3], "big")
+        sid = int.from_bytes(data[pos + 5 : pos + 9], "big") & 0x7FFFFFFF
+        out.append((data[pos + 3], data[pos + 4], sid, data[pos + 9 : pos + 9 + n]))
+        pos += 9 + n
+    return out
+
+
+def test_responses_coalesce_into_full_data_frames():
+    """A 2k-message call's responses travel in full 16 KB DATA frames,
+    not one frame per message: at most one frame more than their bytes
+    fill. The handler reads all its requests before it answers, so it
+    never waits on an empty request queue mid-call (where the server
+    sends a partial frame, and how often depends on thread timing)."""
+    sent = bytearray()
+
+    class _Recording(H2GrpcServer):
+        def _serve_conn(self, sock):
+            super()._serve_conn(_SentBytes(sock, sent))
+
+    srv = _Recording(lambda requests: _upper_handler(list(requests)))
+    try:
+        chan = H2GrpcChannel("127.0.0.1", srv.port)
+        msgs = [({"id": [f"m{i}"]}, f"message number {i}".encode()) for i in range(2000)]
+        try:
+            out = list(call_stream(chan, msgs))
+        finally:
+            chan.close()
+    finally:
+        srv.close()
+    assert [p for _, p in out] == [p.upper() for _, p in msgs]
+    data = [f for f in _frames_of(bytes(sent)) if f[0] == _DATA and f[2] == 1]
+    response_bytes = sum(len(f[3]) for f in data)
+    assert response_bytes > 2000 * 5
+    assert len(data) <= math.ceil(response_bytes / _MAX_FRAME) + 1
+
+
+def test_server_answers_each_request_before_the_next_arrives(server):
+    """Ping-pong over raw frames: the client sends one request DATA frame
+    at a time, without END_STREAM, and waits for its answer before it
+    sends the next. The server must send what it holds when its handler
+    waits for a request, or both ends wait forever."""
+    with socket.create_connection(("127.0.0.1", server.port), timeout=5) as sock:
+        sock.settimeout(5)
+        sock.sendall(_PREFACE + _frame(_SETTINGS, 0, 0, b""))
+        sock.sendall(_frame(_HEADERS, _END_HEADERS, 1, hpack_encode([
+            (":method", "POST"), (":scheme", "http"), (":path", GRPC_METHOD),
+            (":authority", "test"), ("content-type", "application/grpc"),
+            ("te", "trailers"),
+        ])))
+
+        def next_frame_on_stream_1(ftype: int) -> tuple[int, bytes]:
+            while True:
+                got, flags, sid, payload = _read_frame(sock)  # raises on timeout
+                if got == ftype and sid == 1:
+                    return flags, payload
+
+        assert next_frame_on_stream_1(_HEADERS)[1]  # response headers
+        for i in range(3):
+            req = pb_encode_message({"n": [str(i)]}, f"ping {i}".encode())
+            sock.sendall(_frame(_DATA, 0, 1, _grpc_frames(req)))
+            _, payload = next_frame_on_stream_1(_DATA)
+            assert pb_decode_message(payload[5:]) == (
+                {"n": [str(i)], "seen": ["1"]}, f"PING {i}".encode())
+        sock.sendall(_frame(_DATA, _END_STREAM, 1, b""))
+        flags, trailers = next_frame_on_stream_1(_HEADERS)
+        assert flags & _END_STREAM
+        assert ("grpc-status", "0") in HpackDecoder().decode(trailers)
+
+
+def test_responses_before_a_handler_error_reach_the_client():
+    """Responses the handler yielded before it raised are sent before the
+    error trailers, so the client reads them and then the error."""
+    def three_then_boom(request_iterator):
+        for i, raw in enumerate(request_iterator):
+            if i == 3:
+                raise RuntimeError("kaput")
+            yield raw
+
+    srv = H2GrpcServer(three_then_boom)
+    try:
+        chan = H2GrpcChannel("127.0.0.1", srv.port)
+        msgs = [({}, f"m{i}".encode()) for i in range(10)]
+        got = []
+        try:
+            with pytest.raises(ConnectionError, match="grpc-status 2"):
+                for _, payload in call_stream(chan, msgs):
+                    got.append(payload)
+        finally:
+            chan.close()
+        assert got == [b"m0", b"m1", b"m2"]
+    finally:
+        srv.close()
+
+
+def test_concurrent_calls_keep_order_under_thread_churn(server):
+    """More concurrent calls than cores, with the interpreter switching
+    threads every 10 µs: the stream threads, the connection readers and
+    the partial-frame sends interleave as often as they can, and every
+    call still gets exactly its own answers, in order."""
+    import sys
+
+    results: dict[int, list[bytes]] = {}
+
+    def one_call(k: int) -> None:
+        chan = H2GrpcChannel("127.0.0.1", server.port)
+        try:
+            msgs = [({"id": [f"{k}-{i}"]}, f"call {k} msg {i}".encode()) for i in range(500)]
+            results[k] = [p for _, p in call_stream(chan, msgs)]
+        finally:
+            chan.close()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=one_call, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert results == {
+        k: [f"CALL {k} MSG {i}".encode() for i in range(500)] for k in range(8)
+    }
 
 
 # --------------------------------------------------------- RemoteFunction
