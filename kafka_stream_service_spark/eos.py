@@ -18,14 +18,18 @@ that gap:
 - ``KafkaTransactionalEpochWriter`` (+ the ``foreachBatch`` adapter
   ``kafka_transactional_batch_writer``): the reference's one-transaction-
   per-batch produce with zombie fencing and epoch-marker replay skip,
-  against an injected producer factory — unit-tested with a fake broker
-  (tests/test_eos_kafka.py); binds kafka-python when available.
+  one fenced producer per partition task, against an injected broker
+  — unit-tested with a fake broker (tests/test_eos_kafka.py); binds
+  kafka-python when available.
 - ``MergeIdempotentSnapshotWriter``: keyed MERGE upserts/deletes into a
   plain-parquet snapshot with an atomic pointer-swap commit — the writer
   for sinks that have NEITHER transactions nor per-epoch directories
   (object-store tables). Replay-safe twice over: the MERGE itself is
   algebraically idempotent (oracled by ``q_idempotent_sink_merge``) and
   committed epochs are skipped via the pointer.
+
+Each writer reads its commit record from its own sink (the ledger, the
+marker tail, the pointer), so a retried task finds its own commit.
 
 Delivery-semantics delta vs the reference, explicitly: the reference
 aborts the txn on first failure then relies on redelivery
@@ -96,41 +100,44 @@ class KafkaTransactionalEpochWriter:
     restarts, so a restarted writer's ``init_transactions()`` fences any
     zombie predecessor and aborts its in-flight transaction.
 
-    The producer is injected as a factory ``transactional_id -> producer``
-    (duck-typed: ``init_transactions / begin_transaction / send(topic,
-    key, value) / commit_transaction / abort_transaction``) so the
-    fencing/replay logic unit-tests against a fake broker
-    (tests/test_eos_kafka.py) and binds to kafka-python or
-    confluent-kafka unchanged in a real deployment.
+    The sink is an injected ``broker``: ``producer(transactional_id)``
+    returns a transactional producer (duck-typed: ``init_transactions /
+    begin_transaction / send(topic, key=, value=) / commit_transaction /
+    abort_transaction``) and ``last_committed_epoch(transactional_id,
+    marker_topic)`` the marker tail, or None. The fencing/replay logic
+    unit-tests against a fake broker (tests/test_eos_kafka.py);
+    ``KafkaPythonBroker`` binds kafka-python.
 
     Exactly-once across Spark epoch replays: every transaction also
     carries an epoch-marker record (``marker_topic``, key=transactional
     id, value=epoch id) — commit makes records+marker visible atomically,
     mirroring how the reference commits offsets inside the transaction.
-    On (re)start, read the marker tail with a read_committed consumer and
-    pass it as ``last_committed_epoch``; replayed epochs at or below it
-    are skipped instead of double-produced.
+    The writer reads the marker tail after fencing, so no earlier
+    producer with its id can commit after the read; an epoch at or below
+    the tail is skipped instead of double-produced.
     """
 
     def __init__(
         self,
-        producer_factory: Callable[[str], object],
+        broker,
         topic: str = "replies",
         transactional_id: str = "kssp-replies-0",
         marker_topic: str | None = None,
-        last_committed_epoch: int | None = None,
     ):
-        self.producer_factory = producer_factory
+        self.broker = broker
         self.topic = topic
         self.transactional_id = transactional_id
         self.marker_topic = marker_topic or f"{topic}.epochs"
-        self.last_committed_epoch = last_committed_epoch
         self._producer = None
+        self._committed: int | None = None  # marker tail for this id
 
     def _ensure_producer(self):
         if self._producer is None:
-            self._producer = self.producer_factory(self.transactional_id)
-            self._producer.init_transactions()  # fences any zombie with this id
+            producer = self.broker.producer(self.transactional_id)
+            producer.init_transactions()  # fences any zombie with this id
+            self._committed = self.broker.last_committed_epoch(  # after the fence
+                self.transactional_id, self.marker_topic)
+            self._producer = producer
         return self._producer
 
     def write_epoch(self, epoch_id: int, records) -> bool:
@@ -138,19 +145,19 @@ class KafkaTransactionalEpochWriter:
         transaction. Returns False when the epoch was already committed
         (replay after a commit-then-crash) and nothing was sent."""
         epoch_id = int(epoch_id)
-        if self.last_committed_epoch is not None and epoch_id <= self.last_committed_epoch:
-            return False
         producer = self._ensure_producer()
+        if self._committed is not None and epoch_id <= self._committed:
+            return False
         producer.begin_transaction()
         try:
             for key, value in records:
-                producer.send(self.topic, key, value)
-            producer.send(self.marker_topic, self.transactional_id, epoch_id)
+                producer.send(self.topic, key=key, value=value)
+            producer.send(self.marker_topic, key=self.transactional_id, value=epoch_id)
             producer.commit_transaction()
         except Exception:
             producer.abort_transaction()
             raise
-        self.last_committed_epoch = epoch_id
+        self._committed = epoch_id
         return True
 
     def close(self) -> None:
@@ -159,104 +166,95 @@ class KafkaTransactionalEpochWriter:
         self._producer = None
 
 
+def _as_bytes(v):  # records pass as they are; the marker's id and epoch as text
+    return v if v is None or isinstance(v, (bytes, bytearray)) else str(v).encode()
+
+
+class KafkaPythonBroker:
+    """The default ``broker``: kafka-python against ``bootstrap_servers``."""
+
+    def __init__(self, bootstrap_servers: str = "localhost:9092"):
+        try:
+            import kafka  # noqa: F401
+        except ImportError as e:
+            raise NotImplementedError(
+                "No Kafka client in this environment — inject a broker, "
+                "or install kafka-python for the default binding."
+            ) from e
+        self.bootstrap_servers = bootstrap_servers
+
+    def producer(self, transactional_id: str):
+        from kafka import KafkaProducer  # type: ignore[import-not-found]
+
+        return KafkaProducer(
+            bootstrap_servers=self.bootstrap_servers, transactional_id=transactional_id,
+            key_serializer=_as_bytes, value_serializer=_as_bytes,
+        )
+
+    def last_committed_epoch(self, transactional_id: str, marker_topic: str) -> int | None:
+        """The highest epoch keyed by ``transactional_id`` that a
+        read_committed consumer reads from ``marker_topic``."""
+        from kafka import KafkaConsumer, TopicPartition  # type: ignore[import-not-found]
+
+        consumer = KafkaConsumer(
+            bootstrap_servers=self.bootstrap_servers, isolation_level="read_committed",
+            enable_auto_commit=False, auto_offset_reset="earliest",
+        )
+        try:
+            parts = [TopicPartition(marker_topic, p)
+                     for p in consumer.partitions_for_topic(marker_topic) or ()]
+            consumer.assign(parts)
+            end = consumer.end_offsets(parts)
+            key, epochs = transactional_id.encode(), []
+            while any(consumer.position(tp) < end[tp] for tp in parts):
+                polled = consumer.poll(timeout_ms=1000)
+                if not polled:
+                    break
+                epochs += [int(r.value) for rs in polled.values() for r in rs if r.key == key]
+            return max(epochs, default=None)
+        finally:
+            consumer.close()
+
+
 def kafka_transactional_batch_writer(
-    producer_factory: Callable[[str], object] | None = None,
+    broker=None,
     topic: str = "replies",
     transactional_id: str = "kssp-replies-0",
     key_col: str = "key",
     value_col: str = "value",
     bootstrap_servers: str = "localhost:9092",
-    last_committed_epoch: int | None = None,
-    partitioned: bool = True,
-    last_committed_epochs: dict[int, int] | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch adapter over ``KafkaTransactionalEpochWriter``.
-
-    With no ``producer_factory`` it binds kafka-python (raising the
-    install recipe if absent, as no Kafka client ships in this test
-    container).
-
-    Two produce topologies:
-
-    - ``partitioned=False``: ONE driver-side producer, records
-      pulled with ``toLocalIterator`` — mirrors the reference's
-      one-app-one-producer shape (StreamsApplication.java:112) and keeps
-      the global send order of the reference's sequential ``concatMap``.
-      Opt-in for callers that need the reference's *global* ordering or
-      whose injected producer lives in driver memory; the driver is the
-      bottleneck for produce-bound jobs, which is why it is no longer
-      the default.
-    - ``partitioned=True`` (default — the scale path): ``foreachPartition`` runs a
-      ``KafkaTransactionalEpochWriter`` inside each executor task with
-      ``transactional.id = f"{transactional_id}-{partition_index}"`` —
-      N partitions produce through N independent, independently-fenced
-      transactions, and no record ever moves through the driver. Epoch
-      atomicity becomes per-partition (partition K's transaction for
-      epoch E commits or aborts on its own); a replayed epoch re-runs
-      only as tasks, and each partition's marker tail
-      (``last_committed_epochs[partition_index]``) skips its own
-      already-committed epochs — the same replay/fencing contract as the
-      single-producer mode, applied per partition. Ordering is preserved
-      per partition, which is exactly Kafka's (and the source's)
-      ordering guarantee anyway.
+    """foreachBatch adapter: ``foreachPartition`` runs a
+    ``KafkaTransactionalEpochWriter`` in each executor task with
+    ``transactional.id = f"{transactional_id}-{partition_index}"``, so N
+    partitions produce through N independently-fenced transactions and
+    records never leave their executor task. Epoch atomicity and ordering are
+    per partition (Kafka's own ordering guarantee; the reference's single
+    producer kept a global order). A replayed epoch, or a task retried
+    after its transaction committed, fences its id, reads its marker tail
+    and skips. With no ``broker`` it binds ``KafkaPythonBroker``.
     """
-    if producer_factory is None:  # pragma: no cover - not installed here
-        try:
-            from kafka import KafkaProducer  # type: ignore[import-not-found]
-
-            def producer_factory(txn_id: str):
-                return KafkaProducer(
-                    bootstrap_servers=bootstrap_servers, transactional_id=txn_id
-                )
-
-        except ImportError as e:
-            raise NotImplementedError(
-                "No Kafka client in this environment — inject a "
-                "producer_factory, or install kafka-python/confluent-kafka "
-                "for the default binding."
-            ) from e
-    if partitioned:
-        # capture plain locals (not self/DataFrame handles) so the task
-        # closure ships only what executors need
-        pf, tp, tid = producer_factory, topic, transactional_id
-        kc, vc = key_col, value_col
-        marker_tails = dict(last_committed_epochs or {})
-
-        def body(batch_df: DataFrame, epoch_id: int) -> None:
-            epoch = int(epoch_id)
-
-            def write_partition(rows) -> None:
-                from pyspark import TaskContext
-
-                pidx = TaskContext.get().partitionId()
-                writer = KafkaTransactionalEpochWriter(
-                    pf,
-                    topic=tp,
-                    transactional_id=f"{tid}-{pidx}",
-                    last_committed_epoch=marker_tails.get(pidx),
-                )
-                try:
-                    writer.write_epoch(epoch, ((r[kc], r[vc]) for r in rows))
-                finally:
-                    writer.close()
-
-            batch_df.foreachPartition(write_partition)
-
-        body.writer = None  # producers live in executor tasks, not the driver
-        return body
-
-    writer = KafkaTransactionalEpochWriter(
-        producer_factory,
-        topic=topic,
-        transactional_id=transactional_id,
-        last_committed_epoch=last_committed_epoch,
-    )
+    if broker is None:
+        broker = KafkaPythonBroker(bootstrap_servers)
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = ((r[key_col], r[value_col]) for r in batch_df.toLocalIterator())
-        writer.write_epoch(epoch_id, rows)
+        epoch = int(epoch_id)
 
-    body.writer = writer  # exposed for inspection/close
+        def write_partition(rows) -> None:
+            from pyspark import TaskContext
+
+            writer = KafkaTransactionalEpochWriter(
+                broker,
+                topic=topic,
+                transactional_id=f"{transactional_id}-{TaskContext.get().partitionId()}",
+            )
+            try:
+                writer.write_epoch(epoch, ((r[key_col], r[value_col]) for r in rows))
+            finally:
+                writer.close()
+
+        batch_df.foreachPartition(write_partition)
+
     return body
 
 

@@ -26,10 +26,13 @@ gets the answers to what it sent) and before the trailers.
 
 Flow control: both ends advertise SETTINGS_INITIAL_WINDOW_SIZE=2^31-1
 and lift the connection window to the same ceiling right after the
-preface, then credit each received DATA frame back (connection and
-stream WINDOW_UPDATE in one write) as soon as it is read — so senders
-never stall on loopback and receivers bound memory by the gRPC message
-size they are already buffering. This is the documented simplification
+preface, so senders never stall on loopback. The client credits each
+DATA frame (connection and stream WINDOW_UPDATE in one write) as it
+reads it; the server credits the request bytes its handler has taken in
+the stream thread's next write, so its connection reader never waits on
+a write and keeps reading a body the client is still sending while the
+stream thread is blocked sending responses. This is the documented
+simplification
 that keeps the module ~400 lines instead of a general-purpose stack: it
 is a LOOPBACK/TEST transport for the riff method, not an internet-facing
 HTTP/2 implementation (no PUSH, no priorities, no padding emission, one
@@ -448,7 +451,8 @@ class H2GrpcServer:
     frames; what is pending is sent when the handler is about to wait on
     an empty request queue, and before the trailers, whether the handler
     ends or raises. The handler iterates its requests on the thread that
-    iterates its responses, as a generator does."""
+    iterates its responses, as a generator does. A stream whose peer has
+    gone ends without a reply."""
 
     def __init__(self, handler: Callable[[Iterator[bytes]], Iterable[bytes]],
                  host: str = "127.0.0.1"):
@@ -482,55 +486,55 @@ class H2GrpcServer:
 
             def run_stream(stream_id: int, q: queue.SimpleQueue):
                 pending = bytearray()  # response messages not yet sent
+                taken = 0  # request bytes the handler took, not yet credited
 
-                def send(n: int, tail: bytes = b"") -> None:
-                    """Send the first ``n`` pending bytes as DATA frames,
-                    then ``tail``, in one write."""
-                    out = _data_frames(stream_id, bytes(pending[:n]), False) if n else b""
-                    del pending[:n]
+                def send(n: int, trailers: list[tuple[str, str]] | None = None) -> None:
+                    """Credit the request bytes taken so far, then send the
+                    first ``n`` pending bytes as DATA frames, then the
+                    ``trailers`` if given, in one write."""
+                    nonlocal taken
+                    out = _credit(stream_id, taken, trailers is not None) if taken else b""
+                    taken = 0
+                    if n:
+                        out += _data_frames(stream_id, bytes(pending[:n]), False)
+                        del pending[:n]
+                    if trailers is not None:
+                        end = _END_HEADERS | _END_STREAM
+                        out += _frame(_HEADERS, end, stream_id, hpack_encode(trailers))
                     with wlock:
-                        sock.sendall(out + tail)
+                        sock.sendall(out)
 
                 def request_iter():
+                    nonlocal taken
                     while True:
                         try:
-                            batch = q.get_nowait()
+                            item = q.get_nowait()
                         except queue.Empty:
-                            if pending:  # the peer may wait for these first
+                            if pending or taken:  # the peer may wait for these first
                                 send(len(pending))
-                            batch = q.get()
-                        if batch is None:
+                            item = q.get()
+                        if item is None:
                             return
-                        yield from batch
+                        msgs, nbytes = item
+                        taken += nbytes
+                        yield from msgs
 
-                with wlock:
-                    sock.sendall(
-                        _frame(
-                            _HEADERS,
-                            _END_HEADERS,
-                            stream_id,
-                            hpack_encode(
-                                [(":status", "200"), ("content-type", "application/grpc")]
-                            ),
-                        )
-                    )
                 try:
-                    for resp in self.handler(request_iter()):
-                        pending += _grpc_frames(resp)
-                        if len(pending) >= _MAX_FRAME:
-                            send(len(pending) - len(pending) % _MAX_FRAME)
-                    trailers = [("grpc-status", "0")]
-                except Exception as e:  # noqa: BLE001 - surfaced as grpc-status
-                    trailers = [("grpc-status", "2"), ("grpc-message", str(e)[:200])]
-                send(
-                    len(pending),
-                    _frame(
-                        _HEADERS,
-                        _END_HEADERS | _END_STREAM,
-                        stream_id,
-                        hpack_encode(trailers),
-                    ),
-                )
+                    head = _frame(_HEADERS, _END_HEADERS, stream_id, hpack_encode(
+                        [(":status", "200"), ("content-type", "application/grpc")]))
+                    with wlock:
+                        sock.sendall(head)
+                    try:
+                        for resp in self.handler(request_iter()):
+                            pending += _grpc_frames(resp)
+                            if len(pending) >= _MAX_FRAME:
+                                send(len(pending) - len(pending) % _MAX_FRAME)
+                        trailers = [("grpc-status", "0")]
+                    except Exception as e:  # noqa: BLE001 - surfaced as grpc-status
+                        trailers = [("grpc-status", "2"), ("grpc-message", str(e)[:200])]
+                    send(len(pending), trailers)
+                except OSError:
+                    return  # the peer has gone: nobody is left to answer
 
             while True:
                 ftype, flags, sid, payload = _read_frame(sock)
@@ -550,14 +554,10 @@ class H2GrpcServer:
                     if flags & _END_STREAM:
                         q.put(None)
                 elif ftype == _DATA and sid in streams:
-                    msgs = buffers[sid].feed(payload)
-                    if msgs:
-                        streams[sid].put(msgs)
+                    if payload:  # credited by the stream thread, see run_stream
+                        streams[sid].put((buffers[sid].feed(payload), len(payload)))
                     if flags & _END_STREAM:
                         streams[sid].put(None)
-                    if payload:
-                        with wlock:
-                            sock.sendall(_credit(sid, len(payload), flags & _END_STREAM))
                 elif ftype == _GOAWAY:
                     return
         except (ConnectionError, OSError):
@@ -568,6 +568,7 @@ class H2GrpcServer:
     def close(self):
         self._closing = True
         try:
-            self._lsock.close()
+            self._lsock.shutdown(socket.SHUT_RDWR)  # wakes a blocked accept()
         except OSError:
             pass
+        self._lsock.close()

@@ -22,7 +22,7 @@ the intentional scale upgrade.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -53,12 +53,10 @@ class PipelineConfig:
     function: FunctionConfig = field(default_factory=FunctionConfig)
     degraded_ordering: bool = False  # R15 after-failure mode
     max_offsets_per_trigger: int | None = None
-    # kafka-eos sink (R12 transactional produce as the pipeline's default
-    # scale path): injected producer factory (None binds kafka-python),
-    # stable transactional.id prefix, recovered per-partition marker tails
+    # kafka-eos sink (R12): stable transactional.id prefix and the broker
+    # (eos.KafkaTransactionalEpochWriter; None binds kafka-python)
     transactional_id: str = "kssp-replies-0"
-    producer_factory: Callable[[str], object] | None = None
-    last_committed_epochs: dict[int, int] | None = None
+    broker: object | None = None
 
 
 WIRE_FRAME_DDL = "key binary, value binary"
@@ -177,15 +175,13 @@ def start_pipeline(spark: SparkSession, cfg: PipelineConfig, fn: MessageFunction
             "checkpointLocation", cfg.checkpoint_dir
         )
     elif cfg.sink == "kafka-eos":
-        # R12 at scale: per-partition fenced transactional producers
-        # (partitioned=True is the writer's default — no record ever
-        # moves through the driver; see eos.py:kafka_transactional_batch_writer)
+        # R12 at scale: one fenced transactional producer per partition
+        # task (eos.py:kafka_transactional_batch_writer)
         body = kafka_transactional_batch_writer(
-            cfg.producer_factory,
+            cfg.broker,
             topic=cfg.output_topic,
             transactional_id=cfg.transactional_id,
             bootstrap_servers=cfg.bootstrap_servers,
-            last_committed_epochs=cfg.last_committed_epochs,
         )
         writer = out.writeStream.foreachBatch(body).option(
             "checkpointLocation", cfg.checkpoint_dir

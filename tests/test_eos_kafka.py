@@ -85,7 +85,7 @@ class FakeProducer:
 
 def test_happy_path_commits_records_and_marker():
     broker = FakeBroker()
-    w = KafkaTransactionalEpochWriter(broker.producer, topic="replies", transactional_id="t1")
+    w = KafkaTransactionalEpochWriter(broker, topic="replies", transactional_id="t1")
     assert w.write_epoch(0, [(b"k1", b"v1"), (b"k2", b"v2")]) is True
     assert broker.committed["replies"] == [(b"k1", b"v1"), (b"k2", b"v2")]
     # the epoch marker commits atomically with the records
@@ -95,7 +95,7 @@ def test_happy_path_commits_records_and_marker():
 
 def test_failure_mid_send_aborts_then_replay_commits_once():
     broker = FakeBroker()
-    w = KafkaTransactionalEpochWriter(broker.producer, topic="replies", transactional_id="t1")
+    w = KafkaTransactionalEpochWriter(broker, topic="replies", transactional_id="t1")
 
     def exploding():
         yield (b"k1", b"v1")
@@ -114,15 +114,11 @@ def test_failure_mid_send_aborts_then_replay_commits_once():
 
 def test_committed_epoch_replay_is_skipped():
     broker = FakeBroker()
-    w = KafkaTransactionalEpochWriter(broker.producer, transactional_id="t1")
+    w = KafkaTransactionalEpochWriter(broker, transactional_id="t1")
     w.write_epoch(7, [(b"k", b"v")])
-    # crash after commit but before checkpoint: new writer resumes from
-    # the broker's marker tail and must NOT double-produce epoch 7
-    resumed = KafkaTransactionalEpochWriter(
-        broker.producer,
-        transactional_id="t1",
-        last_committed_epoch=broker.last_committed_epoch("t1", "replies.epochs"),
-    )
+    # crash after commit but before checkpoint: a new writer reads the
+    # broker's marker tail after fencing and must NOT double-produce epoch 7
+    resumed = KafkaTransactionalEpochWriter(broker, transactional_id="t1")
     assert resumed.write_epoch(7, [(b"k", b"v")]) is False
     assert broker.committed["replies"] == [(b"k", b"v")]  # still one copy
     assert resumed.write_epoch(8, [(b"k2", b"v2")]) is True
@@ -131,10 +127,10 @@ def test_committed_epoch_replay_is_skipped():
 
 def test_zombie_producer_is_fenced():
     broker = FakeBroker()
-    zombie = KafkaTransactionalEpochWriter(broker.producer, transactional_id="t1")
+    zombie = KafkaTransactionalEpochWriter(broker, transactional_id="t1")
     zombie.write_epoch(0, [(b"a", b"1")])
     # a restarted writer takes over the same transactional.id
-    successor = KafkaTransactionalEpochWriter(broker.producer, transactional_id="t1")
+    successor = KafkaTransactionalEpochWriter(broker, transactional_id="t1")
     successor.write_epoch(1, [(b"b", b"2")])
     # the zombie's next transaction must be rejected, not silently merged
     with pytest.raises(Fenced):
@@ -143,89 +139,96 @@ def test_zombie_producer_is_fenced():
     assert (b"b", b"2") in committed and (b"a", b"dup") not in committed
 
 
-def file_producer_factory(root: str):
-    """Transactional-producer factory backed by a shared directory, so
+def file_broker(root: str):
+    """A transactional broker backed by a shared directory, so
     per-partition producers in separate executor Python workers stay
-    observable by the test. Same contract as FakeProducer: pending sends
-    become visible only on commit (atomic rename), abort discards, and
+    observable by the test. Same contract as FakeBroker: pending sends
+    become visible only on commit (atomic rename), abort discards,
     init_transactions bumps a generation file that fences predecessors
-    holding the same transactional.id.
+    holding the same transactional.id, and ``last_committed_epoch`` reads
+    the committed marker tail.
 
-    The class is nested so cloudpickle ships it by value inside the task
-    closure — executors never need this test module importable.
+    The classes are nested so cloudpickle ships them by value inside the
+    task closure — executors never need this test module importable.
     """
+    import json
+    import os
 
-    def factory(txn_id: str):
-        import json
-        import os
+    class FileTxnProducer:
+        def __init__(self, base: str, tid: str):
+            self.dir = os.path.join(base, tid)
+            self.gens = os.path.join(self.dir, "gens")
+            self.committed = os.path.join(self.dir, "committed")
+            os.makedirs(self.gens, exist_ok=True)
+            os.makedirs(self.committed, exist_ok=True)
+            self.gen = None
+            self.pending = []
+            self.in_txn = False
 
-        class FileTxnProducer:
-            def __init__(self, base: str, tid: str):
-                self.dir = os.path.join(base, tid)
-                self.gens = os.path.join(self.dir, "gens")
-                self.committed = os.path.join(self.dir, "committed")
-                os.makedirs(self.gens, exist_ok=True)
-                os.makedirs(self.committed, exist_ok=True)
-                self.gen = None
-                self.pending = []
-                self.in_txn = False
+        def _latest_gen(self) -> int:
+            names = [int(n) for n in os.listdir(self.gens)] or [0]
+            return max(names)
 
-            def _latest_gen(self) -> int:
-                names = [int(n) for n in os.listdir(self.gens)] or [0]
-                return max(names)
+        def init_transactions(self):
+            while True:  # O_EXCL claim of the next generation
+                nxt = self._latest_gen() + 1
+                try:
+                    fd = os.open(os.path.join(self.gens, str(nxt)), os.O_CREAT | os.O_EXCL)
+                    os.close(fd)
+                    self.gen = nxt
+                    return
+                except FileExistsError:
+                    continue
 
-            def init_transactions(self):
-                while True:  # O_EXCL claim of the next generation
-                    nxt = self._latest_gen() + 1
-                    try:
-                        fd = os.open(
-                            os.path.join(self.gens, str(nxt)), os.O_CREAT | os.O_EXCL
-                        )
-                        os.close(fd)
-                        self.gen = nxt
-                        return
-                    except FileExistsError:
-                        continue
+        def _check_fenced(self):
+            if self.gen != self._latest_gen():
+                raise RuntimeError(f"fenced: gen {self.gen} superseded")
 
-            def _check_fenced(self):
-                if self.gen != self._latest_gen():
-                    raise RuntimeError(f"fenced: gen {self.gen} superseded")
+        def begin_transaction(self):
+            self._check_fenced()
+            assert not self.in_txn, "nested transaction"
+            self.in_txn = True
+            self.pending = []
 
-            def begin_transaction(self):
-                self._check_fenced()
-                assert not self.in_txn, "nested transaction"
-                self.in_txn = True
-                self.pending = []
+        def send(self, topic, key, value):
+            self._check_fenced()
+            assert self.in_txn, "send outside transaction"
 
-            def send(self, topic, key, value):
-                self._check_fenced()
-                assert self.in_txn, "send outside transaction"
+            # the committed log is JSON: binary payloads ride as hex
+            def j(v):
+                return v.hex() if isinstance(v, (bytes, bytearray)) else v
 
-                # the committed log is JSON: binary payloads ride as hex
-                def j(v):
-                    return v.hex() if isinstance(v, (bytes, bytearray)) else v
+            self.pending.append([topic, j(key), j(value)])
 
-                self.pending.append([topic, j(key), j(value)])
+        def commit_transaction(self):
+            self._check_fenced()
+            assert self.in_txn
+            seq = len(os.listdir(self.committed))
+            tmp = os.path.join(self.dir, f".txn-{self.gen}-{seq}.tmp")
+            with open(tmp, "w") as f:
+                json.dump(self.pending, f)
+            os.replace(tmp, os.path.join(self.committed, f"txn-{self.gen}-{seq}.json"))
+            self.pending = []
+            self.in_txn = False
 
-            def commit_transaction(self):
-                self._check_fenced()
-                assert self.in_txn
-                seq = len(os.listdir(self.committed))
-                tmp = os.path.join(self.dir, f".txn-{self.gen}-{seq}.tmp")
-                with open(tmp, "w") as f:
-                    json.dump(self.pending, f)
-                os.replace(tmp, os.path.join(self.committed, f"txn-{self.gen}-{seq}.json"))
-                self.pending = []
-                self.in_txn = False
+        def abort_transaction(self):
+            assert self.in_txn
+            self.pending = []
+            self.in_txn = False
 
-            def abort_transaction(self):
-                assert self.in_txn
-                self.pending = []
-                self.in_txn = False
+    class FileBroker:
+        def producer(self, txn_id: str) -> FileTxnProducer:
+            return FileTxnProducer(root, txn_id)
 
-        return FileTxnProducer(root, txn_id)
+        def last_committed_epoch(self, txn_id: str, marker_topic: str):
+            cdir = os.path.join(root, txn_id, "committed")
+            epochs = []
+            for fn in os.listdir(cdir) if os.path.isdir(cdir) else ():
+                with open(os.path.join(cdir, fn)) as f:
+                    epochs += [v for t, k, v in json.load(f) if (t, k) == (marker_topic, txn_id)]
+            return max(epochs, default=None)
 
-    return factory
+    return FileBroker()
 
 
 def _committed_records(root) -> dict[str, list[tuple]]:
@@ -246,19 +249,16 @@ def _committed_records(root) -> dict[str, list[tuple]]:
 
 
 def test_partitioned_writer_one_fenced_producer_per_partition(spark, tmp_path):
-    """partitioned=True: N partitions -> N executor-side producers with
-    per-partition transactional ids; the union of their transactions is
-    the batch, and nothing flows through a driver-side producer."""
+    """N partitions -> N executor-side producers with per-partition
+    transactional ids; the union of their transactions is the batch."""
     root = str(tmp_path)
     body = kafka_transactional_batch_writer(
-        file_producer_factory(root),
+        file_broker(root),
         topic="out",
         transactional_id="q1",
         key_col="k",
         value_col="v",
-        partitioned=True,
     )
-    assert body.writer is None  # no driver-side producer exists
     rows = [(f"k{i}", f"v{i}") for i in range(20)]
     batch = spark.createDataFrame(rows, "k string, v string").repartition(4)
     body(batch, 0)
@@ -277,17 +277,12 @@ def test_partitioned_writer_replay_skips_per_partition_marker_tail(spark, tmp_pa
     root = str(tmp_path)
     rows = [(f"k{i}", f"v{i}") for i in range(12)]
     batch = spark.createDataFrame(rows, "k string, v string").repartition(3)
-    common = dict(
-        topic="out", transactional_id="q1", key_col="k", value_col="v", partitioned=True
-    )
-    kafka_transactional_batch_writer(file_producer_factory(root), **common)(batch, 0)
-    # restart: the recovered marker tails say epoch 0 committed everywhere,
-    # so the replayed epoch must not double-produce on any partition
-    resumed = kafka_transactional_batch_writer(
-        file_producer_factory(root),
-        last_committed_epochs={0: 0, 1: 0, 2: 0},
-        **common,
-    )
+    common = dict(topic="out", transactional_id="q1", key_col="k", value_col="v")
+    kafka_transactional_batch_writer(file_broker(root), **common)(batch, 0)
+    # restart: a new writer over the same broker, told nothing; each
+    # partition task reads its own marker tail, finds epoch 0 committed
+    # and must not double-produce it
+    resumed = kafka_transactional_batch_writer(file_broker(root), **common)
     resumed(batch, 0)
     committed = _committed_records(root)
     assert sorted((k, v) for _, k, v in committed["out"]) == sorted(rows)
@@ -296,35 +291,108 @@ def test_partitioned_writer_replay_skips_per_partition_marker_tail(spark, tmp_pa
     assert len(_committed_records(root)["out"]) == 2 * len(rows)
 
 
-def test_foreachbatch_adapter_extracts_columns(spark):
-    # partitioned=False: the driver-side ordered mode (FakeBroker lives in
-    # driver memory, so the executor path would not be observable here)
-    broker = FakeBroker()
+def test_retried_epoch_commits_once_per_partition(spark, tmp_path):
+    """A partition task re-run after its transaction committed (executor
+    loss, speculation) fences its id, reads its marker tail from the
+    broker and produces nothing again: one copy of each record and one
+    epoch-7 marker per partition."""
+    root = str(tmp_path)
     body = kafka_transactional_batch_writer(
-        broker.producer,
-        topic="out",
-        transactional_id="q1",
-        key_col="k",
-        value_col="v",
-        partitioned=False,
+        file_broker(root), topic="out", transactional_id="q1", key_col="k", value_col="v"
     )
-    batch = spark.createDataFrame([("a", "1"), ("b", "2")], "k string, v string")
-    body(batch, 0)  # exactly what foreachBatch invokes
-    assert sorted(broker.committed["out"]) == [("a", "1"), ("b", "2")]
-    assert broker.committed["out.epochs"] == [("q1", 0)]
-    body(batch, 0)  # replayed epoch: writer remembers the commit
-    assert len(broker.committed["out"]) == 2
+    rows = [(f"k{i}", f"v{i}") for i in range(6)]
+    batch = spark.createDataFrame(rows, "k string, v string").repartition(2)
+    body(batch, 7)
+    body(batch, 7)
+    committed = _committed_records(root)
+    assert sorted((k, v) for _, k, v in committed["out"]) == sorted(rows)
+    assert sorted(committed["out.epochs"]) == [("q1-0", "q1-0", 7), ("q1-1", "q1-1", 7)]
 
 
-def test_partitioned_is_the_default_produce_path():
-    """The scale path is the default: no driver-side producer, no
-    toLocalIterator — callers must opt INTO the ordered driver mode."""
-    default_body = kafka_transactional_batch_writer(lambda tid: None, topic="out")
-    assert default_body.writer is None  # producers live in executor tasks
-    driver_body = kafka_transactional_batch_writer(
-        lambda tid: None, topic="out", partitioned=False
-    )
-    assert driver_body.writer is not None
+def test_kafka_python_broker_sends_by_name_and_reads_committed_tail(monkeypatch):
+    """The default broker against a stub ``kafka`` module with
+    kafka-python's signatures: ``send(topic, value=None, key=None)`` and
+    bytes-only records after the serializers. Records keep their key and
+    value, the marker's id and epoch are encoded, and a new writer reads
+    the tail through a read_committed consumer and skips the epoch."""
+    import sys
+    import types
+    from collections import namedtuple
+
+    from kafka_stream_service_spark.eos import KafkaPythonBroker
+
+    log: list[tuple] = []  # committed (topic, key, value)
+    consumers: list[dict] = []
+    Record = namedtuple("Record", "key value")
+
+    class KafkaProducer:
+        def __init__(self, key_serializer=None, value_serializer=None, **config):
+            self.ser = (key_serializer or (lambda v: v), value_serializer or (lambda v: v))
+            self.pending = []
+
+        def init_transactions(self):
+            pass
+
+        def begin_transaction(self):
+            self.pending = []
+
+        def send(self, topic, value=None, key=None, headers=None, partition=None):
+            key, value = self.ser[0](key), self.ser[1](value)
+            for v in (key, value):
+                assert isinstance(v, (bytes, bytearray, type(None))), "Null or bytes required"
+            self.pending.append((topic, key, value))
+
+        def commit_transaction(self):
+            log.extend(self.pending)
+
+        def abort_transaction(self):
+            self.pending = []
+
+        def close(self):
+            pass
+
+    class KafkaConsumer:
+        def __init__(self, **config):
+            consumers.append(config)
+            self.pos: dict = {}
+
+        def partitions_for_topic(self, topic):
+            return {0} if any(t == topic for t, _, _ in log) else None
+
+        def assign(self, parts):
+            self.pos = {tp: 0 for tp in parts}
+
+        def end_offsets(self, parts):
+            return {tp: sum(t == tp.topic for t, _, _ in log) for tp in parts}
+
+        def position(self, tp):
+            return self.pos[tp]
+
+        def poll(self, timeout_ms=0):
+            out = {}
+            for tp in self.pos:
+                recs = [Record(k, v) for t, k, v in log if t == tp.topic]
+                out[tp], self.pos[tp] = recs[self.pos[tp]:], len(recs)
+            return out
+
+        def close(self):
+            pass
+
+    kafka = types.ModuleType("kafka")
+    kafka.KafkaProducer, kafka.KafkaConsumer = KafkaProducer, KafkaConsumer
+    kafka.TopicPartition = namedtuple("TopicPartition", "topic partition")
+    monkeypatch.setitem(sys.modules, "kafka", kafka)
+
+    broker = KafkaPythonBroker("broker:9092")
+    w = KafkaTransactionalEpochWriter(broker, topic="out", transactional_id="t1")
+    assert w.write_epoch(7, [(b"k1", b"v1"), (None, bytearray(b"v2"))]) is True
+    assert log == [("out", b"k1", b"v1"), ("out", None, b"v2"), ("out.epochs", b"t1", b"7")]
+
+    resumed = KafkaTransactionalEpochWriter(broker, topic="out", transactional_id="t1")
+    assert resumed.write_epoch(7, [(b"k1", b"v1")]) is False
+    assert consumers[-1]["isolation_level"] == "read_committed"
+    assert resumed.write_epoch(8, [(b"k3", b"v3")]) is True
+    assert log[-2:] == [("out", b"k3", b"v3"), ("out.epochs", b"t1", b"8")]
 
 
 def test_pipeline_kafka_eos_sink_end_to_end(spark, tmp_path):
@@ -360,7 +428,7 @@ def test_pipeline_kafka_eos_sink_end_to_end(spark, tmp_path):
         source_path=str(src),
         output_topic="replies",
         transactional_id="pipe-eos",
-        producer_factory=file_producer_factory(broker_root),
+        broker=file_broker(broker_root),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q = start_pipeline(spark, cfg, uppercase_function)

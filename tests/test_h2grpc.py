@@ -308,6 +308,55 @@ def test_concurrent_calls_keep_order_under_thread_churn(server):
     }
 
 
+def _raw_call(chan: H2GrpcChannel, requests):
+    """A call whose requests and responses are raw message bytes."""
+    return chan.stream_stream(GRPC_METHOD, bytes, bytes)(iter(requests))
+
+
+def test_call_larger_than_the_socket_buffers_completes():
+    """A 10k-message call of 1 KB payloads to an echo server: the server
+    answers while the client is still writing its body, so its responses
+    fill the socket buffers before the client reads any. The server's
+    connection reader must keep reading meanwhile, or both ends wait
+    until the client's socket timeout."""
+    srv = H2GrpcServer(lambda requests: requests)
+    try:
+        chan = H2GrpcChannel("127.0.0.1", srv.port)
+        chan.sock.settimeout(10.0)
+        msgs = [i.to_bytes(4, "big") * 256 for i in range(10_000)]
+        try:
+            assert list(_raw_call(chan, msgs)) == msgs
+        finally:
+            chan.close()
+    finally:
+        srv.close()
+
+
+def test_peer_gone_mid_response_ends_the_stream_quietly(monkeypatch):
+    """A client that closes its socket while the server is still sending
+    ends the stream without an uncaught error in the server's threads."""
+    uncaught = []
+    monkeypatch.setattr(threading, "excepthook", uncaught.append)
+
+    def flood(requests):
+        next(requests)
+        while True:
+            yield b"x" * 60_000
+
+    before = set(threading.enumerate())
+    srv = H2GrpcServer(flood)
+    chan = H2GrpcChannel("127.0.0.1", srv.port)
+    responses = _raw_call(chan, [b"go"])
+    assert next(responses) == b"x" * 60_000
+    chan.sock.close()
+    srv.close()
+    started = set(threading.enumerate()) - before
+    for t in started:
+        t.join(timeout=10)
+    assert not any(t.is_alive() for t in started)
+    assert uncaught == []
+
+
 # --------------------------------------------------------- RemoteFunction
 
 
