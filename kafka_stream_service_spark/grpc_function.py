@@ -17,7 +17,7 @@ The protobuf WIRE codec for ``Message`` is implemented here by hand
 length-delimited fields), so neither ``google.protobuf`` nor generated
 classes are needed. That keeps the protocol logic pure-Python and
 unit-testable anywhere; ``call_stream`` hands these functions as the
-(de)serializers to ``h2grpc.H2GrpcChannel.stream_stream``.
+(de)serializers to ``h2grpc.H2GrpcChannel.call``.
 
 Correlation contract: responses are correlated by stream order, exactly
 one out per in (StreamsApplication.java:185-187) — ``call_stream`` yields
@@ -193,20 +193,15 @@ def pb_decode_message(data: bytes) -> tuple[dict[str, list[str]], bytes]:
 def call_stream(
     channel,
     messages: Iterable[tuple[dict[str, list[str]], bytes]],
-    timeout: float | None = None,
 ) -> Iterator[tuple[dict[str, list[str]], bytes]]:
     """Stream (headers, payload) messages through the bidirectional
     ``/function.MessageFunction/Call`` and yield responses in stream order
     (the protocol's only correlation mechanism — 1-in-1-out).
 
-    ``channel`` is an ``h2grpc.H2GrpcChannel``; its ``stream_stream``
-    multicallable plus the hand-rolled codec above means no generated
-    protobuf classes are required.
+    ``channel`` is an ``h2grpc.H2GrpcChannel``; its ``call`` plus the
+    hand-rolled codec above means no generated protobuf classes are
+    required.
     """
-    multicallable = channel.stream_stream(
-        GRPC_METHOD,
-        request_serializer=lambda m: pb_encode_message(m[0], m[1]),
-        response_deserializer=pb_decode_message,
+    return channel.call(
+        GRPC_METHOD, messages, lambda m: pb_encode_message(m[0], m[1]), pb_decode_message
     )
-    for headers, payload in multicallable(iter(messages), timeout=timeout):
-        yield headers, payload

@@ -32,16 +32,15 @@ reads it; the server credits the request bytes its handler has taken in
 the stream thread's next write, so its connection reader never waits on
 a write and keeps reading a body the client is still sending while the
 stream thread is blocked sending responses. This is the documented
-simplification
-that keeps the module ~400 lines instead of a general-purpose stack: it
-is a LOOPBACK/TEST transport for the riff method, not an internet-facing
-HTTP/2 implementation (no PUSH, no priorities, no padding emission, one
-concurrent stream per call).
+simplification that keeps the module under 600 lines instead of a
+general-purpose stack: it is a LOOPBACK/TEST transport for the riff
+method, not an internet-facing HTTP/2 implementation (no PUSH, no
+priorities, no padding emission, one concurrent stream per call).
 
-``H2GrpcChannel.stream_stream`` has the shape of grpc's generic
-stream-stream multicallable, which is what ``grpc_function.call_stream``
-calls. ``transform.RemoteFunction`` opens one channel per call and
-closes it (GOAWAY, then the socket) when the call ends.
+``H2GrpcChannel.call`` runs one call; ``grpc_function.call_stream``
+calls it with the riff method and codec. ``transform.RemoteFunction``
+opens one channel per call and closes it (GOAWAY, then the socket) when
+the call ends.
 """
 
 from __future__ import annotations
@@ -343,9 +342,9 @@ def _credit(stream_id: int, n: int, end_stream: bool) -> bytes:
 class H2GrpcChannel:
     """Loopback gRPC channel over the stdlib HTTP/2 subset.
 
-    ``stream_stream`` returns grpc's generic multicallable shape, which
-    ``grpc_function.call_stream`` calls. One call at a time; each call is
-    a fresh stream on the connection.
+    ``call`` runs one bidirectional call; ``grpc_function.call_stream``
+    calls it with the riff method and codec. One call at a time; each
+    call is a fresh stream on the connection.
     """
 
     def __init__(self, host: str, port: int, connect_timeout: float = 5.0):
@@ -364,15 +363,9 @@ class H2GrpcChannel:
         with self._wlock:
             self.sock.sendall(_frame(_SETTINGS, _ACK, 0, b""))
 
-    def stream_stream(self, method: str, request_serializer, response_deserializer):
-        def call(request_iterator, timeout=None):
-            return self._call(
-                method, request_iterator, request_serializer, response_deserializer
-            )
-
-        return call
-
-    def _call(self, method, request_iterator, serialize, deserialize):
+    def call(self, method, request_iterator, serialize, deserialize):
+        """Send ``request_iterator`` (serialized) as one gRPC call to
+        ``method`` and yield its deserialized responses as they arrive."""
         stream_id = self._next_stream
         self._next_stream += 2
         headers = hpack_encode(

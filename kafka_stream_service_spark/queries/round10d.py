@@ -19,7 +19,7 @@ from ..tables import tables
 from ._util import work_dir
 from .registry import query
 from .round10b import _ES_DEN, _ES_SEED, _ES_TOPK
-from .streaming_replay import _run_to_memory, _write_chunks
+from .streaming_replay import _write_chunks, run_replay
 
 _ES_KEYED = f"""
     keyed AS (
@@ -100,7 +100,7 @@ def q_stream_weighted_sample_replay(spark: SparkSession, sf_dir: str) -> DataFra
         spark.readStream.schema(keyed.schema).option("maxFilesPerTrigger", 1).parquet(flat)
     )
     sampled = build_reservoir_stream(stream)
-    return _run_to_memory(spark, sampled, base, shuffle_partitions=4, output_mode="update")
+    return run_replay(spark, sampled, base, shuffle_partitions=4, output_mode="update")
 
 
 def _es_keyed_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

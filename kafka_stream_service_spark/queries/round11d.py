@@ -389,7 +389,7 @@ def q_stream_index_probe_dedup_replay(spark: SparkSession, sf_dir: str) -> DataF
     emitted pair.
     """
     from ._util import work_dir
-    from .streaming_replay import _run_to_memory, _write_chunks
+    from .streaming_replay import _write_chunks, run_replay
 
     d = tables(spark, sf_dir)["documents"].select("doc_id", "text")
     delta = d.filter((F.col("doc_id") % _SDELTA_MOD) == _SDELTA_REM)
@@ -402,4 +402,4 @@ def q_stream_index_probe_dedup_replay(spark: SparkSession, sf_dir: str) -> DataF
         base,
     )
     pairs = build_index_probe_stream(spark, sf_dir, flat)
-    return _run_to_memory(spark, pairs, base, shuffle_partitions=4)
+    return run_replay(spark, pairs, base, shuffle_partitions=4)

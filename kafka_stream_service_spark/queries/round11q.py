@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..tables import tables
 from ._util import work_dir
 from .registry import query
-from .streaming_replay import _run_to_memory, _write_chunks
+from .streaming_replay import _write_chunks, run_replay
 
 _CUSUM_BASE_DAYS = 15  # baseline window: day-of-month 1..15
 _CUSUM_SPLIT_DOM = 23  # stream chunk boundary: 16..23, then 24..
@@ -202,6 +202,6 @@ def q_stream_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(flat)
     )
     alarmed = build_cusum_stream(stream)
-    return _run_to_memory(
+    return run_replay(
         spark, alarmed, base, shuffle_partitions=4, output_mode="update"
     )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ..tables import tables
 from .registry import query
-from .streaming_replay import _run_to_memory, _write_chunks
+from .streaming_replay import _write_chunks, run_replay
 from ._util import work_dir
 
 # deliberately odd values: no event-time in the fixtures lands exactly on
@@ -101,7 +101,7 @@ def q_stateful_timeout_sessions_replay(spark: SparkSession, sf_dir: str) -> Data
     # the knob scale-adaptive instead of a local[32] constant. Join
     # replays measured the OPPOSITE (4 stores/partition/batch: full-outer
     # 2.7-5.3 s at 2 parts vs 8.6-9.2 at 32) and keep their small pins.
-    out = _run_to_memory(spark, sessions, base, output_mode="update")
+    out = run_replay(spark, sessions, base, output_mode="update")
     return out.select(
         "user_id",
         F.col("session_start").cast("timestamp_ntz").alias("session_start"),

@@ -23,7 +23,7 @@ from ..tables import tables
 from ._util import work_dir
 from .dedup2 import _PAIRS_CTE, _h_sql, pair_index, portable_hash64
 from .registry import query
-from .streaming_replay import _literal_rows, _run_to_memory, _write_chunks
+from .streaming_replay import _literal_rows, _write_chunks, run_replay
 
 # ---------------------------------------------------------------------------
 # DSIR hashed-n-gram importance weights
@@ -469,7 +469,7 @@ def q_stream_quality_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(F.when(gate, 1).otherwise(0)).cast("bigint").alias("n_pass"),
     )
-    return _run_to_memory(
+    return run_replay(
         spark, census, base, shuffle_partitions=2, output_mode="complete"
     )
 
@@ -555,4 +555,4 @@ def q_stream_sliding_window_replay(spark: SparkSession, sf_dir: str) -> DataFram
             F.col("v").cast("double").alias("sum_value"),
         )
     )
-    return _run_to_memory(spark, agg, base, shuffle_partitions=2)
+    return run_replay(spark, agg, base, shuffle_partitions=2)

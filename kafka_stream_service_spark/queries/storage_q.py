@@ -366,12 +366,9 @@ def q_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrections = ev.filter(F.col("day") == F.lit(day0)).withColumn(
         "value", dec(F.col("value") + 1)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        corrections.write.partitionBy("day").mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    corrections.write.partitionBy("day").mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy(
         (F.col("day") == F.lit(day0)).alias("is_corrected_day")

@@ -35,36 +35,38 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable, Sequence
 from datetime import timedelta
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ..session import ROCKSDB_STATE_PROVIDER
 from ..tables import tables
 from ._util import dec, dsum, work_dir
 from .registry import query
 
 WM_MIN = 30  # watermark delay for the late-drop query, minutes
 
-# Fixture-scale state-store provider, the _run_to_memory DEFAULT since
-# r15 (originally scoped to the two heaviest stream-stream replays,
-# VERDICT r7 next-steps #4): the session default is RocksDB — the right
-# provider when state outgrows executor memory at 100 TB — but its
-# per-store-per-batch snapshot overhead dominates these replays' tiny
-# bounded state (every replay row's state is fixture-bounded BY DESIGN:
-# join buffers / dedup keys / agg partials over <=6 micro-batches).
-# r7 measurement (3-run medians, identical output fingerprints):
-# full-outer 7.2 s -> 4.4 s, two-level agg 5.2 s -> 3.3 s. r15
-# extension A/B (2 processes x 2 passes per config, sf0.1): stream
-# times q_stream_stream_join_replay 3.3-6.6 -> 2.6-4.5 s,
+# Fixture-scale state-store provider, run_replay's default: the session
+# default is RocksDB — the right provider when state outgrows executor
+# memory at 100 TB — but its per-store-per-batch snapshot overhead
+# dominates these replays' tiny bounded state (every replay row's state
+# is fixture-bounded BY DESIGN: join buffers / dedup keys / agg partials
+# over <=6 micro-batches). r7 measurement (3-run medians, identical
+# output fingerprints): full-outer 7.2 s -> 4.4 s, two-level agg
+# 5.2 s -> 3.3 s. r15 extension A/B (2 processes x 2 passes per config,
+# sf0.1): stream times q_stream_stream_join_replay 3.3-6.6 -> 2.6-4.5 s,
 # q_stream_semi_join_replay 3.6-4.5 -> 2.4-3.2 s, topk-window
 # 2.4-3.6 -> 2.0-3.1 s; RocksDB changelog checkpointing was also
 # measured and does NOT close the gap (join rows unchanged, the
-# applyInPandasWithState row got slower). Scoped per query exactly
-# like shuffle_partitions (set before start, restored after); the
-# chaos-restart tier still covers checkpoint resume on both providers,
-# and q_statestore_introspection keeps the session (RocksDB) provider
-# on its own run path.
+# applyInPandasWithState row got slower). run_replay scopes the provider
+# per run exactly like the shuffle width; rows that run on RocksDB pass
+# ROCKSDB_STATE_PROVIDER (q_statestore_introspection must, it reads a
+# RocksDB store). The chaos-restart tier covers checkpoint resume on
+# both providers.
 HDFS_STATE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 )
@@ -72,11 +74,11 @@ HDFS_STATE_PROVIDER = (
 # Timing side-channel for bench attribution (VERDICT r5 next-steps #4):
 # each replay query's wall time is mostly fixture harness (chunk
 # materialization) plus the checkpointed streaming run. ``_write_chunks``
-# and ``_run_to_memory`` stamp their elapsed seconds here so bench.py can
-# report (harness_sec, stream_sec) per replay row instead of one opaque
-# number. Reset-by-overwrite: each replay query calls both exactly once.
+# stamps its seconds as harness time and ``run_replay`` stamps the run's
+# (a landing it makes mid-run is harness time, the rest is stream time),
+# so bench.py can report (harness_sec, stream_sec) per replay row instead
+# of one opaque number. Reset-by-overwrite: each replay row makes one run.
 LAST_TIMINGS: dict[str, float] = {"write_chunks_sec": 0.0, "stream_run_sec": 0.0}
-
 
 
 def _literal_rows(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
@@ -111,10 +113,13 @@ def _write_chunks(df_chunks: list[DataFrame], base: str) -> str:
     matters to first-wins dedup replays, which is why the chunks are NOT
     unioned into one partitionBy job (that would shuffle rows inside a
     chunk). Optimization r15: harness split medians across the replay
-    tier 0.3-0.7 s -> ~0.2-0.4 s per row."""
+    tier 0.3-0.7 s -> ~0.2-0.4 s per row.
+
+    A later call on the same ``base`` lands its chunks after the files
+    already there, so a row can land more of its fixture mid-run."""
     t0 = time.time()
     flat = os.path.join(base, "flat")
-    os.makedirs(flat)
+    os.makedirs(flat, exist_ok=True)
     now = time.time()
 
     def _write_one(i_chunk: tuple[int, DataFrame]) -> None:
@@ -129,31 +134,21 @@ def _write_chunks(df_chunks: list[DataFrame], base: str) -> str:
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(4, max(len(df_chunks), 1))) as pool:
-        list(pool.map(_write_one, enumerate(df_chunks)))
+        list(pool.map(_write_one, enumerate(df_chunks, len(os.listdir(flat)))))
     LAST_TIMINGS["write_chunks_sec"] = time.time() - t0
     return flat
 
 
-# Chaos-restart knob (tests/test_chaos_restart.py, VERDICT r6 #5): when
-# True, a foreachBatch replay run through _run_foreach_batch crashes ONCE
-# at the worst possible point — after the sink function has fully applied
-# a micro-batch but before Spark records the epoch commit — then restarts
-# from the same checkpoint. The restarted query re-delivers the crashed
-# epoch, so the sink's idempotency (epoch ledger / pointer swap) is what
-# keeps the driver hash identical. Default False: production path is a
-# single uninterrupted run.
-CHAOS_KILL_FIRST_RUN = False
-
-# Boundedness budget for the in-memory state-provider default (VERDICT
-# r15 next-steps #8): HDFS_STATE_PROVIDER keeps every store version on
-# the executor heap, which is safe ONLY because replay fixtures are
-# bounded by design — every replay schedule above/below delivers <= 6
-# data micro-batches (plus at most one trailing no-data batch and one
-# engine-initiated extra). A future fixture that silently grows past
-# that would run unbounded state in memory; _run_to_memory counts the
-# checkpoint's committed batches after the run and fails loudly instead
-# (tests/test_streaming_replay_guard.py feeds an over-budget fixture and
-# asserts the trip).
+# Boundedness budget for the in-memory provider (VERDICT r15 next-steps
+# #8): HDFS_STATE_PROVIDER keeps every store version on the executor
+# heap, which is safe ONLY because replay fixtures are bounded by design
+# — every replay schedule above/below delivers <= 6 data micro-batches
+# (plus at most one trailing no-data batch and one engine-initiated
+# extra). A future fixture that silently grows past that would run
+# unbounded state in memory; whenever that provider is in force,
+# run_replay counts the checkpoint's committed batches after the run and
+# fails loudly instead (tests/test_streaming_replay_guard.py feeds an
+# over-budget fixture and asserts the trip).
 REPLAY_MAX_MICRO_BATCHES = 8
 
 
@@ -161,116 +156,132 @@ class _PlannedChaosCrash(RuntimeError):
     pass
 
 
-def _run_foreach_batch(stream_df: DataFrame, sink_fn, ckpt: str) -> None:
-    """Run a foreachBatch stream to completion against ``ckpt``. Under
-    CHAOS_KILL_FIRST_RUN, the first attempt raises after the first
-    micro-batch is applied (work done, commit not recorded — the crash
-    window exactly-once sinks exist for) and a second attempt resumes
-    from the checkpoint, replaying that epoch into the sink."""
+def run_replay(
+    spark: SparkSession,
+    stream: DataFrame | DataStreamWriter,
+    base: str,
+    *,
+    sink: Callable[[DataFrame, int], None] | None = None,
+    shuffle_partitions: int | None = None,
+    output_mode: str | None = None,
+    state_provider: str = HDFS_STATE_PROVIDER,
+    available_now: bool = False,
+    landings: Sequence[Callable[[], object]] = (),
+    chaos_kill_first_run: bool = False,
+) -> DataFrame | None:
+    """Run one replay query to completion against ``<base>/ckpt``; the one
+    place a replay row starts, drains and stops its query.
 
-    def run(fn) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(fn)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
+    The sink follows the arguments: a ``stream`` DataFrame lands in a
+    memory table (returned) or, given ``sink``, in that foreachBatch
+    function; a ``stream`` DataStreamWriter (a format sink the row
+    configured) is started as it is. ``output_mode`` None keeps the
+    writer's mode (append unless the writer set one).
+
+    ``shuffle_partitions`` and ``state_provider`` are session conf scoped
+    to this run (set before start, restored after): Spark pins both into
+    the checkpoint's offset log when the query starts, and no writer
+    option sets them. Stateful-operator overhead is per state store per
+    partition per batch — a stream-stream join keeps FOUR stores per
+    partition — and the replay fixtures are small, so a handful of
+    partitions beats the session's 32 by ~10x wall-clock; None keeps the
+    session width.
+
+    ``landings`` land fixture files: the first before the query starts,
+    each next one after the previous drain, restarting the query if it
+    has stopped (an availableNow run stops once drained). Their wall time
+    is harness time; the rest of the run is stream time.
+
+    ``chaos_kill_first_run`` (foreachBatch sinks only): a first attempt
+    raises after ``sink`` has applied the first micro-batch but before
+    Spark records its commit — the crash window exactly-once sinks exist
+    for — and the run then resumes from the checkpoint, which re-delivers
+    that epoch into ``sink``.
+    """
+    t0 = time.time()
+    ckpt = os.path.join(base, "ckpt")
+    name = f"replay_{uuid.uuid4().hex[:10]}"
+    memory = isinstance(stream, DataFrame) and sink is None
+
+    def start(fn) -> StreamingQuery:
+        if not isinstance(stream, DataFrame):
+            w = stream
+        elif memory:
+            w = stream.writeStream.format("memory").queryName(name)
+        else:
+            w = stream.writeStream.foreachBatch(fn)
+        if output_mode is not None:
+            w = w.outputMode(output_mode)
+        if available_now:
+            w = w.trigger(availableNow=True)
+        return w.option("checkpointLocation", ckpt).start()
+
+    def drain(q: StreamingQuery) -> None:
+        if available_now:
+            q.awaitTermination()  # availableNow stops by itself
+        else:
             q.processAllAvailable()
-        finally:
-            q.stop()
-
-    if not CHAOS_KILL_FIRST_RUN:
-        run(sink_fn)
-        return
-
-    state = {"crashed": False}
 
     def chaotic(batch_df: DataFrame, epoch_id: int) -> None:
-        sink_fn(batch_df, epoch_id)
-        if not state["crashed"]:
-            state["crashed"] = True
-            raise _PlannedChaosCrash(
-                f"planned crash after applying epoch {epoch_id}, before commit"
-            )
-
-    try:
-        run(chaotic)
-    except Exception as exc:
-        # the planned crash surfaces as a StreamingQueryException wrapping
-        # the Python error (class name + message flattened into the text);
-        # swallow ONLY that — an unrelated first-run failure must not be
-        # masked behind a clean second run (ADVICE r7)
-        if "_PlannedChaosCrash" not in f"{type(exc).__name__}: {exc}":
-            raise
-    run(sink_fn)
-
-
-def _run_to_memory(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    base: str,
-    shuffle_partitions: int | None = None,
-    output_mode: str = "append",
-    state_provider: str | None = HDFS_STATE_PROVIDER,
-) -> DataFrame:
-    """Run the stream to completion into a memory sink.
-
-    ``shuffle_partitions`` scopes the state-store partition count to this
-    query (set before start, restored after): stateful-operator overhead
-    is per state store per partition per batch — a stream-stream join
-    keeps FOUR stores per partition — and the replay fixtures are small,
-    so a handful of partitions beats the session's 32 by ~10x wall-clock.
-    The setting is pinned into the query's checkpoint at start, so
-    restoring the session conf afterwards does not affect the run.
-
-    ``state_provider`` defaults to the in-memory HDFSBacked provider
-    since r15 (see the HDFS_STATE_PROVIDER note: replay state is
-    fixture-bounded by design and RocksDB's per-store-per-batch
-    snapshot overhead is 15-40% of these rows' stream time); pass None
-    to inherit the session provider (RocksDB, the production default)."""
-    t0 = time.time()
-    name = f"replay_{uuid.uuid4().hex[:10]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key)
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if state_provider is not None:
-        spark.conf.set(prov_key, state_provider)
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
+        sink(batch_df, epoch_id)
+        raise _PlannedChaosCrash(
+            f"planned crash after applying epoch {epoch_id}, before commit"
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        if state_provider == HDFS_STATE_PROVIDER:
-            # enforce the fixture-boundedness assumption the in-memory
-            # provider default rests on (REPLAY_MAX_MICRO_BATCHES note)
-            commits = [
-                c
-                for c in glob.glob(os.path.join(base, "ckpt", "commits", "*"))
-                if not c.endswith(".tmp")
-            ]
-            if len(commits) > REPLAY_MAX_MICRO_BATCHES:
-                raise RuntimeError(
-                    f"replay ran {len(commits)} micro-batches, over the "
-                    f"{REPLAY_MAX_MICRO_BATCHES}-batch budget the in-memory "
-                    "state-provider default assumes (state is only "
-                    "fixture-bounded within that budget); shrink the "
-                    "fixture or pass state_provider=None to run on the "
-                    "session (RocksDB) provider"
-                )
+
+    scoped = {
+        "spark.sql.shuffle.partitions": shuffle_partitions,
+        "spark.sql.streaming.stateStore.providerClass": state_provider,
+    }
+    prev = {k: spark.conf.get(k) for k in scoped}
+    for k, v in scoped.items():
+        if v is not None:
+            spark.conf.set(k, str(v))
+    landed = 0.0
+    q = None
+    try:
+        if chaos_kill_first_run:
+            q = start(chaotic)
+            try:
+                drain(q)
+            except StreamingQueryException as exc:
+                # the planned crash surfaces wrapped, its class name and
+                # message flattened into the text; swallow ONLY that — an
+                # unrelated first-run failure must not be masked behind a
+                # clean second run
+                if "_PlannedChaosCrash" not in str(exc):
+                    raise
+                q.stop()
+        for land in landings or (None,):
+            if land is not None:
+                t1 = time.time()
+                land()
+                landed += time.time() - t1
+            if q is None or not q.isActive:
+                q = start(sink)
+            drain(q)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(prov_key, prev_prov)
-    LAST_TIMINGS["stream_run_sec"] = time.time() - t0
-    return spark.table(name)
+        if q is not None:
+            q.stop()
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    if state_provider == HDFS_STATE_PROVIDER:
+        commits = [
+            c
+            for c in glob.glob(os.path.join(ckpt, "commits", "*"))
+            if not c.endswith(".tmp")
+        ]
+        if len(commits) > REPLAY_MAX_MICRO_BATCHES:
+            raise RuntimeError(
+                f"replay ran {len(commits)} micro-batches, over the "
+                f"{REPLAY_MAX_MICRO_BATCHES}-batch budget the in-memory "
+                "state provider assumes (state is only fixture-bounded "
+                "within that budget); shrink the fixture or run it on "
+                "ROCKSDB_STATE_PROVIDER"
+            )
+    if landings:
+        LAST_TIMINGS["write_chunks_sec"] = landed
+    LAST_TIMINGS["stream_run_sec"] = time.time() - t0 - landed
+    return spark.table(name) if memory else None
 
 
 @query(
@@ -336,7 +347,7 @@ def q_stream_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(spark, agg, base, shuffle_partitions=8)
+    return run_replay(spark, agg, base, shuffle_partitions=8)
 
 
 @query(
@@ -374,7 +385,7 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    return _run_to_memory(spark, deduped, base, shuffle_partitions=8)
+    return run_replay(spark, deduped, base, shuffle_partitions=8)
 
 
 @query(
@@ -437,7 +448,7 @@ def q_stream_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
-    return _run_to_memory(spark, joined, base, shuffle_partitions=4)
+    return run_replay(spark, joined, base, shuffle_partitions=4)
 
 
 @query(
@@ -519,7 +530,7 @@ def q_stateful_running_totals_replay(spark: SparkSession, sf_dir: str) -> DataFr
     totals = stream.groupBy("user_id").applyInPandasWithState(
         running, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    return _run_to_memory(spark, totals, base, shuffle_partitions=8, output_mode="update")
+    return run_replay(spark, totals, base, shuffle_partitions=8, output_mode="update")
 
 
 @query(
@@ -649,7 +660,7 @@ def q_stream_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the partition count (store open/commit dominates the tiny
     # fixture), so the replay pins the smallest count that still
     # exercises multi-partition state
-    return _run_to_memory(spark, joined, base, shuffle_partitions=2)
+    return run_replay(spark, joined, base, shuffle_partitions=2)
 
 
 @query(
@@ -701,7 +712,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "lang", "source")
     )
-    return _run_to_memory(spark, fresh, base, shuffle_partitions=8)
+    return run_replay(spark, fresh, base, shuffle_partitions=8)
 
 
 @query(
@@ -738,29 +749,16 @@ def q_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(flat)
     )
     mat_path = os.path.join(base, "materialized")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    t0 = time.time()
-    try:
-        q = continuous_aggregate(
-            stream,
-            mat_path,
-            checkpoint=os.path.join(base, "ckpt"),
-            watermark="30 minutes",
-            window_size="1 day",  # partition count = days x types; the
-            # hour-grain variant is the same operator with more partitions
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # harness-vs-stream accountability (VERDICT r13 #6): this row is
-    # replay-shaped without the _replay suffix, so it stamps the same
-    # side channel the _run_* helpers do and bench's harness-use
-    # detection records the split
-    LAST_TIMINGS["stream_run_sec"] = time.time() - t0
+    writer = continuous_aggregate(
+        stream,
+        mat_path,
+        watermark="30 minutes",
+        window_size="1 day",  # partition count = days x types; the
+        # hour-grain variant is the same operator with more partitions
+    )
+    run_replay(
+        spark, writer, base, shuffle_partitions=8, state_provider=ROCKSDB_STATE_PROVIDER
+    )
     return read_continuous_aggregate(spark, mat_path, window_size_sec=86400)
 
 
@@ -842,7 +840,7 @@ def q_stream_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFram
             "sum_value",
         )
     )
-    return _run_to_memory(spark, agg, base, shuffle_partitions=8)
+    return run_replay(spark, agg, base, shuffle_partitions=8)
 
 
 @query(
@@ -902,7 +900,7 @@ def q_stream_dedup_then_window_replay(spark: SparkSession, sf_dir: str) -> DataF
             "n_events",
         )
     )
-    return _run_to_memory(spark, agg, base, shuffle_partitions=8)
+    return run_replay(spark, agg, base, shuffle_partitions=8)
 
 
 @query(
@@ -965,7 +963,7 @@ def q_stream_semi_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "left_semi",
     ).select("purchase_id", F.col("p_user").alias("user_id"))
-    return _run_to_memory(spark, joined, base, shuffle_partitions=4)
+    return run_replay(spark, joined, base, shuffle_partitions=4)
 
 
 def build_full_outer_join_stream(spark: SparkSession, flat: str, schema) -> DataFrame:
@@ -1107,7 +1105,7 @@ def q_stream_full_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFra
     joined = build_full_outer_join_stream(spark, flat, ev.schema)
     # 2 state partitions — see q_stream_outer_join_replay's note;
     # in-memory state provider — bounded fixture state (HDFS_STATE_PROVIDER note)
-    return _run_to_memory(
+    return run_replay(
         spark, joined, base, shuffle_partitions=2, state_provider=HDFS_STATE_PROVIDER
     )
 
@@ -1209,7 +1207,7 @@ def q_stream_two_level_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     # 2 state partitions: two chained stateful operators double the
     # per-partition store count; same fixture-scale measurement as the
     # outer-join replays. In-memory state provider (HDFS_STATE_PROVIDER note).
-    return _run_to_memory(
+    return run_replay(
         spark, hourly, base, shuffle_partitions=2, state_provider=HDFS_STATE_PROVIDER
     )
 
@@ -1284,7 +1282,7 @@ def q_stream_merge_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat = _write_chunks([base, changes], os.path.join(base_dir, "chunks"))
     writer = MergeIdempotentSnapshotWriter(os.path.join(base_dir, "tbl"), key="k")
     stream = spark.readStream.schema(base.schema).option("maxFilesPerTrigger", 1).parquet(flat)
-    _run_foreach_batch(stream, writer, os.path.join(base_dir, "ckpt"))
+    run_replay(spark, stream, base_dir, sink=writer, state_provider=ROCKSDB_STATE_PROVIDER)
     snap = writer.current(spark)
     return snap.select("k", F.col("v").cast("double").alias("v"))
 
@@ -1379,23 +1377,15 @@ def q_stream_topk_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         top.write.mode("append").parquet(out_dir)
 
-    t0 = time.time()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = (
-            hourly.writeStream.foreachBatch(rank_closed)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    LAST_TIMINGS["stream_run_sec"] = time.time() - t0
+    run_replay(
+        spark,
+        hourly,
+        base,
+        sink=rank_closed,
+        shuffle_partitions=2,
+        output_mode="append",
+        state_provider=ROCKSDB_STATE_PROVIDER,
+    )
     return spark.read.parquet(out_dir)
 
 
@@ -1447,15 +1437,15 @@ def q_stream_wiredump_source_replay(spark: SparkSession, sf_dir: str) -> DataFra
     )
     base = work_dir("swiredump", sf_dir)
     seg_dir = os.path.join(base, "seg")
-    t0 = time.time()
-    # repartition(4): four segment files per stage — the scan+encode
-    # parallelizes across tasks (coalesce(1) serialized the whole
-    # upstream into one task) and the streaming side gets four
-    # InputPartitions per micro-batch to fan out over executors
-    frames.filter(F.col("half") == 0).drop("half").repartition(4).write.format(
-        "wiredump"
-    ).mode("append").save(seg_dir)
-    LAST_TIMINGS["write_chunks_sec"] = time.time() - t0
+
+    def land(half: int) -> None:
+        # repartition(4): four segment files per stage — the scan+encode
+        # parallelizes across tasks (coalesce(1) serialized the whole
+        # upstream into one task) and the streaming side gets four
+        # InputPartitions per micro-batch to fan out over executors
+        frames.filter(F.col("half") == half).drop("half").repartition(4).write.format(
+            "wiredump"
+        ).mode("append").save(seg_dir)
 
     stream = spark.readStream.format("wiredump").load(seg_dir)
     agg = (
@@ -1471,34 +1461,17 @@ def q_stream_wiredump_source_replay(spark: SparkSession, sf_dir: str) -> DataFra
             F.sum("k").cast("bigint").alias("sum_k"),
         )
     )
-    t1 = time.time()
-    name = f"wdsrc_{uuid.uuid4().hex[:10]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # stage 2: the second half arrives while the query runs —
-            # a genuine new micro-batch over the connector's offset
-            t2 = time.time()
-            frames.filter(F.col("half") == 1).drop("half").repartition(4).write.format(
-                "wiredump"
-            ).mode("append").save(seg_dir)
-            LAST_TIMINGS["write_chunks_sec"] += time.time() - t2
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    LAST_TIMINGS["stream_run_sec"] = time.time() - t1 - LAST_TIMINGS["write_chunks_sec"]
-    return spark.table(name)
+    # the second half lands while the query runs — a genuine new
+    # micro-batch over the connector's offset
+    return run_replay(
+        spark,
+        agg,
+        base,
+        shuffle_partitions=2,
+        output_mode="complete",
+        state_provider=ROCKSDB_STATE_PROVIDER,
+        landings=[lambda: land(0), lambda: land(1)],
+    )
 
 
 @query(
@@ -1562,18 +1535,12 @@ def q_stream_wiredump_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     # fan precedent). At scale the upstream batch is already many
     # partitions and the fan is a cheap rebalance of ~100-byte rows.
     stream = stream.repartition(8)
-    t0 = time.time()
-    q = (
-        stream.writeStream.format("wiredump")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
+    run_replay(
+        spark,
+        stream.writeStream.format("wiredump").option("path", out_dir),
+        base,
+        state_provider=ROCKSDB_STATE_PROVIDER,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    LAST_TIMINGS["stream_run_sec"] = time.time() - t0
     back = spark.read.format("wiredump").load(out_dir)
     return (
         back.select(
@@ -1627,24 +1594,14 @@ def q_statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "90 days")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    ckpt = os.path.join(base, "ckpt")
-    t0 = time.time()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            dedup.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    LAST_TIMINGS["stream_run_sec"] = time.time() - t0
-    state = spark.read.format("statestore").load(ckpt)
+    run_replay(
+        spark,
+        dedup.writeStream.format("noop"),
+        base,
+        shuffle_partitions=4,
+        state_provider=ROCKSDB_STATE_PROVIDER,  # the store read below
+    )
+    state = spark.read.format("statestore").load(os.path.join(base, "ckpt"))
     return state.select(
         F.col("key.event_id").alias("event_id"),
         F.col("value.expiresAtMicros").alias("expires_at_micros"),
@@ -1724,9 +1681,7 @@ def q_stream_fanout_dual_sink_replay(spark: SparkSession, sf_dir: str) -> DataFr
         .option("maxFilesPerTrigger", 1)
         .parquet(flat)
     )
-    t0 = time.time()
-    _run_foreach_batch(stream, fanout, os.path.join(base_dir, "ckpt"))
-    LAST_TIMINGS["stream_run_sec"] = time.time() - t0
+    run_replay(spark, stream, base_dir, sink=fanout, state_provider=ROCKSDB_STATE_PROVIDER)
 
     log_df = spark.read.parquet(os.path.join(base_dir, "log", "batch_id=*"))
     snap_df = snap_writer.current(spark)
@@ -1768,33 +1723,23 @@ def q_stream_available_now_incremental(spark: SparkSession, sf_dir: str) -> Data
     ev = tables(spark, sf_dir)["events"].select("event_id", "ts", "event_type", "value")
     stats = ev.agg(F.percentile_approx("ts", 0.5, 10000).alias("m")).collect()[0]
     base = work_dir("savailnow", sf_dir)
-    in_dir = os.path.join(base, "incoming")
-    os.makedirs(in_dir)
+    flat = os.path.join(base, "flat")  # _write_chunks' directory
+    os.makedirs(flat)
     writer = ForeachBatchIdempotentWriter(os.path.join(base, "out"))
-    ckpt = os.path.join(base, "ckpt")
-
-    def land(df: DataFrame, tag: str) -> None:
-        staged = os.path.join(base, f"stage_{tag}")
-        df.coalesce(1).write.parquet(staged)
-        (part,) = glob.glob(os.path.join(staged, "*.parquet"))
-        shutil.copy(part, os.path.join(in_dir, f"{tag}.parquet"))
-
-    def drain() -> None:
-        stream = spark.readStream.schema(ev.schema).parquet(in_dir)
-        q = (
-            stream.writeStream.foreachBatch(writer)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()  # availableNow stops by itself
-
-    t0 = time.time()
-    land(ev.filter(F.col("ts") <= F.lit(stats.m)), "00_first")
-    drain()  # invocation 1: the backlog
-    land(ev.filter(F.col("ts") > F.lit(stats.m)), "01_delta")
-    drain()  # invocation 2: exactly the delta
-    LAST_TIMINGS["stream_run_sec"] = time.time() - t0
+    stream = spark.readStream.schema(ev.schema).parquet(flat)
+    # invocation 1 drains the backlog, invocation 2 exactly the delta
+    run_replay(
+        spark,
+        stream,
+        base,
+        sink=writer,
+        state_provider=ROCKSDB_STATE_PROVIDER,
+        available_now=True,
+        landings=[
+            lambda: _write_chunks([ev.filter(F.col("ts") <= F.lit(stats.m))], base),
+            lambda: _write_chunks([ev.filter(F.col("ts") > F.lit(stats.m))], base),
+        ],
+    )
 
     out = spark.read.parquet(os.path.join(base, "out", "batch_id=*"))
     return out.groupBy("event_type").agg(
@@ -1890,9 +1835,9 @@ def q_stream_hll_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.schema(d.schema).option("maxFilesPerTrigger", 1).parquet(flat)
     )
-    t0 = time.time()
-    _run_foreach_batch(stream, partial_registers, os.path.join(base, "ckpt"))
-    LAST_TIMINGS["stream_run_sec"] = time.time() - t0
+    run_replay(
+        spark, stream, base, sink=partial_registers, state_provider=ROCKSDB_STATE_PROVIDER
+    )
     partials = spark.read.parquet(os.path.join(base, "partials", "batch_id=*"))
     return partials.groupBy("bucket").agg(
         F.max("max_rho").cast("bigint").alias("max_rho")

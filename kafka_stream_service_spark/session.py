@@ -26,6 +26,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# the session's state-store provider (state can outgrow executor memory)
+ROCKSDB_STATE_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 # the directory the package is imported from, for the executors' PYTHONPATH
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -95,8 +99,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_PROVIDER)
         .config("spark.python.daemon.module", "kafka_stream_service_spark.pyworker")
         # no Python call-site capture per DataFrame call: it is most of the
         # py4j round trips of a build (q01: 564 with it, 154 without). The

@@ -35,13 +35,13 @@ from ..queries._util import dec, dsum
 def continuous_aggregate(
     events: DataFrame,
     path: str,
-    checkpoint: str,
     ts_col: str = "ts",
     watermark: str = "30 minutes",
     window_size: str = "1 hour",
     keys: tuple[str, ...] = ("event_type",),
 ):
-    """Start the maintenance stream; returns the StreamingQuery.
+    """The maintenance stream's writer (update mode into ``write_batch``),
+    unstarted: the caller sets the checkpoint and starts it.
 
     The materialization at ``path`` is partitioned by
     ``(ws_epoch, *keys)`` and carries ``n_events`` / ``sum_value``.
@@ -62,24 +62,17 @@ def continuous_aggregate(
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # Dynamic mode replaces ONLY the partitions present in this batch
-        # — the incremental upsert. The conf must be set on the BATCH's
-        # session: foreachBatch runs under a microbatch-cloned
-        # SparkSession whose conf snapshot ignores later changes to the
-        # outer session (a static overwrite here would wipe the whole
-        # table every batch). Empty batches (no-data flushes) are skipped.
+        # — the incremental upsert; a static overwrite would wipe the
+        # whole table every batch. The writer option scopes it to this
+        # write and leaves the session's mode alone. Empty batches
+        # (no-data flushes) are skipped.
         if batch_df.isEmpty():
             return
-        batch_df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        batch_df.write.mode("overwrite").partitionBy("ws_epoch", *keys).parquet(path)
+        batch_df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("ws_epoch", *keys).parquet(path)
 
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return agg.writeStream.outputMode("update").foreachBatch(write_batch)
 
 
 def read_continuous_aggregate(

@@ -1,11 +1,12 @@
 """Chaos pass on the round-6 replay sinks (VERDICT r6 next-steps #5).
 
 The replay oracles are deterministic by construction; these variants
-prove they stay deterministic across a CRASH. The chaos knob in
-streaming_replay makes the first run raise after a micro-batch's sink
-function has fully applied but before Spark records the epoch commit —
-the exact window exactly-once sinks exist for — then a second run
-resumes from the same checkpoint and re-delivers that epoch. The test
+prove they stay deterministic across a CRASH. The replay runner's
+``chaos_kill_first_run`` argument makes the first run raise after a
+micro-batch's sink function has fully applied but before Spark records
+the epoch commit — the exact window exactly-once sinks exist for — then
+a second run resumes from the same checkpoint and re-delivers that
+epoch. The test
 then compares the query's output to its DuckDB oracle, so a
 double-applied epoch (log rows doubled, merge re-applied, HLL partial
 landed twice) flips the same hash the driver checks.
@@ -15,6 +16,8 @@ sink modes: pointer-swap MERGE, dual-sink fan-out, HLL partial merge.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import pytest
 
@@ -41,7 +44,11 @@ def duck():
 
 @pytest.mark.parametrize("name", CHAOS_QUERIES)
 def test_replay_survives_mid_epoch_crash(spark, duck, name, monkeypatch):
-    monkeypatch.setattr(streaming_replay, "CHAOS_KILL_FIRST_RUN", True)
+    monkeypatch.setattr(
+        streaming_replay,
+        "run_replay",
+        partial(streaming_replay.run_replay, chaos_kill_first_run=True),
+    )
     spec = QUERIES[name]
     spdf = spec.spark_fn(spark, SF).toPandas()
     ddf = duck.execute(spec.oracle).fetchdf()
@@ -53,17 +60,16 @@ def test_chaos_crash_actually_fires(spark, monkeypatch):
     """Guard the guard: the chaotic first run must really crash (a knob
     wired to a dead path would make the suite vacuous)."""
     calls = []
-    monkeypatch.setattr(streaming_replay, "CHAOS_KILL_FIRST_RUN", True)
-    orig = streaming_replay._run_foreach_batch
+    orig = streaming_replay.run_replay
 
-    def spying(stream_df, sink_fn, ckpt):
+    def spying(*args, sink, **kwargs):
         def spy(b, e):
             calls.append(e)
-            return sink_fn(b, e)
+            return sink(b, e)
 
-        return orig(stream_df, spy, ckpt)
+        return orig(*args, sink=spy, chaos_kill_first_run=True, **kwargs)
 
-    monkeypatch.setattr(streaming_replay, "_run_foreach_batch", spying)
+    monkeypatch.setattr(streaming_replay, "run_replay", spying)
     QUERIES["q_stream_merge_sink_replay"].spark_fn(spark, SF).collect()
     # 2 epochs; epoch 0 applied, crash, then epoch 0 replayed + epoch 1
     assert sorted(calls) == [0, 0, 1], calls

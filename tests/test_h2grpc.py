@@ -310,7 +310,7 @@ def test_concurrent_calls_keep_order_under_thread_churn(server):
 
 def _raw_call(chan: H2GrpcChannel, requests):
     """A call whose requests and responses are raw message bytes."""
-    return chan.stream_stream(GRPC_METHOD, bytes, bytes)(iter(requests))
+    return chan.call(GRPC_METHOD, requests, bytes, bytes)
 
 
 def test_call_larger_than_the_socket_buffers_completes():

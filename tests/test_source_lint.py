@@ -9,6 +9,7 @@ SQL-string sibling) into a CI failure so it can never land again.
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -159,4 +160,78 @@ def test_no_spark_side_exact_percentile_aggregates():
         "scale with few groups). Use "
         "operators/ranks.py:group_exact_percentiles (bounded by the value "
         f"domain) instead: {hits}"
+    )
+
+
+# ---------------------------------------------------------------------------
+# One replay runner
+# ---------------------------------------------------------------------------
+
+# Every streaming replay row runs its query through
+# queries/streaming_replay.py:run_replay, the one place that scopes the
+# shuffle width and state-store provider, starts, drains and stops the
+# query, checks the micro-batch budget and stamps the stream time. A row
+# that grows its own run loop again bypasses all of that (a hand-rolled
+# run once left a row's stream time unstamped), so outside the runner
+# these files may not drain or start a stream, nor set those two confs
+# (or any conf under a key that is not a literal). Other session pins —
+# the registry's UTC and nanosAsLong, storage_q's pairs — stay allowed.
+_RUNNER = (PKG / "queries" / "streaming_replay.py", "run_replay")
+_RUNNER_CONF = {
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.providerClass",
+}
+
+
+def _on_write_stream(node) -> bool:
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+            return True
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return False
+
+
+def _run_loop_sites(path: Path) -> list[str]:
+    tree = ast.parse(path.read_text())
+    runner = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and (path, node.name) == _RUNNER:
+            runner = {id(n) for n in ast.walk(node)}
+    hits = []
+    for node in ast.walk(tree):
+        if id(node) in runner:
+            continue
+        what = None
+        if isinstance(node, ast.Attribute) and node.attr in (
+            "processAllAvailable",
+            "awaitTermination",
+        ):
+            what = node.attr
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            target = node.func.value
+            if node.func.attr == "start" and _on_write_stream(target):
+                what = "writeStream...start()"
+            elif (
+                node.func.attr == "set"
+                and isinstance(target, ast.Attribute)
+                and target.attr == "conf"
+                and node.args
+                and (
+                    not isinstance(node.args[0], ast.Constant)
+                    or node.args[0].value in _RUNNER_CONF
+                )
+            ):
+                what = "conf.set of a runner-scoped or non-literal key"
+        if what:
+            hits.append(f"{path.relative_to(REPO)}:{node.lineno}: {what}")
+    return hits
+
+
+def test_replay_rows_run_only_through_the_runner():
+    paths = sorted((PKG / "queries").glob("*.py"))
+    paths.append(PKG / "streaming" / "materialize.py")
+    hits = [h for path in paths for h in _run_loop_sites(path)]
+    assert not hits, (
+        "a replay run outside queries/streaming_replay.py:run_replay — pass "
+        f"the stream (and its width, provider, mode, sink) to the runner: {hits}"
     )

@@ -240,8 +240,10 @@ def test_continuous_aggregate_replay_is_idempotent(spark, events_batch, events_c
 
     def run(ck: str):
         stream = stream_file_source(spark, events_chunks_dir, events_batch.schema)
-        q = continuous_aggregate(
-            stream, mat, checkpoint=str(tmp_path / ck), window_size="1 day"
+        q = (
+            continuous_aggregate(stream, mat, window_size="1 day")
+            .option("checkpointLocation", str(tmp_path / ck))
+            .start()
         )
         try:
             q.processAllAvailable()
