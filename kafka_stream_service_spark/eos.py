@@ -362,29 +362,3 @@ class MergeIdempotentSnapshotWriter:
         with open(tmp, "w") as f:
             json.dump({"epoch": epoch, "path": out}, f)
         os.replace(tmp, self.pointer_path)  # atomic commit
-
-
-def run_with_restarts(
-    start_query: Callable[[], "object"],
-    max_restarts: int = 3,
-    on_failure: Callable[[int, Exception], None] | None = None,
-):
-    """Supervised restart loop (R14: the reference's ``while (!closed)``
-    rebuild at StreamsApplication.java:135-171).
-
-    Each restart resumes from the checkpoint (the analog of resuming from
-    transaction-committed offsets). Returns when the query stops cleanly;
-    re-raises after ``max_restarts`` consecutive failures.
-    """
-    attempt = 0
-    while True:
-        query = start_query()
-        try:
-            query.awaitTermination()
-            return query
-        except Exception as e:  # noqa: BLE001 - supervision boundary
-            attempt += 1
-            if on_failure:
-                on_failure(attempt, e)
-            if attempt > max_restarts:
-                raise

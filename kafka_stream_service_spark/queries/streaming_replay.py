@@ -190,7 +190,11 @@ def run_replay(
     ``landings`` land fixture files: the first before the query starts,
     each next one after the previous drain, restarting the query if it
     has stopped (an availableNow run stops once drained). Their wall time
-    is harness time; the rest of the run is stream time.
+    is harness time; the rest of the run is stream time. So an
+    availableNow run with several landings restarts from the checkpoint
+    between them: each run after the first resumes ``<base>/ckpt``'s
+    offsets and state under a new run id. The chaos tier's between-epoch
+    restart tests (tests/test_chaos_restart.py) rely on this.
 
     ``chaos_kill_first_run`` (foreachBatch sinks only): a first attempt
     raises after ``sink`` has applied the first micro-batch but before

@@ -173,9 +173,13 @@ def test_no_spark_side_exact_percentile_aggregates():
 # query, checks the micro-batch budget and stamps the stream time. A row
 # that grows its own run loop again bypasses all of that (a hand-rolled
 # run once left a row's stream time unstamped), so outside the runner
-# these files may not drain or start a stream, nor set those two confs
-# (or any conf under a key that is not a literal). Other session pins —
-# the registry's UTC and nanosAsLong, storage_q's pairs — stay allowed.
+# these files may not drain or start a stream, nor set or unset those
+# two confs (or any conf under a key that is not a literal). Other
+# session pins — the registry's UTC and nanosAsLong, storage_q's pairs —
+# stay allowed. The chaos tier restarts its queries through the runner
+# too, so it is held to the same rule; every other test may run its own
+# stream but leaves the two runner confs to the runner (an unset once
+# dropped the session's RocksDB default for every later test module).
 _RUNNER = (PKG / "queries" / "streaming_replay.py", "run_replay")
 _RUNNER_CONF = {
     "spark.sql.shuffle.partitions",
@@ -191,7 +195,44 @@ def _on_write_stream(node) -> bool:
     return False
 
 
-def _run_loop_sites(path: Path) -> list[str]:
+def _runner_conf_call(node, any_key: bool) -> bool:
+    """A ``conf.set``/``conf.unset`` call on a runner key or, given
+    ``any_key``, on a key that is not a literal."""
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("set", "unset")
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+        and node.args
+    ):
+        return False
+    key = node.args[0]
+    if isinstance(key, ast.Constant):
+        return key.value in _RUNNER_CONF
+    return any_key
+
+
+def _run_step(node) -> str | None:
+    """What a drain or a stream start names, or None."""
+    if isinstance(node, ast.Attribute) and node.attr in (
+        "processAllAvailable",
+        "awaitTermination",
+    ):
+        return node.attr
+    if (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "start"
+        and _on_write_stream(node.func.value)
+    ):
+        return "writeStream...start()"
+    return None
+
+
+def _run_loop_sites(path: Path, loops: bool = True) -> list[str]:
+    """Run-loop sites outside the runner; ``loops`` False checks only
+    conf calls on a literal runner key."""
     tree = ast.parse(path.read_text())
     runner = set()
     for node in ast.walk(tree):
@@ -202,26 +243,10 @@ def _run_loop_sites(path: Path) -> list[str]:
         if id(node) in runner:
             continue
         what = None
-        if isinstance(node, ast.Attribute) and node.attr in (
-            "processAllAvailable",
-            "awaitTermination",
-        ):
-            what = node.attr
-        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
-            target = node.func.value
-            if node.func.attr == "start" and _on_write_stream(target):
-                what = "writeStream...start()"
-            elif (
-                node.func.attr == "set"
-                and isinstance(target, ast.Attribute)
-                and target.attr == "conf"
-                and node.args
-                and (
-                    not isinstance(node.args[0], ast.Constant)
-                    or node.args[0].value in _RUNNER_CONF
-                )
-            ):
-                what = "conf.set of a runner-scoped or non-literal key"
+        if _runner_conf_call(node, any_key=loops):
+            what = "conf set/unset of a runner-scoped or non-literal key"
+        elif loops:
+            what = _run_step(node)
         if what:
             hits.append(f"{path.relative_to(REPO)}:{node.lineno}: {what}")
     return hits
@@ -230,8 +255,19 @@ def _run_loop_sites(path: Path) -> list[str]:
 def test_replay_rows_run_only_through_the_runner():
     paths = sorted((PKG / "queries").glob("*.py"))
     paths.append(PKG / "streaming" / "materialize.py")
+    paths.append(REPO / "tests" / "test_chaos_restart.py")
     hits = [h for path in paths for h in _run_loop_sites(path)]
     assert not hits, (
         "a replay run outside queries/streaming_replay.py:run_replay — pass "
         f"the stream (and its width, provider, mode, sink) to the runner: {hits}"
+    )
+
+
+def test_tests_leave_runner_conf_to_the_runner():
+    paths = sorted((REPO / "tests").glob("*.py"))
+    hits = [h for path in paths for h in _run_loop_sites(path, loops=False)]
+    assert not hits, (
+        "a test sets or unsets the shuffle width or state-store provider "
+        "of the shared session — pass them to run_replay, which scopes "
+        f"and restores them: {hits}"
     )

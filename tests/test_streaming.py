@@ -199,10 +199,14 @@ def test_stream_static_join(spark, events_batch, events_chunks_dir, sf_dir):
 def test_streaming_dedup_rocksdb_state_store(spark, events_batch, tmp_path):
     """The same dedup pipeline on the RocksDB state store provider — the
     state backend that holds at 100 TB key cardinalities (bounded heap,
-    native memtable/SST) where the default HDFS-backed in-memory map
-    OOMs. Result must be identical to the default provider's."""
+    native memtable/SST) where the HDFS-backed in-memory map OOMs. The
+    engine's session default is already RocksDB; the replay runner pins
+    it for this run and restores the session's provider after."""
     import glob as g
     import shutil
+
+    from kafka_stream_service_spark.queries.streaming_replay import run_replay
+    from kafka_stream_service_spark.session import ROCKSDB_STATE_PROVIDER
 
     sample = events_batch.orderBy("ts").limit(200)
     dup_dir = tmp_path / "dups"
@@ -211,16 +215,11 @@ def test_streaming_dedup_rocksdb_state_store(spark, events_batch, tmp_path):
     shutil.copy(g.glob(str(tmp_path / "d0" / "*.parquet"))[0], str(dup_dir / "00.parquet"))
     shutil.copy(g.glob(str(tmp_path / "d0" / "*.parquet"))[0], str(dup_dir / "01.parquet"))
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = stream_file_source(spark, str(dup_dir), events_batch.schema)
-        deduped = streaming_dedup(stream, watermark="2 hours", keys=("event_id",))
-        got = run_stream(spark, deduped, "dedup_rocksdb_test").collect()
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    stream = stream_file_source(spark, str(dup_dir), events_batch.schema)
+    deduped = streaming_dedup(stream, watermark="2 hours", keys=("event_id",))
+    got = run_replay(
+        spark, deduped, str(tmp_path), state_provider=ROCKSDB_STATE_PROVIDER
+    ).collect()
     assert len(got) == 200
     assert len({r.event_id for r in got}) == 200
 
