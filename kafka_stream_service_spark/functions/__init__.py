@@ -1,8 +1,4 @@
-"""Scalar function helpers (JVM-side column expressions only)."""
-
-from .text import (  # noqa: F401
-    ngrams,
-    stopword_ratio,
-    tokens,
-    vocabulary_fingerprint,
-)
+"""Scalar function helpers (``text``: JVM-side column expressions) and
+the pure-Python protobuf and Avro wire codecs. Nothing is imported here,
+so a process that needs only a codec (the function server) does not load
+pyspark."""

@@ -44,6 +44,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .proto_codec import decode_varint, encode_varint, zigzag_decode, zigzag_encode
+
 __all__ = [
     "compile_schema",
     "encode_record",
@@ -63,28 +65,13 @@ OCF_MAGIC = b"Obj\x01"
 
 
 def _w_long(out: bytearray, n: int) -> None:
-    n = ((n << 1) ^ (n >> 63)) & 0xFFFFFFFFFFFFFFFF
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
+    out += encode_varint(zigzag_encode(n) & 0xFFFFFFFFFFFFFFFF)
 
 
 def _r_long(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = 0
-    acc = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1), pos
+    """Decodes one long; ``ValueError`` on truncation or past int64."""
+    z, pos = decode_varint(buf, pos)
+    return zigzag_decode(z), pos
 
 
 # --------------------------------------------------------------------------

@@ -15,7 +15,9 @@ wire format is a tiny public specification
 
 This module implements the encoder/decoder for a fixed test message
 (an order record) plus generic varint/zigzag/tag primitives, with
-spec-golden bytes pinned in tests/test_proto_codec.py. Used by
+spec-golden bytes pinned in tests/test_proto_codec.py. Its varint is the
+package's only one: the riff ``Message`` codec (``grpc_function.py``)
+and the Avro codec (``avro_codec.py``) call it too. Used by
 ``q_proto_roundtrip`` (queries/round7h.py) where the wire length is
 ALSO recomputed column-side in both engines, so the oracle certifies
 the byte-level size accounting, not just the value roundtrip.
@@ -43,21 +45,23 @@ def encode_varint(n: int) -> bytes:
 
 
 def decode_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    """Returns (value, next_pos); raises on truncation or >10 bytes."""
+    """Returns (value, next_pos); raises ``ValueError`` on truncation, on
+    more than 10 bytes, or on a value past 64 bits."""
     result = 0
     shift = 0
-    start = pos
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        if pos - start >= 10:
-            raise ValueError("varint longer than 10 bytes")
+    end = min(len(buf), pos + 10)
+    while pos < end:
         b = buf[pos]
         pos += 1
         result |= (b & 0x7F) << shift
         if not b & 0x80:
+            if result >> 64:
+                raise ValueError("varint value exceeds 64 bits")
             return result, pos
         shift += 7
+    if shift == 70:
+        raise ValueError("varint longer than 10 bytes")
+    raise ValueError("truncated varint")
 
 
 def zigzag_encode(n: int) -> int:

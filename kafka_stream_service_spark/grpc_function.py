@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
 
+from .functions.proto_codec import decode_varint, encode_varint
+
 GRPC_METHOD = "/function.MessageFunction/Call"
 
 # proto3 wire types
@@ -35,34 +37,6 @@ _WIRE_VARINT = 0
 _WIRE_I64 = 1
 _WIRE_LEN = 2
 _WIRE_I32 = 5
-
-
-def _write_varint(out: bytearray, value: int) -> None:
-    while True:
-        b = value & 0x7F
-        value >>= 7
-        if value:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        try:
-            b = data[pos]
-        except IndexError:
-            raise ValueError("truncated protobuf varint") from None
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            return result, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint too long")
 
 
 # Every field of ``Message`` is length-delimited, so each one starts with
@@ -77,9 +51,7 @@ def _len_prefix(prefixes: list[bytes], n: int) -> bytes:
     """Tag and length of a field of ``n`` bytes, for the tag of ``prefixes``."""
     if n < 128:
         return prefixes[n]
-    out = bytearray(prefixes[0][:1])  # the tag byte
-    _write_varint(out, n)
-    return bytes(out)
+    return prefixes[0][:1] + encode_varint(n)  # the tag byte, then the length
 
 
 def pb_encode_message(headers: dict[str, list[str]] | None, payload: bytes | None) -> bytes:
@@ -113,12 +85,12 @@ def pb_encode_message(headers: dict[str, list[str]] | None, payload: bytes | Non
 
 def _skip_field(data: bytes, pos: int, wire_type: int) -> int:
     if wire_type == _WIRE_VARINT:
-        _, pos = _read_varint(data, pos)
+        _, pos = decode_varint(data, pos)
         return pos
     if wire_type == _WIRE_I64:
         return pos + 8
     if wire_type == _WIRE_LEN:
-        n, pos = _read_varint(data, pos)
+        n, pos = decode_varint(data, pos)
         return pos + n
     if wire_type == _WIRE_I32:
         return pos + 4
@@ -137,12 +109,12 @@ def _next_len_field(data: bytes, pos: int, end: int) -> tuple[int, int, int]:
             stop = start + data[pos + 1]
             field_no = tag >> 3
         else:
-            tag, pos = _read_varint(data, pos)
+            tag, pos = decode_varint(data, pos)
             field_no, wire_type = tag >> 3, tag & 7
             if wire_type != _WIRE_LEN or field_no not in (1, 2):
                 pos = _skip_field(data, pos, wire_type)
                 continue
-            n, start = _read_varint(data, pos)
+            n, start = decode_varint(data, pos)
             stop = start + n
         if stop > end:
             raise ValueError(

@@ -207,8 +207,8 @@ def q_snapshot_gc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at sf0.1 (measured r14) and the In() skips almost nothing — the K=8
 # regression the r13 judge flagged, re-created at any k. At 1% it
 # touches 0.18k–0.30k, so the certified row actually runs in the
-# file-skipping regime the design is for. The probe
-# (tools/probe_round12.py) sweeps other slice sizes parametrically.
+# file-skipping regime the design is for. SCALE.md's Round-13 prune
+# series (measured at commit a2a2f1e) swept other slice sizes.
 IVF_DELTA_MOD = 100
 IVF_DELTA_REM = 7
 
@@ -246,63 +246,44 @@ def ivf_catalog_k(sf_dir: str) -> int:
     return max(8, math.isqrt(n))
 
 
-def ivf_base_index_path(
-    sf_dir: str,
-    k: int | None = None,
-    delta_mod: int = IVF_DELTA_MOD,
-    delta_rem: int = IVF_DELTA_REM,
-) -> str:
+def ivf_base_index_path(sf_dir: str) -> str:
     import os
 
     from ._util import snapshot_dir, table_fingerprint
 
     # One uniform token scheme (r3: delta-proportional catalog k +
     # 1% arrival slice; supersedes r1 probe variants and the fixed-K r2
-    # catalog token). Every parameter is IN the name, so the catalog
-    # artifact and probe-built variants (other k / other arrival
-    # slices) can never collide; superseded tokens are swept on build.
-    if k is None:
-        k = ivf_catalog_k(sf_dir)
+    # catalog token). k and the arrival slice are IN the name, so an
+    # artifact built under other values can never be served; superseded
+    # tokens are swept on build.
     return os.path.join(
         snapshot_dir("ivf_base", sf_dir),
-        f"r3k{k}d{delta_mod}r{delta_rem}_{table_fingerprint(sf_dir, 'embeddings')}",
+        f"r3k{ivf_catalog_k(sf_dir)}d{IVF_DELTA_MOD}r{IVF_DELTA_REM}_"
+        f"{table_fingerprint(sf_dir, 'embeddings')}",
     )
 
 
-def build_ivf_base_index(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int | None = None,
-    delta_mod: int = IVF_DELTA_MOD,
-    delta_rem: int = IVF_DELTA_REM,
-) -> str:
+def build_ivf_base_index(spark: SparkSession, sf_dir: str) -> str:
     """Persist the BASE IVF index: ``members`` = (vec_id, centroid_id,
-    dist2, nrm) for every vector EXCLUDING the delta slice (vec_id %
-    delta_mod == delta_rem; defaults to the IVF arrival convention —
-    1% per refresh, see IVF_DELTA_MOD), range-partitioned AND sorted by
-    centroid_id so
-    a touched-list read skips whole files and row groups via parquet
-    min/max zone maps, plus ``centroids`` = the k frozen seed centroids
-    (cid, cqv) — stored IN the artifact so a refresh assigns against the
-    index's own centroids, never re-deriving them from the (possibly
-    moved) corpus. Published atomically (temp parent + _SUCCESS + one
-    os.rename), the round11n multi-part artifact contract.
-
-    ``k=None`` (the catalog default) sizes the list count from the
-    corpus: ivf_catalog_k = max(8, isqrt(N)); SCALE.md's prune
-    demonstration builds other variants (k up to hundreds of lists,
-    other arrival slices) under their own revision tokens.
+    dist2, nrm) for every vector EXCLUDING the delta slice (the IVF
+    arrival convention, 1% per refresh, see IVF_DELTA_MOD),
+    range-partitioned AND sorted by centroid_id so a touched-list read
+    skips whole files and row groups via parquet min/max zone maps,
+    plus ``centroids`` = the k frozen seed centroids (cid, cqv) — stored
+    IN the artifact so a refresh assigns against the index's own
+    centroids, never re-deriving them from the (possibly moved) corpus. Published atomically (temp parent + _SUCCESS + one
+    os.rename), the round11n multi-part artifact contract. The list
+    count is sized from the corpus: ivf_catalog_k = max(8, isqrt(N)).
     """
     import os
     import shutil
 
-    if k is None:
-        k = ivf_catalog_k(sf_dir)
+    k = ivf_catalog_k(sf_dir)
     e = _quantized(tables(spark, sf_dir)["embeddings"])
     cent = e.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cid"), F.col("qv").alias("cqv")
     )
-    base = e.filter((F.col("vec_id") % delta_mod) != delta_rem)
+    base = e.filter((F.col("vec_id") % IVF_DELTA_MOD) != IVF_DELTA_REM)
     diff2 = F.aggregate(
         F.zip_with(
             F.col("qv"),
@@ -329,7 +310,7 @@ def build_ivf_base_index(
         F.expr(f"key DIV {k}").cast("bigint").alias("dist2"),
         nrm.alias("nrm"),
     )
-    out = ivf_base_index_path(sf_dir, k, delta_mod, delta_rem)
+    out = ivf_base_index_path(sf_dir)
     tmp = f"{out}.tmp.{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     # Range-partition on centroid_id BEFORE the within-partition sort:
@@ -388,21 +369,15 @@ def _sweep_superseded_ivf_revisions(sf_dir: str, keep: set[str]) -> list[str]:
     return swept
 
 
-def ivf_base_index(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int | None = None,
-    delta_mod: int = IVF_DELTA_MOD,
-    delta_rem: int = IVF_DELTA_REM,
-) -> dict[str, DataFrame]:
+def ivf_base_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Stored base IVF index for the refresh probe: {members, centroids}
     frames reading the persisted artifact, building once if absent
     (self-healing, same contract as the other index artifacts)."""
     import os
 
-    out = ivf_base_index_path(sf_dir, k, delta_mod, delta_rem)
+    out = ivf_base_index_path(sf_dir)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        build_ivf_base_index(spark, sf_dir, k, delta_mod, delta_rem)
+        build_ivf_base_index(spark, sf_dir)
     return {
         "members": spark.read.parquet(os.path.join(out, "members")),
         "centroids": spark.read.parquet(os.path.join(out, "centroids")),
@@ -500,24 +475,15 @@ def q_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(delta x k + touched-list occupancy), decoupled from index size —
     the q_text_index_delta contract lifted to embedding space.
     SCALE.md's r13 probe demonstrates the prune parametrically across
-    k and slice sizes (tools/probe_round12.py).
+    k and slice sizes (measured at commit a2a2f1e).
     """
     return ivf_refresh_census(spark, sf_dir)
 
 
-def ivf_refresh_census(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int | None = None,
-    delta_mod: int = IVF_DELTA_MOD,
-    delta_rem: int = IVF_DELTA_REM,
-) -> DataFrame:
-    """Parametric body of q_knn_ivf_refresh (the catalog query pins the
-    defaults; the SCALE.md probe passes other k values and arrival
-    slices to demonstrate the zone-map prune parametrically)."""
-    if k is None:
-        k = ivf_catalog_k(sf_dir)
-    idx = ivf_base_index(spark, sf_dir, k, delta_mod, delta_rem)
+def ivf_refresh_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Body of q_knn_ivf_refresh."""
+    k = ivf_catalog_k(sf_dir)
+    idx = ivf_base_index(spark, sf_dir)
     # The k stored centroids collapse into ONE broadcast array row, so
     # assignment is a map-side argmin over the delta — zero shuffles on
     # the arrival slice (the seam test pins the census job at <= 2 keyed
@@ -528,7 +494,7 @@ def ivf_refresh_census(
     )
     delta = _quantized(
         tables(spark, sf_dir)["embeddings"].filter(
-            (F.col("vec_id") % delta_mod) == delta_rem
+            (F.col("vec_id") % IVF_DELTA_MOD) == IVF_DELTA_REM
         )
     )
 

@@ -22,3 +22,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def catalog_sweep(spark):
+    """Every catalog row built once at sf0.001 (see catalog_plans.py)."""
+    from catalog_plans import build_rows
+
+    from kafka_stream_service_spark.queries.registry import QUERIES
+
+    return build_rows(spark, QUERIES, SF_SMOKE)

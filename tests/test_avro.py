@@ -66,6 +66,25 @@ def test_golden_zigzag_longs():
         assert decode_record(sch, b) == {"n": n}
 
 
+_LONG = json.dumps(
+    {"type": "record", "name": "r", "fields": [{"name": "n", "type": "long"}]}
+)
+
+
+def test_long_past_int64_raises():
+    for n in (-(2**63), 2**63 - 1):
+        assert decode_record(_LONG, encode_record(_LONG, {"n": n})) == {"n": n}
+    # 13 bytes, and 10 bytes whose last group carries bits past 2**64
+    for wire in (b"\xff" * 12 + b"\x01", b"\xff" * 9 + b"\x7f"):
+        with pytest.raises(ValueError):
+            decode_record(_LONG, wire)
+
+
+def test_truncated_long_raises_value_error():
+    with pytest.raises(ValueError, match="truncated"):
+        decode_record(_LONG, b"\x80")
+
+
 def test_full_type_roundtrip_with_nulls():
     rec = {
         "id": -(2**62),

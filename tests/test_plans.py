@@ -7,6 +7,7 @@ product, and (d) keep whole-stage codegen on the relational spine.
 
 from __future__ import annotations
 
+import catalog_plans
 import pytest
 
 from kafka_stream_service_spark.plans import (
@@ -80,7 +81,7 @@ def test_column_pruning_reaches_scan(spark):
     ), scan_lines
 
 
-def test_no_cartesian_anywhere_in_catalog(spark):
+def test_no_cartesian_anywhere_in_catalog(catalog_sweep):
     """No catalog query may plan a cartesian product (the explicit
     crossJoin of the two 5/25-row dims is the one sanctioned exception —
     it plans as BroadcastNestedLoopJoin, not CartesianProduct).
@@ -88,25 +89,22 @@ def test_no_cartesian_anywhere_in_catalog(spark):
     A query whose plan fails to BUILD is itself a failure (VERDICT r12
     next-steps #2): the old ``except Exception: continue`` let a broken
     query silently escape this gate. Every catalog query plans cleanly
-    at sf0.001 today, so the allowlist is empty — add a name here only
-    with a stated reason."""
-    plan_build_allowlist: dict[str, str] = {}
-    bad = []
-    broken = {}
-    for name, spec in QUERIES.items():
-        try:
-            plan = physical_plan(spec.spark_fn(spark, SF))
-        except Exception as exc:  # noqa: BLE001 - collected, asserted below
-            if name not in plan_build_allowlist:
-                broken[name] = f"{type(exc).__name__}: {exc}"[:200]
-            continue
-        if "CartesianProduct" in plan:
-            bad.append(name)
+    at sf0.001 today, so no build failure is allowlisted."""
+    broken = catalog_plans.broken(catalog_sweep)
     assert not broken, (
         "queries whose plan failed to BUILD (these escape every plan "
         f"gate — fix or allowlist with a reason): {broken}"
     )
+    bad = catalog_plans.cartesian(catalog_sweep)
     assert not bad, f"cartesian products in: {bad}"
+
+
+def test_no_complex_output_columns_anywhere_in_catalog(catalog_sweep):
+    """Every catalog row emits atomic columns only: a harness that sorts
+    a result by all its columns cannot hash a list-, map- or
+    struct-valued cell. Serialize such a column (array_join, to_json)."""
+    bad = catalog_plans.complex_outputs(catalog_sweep)
+    assert not bad, f"array/map/struct output columns in: {bad}"
 
 
 @pytest.mark.parametrize(

@@ -38,6 +38,14 @@ def test_varint_roundtrip_and_errors():
         encode_varint(-1)
 
 
+def test_varint_past_64_bits_raises():
+    assert decode_varint(b"\xff" * 9 + b"\x01", 0) == ((1 << 64) - 1, 10)
+    with pytest.raises(ValueError, match="64 bits"):
+        decode_varint(b"\xff" * 9 + b"\x02", 0)
+    with pytest.raises(ValueError, match="10 bytes"):
+        decode_varint(b"\xff" * 10 + b"\x01", 0)
+
+
 def test_zigzag_goldens():
     # spec table: 0->0, -1->1, 1->2, -2->3, 2147483647->4294967294
     assert zigzag_encode(0) == 0

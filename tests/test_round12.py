@@ -193,9 +193,7 @@ def test_ivf_refresh_census_read_is_zone_map_pruned(spark):
 
 
 def test_ivf_refresh_parametric_k_matches_catalog_defaults(spark):
-    """ivf_refresh_census(k=K, default delta) must be exactly the
-    catalog query — the probe's parametric path and the certified path
-    are one implementation."""
+    """ivf_refresh_census must be exactly the registered catalog row."""
     from kafka_stream_service_spark.queries.round12 import ivf_refresh_census
 
     a = sorted(map(tuple, QUERIES["q_knn_ivf_refresh"].spark_fn(spark, SF).collect()))

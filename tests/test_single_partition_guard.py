@@ -11,6 +11,7 @@ of SinglePartition.
 
 from __future__ import annotations
 
+import catalog_plans
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -287,66 +288,45 @@ _PY_LANE_ALLOWLIST = {
 }
 
 
-def _sweep_catalog(spark, queries, sf, sp_allowlist, build_allowlist,
-                   py_lane_allowlist=frozenset()):
-    """Build every query's physical plan and classify: plan-build
-    failures (``broken``), data-scale SinglePartition collapses
-    (``bad``), row-at-a-time Python nodes (``row_python``), and Python
-    lanes running at raw file-scan width (``narrow_python`` — the r14
-    q_codec_dlq_split finding generalized: one small fixture file means
-    ONE task under every Arrow crossing unless the input is fanned).
-    Shared by the catalog gate and the red-path proof below."""
-    bad = {}
-    row_python = []
-    narrow_python = {}
-    broken = {}
-    for name, spec in queries.items():
-        try:
-            plan = physical_plan(spec.spark_fn(spark, sf))
-        except Exception as exc:  # noqa: BLE001 - collected, asserted by callers
-            if name not in build_allowlist:
-                broken[name] = f"{type(exc).__name__}: {exc}"[:200]
-            continue
-        if "BatchEvalPython" in plan and "ArrowEvalPython" not in plan:
-            row_python.append(name)
-        if name not in py_lane_allowlist:
-            narrow = python_lane_offenders(plan)
-            if narrow:
-                narrow_python[name] = narrow
-        if name in sp_allowlist:
-            continue
-        off = single_partition_offenders(plan)
-        if off:
-            bad[name] = off
-    return broken, bad, row_python, narrow_python
-
-
-def test_sweep_goes_red_on_plan_build_failure(spark):
+def test_sweep_goes_red_on_plan_build_failure(spark, sf_dir):
     """Red-path proof (VERDICT r12 next-steps #2): a query whose
-    spark_fn raises at plan time must surface in ``broken`` — the old
-    ``except Exception: continue`` made exactly this invisible."""
+    spark_fn raises at plan time must surface as ``broken`` — the old
+    ``except Exception: continue`` made exactly this invisible. The same
+    sweep must flag a row that plans a cartesian product and a row that
+    outputs an array column."""
 
     class _BrokenSpec:
         @staticmethod
         def spark_fn(spark, sf):
             raise RuntimeError("deliberately broken for the red-path proof")
 
-    broken, _, _, _ = _sweep_catalog(
-        spark, {"q_deliberately_broken": _BrokenSpec}, "/root/testdata/sf0.001",
-        sp_allowlist=frozenset(), build_allowlist={},
+    class _CartesianSpec:
+        @staticmethod
+        def spark_fn(spark, sf):
+            return spark.range(3).hint("shuffle_replicate_nl").crossJoin(
+                spark.range(3).withColumnRenamed("id", "j"))
+
+    class _ArraySpec:
+        @staticmethod
+        def spark_fn(spark, sf):
+            return spark.range(3).select(F.array("id", "id").alias("pair"))
+
+    sweep = catalog_plans.build_rows(
+        spark,
+        {"q_deliberately_broken": _BrokenSpec, "q_cartesian": _CartesianSpec,
+         "q_array_out": _ArraySpec},
+        sf_dir,
     )
-    assert "q_deliberately_broken" in broken
+    broken = catalog_plans.broken(sweep)
+    assert list(broken) == ["q_deliberately_broken"]
     assert "RuntimeError" in broken["q_deliberately_broken"]
     # and an allowlisted failure is NOT red (the escape hatch works)
-    broken2, _, _, _ = _sweep_catalog(
-        spark, {"q_deliberately_broken": _BrokenSpec}, "/root/testdata/sf0.001",
-        sp_allowlist=frozenset(),
-        build_allowlist={"q_deliberately_broken": "red-path proof"},
-    )
-    assert not broken2
+    assert not catalog_plans.broken(sweep, {"q_deliberately_broken": "red-path proof"})
+    assert catalog_plans.cartesian(sweep) == ["q_cartesian"]
+    assert catalog_plans.complex_outputs(sweep) == {"q_array_out": ["pair"]}
 
 
-def test_no_data_scale_single_partition_anywhere_in_catalog(spark):
+def test_no_data_scale_single_partition_anywhere_in_catalog(catalog_sweep):
     """Catalog-wide sweep (the ADVICE r11 companion made a gate, like
     test_no_cartesian_anywhere_in_catalog): no query may serialize an
     unbounded subtree onto one partition, and — same pass, since plans
@@ -358,33 +338,27 @@ def test_no_data_scale_single_partition_anywhere_in_catalog(spark):
     operators/ranks.py's distributed two-phase ranks; the allowlist
     holds only designs the WALKER cannot see are bounded, each with
     its bound stated above."""
-    from kafka_stream_service_spark.queries.registry import QUERIES
-
-    SF = "/root/testdata/sf0.001"
     # A query that fails to PLAN escapes the cartesian gate, this
     # SinglePartition gate, and the row-Python lint in one breath
     # (VERDICT r12 next-steps #2) — collect and assert, never skip.
     # Empty today: all 454 queries plan cleanly at sf0.001.
-    plan_build_allowlist: dict[str, str] = {}
-    broken, bad, row_python, narrow_python = _sweep_catalog(
-        spark, QUERIES, SF,
-        sp_allowlist=_CATALOG_ALLOWLIST,
-        build_allowlist=plan_build_allowlist,
-        py_lane_allowlist=_PY_LANE_ALLOWLIST,
-    )
+    broken = catalog_plans.broken(catalog_sweep)
     assert not broken, (
         "queries whose plan failed to BUILD (these escape the cartesian, "
         "SinglePartition, AND row-Python gates simultaneously — fix or "
         f"allowlist with a reason): {broken}"
     )
+    bad = catalog_plans.single_partition(catalog_sweep, _CATALOG_ALLOWLIST)
     assert not bad, (
         "data-scale SinglePartition collapse in: "
         f"{bad} — migrate to operators/ranks.py or justify in the allowlist"
     )
+    row_python = catalog_plans.row_python(catalog_sweep)
     assert not row_python, (
         f"row-at-a-time Python (BatchEvalPython) in: {row_python} — use a "
         "pandas UDF / Arrow-optimized UDTF (useArrow=True)"
     )
+    narrow_python = catalog_plans.narrow_python(catalog_sweep, _PY_LANE_ALLOWLIST)
     assert not narrow_python, (
         "Python-eval node fed straight from a file scan (one task on the "
         f"single-file fixtures — the r14 13s-row shape) in: {narrow_python} "

@@ -271,3 +271,71 @@ def test_tests_leave_runner_conf_to_the_runner():
         "of the shared session — pass them to run_replay, which scopes "
         f"and restores them: {hits}"
     )
+
+
+# One scale-probe tool: tools/scale_probe.py is the only writer of shard
+# copies. The patterns are per-copy SELECTs glued into one scan with a
+# UNION ALL join, a SQL key shift by a copy index in an f-string, and a
+# frame key shift by a multiple of KEY_OFFSET.
+_SHARD_BUILDER = REPO / "tools" / "scale_probe.py"
+_SHARD_COPY = re.compile(
+    r"UNION ALL\s*['\"]\s*\.join\("
+    r"|\b\w+ \+ \{\w+\} \* \d"
+    r"|\*\s*(?:\w+\.)?KEY_OFFSET\b"
+)
+
+
+def test_only_the_scale_probe_writes_shard_copies():
+    hits = []
+    for path in sorted([*(REPO / "tools").glob("*.py"), *(REPO / "tests").glob("*.py")]):
+        if path == _SHARD_BUILDER:
+            continue
+        text = path.read_text()
+        for m in _SHARD_COPY.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            hits.append(f"{path.relative_to(REPO)}:{line}")
+    assert not hits, (
+        "shard copies written outside tools/scale_probe.py — build the "
+        f"shards with it and time them with tools/ab_runner.py: {hits}"
+    )
+
+
+def _calls_spark_fn(nodes) -> bool:
+    return any(
+        isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "spark_fn"
+        for node in nodes for n in ast.walk(node)
+    )
+
+
+def _catalog_build_loops(path: Path) -> set[tuple[str, str]]:
+    """Functions that loop over ``QUERIES`` (or over a mapping passed in
+    as a parameter) and build a row's frame in the loop's body, as (file
+    name, function name). A loop over a few named rows does not count."""
+    found = set()
+    for fn in ast.walk(ast.parse(path.read_text())):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        catalogs = {"QUERIES"} | {a.arg for a in (*fn.args.args, *fn.args.kwonlyargs)}
+        for node in ast.walk(fn):
+            if isinstance(node, ast.For):
+                iters, body = [node.iter], node.body
+            elif isinstance(node, (ast.ListComp, ast.SetComp, ast.GeneratorExp, ast.DictComp)):
+                iters = [g.iter for g in node.generators]
+                body = [c for c in ast.iter_child_nodes(node)
+                        if not isinstance(c, ast.comprehension)]
+            else:
+                continue
+            names = {n.id for it in iters for n in ast.walk(it) if isinstance(n, ast.Name)}
+            if names & catalogs and _calls_spark_fn(body):
+                found.add((path.name, fn.name))
+    return found
+
+
+def test_one_test_helper_builds_the_catalog():
+    found = set().union(*(_catalog_build_loops(p) for p in sorted((REPO / "tests").glob("*.py"))))
+    assert found == {("catalog_plans.py", "build_rows")}, (
+        "build catalog rows in a loop only in tests/catalog_plans.py:build_rows, "
+        f"and read its session-wide sweep (the catalog_sweep fixture): {sorted(found)}"
+    )

@@ -3,9 +3,12 @@
 Runs the catalog rows named in a JSON list against the code in a given
 tree, with bench.py's exact methodology — one flagship warmup, 3 timed
 passes in fixed order, GC reclaim every 12 queries, per-row MEDIAN — and
-appends one JSON line {"worktree": tree, "medians": {row: s}} to the
-output file. Run legs for the two trees alternately (ABAB...) so host
-drift averages out of the comparison instead of landing on one side.
+appends one JSON line {"worktree": tree, "sf_dir": data, "medians":
+{row: s}} to the output file. The data directory defaults to the sf0.1
+fixtures; a shard written by ``tools/scale_probe.py`` times the same
+rows at a multiple of that data. Run legs for the two trees alternately
+(ABAB...) so host drift averages out of the comparison instead of
+landing on one side.
 The tree also goes first on the ``PYTHONPATH`` the Spark JVM hands its
 Python workers, so UDFs import the package from the tree under test, not
 from the working directory:
@@ -15,7 +18,7 @@ from the working directory:
         python tools/ab_runner.py <change_tree> rows.json change.jsonl
     done
 
-Usage: python tools/ab_runner.py <worktree> <names.json> <out.jsonl>
+Usage: python tools/ab_runner.py <worktree> <names.json> <out.jsonl> [<data_dir>]
 """
 
 from __future__ import annotations
@@ -37,8 +40,10 @@ def main() -> None:
 
     from kafka_stream_service_spark.queries import QUERIES
     from kafka_stream_service_spark.session import get_spark
+    from kafka_stream_service_spark.tables import DEFAULT_SF_DIR
 
-    sf_dir = "/root/testdata/sf0.1"
+    sf_dir = sys.argv[4] if len(sys.argv) > 4 else os.path.join(
+        os.path.dirname(DEFAULT_SF_DIR), "sf0.1")
     spark = get_spark("ab_leg")
 
     def force(df) -> None:
@@ -67,8 +72,8 @@ def main() -> None:
         reclaim()
     medians = {n: sorted(ts)[len(ts) // 2] for n, ts in runs.items()}
     with open(out_path, "a") as f:
-        f.write(json.dumps({"worktree": worktree, "medians": medians}) + "\n")
-    print(f"leg done: {worktree} total={round(sum(medians.values()), 1)}s")
+        f.write(json.dumps({"worktree": worktree, "sf_dir": sf_dir, "medians": medians}) + "\n")
+    print(f"leg done: {worktree} {sf_dir} total={round(sum(medians.values()), 1)}s")
     spark.stop()
 
 

@@ -1,44 +1,61 @@
-"""Synthetic ~sf1 scaling-probe dataset + 8-vs-32-core probe runner
-(VERDICT r15 next-steps #6).
+"""One scale-probe tool: disjoint shard copies of a fixture set.
 
-The driver's 8-vs-32-core panel is uninformative at sf0.1: per-row walls
-are 0.1-4.6 s, dominated by fixed per-query costs, so every ratio ≈ 1.
-There is no driver-provided sf1 fixture (``/root/testdata`` is read-only,
-sf ≤ 0.1), so this tool MANUFACTURES a 10x dataset purely for a SCALE.md
-parallelism measurement — it is never used by bench.py, the oracle
-harness, or any query default, and nothing derived from it is cached or
-reused across runs.
+A time-vs-data slope separates a row's fixed cost per job from its cost
+per record (the D-Streams reading). The fixtures stop at sf0.1, so this
+tool writes ``<out_root>/x{m}`` for each multiple ``m``: ``m`` copies of
+every sf0.1 fact table under one recipe.
 
-Scaling recipe (10 shifted copies, deterministic):
+- Every keyed table's entity keys (``KEYS``) shift by ``i * KEY_OFFSET``
+  for copy ``i``, so joins fan out within a copy (an order's lineitems
+  stay its own) and never across copies.
+- Every ``documents`` token gets the prefix ``c{i}_``, so copies share
+  no token and no shingle. Duplicated text would multiply every
+  shingle's document frequency instead, and the rare-shingle rows would
+  measure a hot bucket, not a larger corpus.
+- Every ``embeddings`` copy flips the sign of each dimension ``d`` by an
+  md5 bit of ``(i, d)``. Within a copy the flips cancel in every dot
+  product, so the copy keeps the base's cosines and its near-duplicate
+  structure; across copies the cosines scatter around 0, so copies add
+  about no near-duplicate pairs. Quantization scales by ``|x|``, so the
+  int8 rows see the base's magnitudes.
+- ``region`` and ``nation`` are shared.
 
-- fact tables (lineitem, orders, customer, supplier, part, events,
-  documents, embeddings): copy i shifts every entity key by
-  i * KEY_OFFSET so joins fan out consistently (an order's lineitems
-  stay attached to it, a user's events stay theirs);
-- ``documents.text``: every token is prefixed with a per-copy tag, so
-  shingles/trigrams are COPY-LOCAL — without this, duplicating text 10x
-  multiplies every shingle's document frequency by 10 and the
-  rare-shingle graph family (DF in 2..4) would collapse to an empty
-  workload instead of a 10x one. With the tag, each copy reproduces the
-  original shingle/graph structure, so the probe runs 10 disjoint copies
-  of the sf0.1 workload — exactly the shape a bigger fixture would have;
-- dimension tables (region, nation) are copied as-is (they are
-  dimension-like at every SF).
+Copy 0 is the base row for row, so ``x1`` is the fixture. ``KEY_OFFSET``
+is a multiple of every arrival-slice modulus the rows use (``key % 10``,
+``% 20`` and ``% 100``), so each copy keeps the base's slice. The copies
+keep the fixtures' column types, so ``tables.load_table`` reads a shard
+with the declared schema, as it reads the fixtures.
 
-Usage:
-  python tools/scale_probe.py build /tmp/sf1probe
-  SPARK_GRAFT_CPUS=32 python tools/scale_probe.py run /tmp/sf1probe \
-      q_label_propagation q_jaccard_prefix_join ... >> /tmp/probe32.jsonl
+Time the shards with the A/B runner, one leg per multiple. Its median of
+three passes drops the first, which also builds any stored index a row
+reads (``sem_index``, ``text_base_index``, ``ivf_base_index`` build
+themselves when absent), so the median is the steady-state refresh:
+
+    python tools/scale_probe.py build /tmp/shards 1 4 16
+    for m in 1 4 16; do
+        python tools/ab_runner.py . rows.json scale.jsonl /tmp/shards/x$m
+    done
 """
 
 from __future__ import annotations
 
-import json
+import hashlib
+import os
+import shutil
 import sys
-import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from kafka_stream_service_spark.schemas import TABLE_NAMES  # noqa: E402
+from kafka_stream_service_spark.tables import DEFAULT_SF_DIR, table_path  # noqa: E402
+
+BASE = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.1")
 KEY_OFFSET = 100_000_000
-COPIES = 10
 KEYS = {
     "customer": ["c_custkey"],
     "supplier": ["s_suppkey"],
@@ -51,69 +68,64 @@ KEYS = {
 }
 
 
-def build(out_dir: str) -> None:
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kafka_stream_service_spark.session import get_spark
-    from kafka_stream_service_spark.tables import tables
-
-    spark = get_spark("scale_probe_build")
-    t = tables(spark, "/root/testdata/sf0.1")
-    os.makedirs(out_dir, exist_ok=True)
-    for name in ("region", "nation"):
-        t[name].write.mode("overwrite").parquet(os.path.join(out_dir, f"{name}.parquet"))
-    for name, keys in KEYS.items():
-        df = t[name]
-        copies = []
-        for i in range(COPIES):
-            c = df
-            for k in keys:
-                c = c.withColumn(k, (F.col(k) + F.lit(i * KEY_OFFSET)).cast("bigint"))
-            if name == "documents":
-                # per-copy token tag => copy-local shingles (see module doc)
-                tag = f"c{i}x"
-                c = c.withColumn(
-                    "text", F.concat(F.lit(tag), F.regexp_replace("text", " ", f" {tag}"))
-                )
-            copies.append(c)
-        out = copies[0]
-        for c in copies[1:]:
-            out = out.unionByName(c)
-        out.repartition(32).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"{name}.parquet")
-        )
-        print(f"built {name}", flush=True)
-    spark.stop()
+def _signs(copy: int, dim: int) -> np.ndarray:
+    """Copy ``copy``'s sign per dimension 1..dim: -1 where the first md5
+    byte of ``"{copy}:{d}"`` is odd."""
+    odd = [int(hashlib.md5(f"{copy}:{d}".encode()).hexdigest()[:2], 16) % 2
+           for d in range(1, dim + 1)]
+    return np.array(odd, dtype=bool)
 
 
-def run(sf_dir: str, names: list[str]) -> None:
-    from kafka_stream_service_spark.queries import QUERIES
-    from kafka_stream_service_spark.session import cpu_count, get_spark
+def _flip(emb: pa.ListArray, copy: int) -> pa.ListArray:
+    values = emb.flatten().to_numpy(zero_copy_only=False)
+    offsets = emb.offsets.to_numpy()
+    # each value's 0-based position inside its own list
+    pos = np.arange(len(values)) - offsets[pc.list_parent_indices(emb).to_numpy()]
+    flip = _signs(copy, int(pos.max()) + 1 if len(pos) else 0)[pos]
+    flipped = pa.array(np.where(flip, -values, values), type=emb.type.value_type)
+    return pa.ListArray.from_arrays(emb.offsets, flipped, type=emb.type, mask=emb.is_null())
 
-    spark = get_spark("scale_probe_run")
 
-    def force(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
+def shard_copy(table: pa.Table, name: str, copy: int) -> pa.Table:
+    """Copy ``copy`` of fact table ``name``; copy 0 is ``table`` itself."""
+    if copy == 0:
+        return table
+    shift = pa.scalar(copy * KEY_OFFSET, pa.int64())
+    for key in KEYS[name]:
+        i = table.schema.get_field_index(key)
+        table = table.set_column(i, table.schema.field(i), pc.add(table[key], shift))
+    if name == "documents":
+        i = table.schema.get_field_index("text")
+        text = pc.replace_substring_regex(table["text"], r"([^ ]+)", rf"c{copy}_\1")
+        table = table.set_column(i, table.schema.field(i), text)
+    if name == "embeddings":
+        i = table.schema.get_field_index("embedding")
+        emb = _flip(table["embedding"].combine_chunks(), copy)
+        table = table.set_column(i, table.schema.field(i), emb)
+    return table
 
-    force(QUERIES["q02_revenue_by_nation"].spark_fn(spark, sf_dir))  # warmup
-    out: dict[str, float] = {}
-    for name in names:
-        ts = []
-        for _ in range(2):
-            t0 = time.time()
-            force(QUERIES[name].spark_fn(spark, sf_dir))
-            ts.append(round(time.time() - t0, 3))
-        out[name] = min(ts)
-    print(json.dumps({"cpus": cpu_count(), "timings": out}))
-    spark.stop()
+
+def build(base: str, out_root: str, multiples: list[int]) -> list[str]:
+    """Write ``<out_root>/x{m}`` for each multiple; returns the shard dirs."""
+    dirs = []
+    for m in multiples:
+        out = os.path.join(out_root, f"x{m}")
+        os.makedirs(out, exist_ok=True)
+        for name in TABLE_NAMES:
+            src, dst = table_path(base, name), table_path(out, name)
+            if name not in KEYS:
+                shutil.copyfile(src, dst)
+                continue
+            table = pq.read_table(src)
+            with pq.ParquetWriter(dst, table.schema) as writer:
+                for copy in range(m):
+                    writer.write_table(shard_copy(table, name, copy))
+        dirs.append(out)
+        print(f"built {out}", flush=True)
+    return dirs
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, ".")
-    mode = sys.argv[1]
-    if mode == "build":
-        build(sys.argv[2])
-    else:
-        run(sys.argv[2], sys.argv[3:])
+    if len(sys.argv) < 4 or sys.argv[1] != "build":
+        sys.exit("usage: python tools/scale_probe.py build <out_root> <multiple>...")
+    build(BASE, sys.argv[2], [int(m) for m in sys.argv[3:]])
