@@ -1,9 +1,4 @@
 from .inspect import (  # noqa: F401
-    assert_broadcast_join,
-    assert_no_cartesian,
-    assert_no_data_scale_single_partition,
-    assert_no_narrow_python_lane,
-    assert_pushed_filters,
     count_shuffle_exchanges,
     physical_plan,
     python_lane_offenders,

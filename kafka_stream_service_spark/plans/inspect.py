@@ -1,9 +1,12 @@
 """Physical-plan inspection helpers.
 
 Scale-readiness is checked in CI, not hoped for: the tests assert that
-dimension joins broadcast, filters reach the parquet scan, and nothing
-degenerates into a cartesian product. ``.explain`` output is the contract
-— these helpers make it assertable.
+dimension joins broadcast, filters reach the parquet scan, shuffle
+budgets hold, and nothing degenerates into a cartesian product or a
+single-partition collapse. ``.explain`` output is the contract. These
+helpers read plan TEXT: the test session builds every catalog row once
+(``tests/catalog_plans.py``) and every plan check reads that text, so
+no check plans a row a second time.
 """
 
 from __future__ import annotations
@@ -20,29 +23,6 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     with redirect_stdout(buf):
         df.explain(mode=mode)
     return buf.getvalue()
-
-
-def assert_broadcast_join(df: DataFrame, at_least: int = 1) -> str:
-    plan = physical_plan(df)
-    n = plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin")
-    assert n >= at_least, f"expected >= {at_least} broadcast joins, found {n}:\n{plan}"
-    return plan
-
-
-def assert_pushed_filters(df: DataFrame, fragment: str) -> str:
-    """Assert a predicate fragment appears in the scan's PushedFilters."""
-    plan = physical_plan(df)
-    pushed = [line for line in plan.splitlines() if "PushedFilters" in line]
-    assert any(fragment in line for line in pushed), (
-        f"filter {fragment!r} not pushed to scan. PushedFilters lines: {pushed}"
-    )
-    return plan
-
-
-def assert_no_cartesian(df: DataFrame) -> str:
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan, f"cartesian product in plan:\n{plan}"
-    return plan
 
 
 _KEYED_SHUFFLE = re.compile(r"Arguments: (?:hash|range)partitioning\(")
@@ -178,9 +158,9 @@ def single_partition_offenders(plan: str) -> list[str]:
     ``count_shuffle_exchanges`` deliberately ignores SinglePartition
     exchanges, so a budget alone would count such a plan as zero
     shuffles — exactly the scalability failure budgets exist to catch
-    (ADVICE r11). This companion makes the gap assertable:
-    :func:`assert_no_data_scale_single_partition` and the catalog-wide
-    sweep in tests/test_single_partition_guard.py.
+    (ADVICE r11). This companion makes the gap assertable: the
+    catalog-wide gate in tests/test_single_partition_guard.py reads it
+    off every row's plan.
 
     Works on FORMATTED plans: finds each ``Exchange (N)`` tree line
     whose detail section says ``Arguments: SinglePartition``, then walks
@@ -380,23 +360,3 @@ def python_lane_offenders(plan: str) -> list[str]:
             offenders.append(f"{root} <- {narrow_leaf}")
     return offenders
 
-
-def assert_no_narrow_python_lane(df: DataFrame) -> str:
-    plan = physical_plan(df)
-    bad = python_lane_offenders(plan)
-    assert not bad, (
-        f"Python-eval node(s) fed straight from a file scan {bad} — the Arrow "
-        f"lane runs at file-split width (one task on small fixtures); fan the "
-        f"input with operators.ranks.cpu_fanout:\n{plan}"
-    )
-    return plan
-
-
-def assert_no_data_scale_single_partition(df: DataFrame) -> str:
-    plan = physical_plan(df)
-    bad = single_partition_offenders(plan)
-    assert not bad, (
-        f"SinglePartition exchange fed by non-aggregated operator(s) {bad} — "
-        f"a data-scale subtree is collapsing onto one partition:\n{plan}"
-    )
-    return plan

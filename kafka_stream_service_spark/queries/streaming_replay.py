@@ -101,6 +101,15 @@ def _literal_rows(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
     return out
 
 
+def _join_sentinels(spark: SparkSession, maxts, schema) -> DataFrame:
+    """The stream-stream outer joins' sentinel chunk: one purchase (user
+    -1, event -1) and one click (user -2, event -2) at the global max
+    ts. They advance both per-stream watermarks and match nothing."""
+    return _literal_rows(
+        spark, [(-1, maxts, -1, "purchase"), (-2, maxts, -2, "click")], schema
+    )
+
+
 def _write_chunks(df_chunks: list[DataFrame], base: str) -> str:
     """One parquet file per chunk with ascending mod-times so the file
     stream (maxFilesPerTrigger=1) replays chunk i as micro-batch i.
@@ -611,13 +620,6 @@ def q_stream_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     half, maxts = stats.m, stats.mx
     base = work_dir("ssouter", sf_dir)
 
-    def sentinels(purchase_id: int, click_id: int) -> DataFrame:
-        return _literal_rows(
-            spark,
-            [(purchase_id, maxts, -1, "purchase"), (click_id, maxts, -2, "click")],
-            ev.schema,
-        )
-
     flat = _write_chunks(
         [
             ev.filter(F.col("ts") <= F.lit(half)),
@@ -627,7 +629,7 @@ def q_stream_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             # that watermark for the final eviction/emission — a second
             # sentinel batch added a full stateful-join round for zero
             # output change (A/B-verified identical fingerprints, r8)
-            sentinels(-1, -2),
+            _join_sentinels(spark, maxts, ev.schema),
         ],
         base,
     )
@@ -1086,13 +1088,6 @@ def q_stream_full_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFra
     half, maxts = stats.m, stats.mx
     base = work_dir("ssfull", sf_dir)
 
-    def sentinels(purchase_id: int, click_id: int) -> DataFrame:
-        return _literal_rows(
-            spark,
-            [(purchase_id, maxts, -1, "purchase"), (click_id, maxts, -2, "click")],
-            ev.schema,
-        )
-
     flat = _write_chunks(
         [
             ev.filter(F.col("ts") <= F.lit(half)),
@@ -1102,7 +1097,7 @@ def q_stream_full_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFra
             # that watermark for the final eviction/emission — a second
             # sentinel batch added a full stateful-join round for zero
             # output change (A/B-verified identical fingerprints, r8)
-            sentinels(-1, -2),
+            _join_sentinels(spark, maxts, ev.schema),
         ],
         base,
     )

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries._util import dec, dsum
+from .ops import _event_time
 
 
 def continuous_aggregate(
@@ -46,10 +47,9 @@ def continuous_aggregate(
     The materialization at ``path`` is partitioned by
     ``(ws_epoch, *keys)`` and carries ``n_events`` / ``sum_value``.
     """
-    if dict(events.dtypes).get(ts_col) == "timestamp_ntz":
-        events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     agg = (
-        events.withWatermark(ts_col, watermark)
+        _event_time(events, ts_col)
+        .withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, window_size), *keys)
         .agg(F.count(F.lit(1)).alias("n_events"), dsum(dec("value"), "sum_value"))
         .select(

@@ -5,16 +5,20 @@ replay row runs its streaming query while it builds), so the session
 builds each row once (``conftest.catalog_sweep``) and every gate reads
 the record: the physical plan and output schema, or the build error.
 A row that fails to build escapes every plan gate at once, so each gate
-asserts that none did.
+asserts that none did. Per-row plan checks read the same record
+(``catalog_sweep[name].plan``): no test plans a registered row again
+just to read its plan.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 from kafka_stream_service_spark.plans import (
+    count_shuffle_exchanges,
     physical_plan,
     python_lane_offenders,
     single_partition_offenders,
@@ -86,3 +90,172 @@ def narrow_python(sweep, allowlist=frozenset()) -> dict[str, list[str]]:
         if off:
             bad[name] = off
     return bad
+
+
+def broadcast_joins(plan: str) -> int:
+    """Broadcast join nodes in a formatted plan, counted by their detail
+    headers: a count of the name would see each node twice (tree line
+    and header), so ``>= 2`` would pass on one join."""
+    return len(re.findall(r"^\(\d+\) Broadcast(?:HashJoin|NestedLoopJoin)\b", plan, re.M))
+
+
+# SCALE.md's shuffle inventory: the most keyed (hash or range) exchanges
+# each row's plan may hold at sf0.001. A budget is a cap, not a count.
+# A static plan repeats a shared rollup once per consumer (AQE reuses
+# the exchange at run time), so some budgets count one rollup twice.
+# Plans behind an eager localCheckpoint show only the post-checkpoint
+# stage. Stored-index rows whose budget needs the artifact built first
+# keep their own test (q_text_index_delta, q_bm25_after_refresh,
+# q_knn_ivf_refresh).
+SHUFFLE_BUDGETS: dict[str, int] = {
+    # relational and training-data pipelines
+    "q_asof_join": 1,  # union-tag composition: ONE shuffle on the key
+    "q_training_corpus_pipeline": 2,  # dedup window + final groupBy
+    "q_dedup_embedding_cosine": 2,  # block key + dup-id groupBy
+    "q_pack_sequences": 1,  # ONE shuffle: the per-source window
+    "q_corpus_mixture": 3,  # source counts + global sum + final groupBy
+    "q_stratified_sample": 1,  # ONE shuffle: the per-lang rank
+    "q_hash_sample": 0,  # deterministic sampler: scan + md5-prefix filter
+    "q_logreg_score_text": 0,  # batch inference is a pure map
+    "q_chunk_documents": 0,  # pure map-side: tokenize/enumerate/slice
+    "q_zorder_cells": 1,  # ONE shuffle: the z-cell groupBy
+    "q_kmeans_assign_int8": 1,  # centroids broadcast; one vec_id groupBy
+    "q_upsert_merge": 2,  # the merge full-outer join (+AQE reads)
+    "q_rolling_anomaly": 1,  # ONE shuffle: the per-user window
+    "q_ewma_smoothing": 1,  # ONE shuffle: the per-user window
+    # sketches, hashing and corpus operators
+    "q_countmin_heavy_hitters_portable": 4,  # vocab + (j,bucket) cells + TakeOrdered candidates + estimate; probes broadcast
+    "q_hll_registers_portable": 3,  # vocab distinct + register groupBy
+    "q_feature_hashing": 2,  # (doc,tok) count + (doc,dim) combine
+    "q_interval_sweepline": 3,  # per-day delta fold + the bounded day-grain running-sum window
+    "q_pq_encode_portable": 2,  # (vec,m) min-agg + vec_id regroup
+    "q_dedup_keep_best": 2,  # prefix-key window + regroup
+    "q_source_quota": 2,  # source window + regroup
+    "q_event_paths_topk": 3,  # user window + path count + TakeOrdered
+    "q_token_budget_allocation": 4,  # source agg + two scalar folds
+    "q_rank_normalize_embeddings": 3,  # pos windows + vec regroup
+    # r14: each median is a ranked-HISTOGRAM pass (map-combined (type,
+    # value) agg + window by type); the med subplan's 2 exchanges repeat
+    # inside the dev branch's two consumers until AQE reuses them, and
+    # every exchange moves the domain-bounded histogram, never the corpus
+    "q_mad_outliers": 7,
+    "q_mom_growth": 3,  # month agg + series window
+    "q_attribution_last_touch": 3,  # user window + channel agg
+    "q_eval_auc_pr": 5,  # score agg + series windows + 1-row folds
+    "q_bigram_lm_score": 5,  # bigram/unigram counts + doc tf + regroup
+    "q_group_kfold": 2,  # map-side hash + one agg
+    # statistical tests and estimators on rollups
+    "q_kaplan_meier": 5,  # t_days rollup + risk-set folds on the duration grain
+    "q_cusum_changepoint": 5,  # month rollup, repeated per consumer (runtime-reused)
+    "q_isotonic_calibration": 6,  # bin rollups for the pooled-violator passes
+    "q_cuped_adjustment": 5,  # user pre/post rollups + arm grain
+    "q_kendall_tau": 6,  # day rollup + bounded pair frame (behind a checkpoint)
+    "q_anova_oneway": 4,  # event_type rollup + scalar grand-mean folds
+    "q_seasonal_decompose": 6,  # day rollup + bounded trend/season windows (behind a checkpoint)
+    "q_compaction_bin_packing": 4,  # partition rollup + bounded packing window
+    "q_bpe_apply_merges": 3,  # word rollup; merges run on the vocabulary
+    "q_temperature_mixing": 3,  # source counts, repeated per consumer
+    "q_psi_drift": 4,  # bin rollups of the two samples
+    "q_woe_binning": 4,  # bin rollups of the two classes
+    "q_ece_calibration": 4,  # confidence-bin rollups, repeated per consumer
+    "q_decision_tree_score": 3,  # map-side scoring + leaf rollup
+    "q_gopher_quality_rules": 3,  # (doc, stat) rollup + doc grain + source census
+    "q_dsir_importance_weights": 6,  # bucket model rollups + doc grain
+    "q_welch_ttest": 3,  # one scan, map-side moment combine
+    "q_hits_two_iterations": 17,  # two hub/authority rounds on the edge grain
+    "q_permutation_test_hashed": 4,  # perm rollup + observed-statistic fold
+    "q_quantile_normalization": 4,  # per-source ranks + reference by rank
+    "q_ols_normal_equations": 2,  # one scan, one global moment rollup
+    "q_runs_test_daily": 4,  # day rollup + bounded run windows
+    "q_curation_mixture": 10,  # quality census (doc, stat) + source grain, per consumer
+    "q_exact_substr_spans": 5,  # shingle census + semi-join + per-doc islands
+    "q_exact_substr_stats": 8,  # manifest rollup adds one doc-grain join + source rollup
+    "q_weighted_sample_es": 2,  # scan-bound key computation + per-source rank
+    "q_mann_kendall_trend": 8,  # day-grain rollup + bounded pair frame + scalar aggregates
+    "q_logrank_test": 6,  # duration-grain rollup + prefix window + scalar aggregate
+    "q_nelson_aalen": 4,  # duration-grain rollup + prefix window
+    "q_cliffs_delta": 6,  # histogram + distributed prefix scan + bounded aggregate
+    "q_heaps_law_fit": 8,  # token pass + two bounded rollups + 10-point fit
+    "q_matryoshka_energy": 2,  # one scan + 4-way prefix fan-out + label rollup
+    "q_brier_decomposition": 3,  # scoring pass + 10-bin groupBy + broadcast totals
+    # scan + vec_id self-join + dims^2-grain rollups + tiny joins: no
+    # data-scale exchange after the covariance rollup
+    "q_power_iteration_top_eigvec": 10,
+    "q_semdedup_delta_edges": 8,  # delta quantize + stored-centroid assign + per-cluster blocks + CC
+    "q_knn_ivf_stored": 4,  # probe rank window + member fetch + topk window
+    "q_rrf_fusion": 3,  # one scored frame, three windows on it, no re-scan
+    "q_mrr_recall_eval": 3,  # one scored frame, one window, one query-grain rollup
+    "q_rouge2_pair_scores": 11,  # endpoint bigram census + overlap join + totals
+    "q_kneser_ney_bigram": 6,  # bigram/unigram/type rollups + broadcast joins
+    "q_jensen_shannon_sources": 7,  # (source, word) rollup + margins + grid
+    "q_kruskal_wallis": 7,  # value census + group-value rollup + group grain
+    "q_mmr_rerank": 4,  # pool window + grouped-map greedy
+    "q_good_turing_smoothing": 7,  # bigram rollup + count-of-counts + bounded lead window
+    "q_pmi_collocations": 6,  # bigram rollup + the two unigram margins
+    "q_mcnemar_filters": 1,  # one scan, one 4-cell rollup
+    "q_wilcoxon_signed_rank": 8,  # day rollup + self-join + census windows
+    "q_friedman_test": 6,  # (day, type) rollup + block windows + treatment grain
+    "q_jonckheere_terpstra": 3,  # (value x group) census + grid self-join + margins (runtime-reused)
+    "q_page_trend_test": 6,  # (day, day-part) rollup + completeness/rank windows on blk
+    "q_fleiss_kappa": 0,  # one scan, one global rollup: zero keyed shuffles
+    "q_cramers_v": 7,  # lang x source cells + two margins (cell subtree runtime-reused)
+    "q_cramer_von_mises": 3,  # 50-cell value census + bounded cumulative window + scalar folds
+    "q_harrell_c_index": 8,  # census + per-risk suffix windows + day-grain join (runtime-reused)
+    "q_yule_k_lexical": 1,  # explode + ONE word rollup + 1-row fold
+    "q_ams_f2_portable": 4,  # user rollup (runtime-reused for F2 + sketch) + r/group grains
+    "q_ra_link_prediction": 2,  # snapshot-scale adjacency rollup + wedge join
+    "q_l_diversity": 2,  # class rollup + distinct expansion
+    "q_t_closeness": 5,  # class/band rollups + bounded grid windows
+    "q_theils_u": 9,  # joint-cell rollup repeated across H/MI margins (runtime-reused)
+    "q_burrows_delta": 11,  # (source, word) rollup repeated per consumer (runtime-cached)
+    "q_krippendorff_alpha": 0,  # one scan, one global rollup
+    "q_mcc_filters": 0,  # one scan, one 4-cell rollup
+    "q_odds_ratio_ci": 0,  # one scan, one 4-cell rollup
+    "q_pacf_daily": 6,  # day rollup repeated per lag/moment margin (runtime-reused)
+    "q_brown_forsythe": 5,  # (group x value) census + bounded per-group windows
+    "q_granger_lag1": 6,  # day rollup + lag join + moment folds on the 30-row series
+    "q_ljung_box": 10,  # day rollup repeated per lag/g0/moment margin (runtime-reused)
+    "q_page_hinkley": 1,  # ONE day rollup; all windows on the 31-row series
+    "q_dunns_test": 10,  # value census repeated per rank/tie/group margin (runtime-reused)
+    "q_conformal_coverage": 4,  # split scan + model rollup + residual-bucket census + folds
+    "q_bradley_terry": 11,  # (day x type) rollup per contest/iteration margin; MM grid is 20 pairs
+    "q_diff_in_differences": 1,  # one scan, one 4-cell rollup
+    "q_shapley_attribution": 5,  # journey rollup + 16-set census + literal coalition grid
+    "q_copeland_condorcet": 4,  # (day x type) rollup + 20-pair duel grid
+    "q_holm_bonferroni": 15,  # the BH relabeling pipeline, re-derived for the stop scalar
+    "q_cochran_q_filters": 1,  # one scan, one global rollup
+    "q_random_projection_jl": 2,  # one scan + label rollup (the 16 projections are codegen)
+    "q_calinski_harabasz": 8,  # assignment + dims rollups + K-grain joins
+    "q_bm25_stored_index": 5,  # posting filter + doclen join + doc rollup + TakeOrdered
+    "q_ivf_serving_recall": 8,  # brute-force window + serving plan + per-query rollup
+    "q_degree_assortativity": 4,  # snapshot read + degree rollup + 1-row aggregate
+    "q_sprt_conversion": 3,  # day rollup + bounded prefix window
+    "q_entropy_rate_bigram": 5,  # bigram rollup + context rollup + bounded window-over-all
+    # distributed two-phase ranks (operators/ranks.py)
+    "q_systematic_sample": 1,  # range exchange only; mod-filter map-side
+    "q_cume_dist_percentiles": 1,  # range exchange + broadcast N
+    "q_calibration_bins": 2,  # range exchange + bin rollup
+    "q_histogram_equidepth": 2,  # range exchange + bucket rollup
+    "q_decile_lift": 3,  # range exchange + decile rollup + cum attach
+}
+
+
+def over_budget(sweep, budgets) -> dict[str, str]:
+    """Rows whose plan holds more keyed shuffles than their budget. A
+    budget on a row that is not in the sweep, or that failed to build,
+    is reported too: it would otherwise hold vacuously."""
+    bad = {}
+    for name, budget in budgets.items():
+        built = sweep.get(name)
+        if built is None:
+            bad[name] = "not a registered row"
+        elif built.error:
+            bad[name] = f"failed to build: {built.error}"
+        elif (n := count_shuffle_exchanges(built.plan)) > budget:
+            bad[name] = f"{n} keyed shuffles > budget {budget}"
+    return bad
+
+
+def budgets(*names) -> list[tuple[str, int]]:
+    """``(name, budget)`` pairs for a parametrized per-row view."""
+    return [(n, SHUFFLE_BUDGETS[n]) for n in names]

@@ -2,50 +2,53 @@
 
 Every flagship plan must (a) broadcast its dimension joins, (b) push
 filters into the parquet scan, (c) never degenerate into a cartesian
-product, and (d) keep whole-stage codegen on the relational spine.
+product, (d) keep whole-stage codegen on the relational spine, and (e)
+hold its shuffle budget (``catalog_plans.SHUFFLE_BUDGETS``).
+
+Every check on a registered row reads the plan the session's catalog
+sweep built (``catalog_sweep[name].plan``); none plans the row again.
+The catalog-wide gates below check every row for cartesian products
+and build failures; a per-row test states the shape it is about.
 """
 
 from __future__ import annotations
 
 import catalog_plans
 import pytest
+from catalog_plans import broadcast_joins, budgets, over_budget
 
-from kafka_stream_service_spark.plans import (
-    assert_broadcast_join,
-    assert_no_cartesian,
-    assert_pushed_filters,
-    count_shuffle_exchanges,
-    physical_plan,
-)
-from kafka_stream_service_spark.queries import QUERIES
+from kafka_stream_service_spark.plans import physical_plan
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_flagship_broadcasts_dims(spark):
-    df = QUERIES["q02_revenue_by_nation"].spark_fn(spark, SF)
-    plan = assert_broadcast_join(df, at_least=2)  # customer + nation
+def _pushed(plan: str, fragment: str) -> bool:
+    """A predicate fragment appears in a scan's PushedFilters."""
+    return any(fragment in ln for ln in plan.splitlines() if "PushedFilters" in ln)
+
+
+def test_flagship_broadcasts_dims(catalog_sweep):
+    plan = catalog_sweep["q02_revenue_by_nation"].plan
+    assert broadcast_joins(plan) >= 2, plan  # customer + nation
     # every node on the spine is codegen-capable (no interpreted/Python ops)
     assert "Python" not in plan and "ArrowEval" not in plan
 
 
-def test_q05_six_way_join_shape(spark):
-    df = QUERIES["q05_regional_supplier_volume"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=3)  # customer, supplier, nation⋈region
-    assert_no_cartesian(df)
+def test_q05_six_way_join_shape(catalog_sweep):
+    plan = catalog_sweep["q05_regional_supplier_volume"].plan
+    assert broadcast_joins(plan) >= 3, plan  # customer, supplier, nation⋈region
 
 
-def test_q06_filter_pushdown(spark):
-    df = QUERIES["q06_forecast_revenue_filter"].spark_fn(spark, SF)
+def test_q06_filter_pushdown(catalog_sweep):
+    plan = catalog_sweep["q06_forecast_revenue_filter"].plan
     # shipdate range + quantity bound reach the parquet scan
-    assert_pushed_filters(df, "l_shipdate")
-    assert_pushed_filters(df, "l_quantity")
+    assert _pushed(plan, "l_shipdate") and _pushed(plan, "l_quantity"), plan
 
 
-def test_q01_partial_aggregation(spark):
+def test_q01_partial_aggregation(catalog_sweep):
     """The group-by plans partial (map-side) aggregation before the
     exchange — only 6 groups cross the shuffle."""
-    plan = physical_plan(QUERIES["q01_pricing_summary"].spark_fn(spark, SF))
+    plan = catalog_sweep["q01_pricing_summary"].plan
     assert "partial_sum" in plan
     # map-side HashAggregate node precedes the Exchange node in the tree
     # (Spark numbers children first: HashAggregate(4) feeds Exchange(5))
@@ -56,22 +59,19 @@ def test_q01_partial_aggregation(spark):
     assert agg_ids and exch_ids and min(agg_ids) < min(exch_ids)
 
 
-def test_topk_plans_as_take_ordered(spark):
+def test_topk_plans_as_take_ordered(catalog_sweep):
     """orderBy().limit(k) must plan as TakeOrderedAndProject — no global
     sort materialization."""
-    plan = physical_plan(QUERIES["q_sort_limit_topk"].spark_fn(spark, SF))
-    assert "TakeOrderedAndProject" in plan
+    assert "TakeOrderedAndProject" in catalog_sweep["q_sort_limit_topk"].plan
 
 
-def test_semi_join_stays_semi(spark):
-    plan = physical_plan(QUERIES["q_join_semi"].spark_fn(spark, SF))
-    assert "LeftSemi" in plan
+def test_semi_join_stays_semi(catalog_sweep):
+    assert "LeftSemi" in catalog_sweep["q_join_semi"].plan
 
 
-def test_column_pruning_reaches_scan(spark):
+def test_column_pruning_reaches_scan(catalog_sweep):
     """A 2-column projection must not read the full lineitem schema."""
-    df = QUERIES["q06_forecast_revenue_filter"].spark_fn(spark, SF)
-    plan = physical_plan(df)
+    plan = catalog_sweep["q06_forecast_revenue_filter"].plan
     scan_lines = [line for line in plan.splitlines() if "ReadSchema" in line]
     assert scan_lines, plan
     # only the needed lineitem columns appear in the read schema
@@ -107,136 +107,116 @@ def test_no_complex_output_columns_anywhere_in_catalog(catalog_sweep):
     assert not bad, f"array/map/struct output columns in: {bad}"
 
 
+def test_shuffle_budgets_hold(catalog_sweep):
+    """SCALE.md's shuffle inventory is enforced over the one budget
+    table: no row may regress into extra keyed exchanges. Every offender
+    is reported at once, and a budget on a row that is not registered or
+    did not build fails too, so no budget holds vacuously."""
+    bad = over_budget(catalog_sweep, catalog_plans.SHUFFLE_BUDGETS)
+    assert not bad, f"shuffle budgets broken: {bad}"
+
+
+# The per-row budget ids below are views of SHUFFLE_BUDGETS: each reads
+# its row's budget from the table and its plan from the sweep.
+
+
 @pytest.mark.parametrize(
     ("name", "max_exchanges"),
-    [
-        ("q_asof_join", 1),  # union-tag composition: ONE shuffle on the key
-        ("q_training_corpus_pipeline", 2),  # dedup window + final groupBy
-        ("q_dedup_embedding_cosine", 2),  # block key + dup-id groupBy
-    ],
+    budgets("q_asof_join", "q_training_corpus_pipeline", "q_dedup_embedding_cosine"),
 )
-def test_shuffle_budget(spark, name, max_exchanges):
-    """SCALE.md's shuffle inventory is enforced: these compositions must
-    not regress into extra exchanges."""
-
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
+def test_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
-@pytest.mark.parametrize("name", ["q02_revenue_by_nation", "q10_returned_items"])
-def test_no_python_in_relational_spine(spark, name):
-    """Relational queries stay entirely JVM-side (no Python/Arrow eval
-    nodes in the plan)."""
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
+@pytest.mark.parametrize(
+    "name",
+    ["q02_revenue_by_nation", "q10_returned_items",
+     "q_pack_sequences", "q_corpus_mixture", "q_stratified_sample"],
+)
+def test_no_python_in_relational_spine(catalog_sweep, name):
+    """Relational queries and the training ops stay entirely JVM-side
+    (no Python/Arrow eval nodes in the plan)."""
+    plan = catalog_sweep[name].plan
     assert "Python" not in plan and "ArrowEval" not in plan
 
 
 @pytest.mark.parametrize(
     ("name", "max_exchanges"),
-    [
-        ("q_pack_sequences", 1),  # ONE shuffle: the per-source window
-        ("q_corpus_mixture", 3),  # source counts + global sum + final groupBy
-        ("q_stratified_sample", 1),  # ONE shuffle: the per-lang rank
-    ],
+    budgets("q_pack_sequences", "q_corpus_mixture", "q_stratified_sample"),
 )
-def test_training_ops_shuffle_budget(spark, name, max_exchanges):
-
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
-    assert "Python" not in plan and "ArrowEval" not in plan, "training ops must stay JVM-side"
+def test_training_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
-def test_hash_sample_is_map_side_only(spark):
-    """The deterministic sampler is a pure scan+filter: zero exchanges,
-    and the md5-prefix filter must not block column pruning."""
-
-    plan = physical_plan(QUERIES["q_hash_sample"].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n == 0, f"sampler shuffled:\n{plan}"
-    assert "Python" not in plan
+def test_hash_sample_is_map_side_only(catalog_sweep):
+    """The deterministic sampler is a pure scan+filter: zero exchanges
+    (its budget is 0), and no Python."""
+    assert not over_budget(catalog_sweep, dict(budgets("q_hash_sample")))
+    assert "Python" not in catalog_sweep["q_hash_sample"].plan
 
 
-def test_mixture_broadcasts_rate_table(spark):
+def test_mixture_broadcasts_rate_table(catalog_sweep):
     """The per-source rate table (20 rows) must broadcast into the filter
     join — a shuffle join here would move the whole corpus to join 20
     rows."""
-    df = QUERIES["q_corpus_mixture"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
+    assert broadcast_joins(catalog_sweep["q_corpus_mixture"].plan) >= 1
 
 
-def test_salted_join_is_shuffle_join_with_spread_keys(spark):
+def test_salted_join_is_shuffle_join_with_spread_keys(catalog_sweep):
     """q_salted_skew_join must actually exercise the salted SHUFFLE path:
     a sort-merge join on the composite (key, salt), no broadcast —
     broadcasting would silently bypass the skew mitigation the query
     exists to prove correct (which is what happened before force_shuffle:
     at test SF the planner broadcast the exploded side)."""
-    plan = physical_plan(QUERIES["q_salted_skew_join"].spark_fn(spark, SF))
+    plan = catalog_sweep["q_salted_skew_join"].plan
     assert "SortMergeJoin" in plan, plan[:2000]
     assert "BroadcastHashJoin" not in plan, "salted join degenerated to broadcast"
     assert "_salt" in plan  # composite key reached the join
 
 
-def test_decontamination_broadcasts_benchmark_side(spark):
+def test_decontamination_broadcasts_benchmark_side(catalog_sweep):
     """The eval-set n-gram side is tiny by construction and must
     broadcast; a shuffle join here would move the full corpus n-gram
     explosion — the exact failure mode at 100 TB."""
-    df = QUERIES["q_decontaminate_ngram"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
-    assert_no_cartesian(df)
+    assert broadcast_joins(catalog_sweep["q_decontaminate_ngram"].plan) >= 1
 
 
-def test_partitioned_write_prunes_directories(spark):
+def test_partitioned_write_prunes_directories(catalog_sweep):
     """q_partitioned_pruning's re-read must carry the lang filter as a
     PARTITION filter (directory pruning — zero IO for other langs), not
     just a data filter after a full scan."""
     import re
 
-    plan = physical_plan(QUERIES["q_partitioned_pruning"].spark_fn(spark, SF))
+    plan = catalog_sweep["q_partitioned_pruning"].plan
     m = re.search(r"PartitionFilters: \[[^\]]*lang[^\]]*\]", plan)
     assert m, f"lang never became a partition filter:\n{plan[:3000]}"
 
 
 @pytest.mark.parametrize(
     ("name", "max_exchanges"),
-    [
-        ("q_chunk_documents", 0),   # pure map-side: tokenize/enumerate/slice
-        ("q_zorder_cells", 1),      # ONE shuffle: the z-cell groupBy
-        ("q_kmeans_assign_int8", 1),  # centroids broadcast; one vec_id groupBy
-        ("q_upsert_merge", 2),      # the merge full-outer join (+AQE reads)
-        ("q_rolling_anomaly", 1),   # ONE shuffle: the per-user window
-        ("q_ewma_smoothing", 1),    # ONE shuffle: the per-user window
-    ],
+    budgets("q_chunk_documents", "q_zorder_cells", "q_kmeans_assign_int8",
+            "q_upsert_merge", "q_rolling_anomaly", "q_ewma_smoothing"),
 )
-def test_round5_ops_shuffle_budget(spark, name, max_exchanges):
-    """Round-5 operators carry the same enforced shuffle inventory as the
-    training ops: map-side stages stay map-side, single-shuffle shapes
-    stay single-shuffle."""
-
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
+def test_round5_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
-def test_kmeans_assign_broadcasts_centroids(spark):
+def test_kmeans_assign_broadcasts_centroids(catalog_sweep):
     """The Lloyd assignment step must broadcast the k x dim centroid
     table (BroadcastNestedLoopJoin from the bounded crossJoin) — a
     shuffle here would move the corpus to meet 8 rows."""
-    plan = physical_plan(QUERIES["q_kmeans_assign_int8"].spark_fn(spark, SF))
+    plan = catalog_sweep["q_kmeans_assign_int8"].plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan[:2000]
 
 
-def test_hard_negatives_broadcasts_queries(spark):
-    df = QUERIES["q_hard_negatives"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
+def test_hard_negatives_broadcasts_queries(catalog_sweep):
+    assert broadcast_joins(catalog_sweep["q_hard_negatives"].plan) >= 1
 
 
-def test_boilerplate_broadcasts_df_flags(spark):
+def test_boilerplate_broadcasts_df_flags(catalog_sweep):
     """The bigram DF/flag table is vocabulary-sized and must broadcast
     back onto the corpus instance stream."""
-    df = QUERIES["q_boilerplate_bigrams"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
+    assert broadcast_joins(catalog_sweep["q_boilerplate_bigrams"].plan) >= 1
 
 
 def test_runtime_bloom_filter_prunes_fact_side(spark):
@@ -284,152 +264,108 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        # CMS: vocab groupBy + (j,bucket) cell groupBy + TakeOrdered
-        # candidates + final estimate groupBy (probes broadcast)
-        ("q_countmin_heavy_hitters_portable", 4),
-        ("q_hll_registers_portable", 3),   # vocab distinct + register groupBy
-        ("q_feature_hashing", 2),          # (doc,tok) count + (doc,dim) combine
-        # sweep-line: per-day delta fold + the bounded single-partition
-        # running-sum window (days, not lineitems)
-        ("q_interval_sweepline", 3),
-        ("q_pq_encode_portable", 2),       # (vec,m) min-agg + vec_id regroup
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_countmin_heavy_hitters_portable", "q_hll_registers_portable",
+            "q_feature_hashing", "q_interval_sweepline", "q_pq_encode_portable"),
 )
-def test_round6_ops_shuffle_budget(spark, name, max_exchanges):
-    """Round-6 operators: same enforced shuffle inventory — the sketch
-    builds stay map-side-combined, nothing degenerates into extra
-    wide stages."""
-
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
+def test_round6_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
-def test_pq_adc_broadcasts_lut_and_codebook(spark):
+def test_pq_adc_broadcasts_lut_and_codebook(catalog_sweep):
     """The ADC scan must broadcast the LUT (queries x M x K cells) onto
     the code table — shuffling codes to meet a 512-row table would be
     the scale-killer PQ exists to avoid."""
-    df = QUERIES["q_pq_adc_topk_portable"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
-    assert_no_cartesian(df)
+    assert broadcast_joins(catalog_sweep["q_pq_adc_topk_portable"].plan) >= 1
 
 
-def test_bloom_probe_broadcasts_bits(spark):
+def test_bloom_probe_broadcasts_bits(catalog_sweep):
     """The Bloom probe joins the <= 4096-row bit set via broadcast —
     the blocklist filter ships to every probe task, never the reverse."""
-    df = QUERIES["q_bloom_filter_audit_portable"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
+    assert broadcast_joins(catalog_sweep["q_bloom_filter_audit_portable"].plan) >= 1
 
 
-def test_oriented_triangles_no_cartesian(spark):
-    df = QUERIES["q_triangle_oriented"].spark_fn(spark, SF)
-    assert_no_cartesian(df)
+def test_oriented_triangles_no_cartesian(catalog_sweep):
+    """Oriented wedges close by an equi-join on both endpoints (x, y),
+    never by a cross product filtered afterwards."""
+    import re
+
+    plan = catalog_sweep["q_triangle_oriented"].plan
+    assert re.search(r"Left keys \[2\]: \[x#\d+L?, y#", plan), plan[:3000]
 
 
-def test_pit_join_broadcasts_version_table(spark):
+def test_pit_join_broadcasts_version_table(catalog_sweep):
     """The point-in-time join must broadcast the versioned dimension —
     the fact side never shuffles to meet dim-sized version rows."""
-    df = QUERIES["q_scd2_point_in_time_join"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
-    assert_no_cartesian(df)
+    assert broadcast_joins(catalog_sweep["q_scd2_point_in_time_join"].plan) >= 1
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        ("q_dedup_keep_best", 2),          # prefix-key window + regroup
-        ("q_source_quota", 2),             # source window + regroup
-        ("q_event_paths_topk", 3),         # user window + path count + TakeOrdered
-        ("q_token_budget_allocation", 4),  # source agg + two scalar folds
-        ("q_rank_normalize_embeddings", 3),  # pos windows + vec regroup
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_dedup_keep_best", "q_source_quota", "q_event_paths_topk",
+            "q_token_budget_allocation", "q_rank_normalize_embeddings"),
 )
-def test_round6_late_ops_shuffle_budget(spark, name, max_exchanges):
-
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
+def test_round6_late_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
-def test_lateral_decorrelates_to_window_join(spark):
+def test_lateral_decorrelates_to_window_join(catalog_sweep):
     """The correlated LATERAL ORDER BY..LIMIT must decorrelate into a
     ranked-window + broadcast hash join — never a per-outer-row
     nested-loop re-execution."""
-    plan = physical_plan(QUERIES["q_lateral_topn"].spark_fn(spark, SF))
+    plan = catalog_sweep["q_lateral_topn"].plan
     assert "Window" in plan and "row_number" in plan
     assert "BroadcastHashJoin" in plan
-    assert "NestedLoop" not in plan and "CartesianProduct" not in plan
+    assert "NestedLoop" not in plan
 
 
-def test_null_safe_join_is_hash_join(spark):
+def test_null_safe_join_is_hash_join(catalog_sweep):
     """eqNullSafe compiles to a HASH join on the null-coalesced key
     (coalesce(k), isnull(k)) — the null-safe semantics must not cost a
     nested loop. The only nested-loop nodes allowed are the bounded
     1-row aggregate combiners."""
-    plan = physical_plan(QUERIES["q_null_safe_join"].spark_fn(spark, SF))
+    plan = catalog_sweep["q_null_safe_join"].plan
     assert "isnull" in plan and "coalesce" in plan
     assert plan.count("BroadcastHashJoin") >= 2  # equi + null-safe legs
 
 
-def test_variant_shred_stays_jvm_side(spark):
+def test_variant_shred_stays_jvm_side(catalog_sweep):
     """VARIANT parse/extract are codegen expressions: no Python workers,
     no Arrow eval nodes anywhere in the shred plan."""
-    plan = physical_plan(QUERIES["q_variant_shred"].spark_fn(spark, SF))
+    plan = catalog_sweep["q_variant_shred"].plan
     assert "Python" not in plan and "ArrowEval" not in plan
 
 
-def test_skyline_windows_only_aggregated_series(spark):
+def test_skyline_windows_only_aggregated_series(catalog_sweep):
     """The skyline's global-order window must consume the per-price
     aggregate, never the base part table: exactly one partial_max/merge
     aggregation feeds the window, and the frontier re-join broadcasts."""
-    df = QUERIES["q_skyline_pareto"].spark_fn(spark, SF)
-    plan = physical_plan(df)
+    plan = catalog_sweep["q_skyline_pareto"].plan
     assert "Window" in plan
-    assert_broadcast_join(df, at_least=1)
-    assert_no_cartesian(df)
+    assert broadcast_joins(plan) >= 1
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        # r14: each median is now a ranked-HISTOGRAM pass (map-combined
-        # (type, value) agg + window by type). The STATIC count is 7:
-        # the med subplan's 2 exchanges appear again inside the dev
-        # branch's two consumers before AQE stage-reuse dedupes them at
-        # runtime, and every one of the new exchanges moves the value
-        # histogram (domain-bounded) — never the corpus — in exchange
-        # for no reducer ever buffering a group's raw values
-        ("q_mad_outliers", 7),
-
-        ("q_mom_growth", 3),          # month agg + series window
-        ("q_attribution_last_touch", 3),  # user window + channel agg
-        ("q_eval_auc_pr", 5),         # score agg + series windows + 1-row folds
-        ("q_bigram_lm_score", 5),     # bigram/unigram counts + doc tf + regroup
-        ("q_group_kfold", 2),         # map-side hash + one agg
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_mad_outliers", "q_mom_growth", "q_attribution_last_touch",
+            "q_eval_auc_pr", "q_bigram_lm_score", "q_group_kfold"),
 )
-def test_round6b_ops_shuffle_budget(spark, name, max_exchanges):
-
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
+def test_round6b_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
-def test_join_hint_forces_shuffle_hash(spark):
+def test_join_hint_forces_shuffle_hash(catalog_sweep):
     """The SHUFFLE_HASH hint must override the optimizer's broadcast
     preference — the strategy escape hatch has to actually steer."""
-    plan = physical_plan(QUERIES["q_join_hints"].spark_fn(spark, SF))
+    plan = catalog_sweep["q_join_hints"].plan
     assert "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin" not in plan
 
 
-def test_entity_resolution_blocked_join_no_cartesian(spark):
+def test_entity_resolution_blocked_join_no_cartesian(catalog_sweep):
     """The ER candidate generation must stay brand-blocked — an
     unblocked levenshtein pass would be the all-pairs scale-killer."""
-    df = QUERIES["q_entity_resolution"].spark_fn(spark, SF)
-    assert_no_cartesian(df)
+    assert "CartesianProduct" not in catalog_sweep["q_entity_resolution"].plan
 
 
 def test_distributed_quantiles_no_single_partition_window(spark):
@@ -461,31 +397,25 @@ def test_distributed_quantiles_no_single_partition_window(spark):
     assert "Window" in plan and PARTITION_COL in plan
 
 
-def test_bm25_broadcasts_stats_and_df(spark):
+def test_bm25_broadcasts_stats_and_df(catalog_sweep):
     """BM25's df/corpus-stats sides are broadcast (never a shuffle join
-    against the postings) and nothing degenerates into a cartesian."""
-    df = QUERIES["q_bm25_retrieval"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=2)  # df_ + stats
-    assert_no_cartesian(df)
+    against the postings)."""
+    assert broadcast_joins(catalog_sweep["q_bm25_retrieval"].plan) >= 2  # df_ + stats
 
 
-def test_merge_on_read_anti_join_shape(spark):
+def test_merge_on_read_anti_join_shape(catalog_sweep):
     """Deletion-vector application is a real join (anti), not a filter
-    rewrite, and stays cartesian-free."""
-    df = QUERIES["q_merge_on_read_deletion_vectors"].spark_fn(spark, SF)
-    plan = physical_plan(df)
-    assert "LeftAnti" in plan
-    assert_no_cartesian(df)
+    rewrite."""
+    assert "LeftAnti" in catalog_sweep["q_merge_on_read_deletion_vectors"].plan
 
 
-def test_scan_stats_have_no_single_partition_window(spark):
+def test_scan_stats_have_no_single_partition_window(catalog_sweep):
     """The KS/MWU distributed scan must not fall back to a global-order
     window: every windowspecdefinition in the plan is partitioned by the
     scan pid (the only SinglePartition exchange allowed is the one-row
     scalar-totals reduce, which is a bounded aggregate, not a window)."""
     for name in ("q_ks_two_sample", "q_mannwhitney_u"):
-        df = QUERIES[name].spark_fn(spark, SF)
-        plan = physical_plan(df)
+        plan = catalog_sweep[name].plan
         # the scan ran behind an eager localCheckpoint (pinned pids);
         # the final job must contain NO runtime window at all — a
         # windowspecdefinition here would mean the operator regressed
@@ -498,10 +428,9 @@ def test_scan_stats_have_no_single_partition_window(spark):
         )
 
 
-def test_modularity_broadcasts_the_dim(spark):
-    df = QUERIES["q_modularity_by_source"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=2)  # both endpoint label joins
-    assert_no_cartesian(df)
+def test_modularity_broadcasts_the_dim(catalog_sweep):
+    plan = catalog_sweep["q_modularity_by_source"].plan
+    assert broadcast_joins(plan) >= 2  # both endpoint label joins
 
 
 # ---------------------------------------------------------------------------
@@ -514,7 +443,8 @@ def test_silhouette_broadcasts_centroids(spark):
     exploded-points join (the q_kmeans_assign envelope), never shuffle
     the corpus against it. The final plan hides that join behind the
     dd localCheckpoint (3 consumers), so the broadcast is asserted on
-    the pre-checkpoint distance subplan rebuilt from the same pieces."""
+    the pre-checkpoint distance subplan rebuilt from the same pieces
+    (not a catalog row, so the sweep does not hold it)."""
     from pyspark.sql import functions as F
 
     from kafka_stream_service_spark.queries.corpus_ops import _quantized
@@ -526,103 +456,73 @@ def test_silhouette_broadcasts_centroids(spark):
         F.sum("val").alias("s")
     )
     dist = pts.join(F.broadcast(cent), "pos")
-    assert_broadcast_join(dist, at_least=1)
-    # and the full query never degenerates into a cartesian
-    assert_no_cartesian(QUERIES["q_silhouette_simplified"].spark_fn(spark, SF))
+    assert broadcast_joins(physical_plan(dist)) >= 1
 
 
-def test_rerank_shortlist_is_broadcast_probe(spark):
+def test_rerank_shortlist_is_broadcast_probe(catalog_sweep):
     """Stage-1 shortlisting joins the broadcast query set against the
     corpus buckets; the corpus itself must not shuffle or cross-join."""
-    df = QUERIES["q_ann_rerank_two_stage"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
-    assert_no_cartesian(df)
+    assert broadcast_joins(catalog_sweep["q_ann_rerank_two_stage"].plan) >= 1
 
 
-def test_apriori_candidates_broadcast_into_support_count(spark):
+def test_apriori_candidates_broadcast_into_support_count(catalog_sweep):
     """Candidate triples live on the item grain and must broadcast into
     the orderkey-partitioned three-way support count."""
-    df = QUERIES["q_basket_triples_apriori"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
-    assert_no_cartesian(df)
+    assert broadcast_joins(catalog_sweep["q_basket_triples_apriori"].plan) >= 1
 
 
-def test_incremental_dedup_is_bucket_equi_join(spark):
+def test_incremental_dedup_is_bucket_equi_join(catalog_sweep):
     """Incoming x corpus must happen ONLY through the (band, bucket)
     equi-join — a cartesian here is the all-pairs scale-killer the LSH
     index exists to avoid."""
-    df = QUERIES["q_dedup_incremental_snapshot"].spark_fn(spark, SF)
-    assert_no_cartesian(df)
+    assert "CartesianProduct" not in catalog_sweep["q_dedup_incremental_snapshot"].plan
 
 
-def test_cusum_pushes_year_filter_to_scan(spark):
-    df = QUERIES["q_cusum_changepoint"].spark_fn(spark, SF)
-    assert_pushed_filters(df, "l_shipdate")
+def test_cusum_pushes_year_filter_to_scan(catalog_sweep):
+    assert _pushed(catalog_sweep["q_cusum_changepoint"].plan, "l_shipdate")
 
 
-def test_logreg_scoring_is_shuffle_free(spark):
+def test_logreg_scoring_is_shuffle_free(catalog_sweep):
     """Batch inference is a pure map — any exchange in this plan is a
-    regression."""
-
-    plan = physical_plan(QUERIES["q_logreg_score_text"].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n == 0, f"logreg scoring plans {n} exchanges:\n{plan}"
+    regression (its budget is 0)."""
+    assert not over_budget(catalog_sweep, dict(budgets("q_logreg_score_text")))
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        ("q_kaplan_meier", 5),
-        ("q_cusum_changepoint", 5),
-        ("q_isotonic_calibration", 6),
-        ("q_cuped_adjustment", 5),
-        ("q_kendall_tau", 6),
-        ("q_anova_oneway", 4),
-        ("q_seasonal_decompose", 6),
-        ("q_compaction_bin_packing", 4),
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_kaplan_meier", "q_cusum_changepoint", "q_isotonic_calibration",
+            "q_cuped_adjustment", "q_kendall_tau", "q_anova_oneway",
+            "q_seasonal_decompose", "q_compaction_bin_packing"),
 )
-def test_round8_ops_shuffle_budget(spark, name, max_exchanges):
-
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
+def test_round8_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
-def test_fertility_broadcasts_vocab_token_counts(spark):
+def test_fertility_broadcasts_vocab_token_counts(catalog_sweep):
     """Vocabulary-grain token counts must broadcast into the (lang,
     word) frequency join — the corpus is never re-tokenized per row."""
-    df = QUERIES["q_tokenizer_fertility"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
-    assert_no_cartesian(df)
+    assert broadcast_joins(catalog_sweep["q_tokenizer_fertility"].plan) >= 1
 
 
-def test_bleu_scoring_joins_pairs_only(spark):
-    """The clipped-count joins key on (pair, token) — no cartesian and
-    no corpus^2 leg anywhere in the scoring plan."""
-    assert_no_cartesian(QUERIES["q_bleu_ngram_precision"].spark_fn(spark, SF))
+def test_bleu_scoring_joins_pairs_only(catalog_sweep):
+    """The clipped-count joins key on (pair, token) — no corpus^2 leg
+    anywhere in the scoring plan."""
+    import re
+
+    plan = catalog_sweep["q_bleu_ngram_precision"].plan
+    assert re.search(r"Left keys \[2\]: \[id_a#\d+L?, tok#", plan), plan[:3000]
 
 
-def test_preference_pairs_windows_partition_by_source(spark):
+def test_preference_pairs_windows_partition_by_source(catalog_sweep):
     """Both rank windows must partition by source — a global window
     here would be the single-partition scale-killer."""
-    plan = physical_plan(QUERIES["q_preference_pairs"].spark_fn(spark, SF))
-    assert "SinglePartition" not in plan
+    assert "SinglePartition" not in catalog_sweep["q_preference_pairs"].plan
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        ("q_bpe_apply_merges", 3),
-        ("q_temperature_mixing", 3),
-        ("q_psi_drift", 4),
-        ("q_woe_binning", 4),
-        ("q_ece_calibration", 4),
-        ("q_decision_tree_score", 3),
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_bpe_apply_merges", "q_temperature_mixing", "q_psi_drift",
+            "q_woe_binning", "q_ece_calibration", "q_decision_tree_score"),
 )
-def test_round8_late_ops_shuffle_budget(spark, name, max_exchanges):
-
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
+def test_round8_late_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})

@@ -1,73 +1,30 @@
-"""Plan-shape assertions for the round-10 operators (the round-9
-shuffle-budget pattern): pin the physical properties the docstrings
-claim so a regression that silently inflates shuffles or plans a
-cartesian product fails CI, not a bench review.
+"""Plan-shape assertions for the round-10 operators: shuffle budgets
+(views of ``catalog_plans.SHUFFLE_BUDGETS``) and broadcast shapes read
+off the session's catalog sweep, plus the stored-index read seams, which
+build their artifact before planning.
 """
 
 from __future__ import annotations
 
 
 import pytest
+from catalog_plans import broadcast_joins, budgets, over_budget
 
-from kafka_stream_service_spark.plans import (
-    assert_broadcast_join,
-    assert_no_cartesian,
-    count_shuffle_exchanges,
-    physical_plan,
-)
+from kafka_stream_service_spark.plans import physical_plan
 from kafka_stream_service_spark.queries.registry import QUERIES
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        # shingle census + semi-join + per-doc islands
-        ("q_exact_substr_spans", 5),
-        # manifest rollup adds one doc-grain join + source rollup
-        ("q_exact_substr_stats", 8),
-        # scan-bound key computation + per-source rank
-        ("q_weighted_sample_es", 2),
-        # day-grain rollup + bounded pair frame + scalar aggregates
-        ("q_mann_kendall_trend", 8),
-        # duration-grain rollup + prefix window + scalar aggregate
-        ("q_logrank_test", 6),
-        ("q_nelson_aalen", 4),
-        # histogram + distributed prefix scan + bounded aggregate
-        ("q_cliffs_delta", 6),
-        # token pass + two bounded rollups + 10-point fit
-        ("q_heaps_law_fit", 8),
-        # one scan + 4-way prefix fan-out + label rollup
-        ("q_matryoshka_energy", 2),
-        # scoring pass + 10-bin groupBy + broadcast totals
-        ("q_brier_decomposition", 3),
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_exact_substr_spans", "q_exact_substr_stats", "q_weighted_sample_es",
+            "q_mann_kendall_trend", "q_logrank_test", "q_nelson_aalen",
+            "q_cliffs_delta", "q_heaps_law_fit", "q_matryoshka_energy",
+            "q_brier_decomposition"),
 )
-def test_round10_ops_shuffle_budget(spark, name, max_exchanges):
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
-
-
-def test_round10_no_cartesian_in_batch_ops(spark):
-    for name in (
-        "q_exact_substr_spans",
-        "q_exact_substr_stats",
-        "q_weighted_sample_es",
-        "q_mann_kendall_trend",
-        "q_logrank_test",
-        "q_nelson_aalen",
-        "q_heaps_law_fit",
-        "q_brier_decomposition",
-    ):
-        # mann_kendall/logrank/brier/heaps attach 1-row scalar frames by
-        # crossJoin (broadcast scalar attachment, the audited idiom) —
-        # assert_no_cartesian tolerates BroadcastNestedLoopJoin only for
-        # 1-row sides, which is what these plans produce, so any
-        # data-scale cartesian still fails.
-        plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-        assert "CartesianProduct" not in plan, f"{name} plans a cartesian:\n{plan}"
+def test_round10_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
 def test_pair_consumers_scan_the_snapshot(spark):
@@ -121,25 +78,19 @@ def test_delta_probe_reads_stored_buckets(spark):
         build_bucket_index,
     )
 
+    # plans after building the stored artifact, so it keeps its own build
     build_bucket_index(spark, SF)
     plan = physical_plan(QUERIES["q_pair_index_delta"].spark_fn(spark, SF))
     token = bucket_index_path(SF).rsplit("/", 1)[-1]
     assert token in plan, "delta probe does not read the stored bucket index"
-    assert "CartesianProduct" not in plan
 
 
-def test_semdedup_broadcasts_cluster_frames(spark):
-    df = QUERIES["q_semdedup_prune"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)  # the K-row ns frame
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
+def test_semdedup_broadcasts_cluster_frames(catalog_sweep):
+    assert broadcast_joins(catalog_sweep["q_semdedup_prune"].plan) >= 1  # the K-row ns frame
 
 
-def test_power_iteration_is_dims_grain_after_covariance(spark):
+def test_power_iteration_is_dims_grain_after_covariance(catalog_sweep):
     """The two iterations + Rayleigh must run on dims^2-grain frames —
-    no data-scale exchange after the covariance rollup (budget: scan +
-    vec_id self-join + dims rollups + tiny joins)."""
-    plan = physical_plan(QUERIES["q_power_iteration_top_eigvec"].spark_fn(spark, SF))
-    assert_no_cartesian(QUERIES["q_power_iteration_top_eigvec"].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= 10, f"power iteration: {n} exchanges:\n{plan}"
+    no data-scale exchange after the covariance rollup (its budget in
+    the table: scan + vec_id self-join + dims rollups + tiny joins)."""
+    assert not over_budget(catalog_sweep, dict(budgets("q_power_iteration_top_eigvec")))

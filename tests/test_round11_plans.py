@@ -1,11 +1,14 @@
-"""Plan-shape assertions for the round-11 operators: shuffle budgets,
-broadcast shapes, and the stored-index read seams the docstrings claim.
+"""Plan-shape assertions for the round-11 operators: shuffle budgets
+(views of ``catalog_plans.SHUFFLE_BUDGETS``, read off the session's
+catalog sweep) and the stored-index read seams and lifecycles, which
+build their artifact before planning.
 """
 
 from __future__ import annotations
 
 
 import pytest
+from catalog_plans import budgets, over_budget
 from pyspark.sql import functions as F
 
 from kafka_stream_service_spark.plans import count_shuffle_exchanges, physical_plan
@@ -15,151 +18,24 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        # delta quantize + stored-centroid assign + per-cluster blocks + CC
-        ("q_semdedup_delta_edges", 8),
-        # probe rank window + member fetch + topk window
-        ("q_knn_ivf_stored", 4),
-        # one scored frame, three windows on it, no re-scan
-        ("q_rrf_fusion", 3),
-        # one scored frame, one window, one query-grain rollup
-        ("q_mrr_recall_eval", 3),
-        # endpoint bigram census + overlap join + totals
-        ("q_rouge2_pair_scores", 11),
-        # bigram/unigram/type rollups + broadcast joins
-        ("q_kneser_ney_bigram", 6),
-        # (source, word) rollup + margins + grid
-        ("q_jensen_shannon_sources", 7),
-        # value census + group-value rollup + group grain
-        ("q_kruskal_wallis", 7),
-        # pool window + grouped-map greedy
-        ("q_mmr_rerank", 4),
-        # bigram rollup + count-of-counts + bounded lead window
-        ("q_good_turing_smoothing", 7),
-        ("q_pmi_collocations", 6),
-        # one scan, one 4-cell rollup
-        ("q_mcnemar_filters", 1),
-        # day rollup + self-join + census windows
-        ("q_wilcoxon_signed_rank", 8),
-        # (day, type) rollup + block windows + treatment grain
-        ("q_friedman_test", 6),
-        # (value x group) census + grid self-join + margin rollups
-        # (static count: the census subtree repeats per margin and is
-        # runtime-reused, like the other multi-margin rows above)
-        ("q_jonckheere_terpstra", 3),
-        # (day, day-part) rollup + completeness/rank windows on blk
-        ("q_page_trend_test", 6),
-        # one scan, one global rollup — zero keyed shuffles
-        ("q_fleiss_kappa", 0),
-        # lang x source cells + two margins (cell subtree runtime-reused)
-        ("q_cramers_v", 7),
-        # 50-cell value census + bounded cumulative window + scalar folds
-        ("q_cramer_von_mises", 3),
-        # census + per-risk suffix windows + day-grain join (census
-        # subtree repeats per margin statically, runtime-cached)
-        ("q_harrell_c_index", 8),
-        # explode + ONE word rollup + 1-row fold
-        ("q_yule_k_lexical", 1),
-        # user rollup (runtime-reused for F2 + sketch) + r/group grains
-        ("q_ams_f2_portable", 4),
-        # snapshot-scale adjacency rollup + wedge join
-        ("q_ra_link_prediction", 2),
-        # class rollup + distinct expansion
-        ("q_l_diversity", 2),
-        # class/band rollups + bounded grid windows
-        ("q_t_closeness", 5),
-        # joint-cell rollup repeated across H/MI margins (runtime-reused)
-        ("q_theils_u", 9),
-        # (source, word) rollup subtree repeated per consumer (cached at
-        # runtime; static plan re-derives it for toks/top/grid)
-        ("q_burrows_delta", 11),
-        # one scan, one global rollup
-        ("q_krippendorff_alpha", 0),
-        # one scan, one 4-cell rollup each
-        ("q_mcc_filters", 0),
-        ("q_odds_ratio_ci", 0),
-        # day rollup repeated per lag/moment margin (runtime-reused)
-        ("q_pacf_daily", 6),
-        # (group x value) census + bounded per-group windows
-        ("q_brown_forsythe", 5),
-        # day rollup + lag join + moment folds on the 30-row series
-        ("q_granger_lag1", 6),
-        # day rollup repeated per lag/g0/moment margin (runtime-reused)
-        ("q_ljung_box", 10),
-        # ONE day rollup; all windows on the 31-row series
-        ("q_page_hinkley", 1),
-        # value census repeated per rank/tie/group margin (runtime-reused)
-        ("q_dunns_test", 10),
-        # split scan + model rollup + residual-bucket census + folds
-        ("q_conformal_coverage", 4),
-        # (day x type) rollup repeated per contest/iteration margin
-        # (runtime-reused; MM grid itself is 20 pairs)
-        ("q_bradley_terry", 11),
-        # one scan, one 4-cell rollup
-        ("q_diff_in_differences", 1),
-        # journey rollup + 16-set census + literal coalition grid
-        ("q_shapley_attribution", 5),
-        # (day x type) rollup + 20-pair duel grid
-        ("q_copeland_condorcet", 4),
-        # the BH relabeling pipeline (cached at the m-row crit frame;
-        # static plan re-derives it for the stop scalar)
-        ("q_holm_bonferroni", 15),
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_semdedup_delta_edges", "q_knn_ivf_stored", "q_rrf_fusion",
+            "q_mrr_recall_eval", "q_rouge2_pair_scores", "q_kneser_ney_bigram",
+            "q_jensen_shannon_sources", "q_kruskal_wallis", "q_mmr_rerank",
+            "q_good_turing_smoothing", "q_pmi_collocations", "q_mcnemar_filters",
+            "q_wilcoxon_signed_rank", "q_friedman_test", "q_jonckheere_terpstra",
+            "q_page_trend_test", "q_fleiss_kappa", "q_cramers_v",
+            "q_cramer_von_mises", "q_harrell_c_index", "q_yule_k_lexical",
+            "q_ams_f2_portable", "q_ra_link_prediction", "q_l_diversity",
+            "q_t_closeness", "q_theils_u", "q_burrows_delta",
+            "q_krippendorff_alpha", "q_mcc_filters", "q_odds_ratio_ci",
+            "q_pacf_daily", "q_brown_forsythe", "q_granger_lag1", "q_ljung_box",
+            "q_page_hinkley", "q_dunns_test", "q_conformal_coverage",
+            "q_bradley_terry", "q_diff_in_differences", "q_shapley_attribution",
+            "q_copeland_condorcet", "q_holm_bonferroni"),
 )
-def test_round11_ops_shuffle_budget(spark, name, max_exchanges):
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
-
-
-def test_round11_no_cartesian(spark):
-    for name in (
-        "q_semdedup_delta_edges",
-        "q_knn_ivf_stored",
-        "q_rrf_fusion",
-        "q_mrr_recall_eval",
-        "q_rouge2_pair_scores",
-        "q_kneser_ney_bigram",
-        "q_jensen_shannon_sources",
-        "q_kruskal_wallis",
-        "q_mmr_rerank",
-        "q_good_turing_smoothing",
-        "q_pmi_collocations",
-        "q_mcnemar_filters",
-        "q_wilcoxon_signed_rank",
-        "q_friedman_test",
-        "q_jonckheere_terpstra",
-        "q_page_trend_test",
-        "q_fleiss_kappa",
-        "q_cramers_v",
-        "q_cramer_von_mises",
-        "q_harrell_c_index",
-        "q_yule_k_lexical",
-        "q_ams_f2_portable",
-        "q_ra_link_prediction",
-        "q_l_diversity",
-        "q_t_closeness",
-        "q_theils_u",
-        "q_burrows_delta",
-        "q_krippendorff_alpha",
-        "q_mcc_filters",
-        "q_odds_ratio_ci",
-        "q_pacf_daily",
-        "q_brown_forsythe",
-        "q_granger_lag1",
-        "q_ljung_box",
-        "q_page_hinkley",
-        "q_dunns_test",
-        "q_conformal_coverage",
-        "q_bradley_terry",
-        "q_diff_in_differences",
-        "q_shapley_attribution",
-        "q_copeland_condorcet",
-        "q_holm_bonferroni",
-    ):
-        plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-        assert "CartesianProduct" not in plan, f"{name} plans a cartesian:\n{plan}"
+def test_round11_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
 def test_ivf_stored_reads_index_and_broadcasts_probes(spark):
@@ -170,6 +46,7 @@ def test_ivf_stored_reads_index_and_broadcasts_probes(spark):
         sem_index_path,
     )
 
+    # plans after building the stored artifact, so it keeps its own build
     build_sem_index(spark, SF)
     plan = physical_plan(QUERIES["q_knn_ivf_stored"].spark_fn(spark, SF))
     token = sem_index_path(SF).rsplit("/", 1)[-1]
@@ -185,6 +62,7 @@ def test_rouge2_reads_pair_snapshot(spark):
         pair_index_path,
     )
 
+    # plans after building the stored artifact, so it keeps its own build
     build_pair_index(spark, SF)
     plan = physical_plan(QUERIES["q_rouge2_pair_scores"].spark_fn(spark, SF))
     token = pair_index_path(SF).rsplit("/", 1)[-1]
@@ -192,31 +70,13 @@ def test_rouge2_reads_pair_snapshot(spark):
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        # one scan, one global rollup
-        ("q_cochran_q_filters", 1),
-        # one scan + label rollup (the 16 projections are codegen)
-        ("q_random_projection_jl", 2),
-        # assignment + dims rollups + K-grain joins
-        ("q_calinski_harabasz", 8),
-        # posting filter + doclen join + doc rollup + TakeOrdered
-        ("q_bm25_stored_index", 5),
-        # brute-force window + serving plan + per-query rollup
-        ("q_ivf_serving_recall", 8),
-        # snapshot read + degree rollup + 1-row aggregate
-        ("q_degree_assortativity", 4),
-        # day rollup + bounded prefix window
-        ("q_sprt_conversion", 3),
-        # bigram rollup + context rollup + bounded window-over-all
-        ("q_entropy_rate_bigram", 5),
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_cochran_q_filters", "q_random_projection_jl", "q_calinski_harabasz",
+            "q_bm25_stored_index", "q_ivf_serving_recall",
+            "q_degree_assortativity", "q_sprt_conversion", "q_entropy_rate_bigram"),
 )
-def test_round11_batch56_shuffle_budget(spark, name, max_exchanges):
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
-    assert "CartesianProduct" not in plan, f"{name} plans a cartesian:\n{plan}"
+def test_round11_batch56_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
 def test_bm25_serving_reads_stored_postings(spark):
@@ -227,6 +87,7 @@ def test_bm25_serving_reads_stored_postings(spark):
         text_index_path,
     )
 
+    # plans after building the stored artifact, so it keeps its own build
     build_text_index(spark, SF)
     plan = physical_plan(QUERIES["q_bm25_stored_index"].spark_fn(spark, SF))
     token = text_index_path(SF).rsplit("/", 1)[-1]
@@ -276,13 +137,13 @@ def test_text_index_delta_reads_stored_base(spark):
         text_base_index_path,
     )
 
+    # plans after building the stored artifact, so it keeps its own build
     build_text_base_index(spark, SF)
     plan = physical_plan(QUERIES["q_text_index_delta"].spark_fn(spark, SF))
     token = text_base_index_path(SF).rsplit("/", 1)[-1]
     assert token in plan, "refresh probe does not read the stored base index"
     n = count_shuffle_exchanges(plan)
     assert n <= 3, f"refresh probe plans {n} keyed shuffles (budget 3):\n{plan}"
-    assert "CartesianProduct" not in plan
 
 
 def test_text_base_artifact_lifecycle(spark):
@@ -359,6 +220,7 @@ def test_bm25_after_refresh_reads_base_with_pushed_terms(spark):
         text_base_index_path,
     )
 
+    # plans after building the stored artifact, so it keeps its own build
     build_text_base_index(spark, SF)
     plan = physical_plan(QUERIES["q_bm25_after_refresh"].spark_fn(spark, SF))
     token = text_base_index_path(SF).rsplit("/", 1)[-1]
@@ -366,7 +228,6 @@ def test_bm25_after_refresh_reads_base_with_pushed_terms(spark):
     assert "In(token" in plan, f"token filter not pushed to the base scan:\n{plan}"
     n = count_shuffle_exchanges(plan)
     assert n <= 3, f"refresh serving plans {n} keyed shuffles (budget 3):\n{plan}"
-    assert "CartesianProduct" not in plan
 
 
 def test_shapley_efficiency_axiom(spark):

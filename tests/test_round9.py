@@ -3,7 +3,8 @@
 Oracle hashes certify value equality; these tests pin the PROPERTIES
 each operator exists for (bucket thirds, streaming/batch rule
 agreement, greedy monotonicity, statistic sanity) and the plan shapes
-that make them scale (shuffle budgets, broadcast models, no cartesian).
+that make them scale (shuffle budgets, broadcast models), read off the
+session's catalog sweep.
 """
 
 from __future__ import annotations
@@ -11,13 +12,8 @@ from __future__ import annotations
 import re
 
 import pytest
+from catalog_plans import broadcast_joins, budgets, over_budget
 
-from kafka_stream_service_spark.plans import (
-    assert_broadcast_join,
-    assert_no_cartesian,
-    count_shuffle_exchanges,
-    physical_plan,
-)
 from kafka_stream_service_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -137,32 +133,23 @@ def test_dsir_scores_every_document_once(spark):
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        ("q_gopher_quality_rules", 3),
-        ("q_dsir_importance_weights", 6),
-        ("q_welch_ttest", 3),
-        ("q_hits_two_iterations", 17),
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_gopher_quality_rules", "q_dsir_importance_weights",
+            "q_welch_ttest", "q_hits_two_iterations"),
 )
-def test_round9_ops_shuffle_budget(spark, name, max_exchanges):
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
+def test_round9_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})
 
 
-def test_ccnet_model_attaches_by_broadcast(spark):
+def test_ccnet_model_attaches_by_broadcast(catalog_sweep):
     """The bigram-TYPE-grain model must broadcast into the per-doc tf
     join — corpus rows never shuffle against the model."""
-    df = QUERIES["q_ccnet_perplexity_buckets"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=2)  # scored model + n_total scalar
-    assert_no_cartesian(df)
+    plan = catalog_sweep["q_ccnet_perplexity_buckets"].plan
+    assert broadcast_joins(plan) >= 2  # scored model + n_total scalar
 
 
-def test_dsir_weight_table_broadcasts(spark):
-    df = QUERIES["q_dsir_importance_weights"].spark_fn(spark, SF)
-    assert_broadcast_join(df, at_least=1)
-    assert_no_cartesian(df)
+def test_dsir_weight_table_broadcasts(catalog_sweep):
+    assert broadcast_joins(catalog_sweep["q_dsir_importance_weights"].plan) >= 1
 
 
 def test_chrf_counts_only_endpoint_docs(spark):
@@ -189,11 +176,10 @@ def test_chrf_counts_only_endpoint_docs(spark):
     assert len(endpoints) < n_docs  # the prune actually prunes
     for r in rows:
         assert r.id_a in endpoints and r.id_b in endpoints
-    assert_no_cartesian(QUERIES["q_chrf_pair_fscore"].spark_fn(spark, SF))
 
 
-def test_welch_is_one_scan_partial_agg(spark):
-    plan = physical_plan(QUERIES["q_welch_ttest"].spark_fn(spark, SF))
+def test_welch_is_one_scan_partial_agg(catalog_sweep):
+    plan = catalog_sweep["q_welch_ttest"].plan
     # exactly one scan NODE (formatted explain prints each node twice:
     # once in the tree, once in the detail section)
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
@@ -266,16 +252,9 @@ def test_portable_hash_passes_ks_uniformity(spark):
 
 
 @pytest.mark.parametrize(
-    "name,max_exchanges",
-    [
-        ("q_permutation_test_hashed", 4),
-        ("q_quantile_normalization", 4),
-        ("q_ols_normal_equations", 2),
-        ("q_runs_test_daily", 4),
-        ("q_curation_mixture", 10),
-    ],
+    ("name", "max_exchanges"),
+    budgets("q_permutation_test_hashed", "q_quantile_normalization",
+            "q_ols_normal_equations", "q_runs_test_daily", "q_curation_mixture"),
 )
-def test_round9_late_ops_shuffle_budget(spark, name, max_exchanges):
-    plan = physical_plan(QUERIES[name].spark_fn(spark, SF))
-    n = count_shuffle_exchanges(plan)
-    assert n <= max_exchanges, f"{name}: {n} exchanges (budget {max_exchanges}):\n{plan}"
+def test_round9_late_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
+    assert not over_budget(catalog_sweep, {name: max_exchanges})

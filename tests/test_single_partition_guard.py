@@ -16,7 +16,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from kafka_stream_service_spark.plans import (
-    assert_no_data_scale_single_partition,
     physical_plan,
     python_lane_offenders,
     single_partition_offenders,
@@ -41,19 +40,19 @@ def test_global_sort_collapse_not_misattributed(spark):
     df = _events(spark).withColumn(
         "rn", F.row_number().over(Window.partitionBy("k").orderBy("v"))
     )
-    assert_no_data_scale_single_partition(df)
+    assert not single_partition_offenders(physical_plan(df))
 
 
 def test_post_aggregation_single_partition_is_safe(spark):
     # Global aggregate: rows are reduced to ONE before the SinglePartition
     # exchange — the legitimate scalar-attachment shape the catalog uses.
     df = _events(spark).agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-    assert_no_data_scale_single_partition(df)
+    assert not single_partition_offenders(physical_plan(df))
 
 
 def test_limit_single_partition_is_safe(spark):
     df = _events(spark).limit(5)
-    assert_no_data_scale_single_partition(df)
+    assert not single_partition_offenders(physical_plan(df))
 
 
 def test_build_left_join_walks_stream_side(spark):
@@ -245,16 +244,12 @@ def test_python_lane_on_broadcast_build_side_is_exempt(spark):
     ]
 
 
-def test_q_knn_ivf_lanes_have_operator_chosen_widths(spark):
+def test_q_knn_ivf_lanes_have_operator_chosen_widths(catalog_sweep):
     """The shipping IVF row (rows-only, so its plan shape IS the check):
     the corpus assignment gemm must sit above ivf_knn's internal
     round-robin fan; the broadcast-bound probe lane must NOT be fanned
     — no RoundRobinPartitioning anywhere under its BroadcastExchange."""
-    from kafka_stream_service_spark.queries.registry import QUERIES
-
-    plan = physical_plan(
-        QUERIES["q_knn_ivf"].spark_fn(spark, "/root/testdata/sf0.001")
-    )
+    plan = catalog_sweep["q_knn_ivf"].plan
     assert "RoundRobinPartitioning" in plan, plan[:1500]
     assert python_lane_offenders(plan) == [], plan[:1500]
     # the probe branch: everything beneath the BroadcastExchange must be
@@ -292,8 +287,9 @@ def test_sweep_goes_red_on_plan_build_failure(spark, sf_dir):
     """Red-path proof (VERDICT r12 next-steps #2): a query whose
     spark_fn raises at plan time must surface as ``broken`` — the old
     ``except Exception: continue`` made exactly this invisible. The same
-    sweep must flag a row that plans a cartesian product and a row that
-    outputs an array column."""
+    sweep must flag a row that plans a cartesian product, a row that
+    outputs an array column, and a row over its shuffle budget; a budget
+    on a broken or unregistered row is flagged too."""
 
     class _BrokenSpec:
         @staticmethod
@@ -311,10 +307,15 @@ def test_sweep_goes_red_on_plan_build_failure(spark, sf_dir):
         def spark_fn(spark, sf):
             return spark.range(3).select(F.array("id", "id").alias("pair"))
 
+    class _TwoShufflesSpec:
+        @staticmethod
+        def spark_fn(spark, sf):
+            return spark.range(30).repartition(4, "id").groupBy(F.col("id") % 3).count()
+
     sweep = catalog_plans.build_rows(
         spark,
         {"q_deliberately_broken": _BrokenSpec, "q_cartesian": _CartesianSpec,
-         "q_array_out": _ArraySpec},
+         "q_array_out": _ArraySpec, "q_two_shuffles": _TwoShufflesSpec},
         sf_dir,
     )
     broken = catalog_plans.broken(sweep)
@@ -324,6 +325,11 @@ def test_sweep_goes_red_on_plan_build_failure(spark, sf_dir):
     assert not catalog_plans.broken(sweep, {"q_deliberately_broken": "red-path proof"})
     assert catalog_plans.cartesian(sweep) == ["q_cartesian"]
     assert catalog_plans.complex_outputs(sweep) == {"q_array_out": ["pair"]}
+    over = catalog_plans.over_budget(
+        sweep, {"q_cartesian": 1, "q_array_out": 1, "q_two_shuffles": 1})
+    assert list(over) == ["q_two_shuffles"], over
+    over = catalog_plans.over_budget(sweep, {"q_deliberately_broken": 9, "q_unregistered": 9})
+    assert list(over) == ["q_deliberately_broken", "q_unregistered"], over
 
 
 def test_no_data_scale_single_partition_anywhere_in_catalog(catalog_sweep):

@@ -339,3 +339,71 @@ def test_one_test_helper_builds_the_catalog():
         "build catalog rows in a loop only in tests/catalog_plans.py:build_rows, "
         f"and read its session-wide sweep (the catalog_sweep fixture): {sorted(found)}"
     )
+
+
+# One plan table: a per-row plan check reads the plan the session's
+# catalog sweep built (``catalog_sweep[name].plan``). A test plans a
+# registered row itself only when the plan depends on a stored artifact
+# it builds first; each such test is named here with that artifact.
+_OWN_PLAN_BUILD = {
+    ("test_round10_plans.py", "test_delta_probe_reads_stored_buckets"): "build_bucket_index",
+    ("test_round11.py", "test_delta_probe_reads_stored_index"): "build_sem_index",
+    ("test_round11_plans.py", "test_ivf_stored_reads_index_and_broadcasts_probes"): "build_sem_index",
+    ("test_round11_plans.py", "test_rouge2_reads_pair_snapshot"): "build_pair_index",
+    ("test_round11_plans.py", "test_bm25_serving_reads_stored_postings"): "build_text_index",
+    ("test_round11_plans.py", "test_text_index_delta_reads_stored_base"): "build_text_base_index",
+    ("test_round11_plans.py", "test_bm25_after_refresh_reads_base_with_pushed_terms"):
+        "build_text_base_index",
+    ("test_round12.py", "test_ivf_refresh_reads_stored_base_index"): "build_ivf_base_index",
+    ("test_round12.py", "test_ivf_refresh_census_read_is_zone_map_pruned"): "build_ivf_base_index",
+}
+_PLAN_READERS = {"physical_plan", "count_shuffle_exchanges"}
+
+
+def _is_row_build(node) -> bool:
+    """``QUERIES[...].spark_fn(...)``"""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "spark_fn"
+        and isinstance(node.func.value, ast.Subscript)
+        and isinstance(node.func.value.value, ast.Name)
+        and node.func.value.value.id == "QUERIES"
+    )
+
+
+def _row_plan_sites(path: Path) -> set[tuple[str, str]]:
+    """Test functions that hand a registered row's frame, built in the
+    test, to a plan reader or a plan assert."""
+    found = set()
+    for fn in ast.walk(ast.parse(path.read_text())):
+        if not (isinstance(fn, ast.FunctionDef) and fn.name.startswith("test_")):
+            continue
+        frames = {
+            t.id
+            for node in ast.walk(fn) if isinstance(node, ast.Assign)
+            and any(_is_row_build(n) for n in ast.walk(node.value))
+            for t in node.targets if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(fn):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            if name not in _PLAN_READERS and not name.startswith("assert_"):
+                continue
+            if any(_is_row_build(n) or (isinstance(n, ast.Name) and n.id in frames)
+                   for a in node.args for n in ast.walk(a)):
+                found.add((path.name, fn.name))
+    return found
+
+
+def test_row_plans_are_read_from_the_catalog_sweep():
+    found = set().union(*(_row_plan_sites(p) for p in sorted((REPO / "tests").glob("test_*.py"))))
+    assert found == set(_OWN_PLAN_BUILD), (
+        "read a registered row's plan from the catalog_sweep fixture "
+        "(catalog_sweep[name].plan) instead of building the row again; a "
+        "test whose plan needs a stored artifact built first goes in "
+        f"_OWN_PLAN_BUILD. Unlisted: {sorted(found - set(_OWN_PLAN_BUILD))}; "
+        f"stale: {sorted(set(_OWN_PLAN_BUILD) - found)}"
+    )
