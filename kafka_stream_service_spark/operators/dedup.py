@@ -22,26 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition tiny single-file inputs so Arrow/Python stages use all
-    cores. A small corpus parquet arrives as ONE partition locally (one
-    python worker); at 100 TB the input is already many splits and this
-    round-robin repartition is skipped.
-
-    Partition count comes from the input files (no ``df.rdd`` — that
-    forces a plan→RDD conversion per call and throws on streaming
-    frames); streaming inputs pass through untouched."""
-    if df.isStreaming:
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())  # file-index lookup, no job
-    except Exception:  # non-file source (memory/createDataFrame) — leave as-is
-        return df
-    if 0 < n_files < max(2, target // 2):
-        return df.repartition(target)
-    return df
+from .ranks import cpu_fanout
 
 
 def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
@@ -124,7 +105,7 @@ def shingle_frame(
                 out.append(list(hs))
             yield pd.DataFrame({id_col: pdf[id_col], "shingles": out})
 
-    return _spread(docs.select(id_col, text_col)).mapInPandas(
+    return cpu_fanout(docs.select(id_col, text_col)).mapInPandas(
         shingle_batches, schema=f"{id_col} long, shingles array<long>"
     )
 
@@ -186,7 +167,7 @@ def minhash_frame(
                 sh_out.append(arr.astype(np.int64).tolist())
             yield pd.DataFrame({id_col: pdf[id_col], "shingles": sh_out, "sig": sig_out})
 
-    return _spread(docs.select(id_col, text_col)).mapInPandas(
+    return cpu_fanout(docs.select(id_col, text_col)).mapInPandas(
         batches_fn, schema=f"{id_col} long, shingles array<long>, sig array<long>"
     )
 
@@ -321,7 +302,7 @@ def simhash_frame(
                 out.append(fp)
             yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
 
-    return _spread(docs.select(id_col, text_col)).mapInPandas(
+    return cpu_fanout(docs.select(id_col, text_col)).mapInPandas(
         simhash_batches, schema=f"{id_col} long, simhash long"
     )
 

@@ -62,8 +62,17 @@ def data_sized_partitions(df: DataFrame) -> int:
     floors it at cluster width (32 locally, thousands on a real
     cluster); an 8x-cluster cap bounds runaway join-cardinality
     estimates. The driver-side offsets stay bounded by this count."""
-    spark = df.sparkSession
-    cluster = spark.sparkContext.defaultParallelism
+    cluster = df.sparkSession.sparkContext.defaultParallelism
+    est = _scan_splits(df)
+    if est is None:  # stats unavailable (e.g. non-SQL plans): cluster width
+        est = cluster
+    return max(_MIN_PARTITIONS, cluster, min(est, 8 * cluster))
+
+
+def _scan_splits(df: DataFrame) -> int | None:
+    """Plan-time split estimate: Catalyst's ``sizeInBytes`` for the
+    optimized plan over ``spark.sql.files.maxPartitionBytes``, or None
+    when stats are unavailable. The one place the package reads it."""
     try:
         # py4j returns small BigInts as Python ints and large ones as
         # JavaObjects; str() round-trips both
@@ -71,12 +80,11 @@ def data_sized_partitions(df: DataFrame) -> int:
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
         max_bytes = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
+            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
         )
-        est = -(-size // max(max_bytes, 1))
-    except Exception:  # stats unavailable (e.g. non-SQL plans): cluster width
-        est = cluster
-    return max(_MIN_PARTITIONS, cluster, min(est, 8 * cluster))
+    except Exception:
+        return None
+    return -(-size // max(max_bytes, 1))
 
 
 _BYTE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
@@ -104,20 +112,12 @@ def cpu_fanout(df: DataFrame) -> DataFrame:
     production scale (bytes >> cluster x maxPartitionBytes) this is a
     no-op — no shuffle is ever added to a big input. Estimation is
     plan-time Catalyst stats, same contract as data_sized_partitions
-    (never .rdd — that finalizes AQE and double-executes the input)."""
-    spark = df.sparkSession
-    cluster = spark.sparkContext.defaultParallelism
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        max_bytes = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        )
-        est = -(-size // max(max_bytes, 1))
-    except Exception:  # stats unavailable: leave the input untouched
-        return df
-    if est >= cluster:
+    (never .rdd — that finalizes AQE and double-executes the input).
+    The package's one widener for scan-rooted CPU lanes (SCALE.md "One
+    lane widener")."""
+    cluster = df.sparkSession.sparkContext.defaultParallelism
+    est = _scan_splits(df)
+    if est is None or est >= cluster:  # no stats: leave the input untouched
         return df
     return df.repartition(cluster)
 

@@ -37,6 +37,18 @@ def revenue_expr() -> Column:
 REVENUE_SQL = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))"
 
 
+def sorted_fold(struct_col: Column, field: str) -> Column:
+    """Order-fixed double sum: collect the group's structs, sort them by
+    their leading key and fold ``field`` left to right, so the sum does
+    not depend on partition or arrival order. Pair with chunked keys to
+    keep each collected list bounded."""
+    return F.aggregate(
+        F.transform(F.sort_array(F.collect_list(struct_col)), lambda s: s[field]),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def _scratch_path(name: str, sf_dir: str) -> str:
     """``<root>/<name>_<sf key>`` under the per-user scratch root: uid in
     the root's name, mode 0700, ownership verified, so another user on a

@@ -681,7 +681,8 @@ def q_cogroup_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cogroup reuses it unshuffled). The count grows with the input
     # like any data-sized exchange; while the input is no bigger than an
     # empty one by that measure, one task per core, since a second wave
-    # of Python tasks only adds worker round trips
+    # of Python tasks only adds worker round trips (this floor differs
+    # from data_sized_partitions' own only below 8 cores)
     sized = data_sized_partitions(base)
     n = (
         sized

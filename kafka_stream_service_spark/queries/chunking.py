@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ranks import cpu_fanout
 from ..tables import tables
 from .registry import query
 
@@ -145,11 +146,9 @@ def q_boilerplate_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation's map-side partial combine collapses each input split to
     its distinct bigrams before the exchange.
     """
-    from ..operators.dedup import _spread
-
     # fan the single-split fixture scan across cores before the explode
     # (no-op on many-split inputs at scale)
-    d = _spread(tables(spark, sf_dir)["documents"])
+    d = cpu_fanout(tables(spark, sf_dir)["documents"])
     # token array in its OWN projection — referenced once inside the
     # per-position lambda, the raw split() would be inlined and re-split
     # the text per bigram position (the decontaminate O(len^2) trap)

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import tables
+from ._util import sorted_fold
 from .registry import query
 
 
@@ -424,15 +425,6 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and therefore the chunk assignment — is total and engine-portable
     rank = F.row_number().over(W.partitionBy("doc_id").orderBy("token"))
     ranked = scored.withColumn("chunk", F.floor((rank - F.lit(1)) / F.lit(256)))
-
-    def sorted_fold(struct_col, value_field: str):
-        return F.aggregate(
-            F.transform(
-                F.sort_array(F.collect_list(struct_col)), lambda s: s[value_field]
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
 
     chunks = ranked.groupBy("doc_id", "chunk").agg(
         sorted_fold(F.struct("token", "part"), "part").alias("chunk_sum"),

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import integer_pagerank
+from ..operators.ranks import cpu_fanout
 from ..tables import tables
 from .registry import query
 
@@ -67,11 +68,10 @@ def _candidate_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rare-shingle candidate edges (u < v), lineage-truncated: the
     shingle explode feeds three consumers (DF agg + both sides of the
     pair join) and the edge list fans out again downstream — checkpoint
-    each tier once. `_spread` fans the single-split fixture scan across
-    cores (no-op on many-split inputs at scale)."""
-    from ..operators.dedup import _spread
-
-    d = _spread(tables(spark, sf_dir)["documents"])
+    each tier once. `cpu_fanout` fans the scan across cores when the
+    plan's size estimate under-splits the cluster (a no-op on many-split
+    inputs at scale)."""
+    d = cpu_fanout(tables(spark, sf_dir)["documents"])
     # token array materialized in its own projection (decontaminate's
     # O(len^2) inline-split trap — the lambda would re-split per position)
     t = d.select("doc_id", F.split(F.col("text"), " ").alias("w"))

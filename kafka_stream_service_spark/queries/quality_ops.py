@@ -21,8 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ranks import cpu_fanout
 from ..tables import tables
-from ._util import dec
+from ._util import dec, sorted_fold
 from .registry import query
 
 
@@ -282,9 +283,7 @@ def q_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gram partitions; the per-(gram, doc) pre-aggregation bounds any
     gram's partition by its distinct-doc count before the window runs.
     """
-    from ..operators.dedup import _spread
-
-    d = _spread(tables(spark, sf_dir)["documents"])
+    d = cpu_fanout(tables(spark, sf_dir)["documents"])
     t = d.select("doc_id", F.split("text", " ").alias("w")).filter(F.size("w") >= 5)
     g = t.select(
         "doc_id",
@@ -524,10 +523,9 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final top-5 window partitions by label. The corpus never
     self-joins and never moves: one explode-agg shuffle + one broadcast.
     """
-    from ..operators.dedup import _spread
     from .corpus_ops import _quantized
 
-    q8 = _quantized(_spread(tables(spark, sf_dir)["embeddings"])).select(
+    q8 = _quantized(cpu_fanout(tables(spark, sf_dir)["embeddings"])).select(
         "vec_id", "label", "qv"
     )
     pos = q8.select(
@@ -858,9 +856,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     DF join-back, per-doc position window, prefix self-join, two
     verification joins — each key-partitioned, nothing quadratic.
     """
-    from ..operators.dedup import _spread
-
-    d = _spread(tables(spark, sf_dir)["documents"])
+    d = cpu_fanout(tables(spark, sf_dir)["documents"])
     t = d.select("doc_id", F.split("text", " ").alias("w")).filter(F.size("w") >= 3)
     tok = (
         t.select(
@@ -1037,13 +1033,6 @@ def q_corpus_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = j.select("lang", "token", (pa * F.log(pa / pb)).alias("term"))
     rank = F.row_number().over(W.partitionBy("lang").orderBy("token"))
     ranked = terms.withColumn("chunk", F.floor((rank - F.lit(1)) / F.lit(256)))
-
-    def sorted_fold(struct_col, field):
-        return F.aggregate(
-            F.transform(F.sort_array(F.collect_list(struct_col)), lambda s: s[field]),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
 
     chunks = ranked.groupBy("lang", "chunk").agg(
         sorted_fold(F.struct("token", "term"), "term").alias("chunk_sum")

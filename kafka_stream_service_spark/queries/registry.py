@@ -177,7 +177,9 @@ NEW_THIS_ROUND: tuple[str, ...] = ()
 # MANDATORY). That tier carries the re-certs for the two r8-verdict
 # rows whose plans change in r17 with the md5 lane's explicit width,
 # q_dedup_incremental_snapshot and q_lsh_recall_audit. Then any later
-# plan-change re-certs, then the oldest r9 rows.
+# plan-change re-certs, then the oldest r9 rows. Later plan changes so
+# far: q_bucketed_join (a merge join hint replaces its broadcast-
+# threshold conf and the eager localCheckpoint that ran under it).
 #
 # Session conf books no seats (the q_audio_zero_crossing "runtime conf
 # books no seat" precedent from r15): it changes no logical or static

@@ -390,7 +390,8 @@ def q_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_days = daily.count()  # bounded scalar pull (day-grain series)
     # AQE coalesces the tiny day-grain frame to one partition, which
     # would serialize the O(n^2/2) pair generation through a single
-    # nested-loop task — spread the probe side explicitly.
+    # nested-loop task — spread the probe side explicitly. Not cpu_fanout:
+    # that sizes from the scan and passes a big input through unwidened.
     a, b = daily.repartition(16).alias("a"), daily.alias("b")
     slope = F.floor(
         F.lit(1000000.0)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ranks import cpu_fanout
 from ..tables import tables
 from .graph_q import _EDGES_CTE, _candidate_edges
 from .registry import query
@@ -78,14 +79,12 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fixture arrives as one file -> one partition; spread BEFORE the
     # x32 fan-out + per-(row,replicate) md5 or the whole hash cost lands
     # on a single task (measured 10 s -> ~1 s at sf0.1)
-    fanned = (
+    fanned = cpu_fanout(
         o.select(
             F.col("o_orderkey"),
             F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
         )
-        .repartition(32)
-        .select("o_orderkey", "cents", reps)
-    )
+    ).select("o_orderkey", "cents", reps)
     u = (
         F.conv(
             F.substring(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import Column
 
+from ..operators.ranks import cpu_fanout
 from ..tables import tables
 from .dedup2 import _h_sql
 from .registry import query
@@ -57,9 +58,7 @@ BLOOM_SRC = "src7"
 
 
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _spread
-
-    d = _spread(tables(spark, sf_dir)["documents"])
+    d = cpu_fanout(tables(spark, sf_dir)["documents"])
     return d.select("source", F.explode(F.split("text", " ")).alias("tok")).filter(
         F.length("tok") >= 1
     )
@@ -311,9 +310,7 @@ def q_hll_registers_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (q_approx_aggregates verifies its bounds), this query verifies
     the ALGEBRA of the state itself cross-engine.
     """
-    from ..operators.dedup import _spread
-
-    d = _spread(tables(spark, sf_dir)["documents"])
+    d = cpu_fanout(tables(spark, sf_dir)["documents"])
     w = d.select(F.split("text", " ").alias("w"))
     toks = w.select(
         F.explode(
@@ -382,9 +379,7 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     models / GBDTs at corpus scale — no vocabulary dictionary to build,
     ship, or keep consistent across 1000 executors.
     """
-    from ..operators.dedup import _spread
-
-    d = _spread(tables(spark, sf_dir)["documents"])
+    d = cpu_fanout(tables(spark, sf_dir)["documents"])
     wc = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.length("tok") >= 1)

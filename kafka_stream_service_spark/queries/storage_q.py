@@ -36,10 +36,10 @@ BUCKETS = 8
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact join over BUCKETED storage: both sides written
     bucketBy(8, orderkey) + sortBy, then joined WITHOUT any exchange on
-    the join path (the plan property tests/test_bucketing.py asserts;
-    broadcast is disabled here so bucketing, not a broadcast, satisfies
-    the distribution). The oracle is the plain join — bucketing must be
-    result-invisible.
+    the join path (the plan property tests/test_bucketing.py asserts; a
+    merge join hint keeps the fixture-sized sides from broadcasting, so
+    bucketing, not a broadcast, satisfies the distribution). The oracle
+    is the plain join — bucketing must be result-invisible.
 
     At 100 TB this is the single biggest recurring saving for a fact
     table joined daily: the shuffle is paid ONCE at write time and
@@ -61,23 +61,15 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     li = spark.table("li_b")
     orders = spark.table("ord_b")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = (
-            li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                dsum(dec("l_extendedprice"), "sum_price"),
-            )
+    return (
+        li.hint("merge")
+        .join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            dsum(dec("l_extendedprice"), "sum_price"),
         )
-        # materialize under the no-broadcast conf so the executed plan is
-        # the bucket-co-located sort-merge join, then restore the session
-        out = out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    return out
+    )
 
 
 @query(

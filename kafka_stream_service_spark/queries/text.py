@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import vocabulary_fingerprint
 from ..tables import tables
 from .registry import query
 
@@ -222,10 +223,9 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (word-order-insensitive), and head hash — md5/sha256 are identical
     across engines, so fingerprints are portable."""
     d = tables(spark, sf_dir)["documents"]
-    vocab_fp = F.md5(F.array_join(F.sort_array(F.array_distinct(F.split(F.col("text"), " "))), " "))
     return d.select(
         "doc_id",
-        vocab_fp.alias("fingerprint"),
+        vocabulary_fingerprint(F.col("text")).alias("fingerprint"),
         F.md5(F.col("text")).alias("exact_hash"),
         F.sha2(F.substring(F.col("text"), 1, 64), 256).alias("head_hash"),
     )

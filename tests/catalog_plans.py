@@ -100,11 +100,15 @@ def broadcast_joins(plan: str) -> int:
 
 
 # SCALE.md's shuffle inventory: the most keyed (hash or range) exchanges
-# each row's plan may hold at sf0.001. A budget is a cap, not a count.
-# A static plan repeats a shared rollup once per consumer (AQE reuses
-# the exchange at run time), so some budgets count one rollup twice.
-# Plans behind an eager localCheckpoint show only the post-checkpoint
-# stage. Stored-index rows whose budget needs the artifact built first
+# each row's plan may hold at sf0.001. Each budget is its row's count,
+# the larger of its sf0.001 and sf0.1 plans' counts, so one added
+# shuffle fails the gate. A static plan repeats a shared rollup once per
+# consumer (AQE reuses the exchange at run time), so some budgets count
+# one rollup twice. A reason may name more shuffles than the fixture
+# plan holds; its "fixture plan:" note says why: sides it broadcasts,
+# stages hidden behind an eager localCheckpoint (the plan shows only
+# the post-checkpoint stage), and SinglePartition exchanges (1-row
+# folds, windows over all rows), none of which a budget counts. Stored-index rows whose budget needs the artifact built first
 # keep their own test (q_text_index_delta, q_bm25_after_refresh,
 # q_knn_ivf_refresh).
 SHUFFLE_BUDGETS: dict[str, int] = {
@@ -124,75 +128,75 @@ SHUFFLE_BUDGETS: dict[str, int] = {
     "q_rolling_anomaly": 1,  # ONE shuffle: the per-user window
     "q_ewma_smoothing": 1,  # ONE shuffle: the per-user window
     # sketches, hashing and corpus operators
-    "q_countmin_heavy_hitters_portable": 4,  # vocab + (j,bucket) cells + TakeOrdered candidates + estimate; probes broadcast
-    "q_hll_registers_portable": 3,  # vocab distinct + register groupBy
+    "q_countmin_heavy_hitters_portable": 2,  # vocab + (j,bucket) cells + TakeOrdered candidates + estimate; probes broadcast; fixture plan: 1 broadcast, reads a checkpoint
+    "q_hll_registers_portable": 2,  # vocab distinct + register groupBy
     "q_feature_hashing": 2,  # (doc,tok) count + (doc,dim) combine
-    "q_interval_sweepline": 3,  # per-day delta fold + the bounded day-grain running-sum window
+    "q_interval_sweepline": 1,  # per-day delta fold + the bounded day-grain running-sum window; fixture plan: 2 broadcast, 1 single-partition
     "q_pq_encode_portable": 2,  # (vec,m) min-agg + vec_id regroup
-    "q_dedup_keep_best": 2,  # prefix-key window + regroup
-    "q_source_quota": 2,  # source window + regroup
-    "q_event_paths_topk": 3,  # user window + path count + TakeOrdered
+    "q_dedup_keep_best": 1,  # prefix-key window + regroup; the regroup reuses the window's partitioning
+    "q_source_quota": 1,  # source window + regroup; the regroup reuses the window's partitioning
+    "q_event_paths_topk": 2,  # user window + path count + TakeOrdered; TakeOrdered is not a keyed shuffle
     "q_token_budget_allocation": 4,  # source agg + two scalar folds
-    "q_rank_normalize_embeddings": 3,  # pos windows + vec regroup
+    "q_rank_normalize_embeddings": 2,  # pos windows + vec regroup; fixture plan: reads a checkpoint
     # r14: each median is a ranked-HISTOGRAM pass (map-combined (type,
     # value) agg + window by type); the med subplan's 2 exchanges repeat
     # inside the dev branch's two consumers until AQE reuses them, and
     # every exchange moves the domain-bounded histogram, never the corpus
     "q_mad_outliers": 7,
-    "q_mom_growth": 3,  # month agg + series window
-    "q_attribution_last_touch": 3,  # user window + channel agg
-    "q_eval_auc_pr": 5,  # score agg + series windows + 1-row folds
-    "q_bigram_lm_score": 5,  # bigram/unigram counts + doc tf + regroup
+    "q_mom_growth": 1,  # month agg + series window; the series window is single-partition
+    "q_attribution_last_touch": 2,  # user window + channel agg
+    "q_eval_auc_pr": 3,  # score agg + series windows + 1-row folds; fixture plan: 2 broadcast, 3 single-partition
+    "q_bigram_lm_score": 4,  # bigram/unigram counts + doc tf + regroup; fixture plan: 2 broadcast
     "q_group_kfold": 2,  # map-side hash + one agg
     # statistical tests and estimators on rollups
-    "q_kaplan_meier": 5,  # t_days rollup + risk-set folds on the duration grain
-    "q_cusum_changepoint": 5,  # month rollup, repeated per consumer (runtime-reused)
-    "q_isotonic_calibration": 6,  # bin rollups for the pooled-violator passes
-    "q_cuped_adjustment": 5,  # user pre/post rollups + arm grain
-    "q_kendall_tau": 6,  # day rollup + bounded pair frame (behind a checkpoint)
-    "q_anova_oneway": 4,  # event_type rollup + scalar grand-mean folds
-    "q_seasonal_decompose": 6,  # day rollup + bounded trend/season windows (behind a checkpoint)
-    "q_compaction_bin_packing": 4,  # partition rollup + bounded packing window
-    "q_bpe_apply_merges": 3,  # word rollup; merges run on the vocabulary
-    "q_temperature_mixing": 3,  # source counts, repeated per consumer
-    "q_psi_drift": 4,  # bin rollups of the two samples
-    "q_woe_binning": 4,  # bin rollups of the two classes
-    "q_ece_calibration": 4,  # confidence-bin rollups, repeated per consumer
-    "q_decision_tree_score": 3,  # map-side scoring + leaf rollup
+    "q_kaplan_meier": 1,  # t_days rollup + risk-set folds on the duration grain; fixture plan: 3 broadcast, 2 single-partition
+    "q_cusum_changepoint": 4,  # month rollup, repeated per consumer (runtime-reused); fixture plan: 3 broadcast, 4 single-partition
+    "q_isotonic_calibration": 3,  # bin rollups for the pooled-violator passes; fixture plan: 2 broadcast, 2 single-partition
+    "q_cuped_adjustment": 3,  # user pre/post rollups + arm grain; fixture plan: 1 broadcast, 1 single-partition
+    "q_kendall_tau": 0,  # day rollup + bounded pair frame (behind a checkpoint); fixture plan: 2 broadcast, reads a checkpoint, 2 single-partition
+    "q_anova_oneway": 1,  # event_type rollup + scalar grand-mean folds; fixture plan: 1 single-partition
+    "q_seasonal_decompose": 1,  # day rollup + bounded trend/season windows (behind a checkpoint); fixture plan: 1 broadcast, reads a checkpoint
+    "q_compaction_bin_packing": 1,  # partition rollup + bounded packing window; the packing window is single-partition
+    "q_bpe_apply_merges": 1,  # word rollup; merges run on the vocabulary
+    "q_temperature_mixing": 2,  # source counts, repeated per consumer; fixture plan: 1 broadcast, 1 single-partition
+    "q_psi_drift": 2,  # bin rollups of the two samples; fixture plan: 1 broadcast, 1 single-partition
+    "q_woe_binning": 2,  # bin rollups of the two classes; fixture plan: 1 broadcast, 1 single-partition
+    "q_ece_calibration": 2,  # confidence-bin rollups, repeated per consumer; fixture plan: 1 broadcast, 1 single-partition
+    "q_decision_tree_score": 1,  # map-side scoring + leaf rollup
     "q_gopher_quality_rules": 3,  # (doc, stat) rollup + doc grain + source census
     "q_dsir_importance_weights": 6,  # bucket model rollups + doc grain
-    "q_welch_ttest": 3,  # one scan, map-side moment combine
+    "q_welch_ttest": 0,  # one scan, map-side moment combine; fixture plan: 1 single-partition
     "q_hits_two_iterations": 17,  # two hub/authority rounds on the edge grain
-    "q_permutation_test_hashed": 4,  # perm rollup + observed-statistic fold
-    "q_quantile_normalization": 4,  # per-source ranks + reference by rank
-    "q_ols_normal_equations": 2,  # one scan, one global moment rollup
-    "q_runs_test_daily": 4,  # day rollup + bounded run windows
-    "q_curation_mixture": 10,  # quality census (doc, stat) + source grain, per consumer
-    "q_exact_substr_spans": 5,  # shingle census + semi-join + per-doc islands
-    "q_exact_substr_stats": 8,  # manifest rollup adds one doc-grain join + source rollup
-    "q_weighted_sample_es": 2,  # scan-bound key computation + per-source rank
-    "q_mann_kendall_trend": 8,  # day-grain rollup + bounded pair frame + scalar aggregates
-    "q_logrank_test": 6,  # duration-grain rollup + prefix window + scalar aggregate
-    "q_nelson_aalen": 4,  # duration-grain rollup + prefix window
-    "q_cliffs_delta": 6,  # histogram + distributed prefix scan + bounded aggregate
+    "q_permutation_test_hashed": 2,  # perm rollup + observed-statistic fold; fixture plan: 1 broadcast, 1 single-partition
+    "q_quantile_normalization": 3,  # per-source ranks + reference by rank; fixture plan: 1 broadcast
+    "q_ols_normal_equations": 0,  # one scan, one global moment rollup; fixture plan: 1 single-partition
+    "q_runs_test_daily": 1,  # day rollup + bounded run windows; the run windows are single-partition
+    "q_curation_mixture": 8,  # quality census (doc, stat) + source grain, per consumer; fixture plan: 13 broadcast, reads a checkpoint, 3 single-partition
+    "q_exact_substr_spans": 2,  # shingle census + semi-join + per-doc islands; fixture plan: 1 broadcast
+    "q_exact_substr_stats": 3,  # manifest rollup adds one doc-grain join + source rollup; fixture plan: 2 broadcast
+    "q_weighted_sample_es": 1,  # scan-bound key computation + per-source rank
+    "q_mann_kendall_trend": 1,  # day-grain rollup + bounded pair frame + scalar aggregates; fixture plan: 3 broadcast, reads a checkpoint, 3 single-partition
+    "q_logrank_test": 1,  # duration-grain rollup + prefix window + scalar aggregate; fixture plan: 3 broadcast, 2 single-partition
+    "q_nelson_aalen": 1,  # duration-grain rollup + prefix window; fixture plan: 3 broadcast, 2 single-partition
+    "q_cliffs_delta": 0,  # histogram + distributed prefix scan + bounded aggregate; fixture plan: 1 broadcast, reads a checkpoint, 1 single-partition
     "q_heaps_law_fit": 8,  # token pass + two bounded rollups + 10-point fit
-    "q_matryoshka_energy": 2,  # one scan + 4-way prefix fan-out + label rollup
-    "q_brier_decomposition": 3,  # scoring pass + 10-bin groupBy + broadcast totals
+    "q_matryoshka_energy": 1,  # one scan + 4-way prefix fan-out + label rollup; fixture plan: reads a checkpoint
+    "q_brier_decomposition": 1,  # scoring pass + 10-bin groupBy + broadcast totals
     # scan + vec_id self-join + dims^2-grain rollups + tiny joins: no
     # data-scale exchange after the covariance rollup
-    "q_power_iteration_top_eigvec": 10,
-    "q_semdedup_delta_edges": 8,  # delta quantize + stored-centroid assign + per-cluster blocks + CC
-    "q_knn_ivf_stored": 4,  # probe rank window + member fetch + topk window
-    "q_rrf_fusion": 3,  # one scored frame, three windows on it, no re-scan
-    "q_mrr_recall_eval": 3,  # one scored frame, one window, one query-grain rollup
+    "q_power_iteration_top_eigvec": 8,
+    "q_semdedup_delta_edges": 3,  # delta quantize + stored-centroid assign + per-cluster blocks + CC; fixture plan: 2 broadcast, reads a checkpoint
+    "q_knn_ivf_stored": 2,  # probe rank window + member fetch + topk window; fixture plan: 3 broadcast, reads a checkpoint
+    "q_rrf_fusion": 1,  # one scored frame, three windows on it, no re-scan; fixture plan: 1 broadcast, reads a checkpoint
+    "q_mrr_recall_eval": 1,  # one scored frame, one window, one query-grain rollup; fixture plan: 1 broadcast, reads a checkpoint
     "q_rouge2_pair_scores": 11,  # endpoint bigram census + overlap join + totals
     "q_kneser_ney_bigram": 6,  # bigram/unigram/type rollups + broadcast joins
     "q_jensen_shannon_sources": 7,  # (source, word) rollup + margins + grid
     "q_kruskal_wallis": 7,  # value census + group-value rollup + group grain
-    "q_mmr_rerank": 4,  # pool window + grouped-map greedy
-    "q_good_turing_smoothing": 7,  # bigram rollup + count-of-counts + bounded lead window
+    "q_mmr_rerank": 1,  # pool window + grouped-map greedy; fixture plan: 1 broadcast, reads a checkpoint
+    "q_good_turing_smoothing": 6,  # bigram rollup + count-of-counts + bounded lead window; fixture plan: 2 broadcast, 3 single-partition
     "q_pmi_collocations": 6,  # bigram rollup + the two unigram margins
-    "q_mcnemar_filters": 1,  # one scan, one 4-cell rollup
+    "q_mcnemar_filters": 0,  # one scan, one 4-cell rollup; fixture plan: 1 single-partition
     "q_wilcoxon_signed_rank": 8,  # day rollup + self-join + census windows
     "q_friedman_test": 6,  # (day, type) rollup + block windows + treatment grain
     "q_jonckheere_terpstra": 3,  # (value x group) census + grid self-join + margins (runtime-reused)
@@ -223,20 +227,53 @@ SHUFFLE_BUDGETS: dict[str, int] = {
     "q_shapley_attribution": 5,  # journey rollup + 16-set census + literal coalition grid
     "q_copeland_condorcet": 4,  # (day x type) rollup + 20-pair duel grid
     "q_holm_bonferroni": 15,  # the BH relabeling pipeline, re-derived for the stop scalar
-    "q_cochran_q_filters": 1,  # one scan, one global rollup
-    "q_random_projection_jl": 2,  # one scan + label rollup (the 16 projections are codegen)
+    "q_cochran_q_filters": 0,  # one scan, one global rollup; fixture plan: 1 single-partition
+    "q_random_projection_jl": 1,  # one scan + label rollup (the 16 projections are codegen); fixture plan: reads a checkpoint
     "q_calinski_harabasz": 8,  # assignment + dims rollups + K-grain joins
-    "q_bm25_stored_index": 5,  # posting filter + doclen join + doc rollup + TakeOrdered
-    "q_ivf_serving_recall": 8,  # brute-force window + serving plan + per-query rollup
-    "q_degree_assortativity": 4,  # snapshot read + degree rollup + 1-row aggregate
-    "q_sprt_conversion": 3,  # day rollup + bounded prefix window
-    "q_entropy_rate_bigram": 5,  # bigram rollup + context rollup + bounded window-over-all
+    "q_bm25_stored_index": 1,  # posting filter + doclen join + doc rollup + TakeOrdered; fixture plan: 2 broadcast
+    "q_ivf_serving_recall": 6,  # brute-force window + serving plan + per-query rollup; fixture plan: 4 broadcast, reads a checkpoint
+    "q_degree_assortativity": 2,  # snapshot read + degree rollup + 1-row aggregate; fixture plan: 2 broadcast, 1 single-partition
+    "q_sprt_conversion": 1,  # day rollup + bounded prefix window; the prefix window is single-partition
+    "q_entropy_rate_bigram": 4,  # bigram rollup + context rollup + bounded window-over-all; fixture plan: 1 broadcast, 1 single-partition
     # distributed two-phase ranks (operators/ranks.py)
-    "q_systematic_sample": 1,  # range exchange only; mod-filter map-side
-    "q_cume_dist_percentiles": 1,  # range exchange + broadcast N
-    "q_calibration_bins": 2,  # range exchange + bin rollup
-    "q_histogram_equidepth": 2,  # range exchange + bucket rollup
-    "q_decile_lift": 3,  # range exchange + decile rollup + cum attach
+    "q_systematic_sample": 0,  # range exchange only; mod-filter map-side; fixture plan: 1 broadcast, reads a checkpoint
+    "q_cume_dist_percentiles": 0,  # range exchange + broadcast N; fixture plan: 1 broadcast, reads a checkpoint, 1 single-partition
+    "q_calibration_bins": 1,  # range exchange + bin rollup; fixture plan: 3 broadcast, reads a checkpoint, 1 single-partition
+    "q_histogram_equidepth": 1,  # range exchange + bucket rollup; fixture plan: 3 broadcast, reads a checkpoint, 1 single-partition
+    "q_decile_lift": 1,  # range exchange + decile rollup + cum attach; fixture plan: 7 broadcast, reads a checkpoint, 4 single-partition
+}
+
+
+# The per-row views in the test modules are named ``<row>-<cap>``. A
+# row's cap bounds the shuffles its reason above allows at scale, where
+# the fixture's broadcasts, checkpoints and single-row folds no longer
+# hide them. Where the fixture budget sits below
+# it, the cap is listed here; elsewhere cap and budget are one number.
+# A view holds its row to the budget and the budget under the cap, so
+# loosening a budget past its reason fails the view as well.
+REASON_CAPS: dict[str, int] = {
+    "q_countmin_heavy_hitters_portable": 4, "q_hll_registers_portable": 3,
+    "q_interval_sweepline": 3, "q_dedup_keep_best": 2, "q_source_quota": 2,
+    "q_event_paths_topk": 3, "q_rank_normalize_embeddings": 3,
+    "q_mom_growth": 3, "q_attribution_last_touch": 3, "q_eval_auc_pr": 5,
+    "q_bigram_lm_score": 5, "q_kaplan_meier": 5, "q_cusum_changepoint": 5,
+    "q_isotonic_calibration": 6, "q_cuped_adjustment": 5, "q_kendall_tau": 6,
+    "q_anova_oneway": 4, "q_seasonal_decompose": 6,
+    "q_compaction_bin_packing": 4, "q_bpe_apply_merges": 3,
+    "q_temperature_mixing": 3, "q_psi_drift": 4, "q_woe_binning": 4,
+    "q_ece_calibration": 4, "q_decision_tree_score": 3, "q_welch_ttest": 3,
+    "q_permutation_test_hashed": 4, "q_quantile_normalization": 4,
+    "q_ols_normal_equations": 2, "q_runs_test_daily": 4,
+    "q_curation_mixture": 10, "q_exact_substr_spans": 5,
+    "q_exact_substr_stats": 8, "q_weighted_sample_es": 2,
+    "q_mann_kendall_trend": 8, "q_logrank_test": 6, "q_nelson_aalen": 4,
+    "q_cliffs_delta": 6, "q_matryoshka_energy": 2, "q_brier_decomposition": 3,
+    "q_semdedup_delta_edges": 8, "q_knn_ivf_stored": 4, "q_rrf_fusion": 3,
+    "q_mrr_recall_eval": 3, "q_mmr_rerank": 4, "q_good_turing_smoothing": 7,
+    "q_mcnemar_filters": 1, "q_cochran_q_filters": 1,
+    "q_random_projection_jl": 2, "q_bm25_stored_index": 5,
+    "q_ivf_serving_recall": 8, "q_degree_assortativity": 4,
+    "q_sprt_conversion": 3, "q_entropy_rate_bigram": 5,
 }
 
 
@@ -257,5 +294,15 @@ def over_budget(sweep, budgets) -> dict[str, str]:
 
 
 def budgets(*names) -> list[tuple[str, int]]:
-    """``(name, budget)`` pairs for a parametrized per-row view."""
-    return [(n, SHUFFLE_BUDGETS[n]) for n in names]
+    """``(name, cap)`` pairs for a parametrized per-row view."""
+    return [(n, REASON_CAPS.get(n, SHUFFLE_BUDGETS[n])) for n in names]
+
+
+def over_view(sweep, name: str, cap: int) -> dict[str, str]:
+    """One per-row view: the row over its budget, or its budget over
+    the view's cap."""
+    budget = SHUFFLE_BUDGETS[name]
+    bad = over_budget(sweep, {name: budget})
+    if budget > cap:
+        bad[name] = f"budget {budget} > reason cap {cap}"
+    return bad

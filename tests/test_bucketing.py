@@ -41,23 +41,22 @@ def bucketed_warehouse(spark, sf_dir, tmp_path_factory):
 
 
 def test_bucketed_join_has_no_shuffle(spark, bucketed_warehouse):
-    from pyspark.sql import functions as F
-
     li = spark.table("li_bucketed")
     orders = spark.table("ord_bucketed")
-    joined = li.join(orders, li.l_orderkey == orders.o_orderkey).groupBy("o_orderstatus").count()
-    # disable broadcast so the join itself must pick a strategy needing
-    # distribution — bucketing should satisfy it without an Exchange
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = physical_plan(joined)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    join_section = plan.split("HashAggregate")[-1] if "SortMergeJoin" in plan else plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+    # the merge hint keeps the small fixture sides from broadcasting, so
+    # the join must pick a strategy needing distribution — bucketing
+    # should satisfy it without an Exchange
+    joined = (
+        li.hint("merge")
+        .join(orders, li.l_orderkey == orders.o_orderkey)
+        .groupBy("o_orderstatus")
+        .count()
+    )
+    plan = physical_plan(joined)
+    assert "SortMergeJoin" in plan, plan
     # no shuffle exchange feeding the join (bucketed scans are pre-distributed)
-    assert "Exchange hashpartitioning(l_orderkey" not in plan
-    assert "Exchange hashpartitioning(o_orderkey" not in plan
+    assert "hashpartitioning(l_orderkey" not in plan, plan
+    assert "hashpartitioning(o_orderkey" not in plan, plan
 
 
 def test_bucketed_join_result_correct(spark, bucketed_warehouse, sf_dir):

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import catalog_plans
 import pytest
-from catalog_plans import broadcast_joins, budgets, over_budget
+from catalog_plans import broadcast_joins, budgets, over_budget, over_view
 
 from kafka_stream_service_spark.plans import physical_plan
 
@@ -116,8 +116,9 @@ def test_shuffle_budgets_hold(catalog_sweep):
     assert not bad, f"shuffle budgets broken: {bad}"
 
 
-# The per-row budget ids below are views of SHUFFLE_BUDGETS: each reads
-# its row's budget from the table and its plan from the sweep.
+# The per-row budget ids below are views of SHUFFLE_BUDGETS, named by
+# each row's reason cap (``catalog_plans.REASON_CAPS``): each holds its
+# row's sweep plan to the table's budget and that budget under the cap.
 
 
 @pytest.mark.parametrize(
@@ -125,7 +126,7 @@ def test_shuffle_budgets_hold(catalog_sweep):
     budgets("q_asof_join", "q_training_corpus_pipeline", "q_dedup_embedding_cosine"),
 )
 def test_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 @pytest.mark.parametrize(
@@ -145,7 +146,7 @@ def test_no_python_in_relational_spine(catalog_sweep, name):
     budgets("q_pack_sequences", "q_corpus_mixture", "q_stratified_sample"),
 )
 def test_training_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_hash_sample_is_map_side_only(catalog_sweep):
@@ -198,7 +199,7 @@ def test_partitioned_write_prunes_directories(catalog_sweep):
             "q_upsert_merge", "q_rolling_anomaly", "q_ewma_smoothing"),
 )
 def test_round5_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_kmeans_assign_broadcasts_centroids(catalog_sweep):
@@ -269,7 +270,7 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
             "q_feature_hashing", "q_interval_sweepline", "q_pq_encode_portable"),
 )
 def test_round6_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_pq_adc_broadcasts_lut_and_codebook(catalog_sweep):
@@ -306,7 +307,7 @@ def test_pit_join_broadcasts_version_table(catalog_sweep):
             "q_token_budget_allocation", "q_rank_normalize_embeddings"),
 )
 def test_round6_late_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_lateral_decorrelates_to_window_join(catalog_sweep):
@@ -351,7 +352,7 @@ def test_skyline_windows_only_aggregated_series(catalog_sweep):
             "q_eval_auc_pr", "q_bigram_lm_score", "q_group_kfold"),
 )
 def test_round6b_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_join_hint_forces_shuffle_hash(catalog_sweep):
@@ -495,7 +496,7 @@ def test_logreg_scoring_is_shuffle_free(catalog_sweep):
             "q_seasonal_decompose", "q_compaction_bin_packing"),
 )
 def test_round8_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_fertility_broadcasts_vocab_token_counts(catalog_sweep):
@@ -525,4 +526,4 @@ def test_preference_pairs_windows_partition_by_source(catalog_sweep):
             "q_woe_binning", "q_ece_calibration", "q_decision_tree_score"),
 )
 def test_round8_late_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)

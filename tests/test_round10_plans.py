@@ -8,7 +8,7 @@ from __future__ import annotations
 
 
 import pytest
-from catalog_plans import broadcast_joins, budgets, over_budget
+from catalog_plans import broadcast_joins, budgets, over_budget, over_view
 
 from kafka_stream_service_spark.plans import physical_plan
 from kafka_stream_service_spark.queries.registry import QUERIES
@@ -24,7 +24,7 @@ SF = "/root/testdata/sf0.001"
             "q_brier_decomposition"),
 )
 def test_round10_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_pair_consumers_scan_the_snapshot(spark):

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 
 import pytest
-from catalog_plans import budgets, over_budget
+from catalog_plans import budgets, over_view
 from pyspark.sql import functions as F
 
 from kafka_stream_service_spark.plans import count_shuffle_exchanges, physical_plan
@@ -35,7 +35,7 @@ SF = "/root/testdata/sf0.001"
             "q_copeland_condorcet", "q_holm_bonferroni"),
 )
 def test_round11_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_ivf_stored_reads_index_and_broadcasts_probes(spark):
@@ -76,7 +76,7 @@ def test_rouge2_reads_pair_snapshot(spark):
             "q_degree_assortativity", "q_sprt_conversion", "q_entropy_rate_bigram"),
 )
 def test_round11_batch56_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_bm25_serving_reads_stored_postings(spark):

@@ -12,7 +12,7 @@ from __future__ import annotations
 import re
 
 import pytest
-from catalog_plans import broadcast_joins, budgets, over_budget
+from catalog_plans import broadcast_joins, budgets, over_view
 
 from kafka_stream_service_spark.queries import QUERIES
 
@@ -138,7 +138,7 @@ def test_dsir_scores_every_document_once(spark):
             "q_welch_ttest", "q_hits_two_iterations"),
 )
 def test_round9_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)
 
 
 def test_ccnet_model_attaches_by_broadcast(catalog_sweep):
@@ -257,4 +257,4 @@ def test_portable_hash_passes_ks_uniformity(spark):
             "q_ols_normal_equations", "q_runs_test_daily", "q_curation_mixture"),
 )
 def test_round9_late_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
-    assert not over_budget(catalog_sweep, {name: max_exchanges})
+    assert not over_view(catalog_sweep, name, max_exchanges)

@@ -407,3 +407,87 @@ def test_row_plans_are_read_from_the_catalog_sweep():
         f"_OWN_PLAN_BUILD. Unlisted: {sorted(found - set(_OWN_PLAN_BUILD))}; "
         f"stale: {sorted(set(_OWN_PLAN_BUILD) - found)}"
     )
+
+
+# ---------------------------------------------------------------------------
+# One lane widener
+# ---------------------------------------------------------------------------
+
+# A scan-rooted CPU lane widens through operators/ranks.cpu_fanout, which
+# sizes from the plan's own estimate: a literal width is a ceiling at
+# scale and the wrong width on any other cluster. Each literal left is a
+# count that is not a scan-rooted lane width, named here with its reason.
+_LITERAL_REPARTITIONS = {
+    ("queries/round7f.py", 16): "q_theil_sen_slope fans a post-aggregate "
+        "day series that AQE coalesces to one partition; cpu_fanout sizes "
+        "from the scan and would pass it through at scale",
+    ("queries/streaming_replay.py", 4): "segment files per landed half "
+        "of the wiredump fixture: an output file count",
+    ("queries/streaming_replay.py", 8): "output segments per epoch of the "
+        "streaming wiredump sink: an output file count",
+    ("queries/storage_q.py", 4): "the wiredump writer's four-segment "
+        "contract that n_segments pins: an output file count",
+}
+_SIZE_ESTIMATE = ("operators/ranks.py", "_scan_splits")
+
+
+def _readers(tree, attr: str) -> set[str]:
+    """Names of the innermost functions that read ``.attr`` ("<module>"
+    for a read outside any function)."""
+    found = set()
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr == attr:
+                found.add(fn)
+            visit(child, fn)
+
+    visit(tree, "<module>")
+    return found
+
+
+def _widener_sites():
+    """(literal repartition sites, inputFiles() readers, sizeInBytes
+    readers), each keyed by path relative to the package."""
+    literals, input_files, size_reads = [], set(), set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        tree = ast.parse(path.read_text())
+        input_files |= {(rel, fn) for fn in _readers(tree, "inputFiles")}
+        size_reads |= {(rel, fn) for fn in _readers(tree, "sizeInBytes")}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and isinstance(node.args[0].value, int)
+            ):
+                literals.append((rel, node.args[0].value))
+    return literals, input_files, size_reads
+
+
+def test_cpu_lanes_widen_only_through_cpu_fanout():
+    literals, input_files, size_reads = _widener_sites()
+    problems = []
+    if sorted(literals) != sorted(_LITERAL_REPARTITIONS):
+        problems.append(
+            "a literal repartition width outside the allowlist, each entry "
+            "once (widen a scan-rooted CPU lane with "
+            f"operators.ranks.cpu_fanout): found {sorted(literals)}"
+        )
+    if input_files:
+        problems.append(
+            "inputFiles() sizes a lane by file count; use cpu_fanout's "
+            f"plan estimate: {sorted(input_files)}"
+        )
+    if size_reads != {_SIZE_ESTIMATE}:
+        problems.append(
+            "read Catalyst's sizeInBytes only in operators/ranks.py:"
+            f"_scan_splits: {sorted(size_reads)}"
+        )
+    assert not problems, "; ".join(problems)
