@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
+
 
 def connected_components(
     edges: DataFrame,
@@ -39,7 +41,7 @@ def connected_components(
     # MinHash->LSH->Jaccard pipeline in the dedup flow) would re-execute
     # per branch. localCheckpoint also truncates the incoming lineage so
     # the iteration plans start from a materialized scan.
-    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(eager=True)
+    e0 = barrier(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")), "reuse", eager=True)
 
     # symmetric closure + self-loops => neighborhood includes the node
     sym = (
@@ -80,7 +82,7 @@ def connected_components(
             )
             new_labels = neigh.groupBy("node").agg(F.min("comp").alias("comp"))
             if (i + 1) % 5 == 0:
-                new_labels = new_labels.localCheckpoint(eager=True)
+                new_labels = barrier(new_labels, "iterate", eager=True)
             else:
                 new_labels = new_labels.persist()
             new_fp = _fingerprint(new_labels)
@@ -123,16 +125,16 @@ def integer_pagerank(
     edge list is hash-partitioned by source and the rank vector by node
     id — the standard Pregel-style layout.
     """
-    adj = (
+    adj = barrier(
         edges.select(F.col(u).alias("src"), F.col(v).alias("dst"))
-        .union(edges.select(F.col(v).alias("src"), F.col(u).alias("dst")))
-        .localCheckpoint(eager=False)
+        .union(edges.select(F.col(v).alias("src"), F.col(u).alias("dst"))),
+        "reuse",
     )
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # checkpointed: every iteration joins `nodes` (and the final ranks
     # derive from it) — without the barrier the degree groupBy re-runs
     # once per iteration per consumer
-    nodes = deg.select(F.col("src").alias("id"), "deg").localCheckpoint(eager=False)
+    nodes = barrier(deg.select(F.col("src").alias("id"), "deg"), "reuse")
     teleport = (100 - damping_pct) * scale // 100
     ranks = nodes.select("id", "deg", F.lit(scale).cast("bigint").alias("rank"))
     for _ in range(iterations):
@@ -145,7 +147,7 @@ def integer_pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = (
+        ranks = barrier(
             nodes.join(contrib, nodes["id"] == contrib["dst"], "left")
             .select(
                 "id",
@@ -153,8 +155,8 @@ def integer_pagerank(
                 (F.lit(teleport) + F.coalesce(F.col("inflow"), F.lit(0)))
                 .cast("bigint")
                 .alias("rank"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            "iterate",
         )
     return ranks
 
@@ -195,15 +197,15 @@ def oriented_triangles(edges: DataFrame) -> DataFrame:
     db = deg.select(F.col("a").alias("b"), F.col("deg").alias("db"))
     # directed x->y iff (deg_x, x) < (deg_y, y); each undirected edge
     # survives exactly once
-    directed = (
+    directed = barrier(
         und.join(da, "a")
         .join(db, "b")
         .filter(
             (F.col("da") < F.col("db"))
             | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
         )
-        .select("a", "b", "db")
-        .localCheckpoint(eager=False)  # feeds the wedge join twice + closer
+        .select("a", "b", "db"),
+        "reuse",  # feeds the wedge join twice + closer
     )
     # wedges pivoting at a: (a->x, a->y) with x before y in orientation
     # order, so each unordered neighbor pair appears once

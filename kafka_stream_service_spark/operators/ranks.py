@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
+
 PARTITION_COL = "__range_pid"
 RANK_COL = "__global_rank"
 # Internal name for the broadcast-attached total row count consumed by
@@ -170,9 +172,9 @@ def with_global_ranks(
     # desynchronizes spark_partition_id from the collected offsets
     # (observed: duplicate global ranks at sf0.01). localCheckpoint
     # pins pids + local ranks and truncates the lineage.
-    local = ranged.withColumn(
+    local = barrier(ranged.withColumn(
         "__local_rank", F.row_number().over(w)
-    ).localCheckpoint(eager=True)
+    ), "pin_partitions", eager=True)
     # |partitions| rows to the driver — bounded by the partition count
     counts = {
         r[PARTITION_COL]: r["n"]

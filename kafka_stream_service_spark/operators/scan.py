@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
+
 PARTITION_COL = "__scan_pid"
 # Same threshold as ranks.py: beyond this the O(partitions)-per-row
 # when chain loses to the O(1) broadcast hash probe (and deep nesting
@@ -74,9 +76,9 @@ def with_running_totals(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = ranged.select(
+    local = barrier(ranged.select(
         "*", *[F.sum(c).over(w).alias(f"__local_{c}") for c in sum_cols]
-    ).localCheckpoint(eager=True)
+    ), "pin_partitions", eager=True)
     totals = {
         r[PARTITION_COL]: r
         for r in local.groupBy(PARTITION_COL)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .codec import decode_with_prefix_cache, encode_with_prefix_cache
 from .eos import ForeachBatchIdempotentWriter, kafka_transactional_batch_writer
+from .plans.barrier import barrier
 from .sources import stream_file_source, stream_kafka_source, write_kafka_sink, write_memory_sink
 from .transform import FunctionConfig, MessageFunction
 
@@ -225,7 +226,7 @@ def run_pipeline_with_dlq(
     """
     lanes = _spine(frames, fn, enabled, dead_letters=True)
     if not lanes.isStreaming:
-        lanes = lanes.localCheckpoint(eager=False)
+        lanes = barrier(lanes, "reuse")
     good = lanes.filter(F.col("error").isNull()).select("key", "value")
     dead = lanes.filter(F.col("error").isNotNull()).select("value", "error")
     return good, dead

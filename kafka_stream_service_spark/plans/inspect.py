@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import io
 import re
+import tempfile
 from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame
@@ -23,6 +24,26 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     with redirect_stdout(buf):
         df.explain(mode=mode)
     return buf.getvalue()
+
+
+# The fields of a formatted plan that follow process history, not the
+# plan: expression ids, exchange plan ids and RDD ids count what the
+# process made before, UUIDs and scratch paths name one run's files.
+_PLAN_NOISE = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\b\w*RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "<uuid>"),
+)
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with its run-to-run noise replaced by fixed symbols, so
+    two builds of one plan compare equal as text."""
+    plan = re.sub(re.escape(tempfile.gettempdir()) + r"[^\s,\]]*", "<tmp>", plan)
+    for pattern, symbol in _PLAN_NOISE:
+        plan = pattern.sub(symbol, plan)
+    return plan
 
 
 _KEYED_SHUFFLE = re.compile(r"Arguments: (?:hash|range)partitioning\(")
@@ -263,9 +284,10 @@ _PY_NODES = frozenset(
 
 # Subtree roots that prove the Python node's input is (or inherits) a
 # cluster-width distribution: any exchange (keyed, round-robin, or an
-# AQE stage), a cached/checkpointed RDD (inherits its producer's
-# width — the DLQ pipeline's lazy localCheckpoint inherits cpu_fanout's),
-# or a Range (splits into defaultParallelism slices by construction).
+# AQE stage), a cached or barrier-cut RDD (inherits its producer's
+# width; the producer's own plan is gated separately, since the catalog
+# sweep records every barrier plan), or a Range (splits into
+# defaultParallelism slices by construction).
 _PY_WIDE_PREFIXES = (
     "Exchange",
     "ShuffleQueryStage",

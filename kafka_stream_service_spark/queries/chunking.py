@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.ranks import cpu_fanout
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 
@@ -156,7 +157,7 @@ def q_boilerplate_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs with < 2 tokens produce zero bigrams on both engines (the
     # oracle's range(0, greatest(n-1, 0)) is empty); filter here because
     # Spark's sequence(0, -1) would DESCEND instead of being empty
-    inst = (
+    inst = barrier(
         t.filter(F.size("w") >= 2)
         .select(
             "doc_id",
@@ -166,11 +167,11 @@ def q_boilerplate_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                     lambda i: F.array_join(F.slice(F.col("w"), i + 1, 2), " "),
                 )
             ).alias("g"),
-        )
+        ),
         # the instance stream feeds both the DF aggregation and the
         # flag join-back; materialize the explode once (lineage
         # truncation, same discipline as q_inverted_index)
-        .localCheckpoint(eager=False)
+        "reuse",
     )
     df = inst.groupBy("g").agg(F.countDistinct("doc_id").alias("df"))
     n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))

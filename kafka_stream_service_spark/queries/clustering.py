@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .corpus_ops import _QUANT_SQL, _quantized
 from .registry import query
@@ -418,7 +419,7 @@ def _pq_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, m, code, dist2): per-subspace nearest-codeword id by
     integer L2 with the dist2*K+cid tie-break key (dist2 <= 8*254^2, the
     key decodes exactly)."""
-    subs = _pq_subvectors(spark, sf_dir).localCheckpoint(eager=False)
+    subs = barrier(_pq_subvectors(spark, sf_dir), "reuse")
     cent = subs.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").cast("int").alias("cid"), F.col("sv").alias("csv")
     )
@@ -533,7 +534,7 @@ def q_pq_adc_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads nothing but codes, which is the entire point of PQ at 1e9+
     vectors.
     """
-    subs = _pq_subvectors(spark, sf_dir).localCheckpoint(eager=False)
+    subs = barrier(_pq_subvectors(spark, sf_dir), "reuse")
     cent = subs.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").cast("int").alias("cid"), F.col("sv").alias("csv")
     )

@@ -56,31 +56,6 @@ def q_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def framed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wire-framed events for the DLQ split: (key, value, event_id).
-
-    The wire codec is a CPU-bound Arrow lane: fan the scan out to
-    cluster width when the fixture under-splits (one small file = one
-    task = four single-core Python crossings — the r13 13s row); a
-    no-op on production-sized inputs. A named stage (not inlined in the
-    query) so the fan-out is plan-assertable: the pipeline's lazy
-    localCheckpoint hides upstream exchanges from the final plan."""
-    from ..operators.ranks import cpu_fanout
-
-    ev = cpu_fanout(tables(spark, sf_dir)["events"])
-    headers = F.create_map(
-        F.lit("id"), F.array(F.col("event_id").cast("string")),
-        F.lit("mod7"), F.array((F.col("event_id") % 7 == 0).cast("string")),
-    )
-    return ev.select(
-        F.lit(None).cast("binary").alias("key"),
-        encode_message(message_struct(headers, F.encode(F.col("event_type"), "utf-8"))).alias(
-            "value"
-        ),
-        F.col("event_id"),
-    )
-
-
 @query(
     "q_codec_dlq_split",
     oracle="""
@@ -102,10 +77,26 @@ def q_codec_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts a header-derived value on the good lane, proving the decode
     ran rather than just counting rows).
     """
+    from ..operators.ranks import cpu_fanout
     from ..pipeline import run_pipeline_with_dlq
     from ..transform import identity_function
 
-    framed = framed_events(spark, sf_dir)
+    # The wire codec is a CPU-bound Arrow lane: fan the scan out to
+    # cluster width when the fixture under-splits (one small file = one
+    # task = four single-core Python crossings, the r13 13 s row); a
+    # no-op on production-sized inputs.
+    ev = cpu_fanout(tables(spark, sf_dir)["events"])
+    headers = F.create_map(
+        F.lit("id"), F.array(F.col("event_id").cast("string")),
+        F.lit("mod7"), F.array((F.col("event_id") % 7 == 0).cast("string")),
+    )
+    framed = ev.select(
+        F.lit(None).cast("binary").alias("key"),
+        encode_message(message_struct(headers, F.encode(F.col("event_type"), "utf-8"))).alias(
+            "value"
+        ),
+        F.col("event_id"),
+    )
     # corrupt every 101st frame: flip the 0xff start marker to 0x00
     corrupted = framed.select(
         "key",

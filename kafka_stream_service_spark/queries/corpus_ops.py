@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from ._util import sorted_fold
 from .registry import query
@@ -161,7 +162,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint materializes the explode once instead of running
     # the tokenize subtree twice (same lineage-truncation discipline as
     # operators/graph.py) — measured 1.1 s -> 0.85 s at sf0.1
-    toks = d.select("doc_id", F.explode(bigrams).alias("token")).localCheckpoint(eager=False)
+    toks = barrier(d.select("doc_id", F.explode(bigrams).alias("token")), "reuse")
     df_tbl = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df_count"))
     n_shards = F.ceil(F.col("df_count") / F.lit(128.0))
     sharded = (
@@ -249,10 +250,10 @@ def _quantized(e: DataFrame) -> DataFrame:
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     out = e.filter(F.col("embedding").isNotNull()).withColumn("v", v)
     scale = F.array_max(F.transform(F.col("v"), lambda x: F.abs(x))) / F.lit(127.0)
-    out = (
+    out = barrier(
         out.withColumn("scale", scale)
-        .filter(F.col("scale") > 0)
-        .localCheckpoint(eager=False)
+        .filter(F.col("scale") > 0),
+        "fence",
     )
     return out.withColumn(
         "qv", F.transform(F.col("v"), lambda x: F.round(x / F.col("scale")).cast("int"))

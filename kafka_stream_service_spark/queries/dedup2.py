@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..operators.dedup import lsh_candidate_pairs, word_shingles_from_tokens
 from ..operators.graph import connected_components
 from ..operators.ranks import data_sized_partitions
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 
@@ -156,21 +157,21 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     pairs feed downstream fan-outs)."""
     d = tables(spark, sf_dir)["documents"]
     toked = d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-    sh = toked.select(
+    sh = barrier(toked.select(
         "doc_id", word_shingles_from_tokens(F.col("toks"), SHINGLE_N).alias("shingles")
-    ).localCheckpoint(eager=False)
+    ), "reuse")
     sig = typed_minhash_signatures(sh, K)
     cand = lsh_candidate_pairs(sig, sig_col="sig", k=K, bands=BANDS)
     sa = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    fpairs = (
+    fpairs = barrier(
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .select("id_a", "id_b", inter.alias("n_inter"), union.alias("n_union"))
-        .filter(2 * F.col("n_inter") >= F.col("n_union"))
-        .localCheckpoint(eager=False)
+        .filter(2 * F.col("n_inter") >= F.col("n_union")),
+        "reuse",
     )
     return sh, fpairs
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import integer_pagerank
 from ..operators.ranks import cpu_fanout
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 
@@ -75,7 +76,7 @@ def _candidate_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token array materialized in its own projection (decontaminate's
     # O(len^2) inline-split trap — the lambda would re-split per position)
     t = d.select("doc_id", F.split(F.col("text"), " ").alias("w"))
-    sh = (
+    sh = barrier(
         t.filter(F.size("w") >= SHINGLE_N)
         .select(
             "doc_id",
@@ -86,20 +87,20 @@ def _candidate_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("g"),
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "reuse",
     )
     rare = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df")).filter(
         (F.col("df") >= RARE_DF_MIN) & (F.col("df") <= RARE_DF_MAX)
     )
     cand = sh.join(rare.select("g"), "g")
-    return (
+    return barrier(
         cand.alias("a")
         .join(cand.alias("b"), "g")
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("u"), F.col("b.doc_id").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "reuse",
     )
 
 
@@ -326,16 +327,16 @@ def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage-truncated per generation like the other iterative ops.
     """
     edges = _candidate_edges(spark, sf_dir)
-    adj = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
+    adj = barrier(edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
         edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    ).localCheckpoint(eager=False)
+    ), "reuse")
     for _ in range(KCORE_ITERS):
         deg = adj.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
         keep = deg.filter(F.col("d") >= KCORE_K).select("a")
-        adj = (
+        adj = barrier(
             adj.join(keep, "a", "left_semi")
-            .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-            .localCheckpoint(eager=False)
+            .join(keep.select(F.col("a").alias("b")), "b", "left_semi"),
+            "iterate",
         )
     return adj.groupBy("a").agg(F.count(F.lit(1)).alias("core_degree")).select(
         F.col("a").alias("doc_id"), F.col("core_degree").cast("bigint").alias("core_degree")

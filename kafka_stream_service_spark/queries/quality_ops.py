@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.ranks import cpu_fanout
+from ..plans.barrier import barrier
 from ..tables import tables
 from ._util import dec, sorted_fold
 from .registry import query
@@ -858,7 +859,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = cpu_fanout(tables(spark, sf_dir)["documents"])
     t = d.select("doc_id", F.split("text", " ").alias("w")).filter(F.size("w") >= 3)
-    tok = (
+    tok = barrier(
         t.select(
             "doc_id",
             F.explode(
@@ -868,8 +869,8 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("tok"),
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "reuse",
     )
     sz = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     df = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))

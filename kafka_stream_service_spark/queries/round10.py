@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 
@@ -359,10 +360,10 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-    m = (
+    m = barrier(
         assign.join(e.select("vec_id", "qv"), "vec_id")
-        .withColumn("nrm", idot(F.col("qv"), F.col("qv")))
-        .localCheckpoint(eager=False)  # feeds pairs, sums, and the output
+        .withColumn("nrm", idot(F.col("qv"), F.col("qv"))),
+        "reuse",  # feeds pairs, sums, and the output
     )
     # cluster SUM vector (positional) + its norm
     pts = m.select(

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .dedup2 import (
     BANDS,
@@ -148,7 +149,7 @@ def q_power_iteration_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mi = marg.select(F.col("dim").alias("i"), "n", F.col("sx").alias("sx_i"))
     mj = marg.select(F.col("dim").alias("j"), F.col("sx").alias("sx_j"))
-    cov = (
+    cov = barrier(
         sxy.join(F.broadcast(mi), "i")
         .join(F.broadcast(mj), "j")
         .select(
@@ -157,8 +158,8 @@ def q_power_iteration_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n") * F.col("sxy") - F.col("sx_i") * F.col("sx_j"))
             .cast("bigint")
             .alias("c"),
-        )
-        .localCheckpoint(eager=False)  # feeds both iterations
+        ),
+        "reuse",  # feeds both iterations
     )
     v1 = cov.groupBy(F.col("i").alias("dim")).agg(
         F.sum(F.col("c").cast("decimal(38,0)")).cast("decimal(38,0)").alias("v1")
@@ -328,7 +329,7 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Theil-Sen's day-pair rollup.
     """
     li = tables(spark, sf_dir)["lineitem"]
-    daily = (
+    daily = barrier(
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -338,8 +339,8 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("l_extendedprice").cast("decimal(12,2)") * 100).cast("bigint"))
             .cast("bigint")
             .alias("y")
-        )
-        .localCheckpoint(eager=False)  # feeds pairs, count, and ties
+        ),
+        "reuse",  # feeds pairs, count, and ties
     )
     a = daily.select(F.col("day").alias("day_a"), F.col("y").alias("ya"))
     b = daily.select(F.col("day").alias("day_b"), F.col("y").alias("yb"))
@@ -447,9 +448,9 @@ def q_pair_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked_new = d.filter(is_delta).select(
         "doc_id", F.split(F.col("text"), " ").alias("toks")
     )
-    sh_new = toked_new.select(
+    sh_new = barrier(toked_new.select(
         "doc_id", word_shingles_from_tokens(F.col("toks"), SHINGLE_N).alias("shingles")
-    ).localCheckpoint(eager=False)
+    ), "reuse")
     sig_new = typed_minhash_signatures(sh_new, K)
     banded_new = sig_new.select(
         "doc_id", F.explode(band_buckets(F.col("sig"), BANDS, K // BANDS)).alias("bb")
@@ -475,14 +476,14 @@ def q_pair_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(cand.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    sh = (
+    sh = barrier(
         d.join(end_ids, "doc_id", "left_semi")
         .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
         .select(
             "doc_id",
             word_shingles_from_tokens(F.col("toks"), SHINGLE_N).alias("shingles"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "reuse",
     )
     sa = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.scan import with_running_totals
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 from .round7e import _two_sample_hist
@@ -541,7 +542,7 @@ def q_matryoshka_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins, no pair space); per-label rollup is map-side combinable.
     """
     e = tables(spark, sf_dir)["embeddings"]
-    quant = (
+    scaled = (
         e.filter(F.col("embedding").isNotNull())
         .select(
             "vec_id",
@@ -552,12 +553,12 @@ def q_matryoshka_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("scale"),
         )
         .filter(F.col("scale") > 0)
-        .localCheckpoint(eager=False)  # barrier: keep scale out of qv's lambda
-        .select(
-            "vec_id",
-            "label",
-            F.expr("transform(v, x -> CAST(round(x / scale) AS INT))").alias("qv"),
-        )
+    )
+    # keep scale out of qv's lambda
+    quant = barrier(scaled, "fence").select(
+        "vec_id",
+        "label",
+        F.expr("transform(v, x -> CAST(round(x / scale) AS INT))").alias("qv"),
     )
     energy = lambda col: F.aggregate(  # noqa: E731
         col, F.lit(0).cast("bigint"), lambda acc, x: acc + x.cast("bigint") * x.cast("bigint")

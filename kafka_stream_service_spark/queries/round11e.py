@@ -11,6 +11,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 
@@ -339,10 +340,10 @@ def q_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-    m = (
+    m = barrier(
         assign.join(e.select("vec_id", "qv"), "vec_id")
-        .select("vec_id", "centroid_id", "qv", nrm.alias("nrm"))
-        .localCheckpoint(eager=False)
+        .select("vec_id", "centroid_id", "qv", nrm.alias("nrm")),
+        "reuse",
     )
     pts = m.select("centroid_id", F.posexplode("qv").alias("pos", "val")).select(
         "centroid_id", "pos", F.col("val").cast("bigint").alias("val")

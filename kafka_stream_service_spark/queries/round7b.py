@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 
@@ -215,7 +216,7 @@ def q_fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     band."""
     d = tables(spark, sf_dir)["documents"]
     w = d.select(F.split("text", " ").alias("ws")).filter(F.size("ws") >= 2)
-    vocab = (
+    vocab = barrier(
         w.select(
             F.explode(
                 F.expr(
@@ -224,8 +225,8 @@ def q_fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("g")
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "reuse",
     )
     a, b = vocab.alias("a"), vocab.alias("b")
     return (
@@ -356,7 +357,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination sweep already shuffle)."""
     d = tables(spark, sf_dir)["documents"]
     w = d.select("doc_id", F.split("text", " ").alias("ws")).filter(F.size("ws") >= 2)
-    grams = (
+    grams = barrier(
         w.select(
             "doc_id",
             F.explode(
@@ -366,8 +367,8 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("g"),
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "reuse",
     )
     df = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     return (

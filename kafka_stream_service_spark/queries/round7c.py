@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.imagecodec import decode_png
+from ..plans.barrier import barrier
 from .graph_q import _EDGES_CTE, _candidate_edges
 from .multimodal import _PIXEL_CTE, png_images_df
 from .registry import query
@@ -63,7 +64,7 @@ def q_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     DF cap (<= 4 docs/shingle), and bounded in general by the
     degree-orientation trick q_triangle_oriented already applies. All
     joins are key-partitioned; nothing is quadratic in |V|."""
-    edges = _candidate_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = barrier(_candidate_edges(spark, sf_dir), "reuse")
     adj = edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))

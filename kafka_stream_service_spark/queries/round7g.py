@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .graph_q import _EDGES_CTE, _candidate_edges
 from .registry import query
@@ -62,7 +63,7 @@ def q_modularity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two key-partitioned joins (edge endpoints -> labels),
     two groupBys; m is a broadcast scalar. Nothing touches node-pair
     space beyond the existing bounded candidate edges."""
-    edges = _candidate_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = barrier(_candidate_edges(spark, sf_dir), "reuse")
     src = tables(spark, sf_dir)["documents"].select("doc_id", "source")
     labeled = (
         edges.join(

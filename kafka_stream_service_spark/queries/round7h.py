@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.proto_codec import decode_order, encode_order
 from ..operators.dedup import lsh_candidate_pairs, word_shingles_from_tokens
+from ..plans.barrier import barrier
 from ..tables import tables
 from .dedup2 import BANDS, K, SHINGLE_N, _PAIRS_CTE, typed_minhash_signatures
 from .registry import query
@@ -167,14 +168,14 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # endpoints filtered into the block anyway (r8 measurement)
     d = tables(spark, sf_dir)["documents"].filter(F.col("doc_id") < 1000)
     toked = d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-    sh = toked.select(
+    sh = barrier(toked.select(
         "doc_id", word_shingles_from_tokens(F.col("toks"), SHINGLE_N).alias("shingles")
-    ).localCheckpoint(eager=False)
+    ), "reuse")
     sig = typed_minhash_signatures(sh, K)  # md5 per shingle TYPE (SCALE.md r9)
-    cand = (
+    cand = barrier(
         lsh_candidate_pairs(sig, sig_col="sig", k=K, bands=BANDS)
-        .filter((F.col("id_a") % 4 == 1) | (F.col("id_b") % 4 == 1))
-        .localCheckpoint(eager=False)
+        .filter((F.col("id_a") % 4 == 1) | (F.col("id_b") % 4 == 1)),
+        "reuse",
     )
     block = sh
     sa = block.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))

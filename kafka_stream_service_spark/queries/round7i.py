@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.ranks import cpu_fanout
+from ..plans.barrier import barrier
 from ..tables import tables
 from .graph_q import _EDGES_CTE, _candidate_edges
 from .registry import query
@@ -184,7 +185,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: degree is one groupBy over edge endpoints; the
     histogram is a second bounded groupBy (O(log max_degree) rows)."""
-    edges = _candidate_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = barrier(_candidate_edges(spark, sf_dir), "reuse")
     ends = edges.select(F.col("u").alias("node")).unionAll(
         edges.select(F.col("v").alias("node"))
     )

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 
@@ -765,10 +766,10 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph_q import _candidate_edges
 
     edges = _candidate_edges(spark, sf_dir)
-    adj = (
+    adj = barrier(
         edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .unionAll(edges.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .localCheckpoint(eager=False)
+        .unionAll(edges.select(F.col("v").alias("a"), F.col("u").alias("b"))),
+        "reuse",
     )
     lab = adj.select(F.col("a").alias("vtx")).distinct().select(
         "vtx", F.col("vtx").alias("lbl")
@@ -782,12 +783,12 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         key = cnt.groupBy("a").agg(
             F.max(F.col("c") * _LPA_BIG - F.col("lbl")).alias("key")
         )
-        lab = key.select(
+        lab = barrier(key.select(
             F.col("a").alias("vtx"),
             (
                 F.expr(f"((key + {_LPA_BIG - 1}) DIV {_LPA_BIG}) * {_LPA_BIG} - key")
             ).alias("lbl"),
-        ).localCheckpoint(eager=False)
+        ), "iterate")
     return lab.groupBy(F.col("lbl").alias("community")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"),
         F.min("vtx").cast("bigint").alias("min_member"),

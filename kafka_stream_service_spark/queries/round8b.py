@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .corpus_ops import _QUANT_SQL, _quantized
 from .dedup2 import (
@@ -198,26 +199,26 @@ def q_basket_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide.
     """
     t = tables(spark, sf_dir)
-    b = (
+    b = barrier(
         t["lineitem"]
         .join(t["part"], F.col("p_partkey") == F.col("l_partkey"))
         .select(F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("br"))
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds L2 self-join + 3-way count
+        .distinct(),
+        "reuse",  # feeds L2 self-join + 3-way count
     )
     th = b.agg(F.countDistinct("ok").cast("bigint").alias("n_orders")).select(
         F.greatest(F.lit(5).cast("bigint"), F.expr("n_orders DIV 200")).alias("sup2_min"),
         F.greatest(F.lit(3).cast("bigint"), F.expr("n_orders DIV 500")).alias("sup3_min"),
     )
     a2, c2 = b.alias("a"), b.alias("c")
-    l2 = (
+    l2 = barrier(
         a2.join(c2, (F.col("a.ok") == F.col("c.ok")) & (F.col("a.br") < F.col("c.br")))
         .groupBy(F.col("a.br").alias("x"), F.col("c.br").alias("y"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("sup"))
         .crossJoin(F.broadcast(th))
         .filter(F.col("sup") >= F.col("sup2_min"))
-        .select("x", "y", "sup")
-        .localCheckpoint(eager=False)  # L2 feeds candidate gen (x3) + final joins (x3)
+        .select("x", "y", "sup"),
+        "reuse",  # L2 feeds candidate gen (x3) + final joins (x3)
     )
     p1, p2 = l2.alias("p1"), l2.alias("p2")
     cand = (
@@ -363,9 +364,9 @@ def q_dedup_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = tables(spark, sf_dir)["documents"]
     toked = d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-    sh = toked.select(
+    sh = barrier(toked.select(
         "doc_id", word_shingles_from_tokens(F.col("toks"), SHINGLE_N).alias("shingles")
-    ).localCheckpoint(eager=False)
+    ), "reuse")
     sig = typed_minhash_signatures(sh, K)  # md5 per shingle TYPE (SCALE.md r9)
     banded = sig.select(
         "doc_id",
@@ -396,11 +397,11 @@ def q_dedup_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = sh.select(F.col("doc_id").alias("corp_id"), F.col("shingles").alias("sh_c"))
     inter = F.size(F.array_intersect(F.col("sh_i"), F.col("sh_c")))
     union = F.size("sh_i") + F.size("sh_c") - inter
-    verified = (
+    verified = barrier(
         cpairs.join(si, "inc_id")
         .join(sc, "corp_id")
-        .select("inc_id", "corp_id", inter.alias("n_inter"), union.alias("n_union"))
-        .localCheckpoint(eager=False)  # feeds dup census + best-match join
+        .select("inc_id", "corp_id", inter.alias("n_inter"), union.alias("n_union")),
+        "reuse",  # feeds dup census + best-match join
     )
     dups = (
         verified.filter(2 * F.col("n_inter") >= F.col("n_union"))
@@ -604,9 +605,9 @@ def q_bottomk_coordinated_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    h = shl.select(
+    h = barrier(shl.select(
         "source", "sh", portable_hash64(F.col("sh"), _BK_SEED).alias("hv")
-    ).localCheckpoint(eager=False)  # feeds sketch, counts, and truth join
+    ), "reuse")  # feeds sketch, counts, and truth join
     wsrc = Window.partitionBy("source").orderBy("hv", "sh")
     sk = (
         h.withColumn("r", F.row_number().over(wsrc))
@@ -781,12 +782,12 @@ def q_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "label", "clabel", "n_l")
         .agg(F.sum(diff * diff).cast("decimal(38,0)").alias("num"))
     )
-    dd = dist.select(
+    dd = barrier(dist.select(
         "vec_id",
         "label",
         "clabel",
         (F.col("num").cast("double") / (F.col("n_l") * F.col("n_l")).cast("double")).alias("d"),
-    ).localCheckpoint(eager=False)  # feeds own/bmin/nearest three ways
+    ), "reuse")  # feeds own/bmin/nearest three ways
     own = dd.filter(F.col("clabel") == F.col("label")).select("vec_id", "label", F.col("d").alias("a"))
     others = dd.filter(F.col("clabel") != F.col("label"))
     bmin = others.groupBy("vec_id").agg(F.min("d").alias("b"))

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .clustering import _PLANES
 from .corpus_ops import _QUANT_SQL, _quantized
@@ -85,7 +86,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback for century-scale series). The day self-join is ~67k rows.
     """
     li = tables(spark, sf_dir)["lineitem"]
-    daily = (
+    daily = barrier(
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -96,8 +97,8 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("l_extendedprice").cast("decimal(12,2)") * 100).cast("bigint"))
             .cast("bigint")
             .alias("y"),
-        )
-        .localCheckpoint(eager=False)  # feeds both sides of the pair join
+        ),
+        "reuse",  # feeds both sides of the pair join
     )
     a, b = daily.alias("a"), daily.alias("b")
     # SIGN(dx)*SIGN(dy), not dx*dy: the raw product overflows int64 at
@@ -421,11 +422,11 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x")
     )
     wc = Window.orderBy("day_ix").rowsBetween(-3, 3)
-    tr = daily.select(
+    tr = barrier(daily.select(
         "day_ix",
         "x",
         F.when(F.count(F.lit(1)).over(wc) == 7, F.sum("x").over(wc)).alias("sum7"),
-    ).localCheckpoint(eager=False)  # feeds the weekday agg + final join
+    ), "reuse")  # feeds the weekday agg + final join
     full = tr.filter(F.col("sum7").isNotNull())
     se = full.groupBy((F.col("day_ix") % 7).alias("wd")).agg(
         F.sum(7 * F.col("x") - F.col("sum7")).cast("bigint").alias("s_num"),
@@ -534,9 +535,9 @@ def q_ann_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in range(len(_PLANES)):
         term = F.when(F.col(f"d{p}") > 0, F.lit(2**p)).otherwise(F.lit(0))
         bucket = term if bucket is None else bucket + term
-    b = d.select(
+    b = barrier(d.select(
         "vec_id", "label", "qv", bucket.cast("bigint").alias("bucket")
-    ).localCheckpoint(eager=False)  # feeds query + corpus sides
+    ), "reuse")  # feeds query + corpus sides
     qs = b.filter(F.col("vec_id") < _RERANK_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("qv").alias("q_qv"),

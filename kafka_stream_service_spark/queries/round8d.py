@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 
@@ -456,11 +457,11 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = edges.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri = (
+    tri = barrier(
         e1.join(e2, "b")
         .join(e3, ["a", "c"], "left_semi")
-        .select("a", "b", "c")
-        .localCheckpoint(eager=False)  # feeds the 3-way corner explode
+        .select("a", "b", "c"),
+        "reuse",  # feeds the 3-way corner explode
     )
     tv = (
         tri.select(F.col("a").alias("vtx"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .dedup2 import _h_sql, portable_hash64
 from .registry import query
@@ -189,7 +190,7 @@ def q_skipgram_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "w")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "w")
-    toks = toks.localCheckpoint(eager=False)  # both sides of the window join
+    toks = barrier(toks, "reuse")  # both sides of the window join
     from pyspark.sql import Window as W
 
     vocab = (
@@ -339,9 +340,9 @@ def q_dedup_incremental_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tables(spark, sf_dir)["documents"]
     toked = d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-    sh = toked.select(
+    sh = barrier(toked.select(
         "doc_id", word_shingles_from_tokens(F.col("toks"), 3).alias("shingles")
-    ).localCheckpoint(eager=False)
+    ), "reuse")
     sig = sh.select("doc_id", minhash_signature(F.col("shingles"), 16).alias("sig"))
     banded = sig.select(
         "doc_id", F.explode(band_buckets(F.col("sig"), 4, 4)).alias("bb")
@@ -357,11 +358,11 @@ def q_dedup_incremental_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = sh.select(F.col("doc_id").alias("corp_id"), F.col("shingles").alias("sh_c"))
     inter = F.size(F.array_intersect(F.col("sh_i"), F.col("sh_c")))
     union = F.size("sh_i") + F.size("sh_c") - inter
-    verified = (
+    verified = barrier(
         cpairs.join(si, "inc_id")
         .join(sc, "corp_id")
-        .select("inc_id", "corp_id", inter.alias("n_inter"), union.alias("n_union"))
-        .localCheckpoint(eager=False)
+        .select("inc_id", "corp_id", inter.alias("n_inter"), union.alias("n_union")),
+        "reuse",
     )
     dups = (
         verified.filter(2 * F.col("n_inter") >= F.col("n_union"))

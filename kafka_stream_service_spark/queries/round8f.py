@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .dedup2 import _PAIRS_CTE, _h_sql, pair_index, portable_hash64
 from .registry import query
@@ -100,13 +101,13 @@ def q_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = d.select("source", "doc_id", _lr_score_col().alias("score_q6"))
     wt = Window.partitionBy("source").orderBy(F.col("score_q6").desc(), "doc_id")
     wb = Window.partitionBy("source").orderBy(F.col("score_q6").asc(), "doc_id")
-    ranked = s.select(
+    ranked = barrier(s.select(
         "source",
         "doc_id",
         "score_q6",
         F.row_number().over(wt).alias("r_top"),
         F.row_number().over(wb).alias("r_bot"),
-    ).localCheckpoint(eager=False)  # feeds both rank filters
+    ), "reuse")  # feeds both rank filters
     top = ranked.filter(F.col("r_top") == 1).select(
         "source",
         F.col("doc_id").cast("bigint").alias("chosen_doc"),
@@ -303,17 +304,17 @@ def q_bleu_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     unaffected because the clipped sums only ever read pair rows).
     """
     fpairs = pair_index(spark, sf_dir)
-    pairs = fpairs.select("id_a", "id_b").localCheckpoint(eager=False)
+    pairs = barrier(fpairs.select("id_a", "id_b"), "reuse")
     endpoints = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .union(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
     d = tables(spark, sf_dir)["documents"]
-    t = (
+    t = barrier(
         d.join(F.broadcast(endpoints), "doc_id", "left_semi")
-        .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-        .localCheckpoint(eager=False)
+        .select("doc_id", F.split(F.col("text"), " ").alias("toks")),
+        "reuse",
     )
     uni = t.select("doc_id", F.explode("toks").alias("tok")).groupBy(
         "doc_id", "tok"
@@ -470,7 +471,7 @@ def q_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = tables(spark, sf_dir)["documents"]
     t = d.select("source", F.split(F.col("text"), " ").alias("w"))
-    toks = (
+    toks = barrier(
         t.select(
             "source",
             F.explode(
@@ -480,18 +481,18 @@ def q_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tok"),
         )
         .filter(F.length("tok") >= 3)
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds hash, exact counts, truth join
+        .distinct(),
+        "reuse",  # feeds hash, exact counts, truth join
     )
     hv = portable_hash64(F.col("tok"), 0)
     h = toks.select("source", hv.alias("hv"))
     v = F.expr(f"hv DIV {_HLL_M}")
     rho = F.when(v == 0, F.lit(53)).otherwise(F.lit(53) - F.length(F.bin(v)))
-    regs = (
+    regs = barrier(
         h.select("source", (F.col("hv") % _HLL_M).alias("bucket"), rho.alias("rho"))
         .groupBy("source", "bucket")
-        .agg(F.max("rho").alias("rho"))
-        .localCheckpoint(eager=False)  # feeds per-source Z + pair union
+        .agg(F.max("rho").alias("rho")),
+        "reuse",  # feeds per-source Z + pair union
     )
     term = F.expr(f"CAST(shiftright({_POW60}, rho) AS DECIMAL(38,0))")
     z = regs.groupBy("source").agg(

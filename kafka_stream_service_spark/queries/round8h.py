@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .dedup2 import _h_sql, portable_hash64
 from .registry import query
@@ -91,14 +92,14 @@ def q_span_corruption_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage anywhere.
     """
     d = tables(spark, sf_dir)["documents"]
-    toks = d.select(
+    toks = barrier(d.select(
         "doc_id",
         F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "w"),
         F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
     ).select(
         "doc_id", (F.col("pos0") + 1).cast("bigint").alias("pos"),
         F.col("n_tokens").cast("bigint").alias("n_tokens"),
-    ).localCheckpoint(eager=False)  # both sides of the span cover join
+    ), "reuse")  # both sides of the span cover join
     key = F.concat(
         F.col("doc_id").cast("string"), F.lit(":"), F.col("pos").cast("string")
     )

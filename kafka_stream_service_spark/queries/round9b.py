@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from ._util import work_dir
 from .dedup2 import _PAIRS_CTE, _h_sql, pair_index, portable_hash64
@@ -207,18 +208,18 @@ def q_chrf_pair_fscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared-gram), bounded by doc length.
     """
     fpairs = pair_index(spark, sf_dir)
-    pairs = fpairs.select("id_a", "id_b").localCheckpoint(eager=False)
+    pairs = barrier(fpairs.select("id_a", "id_b"), "reuse")
     endpoints = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .union(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
     d = tables(spark, sf_dir)["documents"]
-    chars = (
+    chars = barrier(
         d.join(F.broadcast(endpoints), "doc_id", "left_semi")
         .select("doc_id", F.replace(F.col("text"), F.lit(" "), F.lit("")).alias("s"))
-        .filter(F.length("s") >= 3)
-        .localCheckpoint(eager=False)
+        .filter(F.length("s") >= 3),
+        "reuse",
     )
     grams = (
         chars.select(

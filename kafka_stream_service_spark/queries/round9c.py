@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from .registry import query
 
@@ -251,11 +252,11 @@ def q_hits_two_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = tables(spark, sf_dir)["orders"].select("o_orderkey", "o_custkey")
     li = tables(spark, sf_dir)["lineitem"].select("l_orderkey", "l_suppkey")
-    e = (
+    e = barrier(
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds all four half-iterations
+        .distinct(),
+        "reuse",  # feeds all four half-iterations
     )
     a1 = e.groupBy("s").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("a1")
@@ -409,13 +410,13 @@ def q_bpe_train_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
-    state = wf.select(
+    state = barrier(wf.select(
         "w",
         "freq",
         F.concat(
             F.lit("|"), F.array_join(F.split(F.col("w"), ""), "|"), F.lit("|")
         ).alias("s"),
-    ).localCheckpoint(eager=True)
+    ), "iterate", eager=True)
     out_rows = []
     for r in range(1, _BPE_ROUNDS + 1):
         pairs = (
@@ -442,13 +443,13 @@ def q_bpe_train_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
         best = pairs.orderBy(F.desc("c"), "x", "y").limit(1).collect()[0]
         pat = f"|{best.x}|{best.y}|"
         rep = f"|{best.x}{best.y}|"
-        state = state.select(
+        state = barrier(state.select(
             "w",
             "freq",
             F.replace(
                 F.replace(F.col("s"), F.lit(pat), F.lit(rep)), F.lit(pat), F.lit(rep)
             ).alias("s"),
-        ).localCheckpoint(eager=True)
+        ), "iterate", eager=True)
         tokens_after = state.agg(
             F.sum(
                 F.col("freq")

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Column
 
 from ..operators.ranks import cpu_fanout
+from ..plans.barrier import barrier
 from ..tables import tables
 from .dedup2 import _h_sql
 from .registry import query
@@ -120,7 +121,7 @@ def q_countmin_heavy_hitters_portable(spark: SparkSession, sf_dir: str) -> DataF
     """
     toks = _tokens(spark, sf_dir)
     wc = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_count"))
-    wc = wc.localCheckpoint(eager=False)  # feeds cells + candidates
+    wc = barrier(wc, "reuse")  # feeds cells + candidates
 
     seeds = F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("j")
     cells = (
@@ -213,11 +214,11 @@ def q_bloom_filter_audit_portable(spark: SparkSession, sf_dir: str) -> DataFrame
     The exact-membership comparison (the expensive anti-join) exists
     only to audit the sketch and is skipped in production probes.
     """
-    toks = _tokens(spark, sf_dir).localCheckpoint(eager=False)
-    vocab = toks.select("tok").distinct().localCheckpoint(eager=False)
-    blocklist = (
-        toks.filter(F.col("source") == BLOOM_SRC).select("tok").distinct()
-    ).localCheckpoint(eager=False)
+    toks = barrier(_tokens(spark, sf_dir), "reuse")
+    vocab = barrier(toks.select("tok").distinct(), "reuse")
+    blocklist = barrier(
+        toks.filter(F.col("source") == BLOOM_SRC).select("tok").distinct(), "reuse"
+    )
 
     seeds = F.explode(F.sequence(F.lit(0), F.lit(BLOOM_HASHES - 1))).alias("j")
     bits = (

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from ._util import dec, dsum, work_dir
 from .registry import query
@@ -319,7 +320,7 @@ def q_csv_permissive_dirty(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.csv.parser.columnPruning.enabled", "true")
     spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
     try:
-        out = out.localCheckpoint(eager=True)
+        out = barrier(out, "fence", eager=True)
     finally:
         spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", prev)
     return out

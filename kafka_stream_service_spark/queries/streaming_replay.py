@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ..plans.barrier import barrier
 from ..session import ROCKSDB_STATE_PROVIDER
 from ..tables import tables
 from ._util import dec, dsum, work_dir
@@ -1671,7 +1672,7 @@ def q_stream_fanout_dual_sink_replay(spark: SparkSession, sf_dir: str) -> DataFr
     def fanout(batch_df: DataFrame, epoch_id: int) -> None:
         # one materialization, two sinks — localCheckpoint keeps the
         # second write from recomputing the batch scan
-        b = batch_df.localCheckpoint(eager=True)
+        b = barrier(batch_df, "reuse", eager=True)
         log_writer(b, epoch_id)
         snap_writer(b, epoch_id)
 

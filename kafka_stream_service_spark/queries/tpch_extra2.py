@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.barrier import barrier
 from ..tables import tables
 from ._util import REVENUE_SQL, dec, revenue_expr
 from .registry import query
@@ -309,7 +310,7 @@ def q_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Final top-20 is a TakeOrdered.
     """
     li = tables(spark, sf_dir)["lineitem"]
-    op = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=False)
+    op = barrier(li.select("l_orderkey", "l_partkey").distinct(), "reuse")
     part_orders = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_orders"))
     a = op.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_a"))
     b = op.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_b"))

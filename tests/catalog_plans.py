@@ -8,6 +8,13 @@ A row that fails to build escapes every plan gate at once, so each gate
 asserts that none did. Per-row plan checks read the same record
 (``catalog_sweep[name].plan``): no test plans a registered row again
 just to read its plan.
+
+A materialization barrier (``plans/barrier.py``) cuts the row's plan:
+below the cut, the row's plan shows only ``Scan ExistingRDD``. So the
+build records each barrier's own plan (``Built.barriers``), and every
+gate reads the row's plan and each barrier plan as separate plans
+(``Built.plans``). A barrier plan that repeats after normalization, as
+a loop's rounds do, is kept once, so no gate depends on a loop count.
 """
 
 from __future__ import annotations
@@ -19,10 +26,12 @@ from pyspark.sql.types import ArrayType, MapType, StructType
 
 from kafka_stream_service_spark.plans import (
     count_shuffle_exchanges,
+    normalize_plan,
     physical_plan,
     python_lane_offenders,
     single_partition_offenders,
 )
+from kafka_stream_service_spark.plans.barrier import recording
 
 
 @dataclass(frozen=True)
@@ -30,15 +39,31 @@ class Built:
     plan: str = ""
     schema: StructType | None = None
     error: str = ""
+    barriers: tuple[str, ...] = ()
+
+    @property
+    def plans(self) -> tuple[str, ...]:
+        """The row's plan, then each distinct barrier plan."""
+        return (self.plan, *self.barriers) if self.plan else ()
+
+
+def _distinct(plans: list[str]) -> tuple[str, ...]:
+    kept: dict[str, str] = {}
+    for plan in plans:
+        kept.setdefault(normalize_plan(plan), plan)
+    return tuple(kept.values())
 
 
 def build_rows(spark, queries, sf) -> dict[str, Built]:
-    """Build each query's frame at ``sf`` and keep its plan and schema."""
+    """Build each query's frame at ``sf`` and keep its plan, its
+    schema and the plans its barriers cut."""
     sweep = {}
     for name, spec in queries.items():
         try:
-            df = spec.spark_fn(spark, sf)
-            sweep[name] = Built(plan=physical_plan(df), schema=df.schema)
+            with recording() as cut:
+                df = spec.spark_fn(spark, sf)
+            sweep[name] = Built(plan=physical_plan(df), schema=df.schema,
+                                barriers=_distinct(cut))
         except Exception as exc:  # noqa: BLE001 - recorded, asserted by the gates
             sweep[name] = Built(error=f"{type(exc).__name__}: {exc}"[:200])
     return sweep
@@ -49,7 +74,7 @@ def broken(sweep, allowlist=frozenset()) -> dict[str, str]:
 
 
 def cartesian(sweep) -> list[str]:
-    return [n for n, b in sweep.items() if "CartesianProduct" in b.plan]
+    return [n for n, b in sweep.items() if any("CartesianProduct" in p for p in b.plans)]
 
 
 def complex_outputs(sweep) -> dict[str, list[str]]:
@@ -69,7 +94,7 @@ def single_partition(sweep, allowlist=frozenset()) -> dict[str, list[str]]:
     """Data-scale subtrees collapsed onto one partition."""
     bad = {}
     for name, b in sweep.items():
-        off = b.plan and name not in allowlist and single_partition_offenders(b.plan)
+        off = name not in allowlist and [o for p in b.plans for o in single_partition_offenders(p)]
         if off:
             bad[name] = off
     return bad
@@ -78,7 +103,7 @@ def single_partition(sweep, allowlist=frozenset()) -> dict[str, list[str]]:
 def row_python(sweep) -> list[str]:
     """Rows that plan row-at-a-time Python (BatchEvalPython)."""
     return [n for n, b in sweep.items()
-            if "BatchEvalPython" in b.plan and "ArrowEvalPython" not in b.plan]
+            if any("BatchEvalPython" in p and "ArrowEvalPython" not in p for p in b.plans)]
 
 
 def narrow_python(sweep, allowlist=frozenset()) -> dict[str, list[str]]:
@@ -86,10 +111,15 @@ def narrow_python(sweep, allowlist=frozenset()) -> dict[str, list[str]]:
     fixture that is one task under every Arrow crossing."""
     bad = {}
     for name, b in sweep.items():
-        off = b.plan and name not in allowlist and python_lane_offenders(b.plan)
+        off = name not in allowlist and [o for p in b.plans for o in python_lane_offenders(p)]
         if off:
             bad[name] = off
     return bad
+
+
+def shuffles(built: Built) -> int:
+    """Keyed shuffles over the row's plan and its barrier plans."""
+    return sum(count_shuffle_exchanges(p) for p in built.plans)
 
 
 def broadcast_joins(plan: str) -> int:
@@ -100,17 +130,17 @@ def broadcast_joins(plan: str) -> int:
 
 
 # SCALE.md's shuffle inventory: the most keyed (hash or range) exchanges
-# each row's plan may hold at sf0.001. Each budget is its row's count,
-# the larger of its sf0.001 and sf0.1 plans' counts, so one added
-# shuffle fails the gate. A static plan repeats a shared rollup once per
-# consumer (AQE reuses the exchange at run time), so some budgets count
-# one rollup twice. A reason may name more shuffles than the fixture
-# plan holds; its "fixture plan:" note says why: sides it broadcasts,
-# stages hidden behind an eager localCheckpoint (the plan shows only
-# the post-checkpoint stage), and SinglePartition exchanges (1-row
-# folds, windows over all rows), none of which a budget counts. Stored-index rows whose budget needs the artifact built first
-# keep their own test (q_text_index_delta, q_bm25_after_refresh,
-# q_knn_ivf_refresh).
+# each row's plans may hold at sf0.001, counted over the row's plan and
+# its barrier plans. Each budget is its row's count, the larger of its
+# sf0.001 and sf0.1 counts, so one added shuffle fails the gate. A
+# static plan repeats a shared rollup once per consumer (AQE reuses the
+# exchange at run time), so some budgets count one rollup twice. A
+# reason may name more shuffles than the fixture plans hold; its
+# "fixture plan:" note says why: sides it broadcasts and
+# SinglePartition exchanges (1-row folds, windows over all rows),
+# neither of which a budget counts. Stored-index rows whose budget needs
+# the artifact built first keep their own test (q_text_index_delta,
+# q_bm25_after_refresh, q_knn_ivf_refresh).
 SHUFFLE_BUDGETS: dict[str, int] = {
     # relational and training-data pipelines
     "q_asof_join": 1,  # union-tag composition: ONE shuffle on the key
@@ -128,7 +158,7 @@ SHUFFLE_BUDGETS: dict[str, int] = {
     "q_rolling_anomaly": 1,  # ONE shuffle: the per-user window
     "q_ewma_smoothing": 1,  # ONE shuffle: the per-user window
     # sketches, hashing and corpus operators
-    "q_countmin_heavy_hitters_portable": 2,  # vocab + (j,bucket) cells + TakeOrdered candidates + estimate; probes broadcast; fixture plan: 1 broadcast, reads a checkpoint
+    "q_countmin_heavy_hitters_portable": 3,  # vocab count + (j,bucket) cells + TakeOrdered candidates + estimate; probes broadcast; fixture plan: 1 broadcast
     "q_hll_registers_portable": 2,  # vocab distinct + register groupBy
     "q_feature_hashing": 2,  # (doc,tok) count + (doc,dim) combine
     "q_interval_sweepline": 1,  # per-day delta fold + the bounded day-grain running-sum window; fixture plan: 2 broadcast, 1 single-partition
@@ -137,7 +167,7 @@ SHUFFLE_BUDGETS: dict[str, int] = {
     "q_source_quota": 1,  # source window + regroup; the regroup reuses the window's partitioning
     "q_event_paths_topk": 2,  # user window + path count + TakeOrdered; TakeOrdered is not a keyed shuffle
     "q_token_budget_allocation": 4,  # source agg + two scalar folds
-    "q_rank_normalize_embeddings": 2,  # pos windows + vec regroup; fixture plan: reads a checkpoint
+    "q_rank_normalize_embeddings": 2,  # pos windows + vec regroup
     # r14: each median is a ranked-HISTOGRAM pass (map-combined (type,
     # value) agg + window by type); the med subplan's 2 exchanges repeat
     # inside the dev branch's two consumers until AQE reuses them, and
@@ -153,9 +183,9 @@ SHUFFLE_BUDGETS: dict[str, int] = {
     "q_cusum_changepoint": 4,  # month rollup, repeated per consumer (runtime-reused); fixture plan: 3 broadcast, 4 single-partition
     "q_isotonic_calibration": 3,  # bin rollups for the pooled-violator passes; fixture plan: 2 broadcast, 2 single-partition
     "q_cuped_adjustment": 3,  # user pre/post rollups + arm grain; fixture plan: 1 broadcast, 1 single-partition
-    "q_kendall_tau": 0,  # day rollup + bounded pair frame (behind a checkpoint); fixture plan: 2 broadcast, reads a checkpoint, 2 single-partition
+    "q_kendall_tau": 1,  # day rollup + bounded pair frame; fixture plan: 2 broadcast, 2 single-partition
     "q_anova_oneway": 1,  # event_type rollup + scalar grand-mean folds; fixture plan: 1 single-partition
-    "q_seasonal_decompose": 1,  # day rollup + bounded trend/season windows (behind a checkpoint); fixture plan: 1 broadcast, reads a checkpoint
+    "q_seasonal_decompose": 2,  # day rollup + bounded trend/season windows + weekday rollup; fixture plan: 1 broadcast
     "q_compaction_bin_packing": 1,  # partition rollup + bounded packing window; the packing window is single-partition
     "q_bpe_apply_merges": 1,  # word rollup; merges run on the vocabulary
     "q_temperature_mixing": 2,  # source counts, repeated per consumer; fixture plan: 1 broadcast, 1 single-partition
@@ -166,34 +196,39 @@ SHUFFLE_BUDGETS: dict[str, int] = {
     "q_gopher_quality_rules": 3,  # (doc, stat) rollup + doc grain + source census
     "q_dsir_importance_weights": 6,  # bucket model rollups + doc grain
     "q_welch_ttest": 0,  # one scan, map-side moment combine; fixture plan: 1 single-partition
-    "q_hits_two_iterations": 17,  # two hub/authority rounds on the edge grain
+    "q_hits_two_iterations": 18,  # (c, s) edge distinct + two hub/authority rounds on the edge grain
     "q_permutation_test_hashed": 2,  # perm rollup + observed-statistic fold; fixture plan: 1 broadcast, 1 single-partition
     "q_quantile_normalization": 3,  # per-source ranks + reference by rank; fixture plan: 1 broadcast
     "q_ols_normal_equations": 0,  # one scan, one global moment rollup; fixture plan: 1 single-partition
     "q_runs_test_daily": 1,  # day rollup + bounded run windows; the run windows are single-partition
-    "q_curation_mixture": 8,  # quality census (doc, stat) + source grain, per consumer; fixture plan: 13 broadcast, reads a checkpoint, 3 single-partition
+    "q_curation_mixture": 17,  # quality census (doc, stat) + source grain, per consumer; the ranked perplexity frame: doc regroups, bigram and unigram rollups, range + pid exchanges; fixture plan: 13 broadcast, 3 single-partition
     "q_exact_substr_spans": 2,  # shingle census + semi-join + per-doc islands; fixture plan: 1 broadcast
     "q_exact_substr_stats": 3,  # manifest rollup adds one doc-grain join + source rollup; fixture plan: 2 broadcast
     "q_weighted_sample_es": 1,  # scan-bound key computation + per-source rank
-    "q_mann_kendall_trend": 1,  # day-grain rollup + bounded pair frame + scalar aggregates; fixture plan: 3 broadcast, reads a checkpoint, 3 single-partition
+    "q_mann_kendall_trend": 2,  # day-grain rollup + bounded pair frame + scalar aggregates; fixture plan: 3 broadcast, 3 single-partition
     "q_logrank_test": 1,  # duration-grain rollup + prefix window + scalar aggregate; fixture plan: 3 broadcast, 2 single-partition
     "q_nelson_aalen": 1,  # duration-grain rollup + prefix window; fixture plan: 3 broadcast, 2 single-partition
-    "q_cliffs_delta": 0,  # histogram + distributed prefix scan + bounded aggregate; fixture plan: 1 broadcast, reads a checkpoint, 1 single-partition
+    "q_cliffs_delta": 3,  # histogram + distributed prefix scan (range + pid exchanges) + bounded aggregate; fixture plan: 1 broadcast, 1 single-partition
     "q_heaps_law_fit": 8,  # token pass + two bounded rollups + 10-point fit
-    "q_matryoshka_energy": 1,  # one scan + 4-way prefix fan-out + label rollup; fixture plan: reads a checkpoint
+    "q_matryoshka_energy": 1,  # one scan + 4-way prefix fan-out + label rollup
     "q_brier_decomposition": 1,  # scoring pass + 10-bin groupBy + broadcast totals
-    # scan + vec_id self-join + dims^2-grain rollups + tiny joins: no
+    # scan + vec_id self-join + dims^2-grain rollups + the covariance
+    # frame's (dim, dim) and two marginal rollups + tiny joins: no
     # data-scale exchange after the covariance rollup
-    "q_power_iteration_top_eigvec": 8,
-    "q_semdedup_delta_edges": 3,  # delta quantize + stored-centroid assign + per-cluster blocks + CC; fixture plan: 2 broadcast, reads a checkpoint
-    "q_knn_ivf_stored": 2,  # probe rank window + member fetch + topk window; fixture plan: 3 broadcast, reads a checkpoint
-    "q_rrf_fusion": 1,  # one scored frame, three windows on it, no re-scan; fixture plan: 1 broadcast, reads a checkpoint
-    "q_mrr_recall_eval": 1,  # one scored frame, one window, one query-grain rollup; fixture plan: 1 broadcast, reads a checkpoint
-    "q_rouge2_pair_scores": 11,  # endpoint bigram census + overlap join + totals
+    "q_power_iteration_top_eigvec": 11,
+    "q_semdedup_delta_edges": 3,  # delta quantize + stored-centroid assign + per-cluster blocks + CC; fixture plan: 2 broadcast
+    "q_knn_ivf_stored": 2,  # probe rank window + member fetch + topk window; fixture plan: 3 broadcast
+    "q_rrf_fusion": 1,  # one scored frame, three windows on it, no re-scan; fixture plan: 1 broadcast
+    "q_mrr_recall_eval": 1,  # one scored frame, one window, one query-grain rollup; fixture plan: 1 broadcast
+    # endpoint bigram census + overlap join + totals; the count is
+    # sf0.1's: there the overlap rollup outgrows the broadcast threshold,
+    # so its left join with the pair read is a sort-merge join that
+    # shuffles the pair read on (id_a, id_b)
+    "q_rouge2_pair_scores": 12,
     "q_kneser_ney_bigram": 6,  # bigram/unigram/type rollups + broadcast joins
     "q_jensen_shannon_sources": 7,  # (source, word) rollup + margins + grid
     "q_kruskal_wallis": 7,  # value census + group-value rollup + group grain
-    "q_mmr_rerank": 1,  # pool window + grouped-map greedy; fixture plan: 1 broadcast, reads a checkpoint
+    "q_mmr_rerank": 1,  # pool window + grouped-map greedy; fixture plan: 1 broadcast
     "q_good_turing_smoothing": 6,  # bigram rollup + count-of-counts + bounded lead window; fixture plan: 2 broadcast, 3 single-partition
     "q_pmi_collocations": 6,  # bigram rollup + the two unigram margins
     "q_mcnemar_filters": 0,  # one scan, one 4-cell rollup; fixture plan: 1 single-partition
@@ -228,27 +263,27 @@ SHUFFLE_BUDGETS: dict[str, int] = {
     "q_copeland_condorcet": 4,  # (day x type) rollup + 20-pair duel grid
     "q_holm_bonferroni": 15,  # the BH relabeling pipeline, re-derived for the stop scalar
     "q_cochran_q_filters": 0,  # one scan, one global rollup; fixture plan: 1 single-partition
-    "q_random_projection_jl": 1,  # one scan + label rollup (the 16 projections are codegen); fixture plan: reads a checkpoint
-    "q_calinski_harabasz": 8,  # assignment + dims rollups + K-grain joins
+    "q_random_projection_jl": 1,  # one scan + label rollup (the 16 projections are codegen)
+    "q_calinski_harabasz": 9,  # assignment join + dims rollups + K-grain joins
     "q_bm25_stored_index": 1,  # posting filter + doclen join + doc rollup + TakeOrdered; fixture plan: 2 broadcast
-    "q_ivf_serving_recall": 6,  # brute-force window + serving plan + per-query rollup; fixture plan: 4 broadcast, reads a checkpoint
+    "q_ivf_serving_recall": 6,  # brute-force window + serving plan + per-query rollup; fixture plan: 4 broadcast
     "q_degree_assortativity": 2,  # snapshot read + degree rollup + 1-row aggregate; fixture plan: 2 broadcast, 1 single-partition
     "q_sprt_conversion": 1,  # day rollup + bounded prefix window; the prefix window is single-partition
     "q_entropy_rate_bigram": 4,  # bigram rollup + context rollup + bounded window-over-all; fixture plan: 1 broadcast, 1 single-partition
     # distributed two-phase ranks (operators/ranks.py)
-    "q_systematic_sample": 0,  # range exchange only; mod-filter map-side; fixture plan: 1 broadcast, reads a checkpoint
-    "q_cume_dist_percentiles": 0,  # range exchange + broadcast N; fixture plan: 1 broadcast, reads a checkpoint, 1 single-partition
-    "q_calibration_bins": 1,  # range exchange + bin rollup; fixture plan: 3 broadcast, reads a checkpoint, 1 single-partition
-    "q_histogram_equidepth": 1,  # range exchange + bucket rollup; fixture plan: 3 broadcast, reads a checkpoint, 1 single-partition
-    "q_decile_lift": 1,  # range exchange + decile rollup + cum attach; fixture plan: 7 broadcast, reads a checkpoint, 4 single-partition
+    "q_systematic_sample": 2,  # range + pid exchanges; mod-filter map-side; fixture plan: 1 broadcast
+    "q_cume_dist_percentiles": 2,  # range + pid exchanges + broadcast N; fixture plan: 1 broadcast, 1 single-partition
+    "q_calibration_bins": 3,  # range + pid exchanges + bin rollup; fixture plan: 3 broadcast, 1 single-partition
+    "q_histogram_equidepth": 3,  # range + pid exchanges + bucket rollup; fixture plan: 3 broadcast, 1 single-partition
+    "q_decile_lift": 3,  # range + pid exchanges + decile rollup + cum attach; fixture plan: 7 broadcast, 4 single-partition
 }
 
 
 # The per-row views in the test modules are named ``<row>-<cap>``. A
 # row's cap bounds the shuffles its reason above allows at scale, where
-# the fixture's broadcasts, checkpoints and single-row folds no longer
-# hide them. Where the fixture budget sits below
-# it, the cap is listed here; elsewhere cap and budget are one number.
+# the fixture's broadcasts and single-row folds no longer hide them.
+# Where the fixture budget sits below it, the cap is listed here;
+# elsewhere cap and budget are one number.
 # A view holds its row to the budget and the budget under the cap, so
 # loosening a budget past its reason fails the view as well.
 REASON_CAPS: dict[str, int] = {
@@ -264,7 +299,7 @@ REASON_CAPS: dict[str, int] = {
     "q_ece_calibration": 4, "q_decision_tree_score": 3, "q_welch_ttest": 3,
     "q_permutation_test_hashed": 4, "q_quantile_normalization": 4,
     "q_ols_normal_equations": 2, "q_runs_test_daily": 4,
-    "q_curation_mixture": 10, "q_exact_substr_spans": 5,
+    "q_curation_mixture": 17, "q_exact_substr_spans": 5,
     "q_exact_substr_stats": 8, "q_weighted_sample_es": 2,
     "q_mann_kendall_trend": 8, "q_logrank_test": 6, "q_nelson_aalen": 4,
     "q_cliffs_delta": 6, "q_matryoshka_energy": 2, "q_brier_decomposition": 3,
@@ -288,7 +323,7 @@ def over_budget(sweep, budgets) -> dict[str, str]:
             bad[name] = "not a registered row"
         elif built.error:
             bad[name] = f"failed to build: {built.error}"
-        elif (n := count_shuffle_exchanges(built.plan)) > budget:
+        elif (n := shuffles(built)) > budget:
             bad[name] = f"{n} keyed shuffles > budget {budget}"
     return bad
 

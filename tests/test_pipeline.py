@@ -23,6 +23,7 @@ from kafka_stream_service_spark.pipeline import (
     start_pipeline,
 )
 from kafka_stream_service_spark.plans import physical_plan
+from kafka_stream_service_spark.plans.barrier import recording
 from kafka_stream_service_spark.plans.inspect import _PY_NODES, _tree_nodes
 from kafka_stream_service_spark.transform import (
     identity_function,
@@ -136,9 +137,9 @@ def test_spine_past_the_prefix_cache_bound(spark):
     assert [bytes(r.value) for r in out] == reference_outputs(msgs, uppercase_function)
 
 
-def _python_nodes(df) -> list[str]:
-    """Names of the Python operators in a frame's physical plan tree."""
-    names = [title.split()[0] for _, title, _ in _tree_nodes(physical_plan(df))]
+def _python_nodes(plan: str) -> list[str]:
+    """Names of the Python operators in a formatted physical plan tree."""
+    names = [title.split()[0] for _, title, _ in _tree_nodes(plan)]
     return [n for n in names if n in _PY_NODES]
 
 
@@ -150,26 +151,20 @@ def _streaming_python_nodes(explained: str) -> list[str]:
     return [n for n in names if n in _PY_NODES]
 
 
-def test_spine_plans_hold_one_python_map(spark, tmp_path, monkeypatch):
+def test_spine_plans_hold_one_python_map(spark, tmp_path):
     """Guard against re-forking the spine: streaming, batch and
     dead-letter plans each run decode -> fn -> encode as exactly ONE
     Python map node, with no per-column Arrow UDF beside it."""
     frames = wire_frames_df(spark)
-    assert _python_nodes(run_pipeline_batch(frames, uppercase_function)) == ["MapInPandas"]
+    batch = run_pipeline_batch(frames, uppercase_function)
+    assert _python_nodes(physical_plan(batch)) == ["MapInPandas"]
 
-    # the DLQ lanes read a lazy checkpoint; the body is the frame it cuts
-    cut = []
-    checkpoint = type(frames).localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        cut.append(self)
-        return checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(type(frames), "localCheckpoint", spy)
-    good, dead = run_pipeline_with_dlq(frames, uppercase_function)
+    # the DLQ lanes read a barrier; the body is the frame it cuts
+    with recording() as cut:
+        good, dead = run_pipeline_with_dlq(frames, uppercase_function)
     assert len(cut) == 1
     assert _python_nodes(cut[0]) == ["MapInPandas"]
-    assert _python_nodes(good) == _python_nodes(dead) == []
+    assert _python_nodes(physical_plan(good)) == _python_nodes(physical_plan(dead)) == []
 
     src = tmp_path / "in"
     frames.write.parquet(str(src))

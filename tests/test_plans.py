@@ -13,6 +13,8 @@ and build failures; a per-row test states the shape it is about.
 
 from __future__ import annotations
 
+import re
+
 import catalog_plans
 import pytest
 from catalog_plans import broadcast_joins, budgets, over_budget, over_view
@@ -52,8 +54,6 @@ def test_q01_partial_aggregation(catalog_sweep):
     assert "partial_sum" in plan
     # map-side HashAggregate node precedes the Exchange node in the tree
     # (Spark numbers children first: HashAggregate(4) feeds Exchange(5))
-    import re
-
     agg_ids = [int(m) for m in re.findall(r"\((\d+)\) HashAggregate", plan)]
     exch_ids = [int(m) for m in re.findall(r"\((\d+)\) Exchange", plan)]
     assert agg_ids and exch_ids and min(agg_ids) < min(exch_ids)
@@ -105,6 +105,34 @@ def test_no_complex_output_columns_anywhere_in_catalog(catalog_sweep):
     struct-valued cell. Serialize such a column (array_join, to_json)."""
     bad = catalog_plans.complex_outputs(catalog_sweep)
     assert not bad, f"array/map/struct output columns in: {bad}"
+
+
+def test_barrier_records_on_the_recording_thread_only(spark):
+    """A recording keeps the plan of each barrier its own thread cuts; a
+    barrier on another thread (as in a foreachBatch callback) is not
+    recorded."""
+    import threading
+
+    from kafka_stream_service_spark.plans.barrier import barrier, recording
+
+    frame = spark.range(4)
+    with recording() as cut:
+        barrier(frame, "reuse")
+        other = threading.Thread(target=barrier, args=(frame.filter("id > 1"), "reuse"))
+        other.start()
+        other.join(timeout=60)
+        assert not other.is_alive()
+    assert len(cut) == 1 and "Range" in cut[0] and "Filter" not in cut[0], cut
+
+
+def test_rdd_scans_come_from_recorded_barriers(catalog_sweep):
+    """A ``Scan ExistingRDD`` in a row's plan reads a frame some barrier
+    cut; the gates see below it only through the recorded barrier plan.
+    A row whose plan scans an RDD but recorded no barrier plan hides a
+    subtree from every gate."""
+    hidden = [n for n, b in catalog_sweep.items()
+              if "Scan ExistingRDD" in b.plan and not b.barriers]
+    assert not hidden, f"RDD scans with no recorded barrier plan: {hidden}"
 
 
 def test_shuffle_budgets_hold(catalog_sweep):
@@ -186,8 +214,6 @@ def test_partitioned_write_prunes_directories(catalog_sweep):
     """q_partitioned_pruning's re-read must carry the lang filter as a
     PARTITION filter (directory pruning — zero IO for other langs), not
     just a data filter after a full scan."""
-    import re
-
     plan = catalog_sweep["q_partitioned_pruning"].plan
     m = re.search(r"PartitionFilters: \[[^\]]*lang[^\]]*\]", plan)
     assert m, f"lang never became a partition filter:\n{plan[:3000]}"
@@ -289,8 +315,6 @@ def test_bloom_probe_broadcasts_bits(catalog_sweep):
 def test_oriented_triangles_no_cartesian(catalog_sweep):
     """Oriented wedges close by an equi-join on both endpoints (x, y),
     never by a cross product filtered afterwards."""
-    import re
-
     plan = catalog_sweep["q_triangle_oriented"].plan
     assert re.search(r"Left keys \[2\]: \[x#\d+L?, y#", plan), plan[:3000]
 
@@ -365,37 +389,31 @@ def test_join_hint_forces_shuffle_hash(catalog_sweep):
 
 def test_entity_resolution_blocked_join_no_cartesian(catalog_sweep):
     """The ER candidate generation must stay brand-blocked — an
-    unblocked levenshtein pass would be the all-pairs scale-killer."""
-    assert "CartesianProduct" not in catalog_sweep["q_entity_resolution"].plan
+    unblocked levenshtein pass would be the all-pairs scale-killer. The
+    blocking join runs under connected_components' edge barrier, so its
+    keys are read from that barrier's plan."""
+    built = catalog_sweep["q_entity_resolution"]
+    assert not any("CartesianProduct" in p for p in built.plans)
+    blocked = re.compile(r"Left keys \[1\]: \[p_brand#\d+\]\nRight keys \[1\]: \[brand_b#\d+\]")
+    assert any(blocked.search(p) for p in built.barriers), built.barriers
 
 
-def test_distributed_quantiles_no_single_partition_window(spark):
+def test_distributed_quantiles_no_single_partition_window(catalog_sweep):
     """The whole point of operators/ranks.py: exact global quantiles
-    with a RANGE exchange and parallel per-partition windows — never an
-    Exchange SinglePartition feeding a window. The operator
-    localCheckpoints the ranked frame (required: AQE must not re-plan
-    the exchange between the offsets job and the caller's job), so the
-    assertion targets the pre-checkpoint plan the checkpoint runs."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    with a RANGE exchange and parallel per-partition windows — never a
+    SinglePartition exchange feeding a window (a 1-row fold may still
+    cross one: the walker tells the two apart). The operator cuts the
+    ranked frame at a barrier (AQE must not re-plan the exchange
+    between the offsets job and the caller's job), so the assertion
+    reads every rank barrier plan the sweep recorded."""
     from kafka_stream_service_spark.operators.ranks import PARTITION_COL
-    from kafka_stream_service_spark.tables import tables
+    from kafka_stream_service_spark.plans import single_partition_offenders
 
-    orders = tables(spark, SF).__getitem__("orders").select(
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("v"),
-        F.col("o_orderkey").alias("tb"),
-    )
-    ranged = orders.repartitionByRange(8, F.col("v"), F.col("tb")).withColumn(
-        PARTITION_COL, F.spark_partition_id()
-    )
-    w = Window.partitionBy(PARTITION_COL).orderBy("v", "tb")
-    plan = physical_plan(ranged.withColumn("r", F.row_number().over(w)))
-    assert "rangepartitioning" in plan
-    assert "Exchange SinglePartition" not in plan
-    assert "Window" in plan and PARTITION_COL in plan
+    ranked = [p for b in catalog_sweep.values() for p in b.barriers if PARTITION_COL in p]
+    assert ranked
+    for plan in ranked:
+        assert "rangepartitioning" in plan and "Window" in plan, plan[:2000]
+        assert not single_partition_offenders(plan), plan[:2000]
 
 
 def test_bm25_broadcasts_stats_and_df(catalog_sweep):
@@ -439,25 +457,14 @@ def test_modularity_broadcasts_the_dim(catalog_sweep):
 # ---------------------------------------------------------------------------
 
 
-def test_silhouette_broadcasts_centroids(spark):
+def test_silhouette_broadcasts_centroids(catalog_sweep):
     """Centroid table is k*dim rows — it must broadcast into the
     exploded-points join (the q_kmeans_assign envelope), never shuffle
-    the corpus against it. The final plan hides that join behind the
-    dd localCheckpoint (3 consumers), so the broadcast is asserted on
-    the pre-checkpoint distance subplan rebuilt from the same pieces
-    (not a catalog row, so the sweep does not hold it)."""
-    from pyspark.sql import functions as F
-
-    from kafka_stream_service_spark.queries.corpus_ops import _quantized
-    from kafka_stream_service_spark.tables import tables
-
-    e = _quantized(tables(spark, SF)["embeddings"])
-    pts = e.select("vec_id", "label", F.posexplode(F.col("qv")).alias("pos", "val"))
-    cent = pts.groupBy(F.col("label").alias("clabel"), "pos").agg(
-        F.sum("val").alias("s")
-    )
-    dist = pts.join(F.broadcast(cent), "pos")
-    assert broadcast_joins(physical_plan(dist)) >= 1
+    the corpus against it. The join runs under the distance frame's
+    barrier (3 consumers), so it is read from that barrier's plan."""
+    joined = re.compile(r"\(\d+\) BroadcastHashJoin\nLeft keys \[1\]: \[pos#\d+\]")
+    cut = catalog_sweep["q_silhouette_simplified"].barriers
+    assert any(joined.search(p) for p in cut), cut
 
 
 def test_rerank_shortlist_is_broadcast_probe(catalog_sweep):
@@ -475,8 +482,12 @@ def test_apriori_candidates_broadcast_into_support_count(catalog_sweep):
 def test_incremental_dedup_is_bucket_equi_join(catalog_sweep):
     """Incoming x corpus must happen ONLY through the (band, bucket)
     equi-join — a cartesian here is the all-pairs scale-killer the LSH
-    index exists to avoid."""
-    assert "CartesianProduct" not in catalog_sweep["q_dedup_incremental_snapshot"].plan
+    index exists to avoid. The join runs under the verified-pairs
+    barrier, so its keys are read from that barrier's plan."""
+    built = catalog_sweep["q_dedup_incremental_snapshot"]
+    assert not any("CartesianProduct" in p for p in built.plans)
+    bucketed = re.compile(r"Left keys \[2\]: \[band#\d+, bucket#\d+\]")
+    assert any(bucketed.search(p) for p in built.barriers), built.barriers
 
 
 def test_cusum_pushes_year_filter_to_scan(catalog_sweep):
@@ -508,8 +519,6 @@ def test_fertility_broadcasts_vocab_token_counts(catalog_sweep):
 def test_bleu_scoring_joins_pairs_only(catalog_sweep):
     """The clipped-count joins key on (pair, token) — no corpus^2 leg
     anywhere in the scoring plan."""
-    import re
-
     plan = catalog_sweep["q_bleu_ngram_precision"].plan
     assert re.search(r"Left keys \[2\]: \[id_a#\d+L?, tok#", plan), plan[:3000]
 

@@ -665,18 +665,18 @@ def test_cpu_fanout_widens_narrow_scans_only(spark):
     assert cpu_fanout(big) is big, "wide input must pass through untouched"
 
 
-def test_dlq_split_python_lanes_are_fanned_out(spark):
+def test_dlq_split_python_lanes_are_fanned_out(catalog_sweep):
     """The r13 13s row: every Arrow crossing in q_codec_dlq_split ran on
     ONE task because the events fixture is one small parquet file. The
-    framed stage (the part of the row's plan visible before the
-    pipeline's lazy localCheckpoint truncates lineage) must carry the
-    cpu_fanout round-robin exchange upstream of the encode UDF."""
-    from kafka_stream_service_spark.plans import physical_plan
-    from kafka_stream_service_spark.queries.codec_q import framed_events
+    pipeline body sits under the row's one barrier, so its recorded
+    plan must carry the cpu_fanout round-robin exchange upstream of the
+    encode UDF, and no Python lane of it may read the scan directly."""
+    from kafka_stream_service_spark.plans import python_lane_offenders
 
-    plan = physical_plan(framed_events(spark, SF))
+    (plan,) = catalog_sweep["q_codec_dlq_split"].barriers
     assert "RoundRobinPartitioning" in plan, plan[:1500]
     assert "ArrowEvalPython" in plan, plan[:1500]
+    assert python_lane_offenders(plan) == [], plan[:1500]
 
 
 def test_gc_census_sweeps_dead_process_slates(spark):

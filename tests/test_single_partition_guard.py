@@ -16,10 +16,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from kafka_stream_service_spark.plans import (
+    count_shuffle_exchanges,
     physical_plan,
     python_lane_offenders,
     single_partition_offenders,
 )
+from kafka_stream_service_spark.plans.barrier import barrier
 
 
 def _events(spark):
@@ -288,8 +290,9 @@ def test_sweep_goes_red_on_plan_build_failure(spark, sf_dir):
     spark_fn raises at plan time must surface as ``broken`` — the old
     ``except Exception: continue`` made exactly this invisible. The same
     sweep must flag a row that plans a cartesian product, a row that
-    outputs an array column, and a row over its shuffle budget; a budget
-    on a broken or unregistered row is flagged too."""
+    outputs an array column, and a row over its shuffle budget, also
+    where the product or the shuffles sit under a barrier; a budget on
+    a broken or unregistered row is flagged too."""
 
     class _BrokenSpec:
         @staticmethod
@@ -312,10 +315,23 @@ def test_sweep_goes_red_on_plan_build_failure(spark, sf_dir):
         def spark_fn(spark, sf):
             return spark.range(30).repartition(4, "id").groupBy(F.col("id") % 3).count()
 
+    # the same two shapes under a barrier: the row's own plan shows only
+    # the cut, so the gates must read the recorded barrier plan
+    class _CartesianCutSpec:
+        @staticmethod
+        def spark_fn(spark, sf):
+            return barrier(_CartesianSpec.spark_fn(spark, sf), "reuse").select("j")
+
+    class _TwoShufflesCutSpec:
+        @staticmethod
+        def spark_fn(spark, sf):
+            return barrier(_TwoShufflesSpec.spark_fn(spark, sf), "reuse").select("count")
+
     sweep = catalog_plans.build_rows(
         spark,
         {"q_deliberately_broken": _BrokenSpec, "q_cartesian": _CartesianSpec,
-         "q_array_out": _ArraySpec, "q_two_shuffles": _TwoShufflesSpec},
+         "q_array_out": _ArraySpec, "q_two_shuffles": _TwoShufflesSpec,
+         "q_cartesian_cut": _CartesianCutSpec, "q_two_shuffles_cut": _TwoShufflesCutSpec},
         sf_dir,
     )
     broken = catalog_plans.broken(sweep)
@@ -323,11 +339,14 @@ def test_sweep_goes_red_on_plan_build_failure(spark, sf_dir):
     assert "RuntimeError" in broken["q_deliberately_broken"]
     # and an allowlisted failure is NOT red (the escape hatch works)
     assert not catalog_plans.broken(sweep, {"q_deliberately_broken": "red-path proof"})
-    assert catalog_plans.cartesian(sweep) == ["q_cartesian"]
+    assert "CartesianProduct" not in sweep["q_cartesian_cut"].plan
+    assert catalog_plans.cartesian(sweep) == ["q_cartesian", "q_cartesian_cut"]
     assert catalog_plans.complex_outputs(sweep) == {"q_array_out": ["pair"]}
+    assert count_shuffle_exchanges(sweep["q_two_shuffles_cut"].plan) == 0
     over = catalog_plans.over_budget(
-        sweep, {"q_cartesian": 1, "q_array_out": 1, "q_two_shuffles": 1})
-    assert list(over) == ["q_two_shuffles"], over
+        sweep, {"q_cartesian": 1, "q_array_out": 1, "q_two_shuffles": 1,
+                "q_two_shuffles_cut": 1})
+    assert list(over) == ["q_two_shuffles", "q_two_shuffles_cut"], over
     over = catalog_plans.over_budget(sweep, {"q_deliberately_broken": 9, "q_unregistered": 9})
     assert list(over) == ["q_deliberately_broken", "q_unregistered"], over
 

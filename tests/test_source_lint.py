@@ -491,3 +491,52 @@ def test_cpu_lanes_widen_only_through_cpu_fanout():
             f"_scan_splits: {sorted(size_reads)}"
         )
     assert not problems, "; ".join(problems)
+
+
+# ---------------------------------------------------------------------------
+# One materialization barrier
+# ---------------------------------------------------------------------------
+
+# Every plan cut goes through plans/barrier.py:barrier, which names its
+# reason from a closed set and lets the catalog sweep record the plan it
+# cuts. A bare localCheckpoint hides its subtree from every plan gate;
+# a reason that is not a literal cannot be read off the source.
+_BARRIER = (Path("plans") / "barrier.py", "barrier")
+
+
+def _barrier_sites(pkg: Path, reasons) -> list[str]:
+    """Bare ``.localCheckpoint(`` calls outside the helper, and
+    ``barrier(...)`` calls whose reason is not a literal from
+    ``reasons``, under the package at ``pkg``."""
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg)
+        tree = ast.parse(path.read_text())
+        helper = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and (rel, node.name) == _BARRIER:
+                helper = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            if name == "localCheckpoint" and id(node) not in helper:
+                hits.append(f"{rel}:{node.lineno}: bare localCheckpoint")
+            elif name == "barrier":
+                reason = node.args[1] if len(node.args) > 1 else next(
+                    (k.value for k in node.keywords if k.arg == "reason"), None)
+                if not (isinstance(reason, ast.Constant) and reason.value in reasons):
+                    hits.append(f"{rel}:{node.lineno}: barrier reason not a literal "
+                                f"from {sorted(reasons)}")
+    return hits
+
+
+def test_plan_cuts_go_through_the_barrier():
+    from kafka_stream_service_spark.plans.barrier import REASONS
+
+    hits = _barrier_sites(PKG, REASONS)
+    assert not hits, (
+        "cut a plan with plans.barrier.barrier(df, <reason literal>), so the "
+        f"reason is stated and the catalog sweep sees the cut plan: {hits}"
+    )
