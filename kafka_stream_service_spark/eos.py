@@ -75,20 +75,22 @@ class ForeachBatchIdempotentWriter:
         except (FileNotFoundError, json.JSONDecodeError):
             return set()
 
-    def _record(self, epoch_id: int) -> None:
-        epochs = self.committed_epochs()
-        epochs.add(int(epoch_id))
+    def _record(self, epochs: set[int], epoch_id: int) -> None:
+        """Publish ``epochs`` (the ledger as read this epoch) plus
+        ``epoch_id``, as the sorted list of every committed epoch."""
         tmp = self.ledger_path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(sorted(epochs), f)
+            json.dump(sorted(epochs | {epoch_id}), f)
         os.replace(tmp, self.ledger_path)  # atomic publish
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if int(epoch_id) in self.committed_epochs():
+        epoch_id = int(epoch_id)
+        epochs = self.committed_epochs()  # the one ledger read of this epoch
+        if epoch_id in epochs:
             return  # replayed epoch: already fully committed, skip
-        out = os.path.join(self.base_dir, f"batch_id={int(epoch_id)}")
+        out = os.path.join(self.base_dir, f"batch_id={epoch_id}")
         batch_df.write.mode("overwrite").format(self.fmt).save(out)
-        self._record(epoch_id)
+        self._record(epochs, epoch_id)
 
 
 class KafkaTransactionalEpochWriter:

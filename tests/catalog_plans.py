@@ -32,6 +32,7 @@ from kafka_stream_service_spark.plans import (
     single_partition_offenders,
 )
 from kafka_stream_service_spark.plans.barrier import recording
+from kafka_stream_service_spark.queries import dedup2
 
 
 @dataclass(frozen=True)
@@ -56,7 +57,15 @@ def _distinct(plans: list[str]) -> tuple[str, ...]:
 
 def build_rows(spark, queries, sf) -> dict[str, Built]:
     """Build each query's frame at ``sf`` and keep its plan, its
-    schema and the plans its barriers cut."""
+    schema and the plans its barriers cut.
+
+    The stored pair and bucket indexes are built first, outside any
+    recording: otherwise whichever consumer builds first would carry
+    the build's barrier plans (at sf0.1 in alphabetical order,
+    q_degree_assortativity counted 6 keyed shuffles against its 2).
+    ``q_pair_index_snapshot`` always rebuilds, so it keeps its own."""
+    dedup2.pair_index(spark, sf)
+    dedup2.bucket_index(spark, sf)
     sweep = {}
     for name, spec in queries.items():
         try:
