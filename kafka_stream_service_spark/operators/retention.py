@@ -1,15 +1,16 @@
 """Snapshot retention / garbage collection (VERDICT r11 next-steps #4).
 
 Every stored index in the catalog (pair buckets, semantic clusters,
-text postings, IVF lists, KN LM counts) is published under
-``_util.snapshot_dir(tag, sf_dir)`` as one immutable directory per
-(revision token, source fingerprint) — and nothing ever deleted them:
-each derivation-code bump or fixture regeneration strands the previous
-artifact forever. This module is the missing lifecycle leg: an
-inventory pass over a tag's artifact family and a retention pass that
-keeps the newest ``keep_latest`` complete artifacts (current + N-1 for
-rollback), pins any caller-named paths, removes the rest, and sweeps
-stale ``.tmp.<pid>`` droppings left by crashed builders.
+text postings, IVF lists, KN LM counts) is published by
+``queries/stored.py`` as one immutable directory per (revision token,
+source fingerprint) under ``snapshot_dir(tag, sf_dir)`` — and nothing
+ever deleted them: each derivation-code bump or fixture regeneration
+strands the previous artifact forever. This module is the missing
+lifecycle leg: an inventory pass over a tag's artifact family and a
+retention pass that keeps the newest ``keep_latest`` complete artifacts
+(current + N-1 for rollback), pins any caller-named paths, removes the
+rest, and sweeps stale ``.tmp.<pid>`` droppings left by crashed
+builders.
 
 Scale shape: GC is pure artifact-METADATA work — one directory listing
 plus O(#revisions) stat calls and deletes; it never opens a parquet
@@ -31,10 +32,10 @@ import shutil
 import time
 from dataclasses import dataclass
 
-from ..queries._util import snapshot_dir
+from ..queries.stored import DECLARED, snapshot_dir
 
 # A builder's in-flight temp dir: "<artifact>.tmp.<pid>" (see
-# _util.publish_atomic). One that outlives this grace period belongs to
+# stored.publish_atomic). One that outlives this grace period belongs to
 # a crashed builder — a live one renames within seconds.
 _TMP_MARKER = ".tmp."
 DEFAULT_TMP_GRACE_S = 3600.0
@@ -182,29 +183,6 @@ def gc_snapshots(
     )
 
 
-def _live_artifact_paths(sf_dir: str) -> dict[str, tuple[str, ...]]:
-    """Tag -> the artifact paths CURRENT code resolves to — the pins a
-    production GC must honor regardless of recency (a just-rolled-back
-    revision token makes the live artifact the OLDER one). Imports stay
-    function-local: the queries package imports operators, not vice
-    versa."""
-    from ..queries.dedup2 import bucket_index_path, pair_index_path
-    from ..queries.round11 import sem_index_path
-    from ..queries.round11f import text_index_path
-    from ..queries.round11h import kn_lm_path
-    from ..queries.round11n import text_base_index_path
-    from ..queries.round12 import ivf_base_index_path
-
-    return {
-        "pair_index": (pair_index_path(sf_dir), bucket_index_path(sf_dir)),
-        "sem_index": (sem_index_path(sf_dir),),
-        "text_index": (text_index_path(sf_dir),),
-        "text_index_base": (text_base_index_path(sf_dir),),
-        "kn_lm": (kn_lm_path(sf_dir),),
-        "ivf_base": (ivf_base_index_path(sf_dir),),
-    }
-
-
 def gc_all_known_indexes(
     sf_dir: str,
     keep_latest: int = 2,
@@ -216,17 +194,22 @@ def gc_all_known_indexes(
     to — revision token + source fingerprint) pinned explicitly so the
     pass is safe to run at any time: recency keeps the newest
     ``keep_latest`` for rollback, the pin protects the serving artifact
-    even when it is not the newest (post-rollback state). This is the
-    production retention job; q_snapshot_gc_census certifies the policy
-    mechanics against a DuckDB oracle on a dedicated demo tag."""
+    even when it is not the newest (post-rollback state). The families
+    and their pins are the declarations in ``queries/stored.py``, so a
+    declared artifact cannot be left out. This is the production
+    retention job; q_snapshot_gc_census certifies the policy mechanics
+    against a DuckDB oracle on a dedicated demo tag."""
+    pins: dict[str, tuple[str, ...]] = {}
+    for index in DECLARED:
+        pins[index.tag] = (*pins.get(index.tag, ()), index.path(sf_dir))
     return {
         tag: gc_snapshots(
             tag,
             sf_dir,
             keep_latest=keep_latest,
-            keep_paths=pins,
+            keep_paths=paths,
             tmp_grace_s=tmp_grace_s,
             dry_run=dry_run,
         )
-        for tag, pins in _live_artifact_paths(sf_dir).items()
+        for tag, paths in pins.items()
     }

@@ -95,63 +95,3 @@ def work_dir(tag: str, sf_dir: str) -> str:
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     return path
-
-
-def snapshot_dir(tag: str, sf_dir: str) -> str:
-    """Like :func:`work_dir` (same per-user scratch root) but PERSISTENT:
-    the per-(tag, sf) directory is created if absent and NEVER wiped on
-    entry — the lifetime contract for materialized index artifacts (e.g.
-    the verified-pair snapshot) that one catalog query BUILDS and several
-    others READ across invocations in the same session or process group.
-    Builders must publish atomically — write the parquet (with its
-    _SUCCESS marker) to a temp sibling, then os.rename the complete
-    directory into place (see dedup2.build_pair_index) — so readers
-    never observe partial state even against a concurrent rebuild;
-    cache invalidation is the builder's job via a revision token PLUS a
-    source-data fingerprint in the artifact subpath."""
-    import os
-
-    path = _scratch_path(f"snap_{tag}", sf_dir)
-    os.makedirs(path, exist_ok=True)
-    return path
-
-
-def table_fingerprint(sf_dir: str, name: str) -> str:
-    """Cheap fingerprint of a source table (parquet mtime+size), baked
-    into artifact subpaths so regenerating the fixture data under the
-    SAME path invalidates a snapshot instead of silently serving stale
-    derived rows (ADVICE r10)."""
-    import hashlib
-    import os
-
-    from ..tables import table_path
-
-    st = os.stat(table_path(sf_dir, name))
-    return hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:8]
-
-
-def publish_atomic(df, out: str, sort_cols: tuple[str, ...] = ()) -> None:
-    """Atomically publish ``df`` as a parquet directory at ``out``: write
-    to a pid-suffixed temp sibling (the parquet commit leaves _SUCCESS
-    inside), then one ``os.rename`` moves the COMPLETE directory into
-    place. A concurrent reader therefore sees ``out`` either absent or
-    complete — never mid-overwrite — and a builder that loses the rename
-    race discards its temp dir (artifacts here are deterministic
-    derivations, so the winner's copy is bit-identical).
-
-    ``sort_cols`` orders rows within partitions before the write so the
-    parquet row groups carry tight min/max zone maps on the probe keys.
-    """
-    import os
-    import shutil
-
-    if sort_cols:
-        df = df.sortWithinPartitions(*sort_cols)
-    tmp = f"{out}.tmp.{os.getpid()}"
-    df.write.mode("overwrite").parquet(tmp)
-    assert os.path.exists(os.path.join(tmp, "_SUCCESS"))
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-

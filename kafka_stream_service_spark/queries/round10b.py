@@ -415,7 +415,7 @@ def q_pair_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     #2): the ~10% "newly arrived" slice (doc_id % {_DELTA_MOD} ==
     {_DELTA_REM}) is signed and banded FRESH — linear in the delta only
     — and its banded rows equi-join the STORED band-bucket index
-    (dedup2.bucket_index, persisted beside the pair snapshot) to find
+    (dedup2.BUCKET_INDEX, persisted beside the pair snapshot) to find
     candidate partners; exact-Jaccard verification then re-shingles
     only the candidate endpoints. Nothing in the probe touches the
     corpus at signature grain: the base side's buckets come from
@@ -439,7 +439,7 @@ def q_pair_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket artifact once, exactly like the pair snapshot's consumers.
     """
     from ..operators.dedup import band_buckets, word_shingles_from_tokens
-    from .dedup2 import bucket_index
+    from .dedup2 import BUCKET_INDEX
 
     is_delta = (F.col("doc_id") % _DELTA_MOD) == _DELTA_REM
     d = tables(spark, sf_dir)["documents"]
@@ -457,7 +457,7 @@ def q_pair_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("doc_id").alias("new_id"), "bb.band", "bb.bucket")
 
     # Base side: the STORED banded index (parquet scan, never re-derived).
-    stored = bucket_index(spark, sf_dir).filter(
+    stored = BUCKET_INDEX.read(spark, sf_dir).filter(
         (F.col("bucket_n") >= 2) & (F.col("bucket_n") <= 1000)
     )
     cand = (
@@ -548,9 +548,9 @@ def q_pair_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus pair space.
     """
     from ..operators.dedup import word_shingles_from_tokens
-    from .dedup2 import pair_index
+    from .dedup2 import PAIR_INDEX
 
-    fpairs = pair_index(spark, sf_dir)
+    fpairs = PAIR_INDEX.read(spark, sf_dir)
     d = tables(spark, sf_dir)["documents"]
     # Materialize the token array BEFORE shingling (never pass an inline
     # split() — it gets re-inlined into every try_element_at, O(len^2)

@@ -20,37 +20,18 @@ from .clustering import _ASSIGN_SQL, K, _assignments
 from .corpus_ops import _QUANT_SQL, _quantized
 from .registry import query
 from .round10 import _SEM_TAU2_BP
+from .stored import StoredIndex
 
 # ---------------------------------------------------------------------------
 # Stored semantic index: (vec_id, centroid_id, qv, nrm) — the assignment
-# table SemDeDup's pair stage reads, persisted like the pair/bucket index.
+# table SemDeDup's pair stage reads (queries/stored.py).
 # ---------------------------------------------------------------------------
 
-# Revision token baked into the artifact path: bump whenever the
-# quantization or assignment derivation changes so a stale on-disk index
-# from older code can never serve wrong members.
-SEM_INDEX_REV = f"r1k{K}t{_SEM_TAU2_BP}"
 
-
-def sem_index_path(sf_dir: str) -> str:
-    import os
-
-    from ._util import snapshot_dir, table_fingerprint
-
-    return os.path.join(
-        snapshot_dir("sem_index", sf_dir),
-        f"{SEM_INDEX_REV}_{table_fingerprint(sf_dir, 'embeddings')}",
-    )
-
-
-def build_sem_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persist the semantic index: every vector's int8 quantization, its
-    nearest stored centroid, and its integer norm — the cluster-member
-    table an incremental SemDeDup probe joins against. Published
-    atomically (temp sibling + rename) and sorted by centroid_id so the
-    probe's per-cluster reads hit tight zone maps."""
-    from ._util import publish_atomic
-
+def _sem_members(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every vector's int8 quantization, its nearest stored centroid,
+    and its integer norm: the cluster-member table an incremental
+    SemDeDup probe joins against."""
     e = _quantized(tables(spark, sf_dir)["embeddings"])
     assign = _assignments(spark, sf_dir).select("vec_id", "centroid_id")
     nrm = F.aggregate(
@@ -60,24 +41,20 @@ def build_sem_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-    m = assign.join(e.select("vec_id", "qv"), "vec_id").select(
+    return assign.join(e.select("vec_id", "qv"), "vec_id").select(
         "vec_id", "centroid_id", "qv", nrm.alias("nrm")
     )
-    out = sem_index_path(sf_dir)
-    publish_atomic(m, out, sort_cols=("centroid_id", "vec_id"))
-    return spark.read.parquet(out)
 
 
-def sem_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stored semantic index for probes: read the persisted artifact when
-    present, else build once (self-healing; deterministic derivation
-    means read-vs-build can never disagree)."""
-    import os
-
-    out = sem_index_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        return build_sem_index(spark, sf_dir)
-    return spark.read.parquet(out)
+# The revision token changes whenever the quantization or assignment
+# derivation does. Sorted by centroid_id so the probe's per-cluster
+# reads hit tight zone maps.
+SEM_INDEX = StoredIndex(
+    tag="sem_index",
+    rev=f"r1k{K}t{_SEM_TAU2_BP}",
+    source="embeddings",
+    derive=lambda spark, sf_dir: (_sem_members(spark, sf_dir), ("centroid_id", "vec_id")),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -150,7 +127,7 @@ def q_semdedup_delta_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     is_delta = (F.col("vec_id") % _SEM_DELTA_MOD) == _SEM_DELTA_REM
-    stored = sem_index(spark, sf_dir)
+    stored = SEM_INDEX.read(spark, sf_dir)
 
     # Delta side: quantize the new slice fresh, assign to STORED
     # centroids (the K index rows with vec_id < K, broadcast).
@@ -329,7 +306,7 @@ _IVF_QMAX = 80
 )
 def q_knn_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF SERVING over the STORED semantic index — the triad's third
-    leg (build: sem_index; refresh: q_semdedup_delta_edges; serve:
+    leg (build: SEM_INDEX; refresh: q_semdedup_delta_edges; serve:
     this). Eight incoming query vectors (the delta residue, vec_id %
     {_SEM_DELTA_MOD} == {_SEM_DELTA_REM} below {_IVF_QMAX}) are
     quantized fresh, probe their {_IVF_NPROBE} nearest stored centroids
@@ -350,7 +327,7 @@ def q_knn_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    stored = sem_index(spark, sf_dir)
+    stored = SEM_INDEX.read(spark, sf_dir)
     cent = stored.filter(F.col("vec_id") < K).select(
         F.col("vec_id").alias("cid"), F.col("qv").alias("cqv")
     )
@@ -755,9 +732,9 @@ def q_rouge2_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     its first endpoint's bigram types — candidate-grain x doc-length,
     never corpus-grain.
     """
-    from .dedup2 import pair_index
+    from .dedup2 import PAIR_INDEX
 
-    fpairs = pair_index(spark, sf_dir)
+    fpairs = PAIR_INDEX.read(spark, sf_dir)
     d = tables(spark, sf_dir)["documents"]
     ends = (
         fpairs.select(F.col("id_a").alias("doc_id"))

@@ -277,7 +277,7 @@ def build_index_probe_stream(
     between-epoch chaos-restart test (which needs to drive the same
     plan from its own incrementally revealed directory + checkpoint)."""
     from ..operators.dedup import band_buckets, word_shingles_from_tokens
-    from .dedup2 import BANDS, K, SHINGLE_N, bucket_index, portable_minhash_signature
+    from .dedup2 import BANDS, BUCKET_INDEX, K, SHINGLE_N, portable_minhash_signature
 
     d_schema = tables(spark, sf_dir)["documents"].select("doc_id", "text").schema
     stream = (
@@ -299,7 +299,7 @@ def build_index_probe_stream(
         F.explode(band_buckets(F.col("sig"), BANDS, K // BANDS)).alias("bb"),
     ).select("new_id", "sh_new", "bb.band", "bb.bucket")
 
-    stored = bucket_index(spark, sf_dir).filter(
+    stored = BUCKET_INDEX.read(spark, sf_dir).filter(
         (F.col("bucket_n") >= 2) & (F.col("bucket_n") <= 1000)
     )
     # static endpoint-shingle lookup for the partner side of the verify

@@ -11,92 +11,55 @@ from pyspark.sql import functions as F
 
 from ..tables import tables
 from .registry import query
+from .stored import Part, StoredIndex
 
 # ---------------------------------------------------------------------------
 # Stored text index: postings (token, doc_id, tf, df) + doclen + stats
 # ---------------------------------------------------------------------------
 
-TEXT_INDEX_REV = "r1tok-ws"  # bump when tokenization/derivation changes
 
-
-def text_index_path(sf_dir: str) -> str:
-    import os
-
-    from ._util import snapshot_dir, table_fingerprint
-
-    return os.path.join(
-        snapshot_dir("text_index", sf_dir),
-        f"{TEXT_INDEX_REV}_{table_fingerprint(sf_dir, 'documents')}",
-    )
-
-
-def build_text_index(spark: SparkSession, sf_dir: str) -> str:
-    """Persist the lexical index a BM25 serving path reads: postings
-    (token, doc_id, tf) with the document frequency DENORMALIZED onto
-    every posting row (so idf needs no second lookup), the doc-length
-    table, and the 1-row corpus stats — three parquet subdirectories
-    published ATOMICALLY as one artifact (write to a temp parent, touch
-    its _SUCCESS, one os.rename). Postings are sorted by token: a
-    serving probe for a handful of query terms reads token-clustered
-    row groups via zone maps.
-
-    Returns the artifact path."""
-    import os
-    import shutil
-
-    d = tables(spark, sf_dir)["documents"]
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-    tf = toks.groupBy("token", "doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
+def text_index_parts(docs: DataFrame, with_df: bool) -> dict[str, Part]:
+    """The lexical index over ``docs``: postings (token, doc_id, tf),
+    the doc-length table and the 1-row corpus stats. ``with_df``
+    denormalizes the document frequency onto every posting row, so idf
+    needs no second lookup. Postings are sorted by token: a probe for a
+    handful of query terms reads token-clustered row groups via zone
+    maps."""
     from pyspark.sql import Window
 
-    df_w = Window.partitionBy("token")
-    postings = tf.withColumn(
-        "df", F.count(F.lit(1)).over(df_w).cast("bigint")
+    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    postings = toks.groupBy("token", "doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("tf")
     )
-    doclen = d.select(
+    if with_df:
+        postings = postings.withColumn(
+            "df", F.count(F.lit(1)).over(Window.partitionBy("token")).cast("bigint")
+        )
+    doclen = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("dl")
     )
     stats = doclen.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("dl").cast("bigint").alias("sum_dl"),
     )
-    out = text_index_path(sf_dir)
-    tmp = f"{out}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    postings.sortWithinPartitions("token").write.mode("overwrite").parquet(
-        os.path.join(tmp, "postings")
-    )
-    doclen.sortWithinPartitions("doc_id").write.mode("overwrite").parquet(
-        os.path.join(tmp, "doclen")
-    )
-    stats.write.mode("overwrite").parquet(os.path.join(tmp, "stats"))
-    # the artifact-level marker gates readers on ALL THREE tables being
-    # complete (each subdir also has parquet's own _SUCCESS)
-    with open(os.path.join(tmp, "_SUCCESS"), "w"):
-        pass
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def text_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Stored text index for probes: {postings, doclen, stats} frames
-    reading the persisted artifact, building it once if absent
-    (self-healing, same contract as the pair/bucket/semantic indexes)."""
-    import os
-
-    out = text_index_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        build_text_index(spark, sf_dir)
     return {
-        "postings": spark.read.parquet(os.path.join(out, "postings")),
-        "doclen": spark.read.parquet(os.path.join(out, "doclen")),
-        "stats": spark.read.parquet(os.path.join(out, "stats")),
+        "postings": (postings, ("token",)),
+        "doclen": (doclen, ("doc_id",)),
+        "stats": (stats, ()),
     }
+
+
+# The serving index a BM25 probe reads; the revision token changes
+# whenever tokenization or the derivation does.
+TEXT_INDEX = StoredIndex(
+    tag="text_index",
+    rev="r1tok-ws",
+    source="documents",
+    parts=("postings", "doclen", "stats"),
+    derive=lambda spark, sf_dir: text_index_parts(
+        tables(spark, sf_dir)["documents"], with_df=True
+    ),
+)
 
 
 from .round7f import _BM25_TERMS, _BM25_TERMS_SQL  # noqa: E402 (same query set)
@@ -156,7 +119,7 @@ def q_bm25_stored_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists) index rows — never the corpus — plus two broadcast scalars;
     the top-15 cut is TakeOrdered.
     """
-    idx = text_index(spark, sf_dir)
+    idx = TEXT_INDEX.read(spark, sf_dir)
     tf = idx["postings"].filter(F.col("token").isin(*_BM25_TERMS))
     dl = idx["doclen"]
     stats = idx["stats"]
@@ -382,9 +345,9 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the snapshot read is candidate-scale; degrees are one
     rollup of the edge list; the final statistic is a 1-row aggregate.
     """
-    from .dedup2 import pair_index
+    from .dedup2 import PAIR_INDEX
 
-    fpairs = pair_index(spark, sf_dir).select("id_a", "id_b")
+    fpairs = PAIR_INDEX.read(spark, sf_dir).select("id_a", "id_b")
     deg = (
         fpairs.select(F.col("id_a").alias("node"))
         .union(fpairs.select(F.col("id_b").alias("node")))

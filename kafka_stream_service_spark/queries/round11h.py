@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..tables import tables
 from .registry import query
+from .stored import StoredIndex
 
 # ---------------------------------------------------------------------------
 # Stored Kneser-Ney bigram LM (absolute discount D = 3/4, round11b maths)
@@ -34,19 +35,6 @@ from .registry import query
 # are exact integers < 2^53, the division is one IEEE-identical double
 # op, and every downstream consumer does INTEGER arithmetic on lp_q9 —
 # the serving path never re-touches floats.
-
-KN_LM_REV = "r1kn34"  # bump when the LM derivation changes
-
-
-def kn_lm_path(sf_dir: str) -> str:
-    import os
-
-    from ._util import snapshot_dir, table_fingerprint
-
-    return os.path.join(
-        snapshot_dir("kn_lm", sf_dir),
-        f"{KN_LM_REV}_{table_fingerprint(sf_dir, 'documents')}",
-    )
 
 
 def _kn_bigram_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,19 +85,15 @@ def _kn_bigram_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kn_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stored KN bigram LM, building it once if absent (self-healing,
-    same contract as the pair/bucket/semantic/text indexes). Sorted by
-    w1 so a serving probe for a handful of contexts reads w1-clustered
-    row groups via zone maps."""
-    import os
-
-    from ._util import publish_atomic
-
-    out = kn_lm_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        publish_atomic(_kn_bigram_table(spark, sf_dir), out, sort_cols=("w1", "w2"))
-    return spark.read.parquet(out)
+# The stored KN bigram LM; the revision token changes whenever the LM
+# derivation does. Sorted by w1 so a serving probe for a handful of
+# contexts reads w1-clustered row groups via zone maps.
+KN_LM = StoredIndex(
+    tag="kn_lm",
+    rev="r1kn34",
+    source="documents",
+    derive=lambda spark, sf_dir: (_kn_bigram_table(spark, sf_dir), ("w1", "w2")),
+)
 
 
 # Shared oracle CTE text: the KN table derived from scratch in DuckDB.
@@ -168,7 +152,7 @@ def q_kn_lm_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one bigram explode + three bounded aggregations, paid ONCE, and
     every downstream quality-filter shard run reads parquet.
     """
-    lm = kn_lm(spark, sf_dir)
+    lm = KN_LM.read(spark, sf_dir)
     return (
         lm.groupBy("w1", "c1", "n1_fw")
         .agg(
@@ -229,7 +213,7 @@ def q_doc_logprob_stored_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is per-row arithmetic — no ntile, no global sort — so
     the filter is embarrassingly parallel at any scale.
     """
-    lm = kn_lm(spark, sf_dir).select("w1", "w2", "lp_q9")
+    lm = KN_LM.read(spark, sf_dir).select("w1", "w2", "lp_q9")
     d = tables(spark, sf_dir)["documents"]
     toked = d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
     dbg = (

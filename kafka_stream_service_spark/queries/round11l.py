@@ -202,9 +202,9 @@ def q_ra_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against existing edges is a broadcast of the same small
     edge list.
     """
-    from .dedup2 import pair_index
+    from .dedup2 import PAIR_INDEX
 
-    fpairs = pair_index(spark, sf_dir).select("id_a", "id_b")
+    fpairs = PAIR_INDEX.read(spark, sf_dir).select("id_a", "id_b")
     adj = fpairs.select(
         F.col("id_a").alias("u"), F.col("id_b").alias("v")
     ).union(fpairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))

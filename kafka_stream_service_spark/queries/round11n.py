@@ -13,94 +13,38 @@ index surface; this extends the mandated stored-index/serving tier
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import tables
 from .registry import query
 from .round10b import _DELTA_MOD, _DELTA_REM
+from .round11f import text_index_parts
+from .stored import StoredIndex
 
 # ---------------------------------------------------------------------------
 # Stored BASE text index (corpus minus the delta slice)
 # ---------------------------------------------------------------------------
 
-TEXT_BASE_REV = "r1tok-ws"  # bump when tokenization/derivation changes
-
-
-def text_base_index_path(sf_dir: str) -> str:
-    import os
-
-    from ._util import snapshot_dir, table_fingerprint
-
-    return os.path.join(
-        snapshot_dir("text_index_base", sf_dir),
-        f"{TEXT_BASE_REV}_{table_fingerprint(sf_dir, 'documents')}",
-    )
-
-
-def build_text_base_index(spark: SparkSession, sf_dir: str) -> str:
-    """Persist the BASE lexical index: postings (token, doc_id, tf),
-    doclen and 1-row stats over the corpus EXCLUDING the delta slice
-    (doc_id % 10 == 7, the repo's standing "newly arrived" convention
-    from q_pair_index_delta). Unlike the serving index
-    (round11f.build_text_index), postings here deliberately carry NO
-    denormalized df: a denormalized df would go stale on every refresh
-    and force rewriting every posting row of every touched token — the
-    refresh path keeps df normalized (one per-token census away) and
-    lets the SERVING build denormalize at publication. Published
-    atomically (temp parent + _SUCCESS + one os.rename), postings
-    sorted by token for zone-map-pruned merge reads.
-    """
-    import os
-    import shutil
-
-    d = tables(spark, sf_dir)["documents"].filter(
-        (F.col("doc_id") % _DELTA_MOD) != _DELTA_REM
-    )
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-    postings = toks.groupBy("token", "doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    doclen = d.select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("dl")
-    )
-    stats = doclen.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("sum_dl"),
-    )
-    out = text_base_index_path(sf_dir)
-    tmp = f"{out}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    postings.sortWithinPartitions("token").write.mode("overwrite").parquet(
-        os.path.join(tmp, "postings")
-    )
-    doclen.sortWithinPartitions("doc_id").write.mode("overwrite").parquet(
-        os.path.join(tmp, "doclen")
-    )
-    stats.write.mode("overwrite").parquet(os.path.join(tmp, "stats"))
-    with open(os.path.join(tmp, "_SUCCESS"), "w"):
-        pass
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def text_base_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Stored base index for the refresh probe: {postings, doclen,
-    stats} frames reading the persisted artifact, building it once if
-    absent (self-healing, same contract as the other index artifacts)."""
-    import os
-
-    out = text_base_index_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        build_text_base_index(spark, sf_dir)
-    return {
-        "postings": spark.read.parquet(os.path.join(out, "postings")),
-        "doclen": spark.read.parquet(os.path.join(out, "doclen")),
-        "stats": spark.read.parquet(os.path.join(out, "stats")),
-    }
+# The BASE lexical index over the corpus EXCLUDING the delta slice
+# (doc_id % 10 == 7, the repo's standing "newly arrived" convention from
+# q_pair_index_delta). Unlike the serving index (round11f.TEXT_INDEX),
+# postings here deliberately carry NO denormalized df: it would go stale
+# on every refresh and force rewriting every posting row of every touched
+# token, so the refresh path keeps df normalized (one per-token census
+# away) and the SERVING build denormalizes at publication.
+TEXT_BASE_INDEX = StoredIndex(
+    tag="text_index_base",
+    rev="r1tok-ws",
+    source="documents",
+    parts=("postings", "doclen", "stats"),
+    derive=lambda spark, sf_dir: text_index_parts(
+        tables(spark, sf_dir)["documents"].filter(
+            (F.col("doc_id") % _DELTA_MOD) != _DELTA_REM
+        ),
+        with_df=False,
+    ),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -159,7 +103,7 @@ def q_text_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames. Refresh cost is O(delta + touched tokens), decoupled from
     corpus size — the same contract as q_pair_index_delta.
     """
-    base = text_base_index(spark, sf_dir)
+    base = TEXT_BASE_INDEX.read(spark, sf_dir)
     base_census = base["postings"].groupBy("token").agg(
         F.count(F.lit(1)).cast("bigint").alias("df_b"),
         F.sum("tf").cast("bigint").alias("tf_b"),
@@ -232,7 +176,7 @@ def q_bm25_after_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delta side tokenizes the ~10% arrival slice; stats/census
     merges are token-grain and 1-row.
     """
-    base = text_base_index(spark, sf_dir)
+    base = TEXT_BASE_INDEX.read(spark, sf_dir)
     delta_docs = tables(spark, sf_dir)["documents"].filter(
         (F.col("doc_id") % _DELTA_MOD) == _DELTA_REM
     )

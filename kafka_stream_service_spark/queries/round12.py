@@ -22,6 +22,7 @@ from ..tables import tables
 from .corpus_ops import _QUANT_SQL, _quantized
 from .registry import query
 from .round10b import _DELTA_MOD, _DELTA_REM
+from .stored import Part, StoredIndex
 
 # ---------------------------------------------------------------------------
 # Snapshot retention / GC, certified by a survivor census
@@ -93,7 +94,7 @@ def q_snapshot_gc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from ..operators.retention import gc_snapshots
-    from ._util import publish_atomic, snapshot_dir, table_fingerprint
+    from .stored import publish_atomic, snapshot_dir, table_fingerprint
 
     # Per-PROCESS demo slate (ADVICE r12): the driver gate, bench passes,
     # and the pytest plan sweeps all build this query — concurrent
@@ -134,7 +135,7 @@ def q_snapshot_gc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").cast("bigint").alias("sum_chars"),
         )
         out = os.path.join(root, f"rev{i}_{fp}")
-        publish_atomic(art, out, sort_cols=("source",))
+        publish_atomic(out, (art, ("source",)))
         # pin recency order to revision order regardless of write timing
         os.utime(out, (now - 600 + i * 60, now - 600 + i * 60))
         paths[i] = out
@@ -246,38 +247,17 @@ def ivf_catalog_k(sf_dir: str) -> int:
     return max(8, math.isqrt(n))
 
 
-def ivf_base_index_path(sf_dir: str) -> str:
-    import os
-
-    from ._util import snapshot_dir, table_fingerprint
-
-    # One uniform token scheme (r3: delta-proportional catalog k +
-    # 1% arrival slice; supersedes r1 probe variants and the fixed-K r2
-    # catalog token). k and the arrival slice are IN the name, so an
-    # artifact built under other values can never be served; superseded
-    # tokens are swept on build.
-    return os.path.join(
-        snapshot_dir("ivf_base", sf_dir),
-        f"r3k{ivf_catalog_k(sf_dir)}d{IVF_DELTA_MOD}r{IVF_DELTA_REM}_"
-        f"{table_fingerprint(sf_dir, 'embeddings')}",
-    )
-
-
-def build_ivf_base_index(spark: SparkSession, sf_dir: str) -> str:
-    """Persist the BASE IVF index: ``members`` = (vec_id, centroid_id,
-    dist2, nrm) for every vector EXCLUDING the delta slice (the IVF
-    arrival convention, 1% per refresh, see IVF_DELTA_MOD),
-    range-partitioned AND sorted by centroid_id so a touched-list read
-    skips whole files and row groups via parquet min/max zone maps,
-    plus ``centroids`` = the k frozen seed centroids (cid, cqv) — stored
-    IN the artifact so a refresh assigns against the index's own
-    centroids, never re-deriving them from the (possibly moved) corpus. Published atomically (temp parent + _SUCCESS + one
-    os.rename), the round11n multi-part artifact contract. The list
-    count is sized from the corpus: ivf_catalog_k = max(8, isqrt(N)).
+def _ivf_base_parts(spark: SparkSession, sf_dir: str) -> dict[str, Part]:
+    """The BASE IVF index: ``members`` = (vec_id, centroid_id, dist2,
+    nrm) for every vector EXCLUDING the delta slice (the IVF arrival
+    convention, 1% per refresh, see IVF_DELTA_MOD), range-partitioned
+    AND sorted by centroid_id so a touched-list read skips whole files
+    and row groups via parquet min/max zone maps, plus ``centroids`` =
+    the k frozen seed centroids (cid, cqv) — stored IN the artifact so a
+    refresh assigns against the index's own centroids, never
+    re-deriving them from the (possibly moved) corpus. The list count
+    is sized from the corpus: ivf_catalog_k = max(8, isqrt(N)).
     """
-    import os
-    import shutil
-
     k = ivf_catalog_k(sf_dir)
     e = _quantized(tables(spark, sf_dir)["embeddings"])
     cent = e.filter(F.col("vec_id") < k).select(
@@ -310,78 +290,57 @@ def build_ivf_base_index(spark: SparkSession, sf_dir: str) -> str:
         F.expr(f"key DIV {k}").cast("bigint").alias("dist2"),
         nrm.alias("nrm"),
     )
-    out = ivf_base_index_path(sf_dir)
-    tmp = f"{out}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
     # Range-partition on centroid_id BEFORE the within-partition sort:
     # without it every output file spans the whole centroid range (rows
     # arrive hash-distributed from the groupBy) and a touched-list read
     # can never skip a file — the zone-map prune the census depends on
     # needs each file to cover a narrow, disjoint centroid slice.
-    members.repartitionByRange(
-        max(8, min(k, 64)), "centroid_id"
-    ).sortWithinPartitions("centroid_id", "vec_id").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(tmp, "members"))
-    cent.sortWithinPartitions("cid").write.mode("overwrite").parquet(
-        os.path.join(tmp, "centroids")
-    )
-    with open(os.path.join(tmp, "_SUCCESS"), "w"):
-        pass
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    _sweep_superseded_ivf_revisions(sf_dir, keep={out})
-    return out
+    return {
+        "members": (
+            members.repartitionByRange(max(8, min(k, 64)), "centroid_id"),
+            ("centroid_id", "vec_id"),
+        ),
+        "centroids": (cent, ("cid",)),
+    }
 
 
-def _sweep_superseded_ivf_revisions(sf_dir: str, keep: set[str]) -> list[str]:
+def _sweep_superseded_ivf_revisions(out: str) -> None:
     """Retire orphaned ivf_base revisions on build (ADVICE r13): every
     rev-token bump and probe k-sweep used to strand its predecessors in
     the scratch tag forever. Mirrors the gc_demo slate retirement:
     age-gated (>1h untouched) so a concurrently-running probe's fresh
-    variants are never raced, and the CATALOG artifact plus the
-    just-built one are pinned unconditionally. Metadata-scale: one
-    listing + O(#revisions) deletes."""
+    variants are never raced, and the just-built catalog artifact is
+    pinned unconditionally. Metadata-scale: one listing + O(#revisions)
+    deletes."""
     import os
     import shutil
     import time as _time
 
-    from ._util import snapshot_dir
-
-    root = snapshot_dir("ivf_base", sf_dir)
-    pinned = {os.path.basename(p.rstrip("/")) for p in keep}
-    pinned.add(os.path.basename(ivf_base_index_path(sf_dir)))
+    root, pinned = os.path.split(out)
     cutoff = _time.time() - 3600
-    swept = []
     for name in os.listdir(root):
         p = os.path.join(root, name)
         if (
-            name not in pinned
+            name != pinned
             and not os.path.islink(p)
             and os.path.isdir(p)
             and os.lstat(p).st_mtime < cutoff
         ):
             shutil.rmtree(p, ignore_errors=True)
-            if not os.path.exists(p):
-                swept.append(name)
-    return swept
 
 
-def ivf_base_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Stored base IVF index for the refresh probe: {members, centroids}
-    frames reading the persisted artifact, building once if absent
-    (self-healing, same contract as the other index artifacts)."""
-    import os
-
-    out = ivf_base_index_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        build_ivf_base_index(spark, sf_dir)
-    return {
-        "members": spark.read.parquet(os.path.join(out, "members")),
-        "centroids": spark.read.parquet(os.path.join(out, "centroids")),
-    }
+# One uniform token scheme (r3: delta-proportional catalog k + 1% arrival
+# slice; supersedes r1 probe variants and the fixed-K r2 catalog token).
+# k and the arrival slice are IN the name, so an artifact built under
+# other values can never be served; superseded tokens are swept on build.
+IVF_BASE_INDEX = StoredIndex(
+    tag="ivf_base",
+    rev=lambda sf_dir: f"r3k{ivf_catalog_k(sf_dir)}d{IVF_DELTA_MOD}r{IVF_DELTA_REM}",
+    source="embeddings",
+    parts=("members", "centroids"),
+    derive=_ivf_base_parts,
+    on_build=_sweep_superseded_ivf_revisions,
+)
 
 
 # Full-rebuild assignment at the DELTA-PROPORTIONAL catalog k, computed
@@ -439,7 +398,7 @@ _IVF_ASSIGN_SQL = """
 )
 def q_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF-index refresh — the ANN tier's missing fourth
-    leg (build: ivf_base_index; serve: q_knn_ivf_stored; audit:
+    leg (build: IVF_BASE_INDEX; serve: q_knn_ivf_stored; audit:
     q_ivf_serving_recall; refresh: THIS). The arrival slice (vec_id %
     {IVF_DELTA_MOD} == {IVF_DELTA_REM}, 1% "newly arrived" vectors per
     refresh cadence) is quantized fresh and assigned to the STORED
@@ -483,7 +442,7 @@ def q_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_refresh_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Body of q_knn_ivf_refresh."""
     k = ivf_catalog_k(sf_dir)
-    idx = ivf_base_index(spark, sf_dir)
+    idx = IVF_BASE_INDEX.read(spark, sf_dir)
     # The k stored centroids collapse into ONE broadcast array row, so
     # assignment is a map-side argmin over the delta — zero shuffles on
     # the arrival slice (the seam test pins the census job at <= 2 keyed

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..plans.barrier import barrier
 from ..tables import tables
-from .dedup2 import _PAIRS_CTE, _h_sql, pair_index, portable_hash64
+from .dedup2 import _PAIRS_CTE, PAIR_INDEX, _h_sql, portable_hash64
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -303,7 +303,7 @@ def q_bleu_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale (VERDICT r8 #4; the oracle's corpus-wide CTEs are
     unaffected because the clipped sums only ever read pair rows).
     """
-    fpairs = pair_index(spark, sf_dir)
+    fpairs = PAIR_INDEX.read(spark, sf_dir)
     pairs = barrier(fpairs.select("id_a", "id_b"), "reuse")
     endpoints = (
         pairs.select(F.col("id_a").alias("doc_id"))

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..plans.barrier import barrier
 from ..tables import tables
 from ._util import work_dir
-from .dedup2 import _PAIRS_CTE, _h_sql, pair_index, portable_hash64
+from .dedup2 import _PAIRS_CTE, PAIR_INDEX, _h_sql, portable_hash64
 from .registry import query
 from .streaming_replay import _literal_rows, _write_chunks, run_replay
 
@@ -207,7 +207,7 @@ def q_chrf_pair_fscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram shuffle is candidate-scale. The overlap join is per-(pair,
     shared-gram), bounded by doc length.
     """
-    fpairs = pair_index(spark, sf_dir)
+    fpairs = PAIR_INDEX.read(spark, sf_dir)
     pairs = barrier(fpairs.select("id_a", "id_b"), "reuse")
     endpoints = (
         pairs.select(F.col("id_a").alias("doc_id"))

@@ -64,8 +64,8 @@ def build_rows(spark, queries, sf) -> dict[str, Built]:
     the build's barrier plans (at sf0.1 in alphabetical order,
     q_degree_assortativity counted 6 keyed shuffles against its 2).
     ``q_pair_index_snapshot`` always rebuilds, so it keeps its own."""
-    dedup2.pair_index(spark, sf)
-    dedup2.bucket_index(spark, sf)
+    dedup2.PAIR_INDEX.read(spark, sf)
+    dedup2.BUCKET_INDEX.read(spark, sf)
     sweep = {}
     for name, spec in queries.items():
         try:

@@ -43,7 +43,7 @@ from kafka_stream_service_spark.queries.round11d import (
     _SDELTA_REM,
     build_index_probe_stream,
 )
-from kafka_stream_service_spark.queries.round11n import text_base_index
+from kafka_stream_service_spark.queries.round11n import TEXT_BASE_INDEX
 from kafka_stream_service_spark.queries.round11q import (
     _CUSUM_SPLIT_DOM,
     _cusum_stream_frame,
@@ -448,7 +448,7 @@ def test_text_index_refresh_consumer_survives_between_epoch_restart(
     doubled token row flips it.
     """
     base_census = (
-        text_base_index(spark, SF)["postings"]
+        TEXT_BASE_INDEX.read(spark, SF)["postings"]
         .groupBy("token")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("df_b"),

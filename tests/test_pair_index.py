@@ -2,9 +2,10 @@
 
 The oracle gate already hash-certifies q_pair_index_snapshot's
 build->persist->read cycle and every consumer's results at sf0.01; these
-tests pin the artifact-lifecycle properties the aggregate oracles cannot
-state: snapshot == live derivation row-for-row, self-healing reads, and
-revision-token isolation.
+tests pin what the aggregate oracles cannot state: snapshot == live
+derivation row-for-row, a self-healing read, and the pair and bucket
+read seams. The lifecycle every stored index shares is in
+``tests/test_stored.py``.
 """
 
 from __future__ import annotations
@@ -12,19 +13,15 @@ from __future__ import annotations
 import os
 import shutil
 
+from kafka_stream_service_spark.plans import physical_plan
 from kafka_stream_service_spark.queries.dedup2 import (
-    PAIR_INDEX_REV,
+    BUCKET_INDEX,
+    PAIR_INDEX,
     _verified_pairs,
-    build_pair_index,
-    pair_index,
-    pair_index_path,
 )
+from kafka_stream_service_spark.queries.registry import QUERIES
 
 SF = "/root/testdata/sf0.001"
-
-
-def _wipe(sf_dir: str) -> None:
-    shutil.rmtree(os.path.dirname(pair_index_path(sf_dir)), ignore_errors=True)
 
 
 def _key_set(df):
@@ -33,45 +30,28 @@ def _key_set(df):
 
 def test_snapshot_equals_live_derivation(spark):
     _, live = _verified_pairs(spark, SF)
-    snap = build_pair_index(spark, SF)
+    snap = PAIR_INDEX.build(spark, SF)
     assert _key_set(snap) == _key_set(live)
     assert len(_key_set(snap)) > 0, "fixture must plant near-dup pairs"
 
 
 def test_reader_self_heals_when_snapshot_absent(spark):
-    _wipe(SF)
-    assert not os.path.exists(pair_index_path(SF))
-    got = pair_index(spark, SF)
+    shutil.rmtree(os.path.dirname(PAIR_INDEX.path(SF)), ignore_errors=True)
+    assert not os.path.exists(PAIR_INDEX.path(SF))
+    got = PAIR_INDEX.read(spark, SF)
     # the read built and persisted the artifact as a side effect
-    assert os.path.exists(os.path.join(pair_index_path(SF), "_SUCCESS"))
+    assert os.path.exists(os.path.join(PAIR_INDEX.path(SF), "_SUCCESS"))
     _, live = _verified_pairs(spark, SF)
     assert _key_set(got) == _key_set(live)
 
 
 def test_reader_prefers_existing_snapshot(spark):
-    build_pair_index(spark, SF)
-    path = pair_index_path(SF)
+    PAIR_INDEX.build(spark, SF)
+    path = PAIR_INDEX.path(SF)
     before = {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
-    pair_index(spark, SF).count()
+    PAIR_INDEX.read(spark, SF).count()
     after = {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
     assert before == after, "a fresh read must not rewrite the artifact"
-
-
-def test_revision_token_is_in_the_path():
-    # bumping PAIR_INDEX_REV must change the artifact location, so stale
-    # snapshots from older derivation code can never be read
-    assert PAIR_INDEX_REV in pair_index_path(SF)
-
-
-def test_corpus_fingerprint_is_in_the_path():
-    # regenerating the fixture under the same sf_dir must change the
-    # artifact location (ADVICE r10): the subpath carries a fingerprint
-    # of documents.parquet (mtime+size), distinct per corpus
-    from kafka_stream_service_spark.queries.dedup2 import _documents_fingerprint
-
-    fp = _documents_fingerprint(SF)
-    assert fp in pair_index_path(SF)
-    assert fp != _documents_fingerprint("/root/testdata/sf0.01")
 
 
 def test_expression_signature_equals_typed_signature(spark):
@@ -110,13 +90,42 @@ def test_expression_signature_equals_typed_signature(spark):
     assert expr_sigs == typed_sigs
 
 
-def test_build_publishes_atomically(spark):
-    # the build writes to a temp sibling and renames the COMPLETE dir
-    # into place — after it returns, the final path holds _SUCCESS and
-    # no temp sibling remains (readers can never see a partial rewrite)
-    build_pair_index(spark, SF)
-    path = pair_index_path(SF)
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    parent = os.path.dirname(path)
-    leftovers = [n for n in os.listdir(parent) if ".tmp." in n]
-    assert not leftovers, f"temp publication dirs left behind: {leftovers}"
+def test_pair_consumers_scan_the_snapshot(spark):
+    """Consumers must READ the persisted pair index, not re-derive the
+    LSH pipeline. The consumers' own plans hide the scan behind a
+    lineage-truncating localCheckpoint (Scan ExistingRDD), so assert at
+    the PAIR_INDEX.read seam they all call: with the artifact present,
+    its plan is a parquet scan of the snapshot path and contains NO
+    aggregation (the derivation's signature shape)."""
+    PAIR_INDEX.build(spark, SF)
+    plan = physical_plan(PAIR_INDEX.read(spark, SF))
+    token = PAIR_INDEX.path(SF).rsplit("/", 1)[-1]
+    assert token in plan, "PAIR_INDEX.read does not scan the snapshot path"
+    assert "Aggregate" not in plan and "HashAggregate" not in plan, (
+        "PAIR_INDEX.read re-derives instead of reading the artifact"
+    )
+
+
+def test_bucket_index_seam_is_a_parquet_scan(spark):
+    """BUCKET_INDEX.read with the artifact present must be a pure
+    parquet read of the banded table — no signature derivation
+    (aggregate) anywhere in its plan."""
+    BUCKET_INDEX.build(spark, SF)
+    plan = physical_plan(BUCKET_INDEX.read(spark, SF))
+    token = BUCKET_INDEX.path(SF).rsplit("/", 1)[-1]
+    assert token in plan, "BUCKET_INDEX.read does not scan the stored artifact"
+    assert "Aggregate" not in plan and "HashAggregate" not in plan, (
+        "BUCKET_INDEX.read re-derives instead of reading the artifact"
+    )
+
+
+def test_delta_probe_reads_stored_buckets(spark):
+    """q_pair_index_delta (VERDICT r10 #2) must probe the STORED bucket
+    index: with the artifact present, its plan scans the buckets
+    parquet directly (the probe side's shingle scans hide behind
+    localCheckpoint, but the stored side is a plain read)."""
+    # plans after building the stored artifact, so it keeps its own build
+    BUCKET_INDEX.build(spark, SF)
+    plan = physical_plan(QUERIES["q_pair_index_delta"].spark_fn(spark, SF))
+    token = BUCKET_INDEX.path(SF).rsplit("/", 1)[-1]
+    assert token in plan, "delta probe does not read the stored bucket index"

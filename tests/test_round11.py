@@ -8,44 +8,22 @@ an independent Spark-side brute-force equality at sf0.001.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import functions as F
 
 from kafka_stream_service_spark.queries.registry import QUERIES
 from kafka_stream_service_spark.queries.round11 import (
     _SEM_DELTA_MOD,
     _SEM_DELTA_REM,
-    SEM_INDEX_REV,
-    build_sem_index,
-    sem_index,
-    sem_index_path,
+    SEM_INDEX,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
-def _wipe() -> None:
-    shutil.rmtree(os.path.dirname(sem_index_path(SF)), ignore_errors=True)
-
-
-def test_sem_index_self_heals_and_is_atomic(spark):
-    _wipe()
-    assert not os.path.exists(sem_index_path(SF))
-    got = sem_index(spark, SF)
-    path = sem_index_path(SF)
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    assert got.count() > 0
-    leftovers = [n for n in os.listdir(os.path.dirname(path)) if ".tmp." in n]
-    assert not leftovers, f"temp publication dirs left behind: {leftovers}"
-    assert SEM_INDEX_REV in path
-
-
 def test_sem_index_matches_live_assignment(spark):
     from kafka_stream_service_spark.queries.clustering import _assignments
 
-    idx = build_sem_index(spark, SF)
+    idx = SEM_INDEX.build(spark, SF)
     live = _assignments(spark, SF)
     got = {(r.vec_id, r.centroid_id) for r in idx.select("vec_id", "centroid_id").collect()}
     want = {(r.vec_id, r.centroid_id) for r in live.select("vec_id", "centroid_id").collect()}
@@ -59,7 +37,7 @@ def test_delta_edges_equal_bruteforce_intra_cluster_pairs(spark):
     against DuckDB; this pins it Spark-vs-Spark with a different plan)."""
     from kafka_stream_service_spark.queries.round10 import _SEM_TAU2_BP
 
-    idx = build_sem_index(spark, SF)
+    idx = SEM_INDEX.build(spark, SF)
     idot = lambda u, v: F.aggregate(  # noqa: E731
         F.zip_with(u, v, lambda a, b: a.cast("bigint") * b.cast("bigint")),
         F.lit(0).cast("bigint"),
@@ -113,19 +91,19 @@ def test_delta_probe_reads_stored_index(spark):
     from kafka_stream_service_spark.plans import physical_plan
 
     # plans after building the stored artifact, so it keeps its own build
-    build_sem_index(spark, SF)
+    SEM_INDEX.build(spark, SF)
     plan = physical_plan(QUERIES["q_semdedup_delta_edges"].spark_fn(spark, SF))
-    token = sem_index_path(SF).rsplit("/", 1)[-1]
+    token = SEM_INDEX.path(SF).rsplit("/", 1)[-1]
     assert token in plan, "delta probe does not read the stored semantic index"
 
 
 def test_sem_index_seam_is_a_parquet_scan(spark):
     from kafka_stream_service_spark.plans import physical_plan
 
-    build_sem_index(spark, SF)
-    plan = physical_plan(sem_index(spark, SF))
-    token = sem_index_path(SF).rsplit("/", 1)[-1]
+    SEM_INDEX.build(spark, SF)
+    plan = physical_plan(SEM_INDEX.read(spark, SF))
+    token = SEM_INDEX.path(SF).rsplit("/", 1)[-1]
     assert token in plan
     assert "Aggregate" not in plan and "HashAggregate" not in plan, (
-        "sem_index() re-derives instead of reading the artifact"
+        "SEM_INDEX.read re-derives instead of reading the artifact"
     )

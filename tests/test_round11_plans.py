@@ -41,15 +41,12 @@ def test_round11_ops_shuffle_budget(catalog_sweep, name, max_exchanges):
 def test_ivf_stored_reads_index_and_broadcasts_probes(spark):
     """The serving path must read the index parquet (member side) and
     broadcast the tiny probe/query frames — never shuffle the index."""
-    from kafka_stream_service_spark.queries.round11 import (
-        build_sem_index,
-        sem_index_path,
-    )
+    from kafka_stream_service_spark.queries.round11 import SEM_INDEX
 
     # plans after building the stored artifact, so it keeps its own build
-    build_sem_index(spark, SF)
+    SEM_INDEX.build(spark, SF)
     plan = physical_plan(QUERIES["q_knn_ivf_stored"].spark_fn(spark, SF))
-    token = sem_index_path(SF).rsplit("/", 1)[-1]
+    token = SEM_INDEX.path(SF).rsplit("/", 1)[-1]
     assert token in plan, "serving path does not scan the stored index"
     assert "BroadcastExchange" in plan, "probe/query frames are not broadcast"
 
@@ -57,15 +54,12 @@ def test_ivf_stored_reads_index_and_broadcasts_probes(spark):
 def test_rouge2_reads_pair_snapshot(spark):
     """ROUGE-2 is a snapshot consumer: with the artifact present its
     plan scans the pair parquet (the seam test pattern)."""
-    from kafka_stream_service_spark.queries.dedup2 import (
-        build_pair_index,
-        pair_index_path,
-    )
+    from kafka_stream_service_spark.queries.dedup2 import PAIR_INDEX
 
     # plans after building the stored artifact, so it keeps its own build
-    build_pair_index(spark, SF)
+    PAIR_INDEX.build(spark, SF)
     plan = physical_plan(QUERIES["q_rouge2_pair_scores"].spark_fn(spark, SF))
-    token = pair_index_path(SF).rsplit("/", 1)[-1]
+    token = PAIR_INDEX.path(SF).rsplit("/", 1)[-1]
     assert token in plan, "q_rouge2_pair_scores does not read the pair snapshot"
 
 
@@ -82,15 +76,12 @@ def test_round11_batch56_shuffle_budget(catalog_sweep, name, max_exchanges):
 def test_bm25_serving_reads_stored_postings(spark):
     """The BM25 serving probe must read the postings parquet with the
     token filter PUSHED to the scan (zone-map pruning at 100 TB)."""
-    from kafka_stream_service_spark.queries.round11f import (
-        build_text_index,
-        text_index_path,
-    )
+    from kafka_stream_service_spark.queries.round11f import TEXT_INDEX
 
     # plans after building the stored artifact, so it keeps its own build
-    build_text_index(spark, SF)
+    TEXT_INDEX.build(spark, SF)
     plan = physical_plan(QUERIES["q_bm25_stored_index"].spark_fn(spark, SF))
-    token = text_index_path(SF).rsplit("/", 1)[-1]
+    token = TEXT_INDEX.path(SF).rsplit("/", 1)[-1]
     assert token in plan, "serving probe does not read the stored text index"
     assert "PushedFilters: [In(token" in plan or "PushedFilters: [IsNotNull(token" in plan, (
         f"token filter not pushed to the postings scan:\n{plan}"
@@ -98,74 +89,41 @@ def test_bm25_serving_reads_stored_postings(spark):
 
 
 def test_text_index_lifecycle(spark):
-    """Self-healing build, artifact-level _SUCCESS gate, no temp
-    leftovers, revision+fingerprint in the path (the shared artifact
-    contract of the pair/bucket/semantic indexes)."""
-    import os
-    import shutil
+    """The serving index's parts: one stats row, non-empty postings
+    (with the denormalized df) and doclen. The lifecycle every stored
+    index shares is in tests/test_stored.py."""
+    from kafka_stream_service_spark.queries.round11f import TEXT_INDEX
 
-    from kafka_stream_service_spark.queries.round11f import (
-        TEXT_INDEX_REV,
-        text_index,
-        text_index_path,
-    )
-
-    path = text_index_path(SF)
-    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-    idx = text_index(spark, SF)
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    assert TEXT_INDEX_REV in path
+    idx = TEXT_INDEX.read(spark, SF)
     assert idx["stats"].count() == 1
+    assert "df" in idx["postings"].columns
     assert idx["postings"].count() > 0 and idx["doclen"].count() > 0
-    leftovers = [n for n in os.listdir(os.path.dirname(path)) if ".tmp." in n]
-    assert not leftovers, f"temp publication dirs left behind: {leftovers}"
-    # a second read must not rebuild (mtimes stable)
-    before = {
-        f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)
-    }
-    text_index(spark, SF)["postings"].count()
-    after = {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
-    assert before == after
 
 
 def test_text_index_delta_reads_stored_base(spark):
     """The refresh probe must read the BASE index parquet (the seam
     that proves merge-not-rebuild) and scan the corpus only for the
     delta slice."""
-    from kafka_stream_service_spark.queries.round11n import (
-        build_text_base_index,
-        text_base_index_path,
-    )
+    from kafka_stream_service_spark.queries.round11n import TEXT_BASE_INDEX
 
     # plans after building the stored artifact, so it keeps its own build
-    build_text_base_index(spark, SF)
+    TEXT_BASE_INDEX.build(spark, SF)
     plan = physical_plan(QUERIES["q_text_index_delta"].spark_fn(spark, SF))
-    token = text_base_index_path(SF).rsplit("/", 1)[-1]
+    token = TEXT_BASE_INDEX.path(SF).rsplit("/", 1)[-1]
     assert token in plan, "refresh probe does not read the stored base index"
     n = count_shuffle_exchanges(plan)
     assert n <= 3, f"refresh probe plans {n} keyed shuffles (budget 3):\n{plan}"
 
 
 def test_text_base_artifact_lifecycle(spark):
-    """Base-index artifact contract: self-healing build, _SUCCESS gate,
-    no temp leftovers, postings EXCLUDE the delta slice and carry df
+    """Base-index parts: postings EXCLUDE the delta slice and carry df
     NORMALIZED (no df column — the refresh-path schema choice the
-    docstring commits to)."""
-    import os
-    import shutil
-
+    declaration commits to). The lifecycle every stored index shares
+    is in tests/test_stored.py."""
     from kafka_stream_service_spark.queries.round10b import _DELTA_MOD, _DELTA_REM
-    from kafka_stream_service_spark.queries.round11n import (
-        TEXT_BASE_REV,
-        text_base_index,
-        text_base_index_path,
-    )
+    from kafka_stream_service_spark.queries.round11n import TEXT_BASE_INDEX
 
-    path = text_base_index_path(SF)
-    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-    idx = text_base_index(spark, SF)
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    assert TEXT_BASE_REV in path
+    idx = TEXT_BASE_INDEX.read(spark, SF)
     assert "df" not in idx["postings"].columns
     assert (
         idx["postings"]
@@ -174,8 +132,6 @@ def test_text_base_artifact_lifecycle(spark):
         == 0
     ), "base postings leak delta-slice docs"
     assert idx["stats"].count() == 1
-    leftovers = [n for n in os.listdir(os.path.dirname(path)) if ".tmp." in n]
-    assert not leftovers, f"temp publication dirs left behind: {leftovers}"
 
 
 def test_text_index_delta_untouched_tokens_unchanged(spark):
@@ -183,10 +139,10 @@ def test_text_index_delta_untouched_tokens_unchanged(spark):
     identical (df, sum_tf) in the base census and a full-corpus census
     — the merge only ever touches delta-vocabulary rows."""
     from kafka_stream_service_spark.queries.round10b import _DELTA_MOD, _DELTA_REM
-    from kafka_stream_service_spark.queries.round11n import text_base_index
+    from kafka_stream_service_spark.queries.round11n import TEXT_BASE_INDEX
     from kafka_stream_service_spark.tables import tables
 
-    base = text_base_index(spark, SF)["postings"]
+    base = TEXT_BASE_INDEX.read(spark, SF)["postings"]
     base_census = base.groupBy("token").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("sum_tf")
     )
@@ -215,15 +171,12 @@ def test_bm25_after_refresh_reads_base_with_pushed_terms(spark):
     """The refresh-serving probe must read the BASE postings parquet
     with the query-term filter PUSHED to the scan (zone-map pruning),
     and stay within its shuffle budget."""
-    from kafka_stream_service_spark.queries.round11n import (
-        build_text_base_index,
-        text_base_index_path,
-    )
+    from kafka_stream_service_spark.queries.round11n import TEXT_BASE_INDEX
 
     # plans after building the stored artifact, so it keeps its own build
-    build_text_base_index(spark, SF)
+    TEXT_BASE_INDEX.build(spark, SF)
     plan = physical_plan(QUERIES["q_bm25_after_refresh"].spark_fn(spark, SF))
-    token = text_base_index_path(SF).rsplit("/", 1)[-1]
+    token = TEXT_BASE_INDEX.path(SF).rsplit("/", 1)[-1]
     assert token in plan, "refresh serving does not read the stored base index"
     assert "In(token" in plan, f"token filter not pushed to the base scan:\n{plan}"
     n = count_shuffle_exchanges(plan)

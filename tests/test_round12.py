@@ -19,8 +19,8 @@ from kafka_stream_service_spark.plans import (
     count_shuffle_exchanges,
     physical_plan,
 )
-from kafka_stream_service_spark.queries._util import publish_atomic, snapshot_dir
 from kafka_stream_service_spark.queries.registry import QUERIES
+from kafka_stream_service_spark.queries.stored import publish_atomic, snapshot_dir
 
 SF = "/root/testdata/sf0.001"
 TAG = "gc_unit"
@@ -40,7 +40,7 @@ def _publish_revs(spark, root: str, n: int) -> list[str]:
     paths = []
     for i in range(n):
         out = os.path.join(root, f"rev{i}")
-        publish_atomic(spark.range(i + 1).select(F.col("id")), out)
+        publish_atomic(out, (spark.range(i + 1).select(F.col("id")), ()))
         os.utime(out, (now - 600 + i * 60, now - 600 + i * 60))
         paths.append(out)
     return paths
@@ -157,15 +157,12 @@ def test_ivf_refresh_reads_stored_base_index(spark):
     centroids come from parquet — the seam that proves
     assign-to-STORED-centroids, not re-derivation) and never plan an
     index-side shuffle beyond the census rollup."""
-    from kafka_stream_service_spark.queries.round12 import (
-        build_ivf_base_index,
-        ivf_base_index_path,
-    )
+    from kafka_stream_service_spark.queries.round12 import IVF_BASE_INDEX
 
     # plans after building the stored artifact, so it keeps its own build
-    build_ivf_base_index(spark, SF)
+    IVF_BASE_INDEX.build(spark, SF)
     plan = physical_plan(QUERIES["q_knn_ivf_refresh"].spark_fn(spark, SF))
-    token = ivf_base_index_path(SF).rsplit("/", 1)[-1]
+    token = IVF_BASE_INDEX.path(SF).rsplit("/", 1)[-1]
     assert plan.count(token) >= 2, (
         "refresh probe must scan BOTH artifact parts (members + centroids) "
         f"of the stored base index:\n{plan}"
@@ -180,10 +177,10 @@ def test_ivf_refresh_census_read_is_zone_map_pruned(spark):
     PushedFilter — file/row-group zone-map skipping on the
     range-partitioned, centroid-sorted artifact — not as a post-scan
     broadcast-join filter (the r12 shape, which read every member row)."""
-    from kafka_stream_service_spark.queries.round12 import build_ivf_base_index
+    from kafka_stream_service_spark.queries.round12 import IVF_BASE_INDEX
 
     # plans after building the stored artifact, so it keeps its own build
-    build_ivf_base_index(spark, SF)
+    IVF_BASE_INDEX.build(spark, SF)
     plan = physical_plan(QUERIES["q_knn_ivf_refresh"].spark_fn(spark, SF))
     pushed = [
         ln
@@ -211,11 +208,7 @@ def test_ivf_superseded_revisions_are_swept_on_build(spark):
     import shutil
     import time as _time
 
-    from kafka_stream_service_spark.queries._util import snapshot_dir
-    from kafka_stream_service_spark.queries.round12 import (
-        build_ivf_base_index,
-        ivf_base_index_path,
-    )
+    from kafka_stream_service_spark.queries.round12 import IVF_BASE_INDEX
 
     root = snapshot_dir("ivf_base", SF)
     old = os.path.join(root, "r1k8d10r7_feedc0de")
@@ -224,38 +217,35 @@ def test_ivf_superseded_revisions_are_swept_on_build(spark):
     os.makedirs(fresh, exist_ok=True)
     stale_t = _time.time() - 7200
     os.utime(old, (stale_t, stale_t))
-    catalog = build_ivf_base_index(spark, SF)
+    IVF_BASE_INDEX.build(spark, SF)
+    catalog = IVF_BASE_INDEX.path(SF)
     os.utime(catalog, (stale_t, stale_t))  # stale-aged catalog artifact
-    build_ivf_base_index(spark, SF)  # no-op rebuild -> sweep runs
+    IVF_BASE_INDEX.build(spark, SF)  # no-op rebuild -> sweep runs
     assert not os.path.exists(old), "stale superseded revision must be swept"
     assert os.path.exists(fresh), "fresh sibling (live probe variant) must survive"
     assert os.path.exists(catalog), "catalog artifact is pinned regardless of age"
-    assert ivf_base_index_path(SF) == catalog
     shutil.rmtree(fresh, ignore_errors=True)
 
 
 def test_ivf_refresh_does_not_rewrite_the_artifact(spark):
-    from kafka_stream_service_spark.queries.round12 import (
-        build_ivf_base_index,
-        ivf_base_index_path,
-    )
+    from kafka_stream_service_spark.queries.round12 import IVF_BASE_INDEX
 
-    path = build_ivf_base_index(spark, SF)
+    IVF_BASE_INDEX.build(spark, SF)
+    path = IVF_BASE_INDEX.path(SF)
     before = {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
     QUERIES["q_knn_ivf_refresh"].spark_fn(spark, SF).count()
     after = {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
     assert before == after
-    assert ivf_base_index_path(SF) == path
 
 
 def test_ivf_base_members_exclude_delta_slice(spark):
     from kafka_stream_service_spark.queries.round12 import (
+        IVF_BASE_INDEX,
         IVF_DELTA_MOD,
         IVF_DELTA_REM,
-        ivf_base_index,
     )
 
-    members = ivf_base_index(spark, SF)["members"]
+    members = IVF_BASE_INDEX.read(spark, SF)["members"]
     n_delta = members.filter(
         (F.col("vec_id") % IVF_DELTA_MOD) == IVF_DELTA_REM
     ).count()
@@ -333,49 +323,6 @@ def test_ivf_refresh_merge_equals_rebuild_on_touched_lists(spark):
         .collect()
     }
     assert probe == rebuild
-
-
-def test_gc_all_known_indexes_pins_live_artifacts(spark):
-    """The production retention pass must keep each tag's LIVE artifact
-    (the path current code resolves to) even when it is the OLDEST dir
-    in the family — the post-rollback state recency-only retention
-    would destroy."""
-    import shutil
-    import time as _time
-
-    from kafka_stream_service_spark.operators.retention import (
-        gc_all_known_indexes,
-    )
-    from kafka_stream_service_spark.queries.round12 import (
-        build_ivf_base_index,
-        ivf_base_index_path,
-    )
-
-    live = build_ivf_base_index(spark, SF)
-    root = os.path.dirname(live)
-    now = _time.time()
-    os.utime(live, (now - 9000, now - 9000))  # live artifact = oldest
-    decoys = []
-    for i in range(3):  # three newer decoy revisions
-        d = os.path.join(root, f"r0decoy{i}_deadbeef")
-        os.makedirs(d, exist_ok=True)
-        open(os.path.join(d, "_SUCCESS"), "w").close()
-        os.utime(d, (now - 600 + i * 60, now - 600 + i * 60))
-        decoys.append(d)
-    reports = gc_all_known_indexes(SF, keep_latest=1)
-    try:
-        assert os.path.exists(os.path.join(live, "_SUCCESS")), (
-            "GC deleted the LIVE (pinned) artifact"
-        )
-        rep = reports["ivf_base"]
-        assert os.path.basename(live) in rep.kept
-        # newest decoy survives as the keep_latest slot; older two die
-        assert os.path.exists(decoys[2])
-        assert not os.path.exists(decoys[0]) and not os.path.exists(decoys[1])
-        assert ivf_base_index_path(SF) == live
-    finally:
-        for d in decoys:
-            shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

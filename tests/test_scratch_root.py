@@ -10,7 +10,7 @@ import tempfile
 
 import pytest
 
-from kafka_stream_service_spark.queries import _util
+from kafka_stream_service_spark.queries import _util, stored
 
 
 @pytest.fixture
@@ -26,7 +26,7 @@ def test_symlinked_root_is_refused(tmp_root):
     with pytest.raises(RuntimeError, match="refusing"):
         _util.work_dir("t", "sf")
     with pytest.raises(RuntimeError, match="refusing"):
-        _util.snapshot_dir("t", "sf")
+        stored.snapshot_dir("t", "sf")
     assert list(elsewhere.iterdir()) == []
 
 
@@ -38,16 +38,16 @@ def test_root_owned_by_another_user_is_refused(tmp_root, monkeypatch):
     with pytest.raises(RuntimeError, match="refusing"):
         _util.work_dir("t", "sf")
     with pytest.raises(RuntimeError, match="refusing"):
-        _util.snapshot_dir("t", "sf")
+        stored.snapshot_dir("t", "sf")
 
 
 def test_work_dir_wipes_and_snapshot_dir_keeps(tmp_root):
     root = tmp_root / f"kssp_work_{os.getuid()}"
     w = _util.work_dir("t", "sf")
-    s = _util.snapshot_dir("t", "sf")
+    s = stored.snapshot_dir("t", "sf")
     assert os.path.dirname(w) == os.path.dirname(s) == str(root)
     assert oct(root.stat().st_mode & 0o777) == "0o700"
     for d in (w, s):
         open(os.path.join(d, "f"), "w").close()
     assert os.listdir(_util.work_dir("t", "sf")) == []
-    assert os.listdir(_util.snapshot_dir("t", "sf")) == ["f"]
+    assert os.listdir(stored.snapshot_dir("t", "sf")) == ["f"]

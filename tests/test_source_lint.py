@@ -346,16 +346,16 @@ def test_one_test_helper_builds_the_catalog():
 # registered row itself only when the plan depends on a stored artifact
 # it builds first; each such test is named here with that artifact.
 _OWN_PLAN_BUILD = {
-    ("test_round10_plans.py", "test_delta_probe_reads_stored_buckets"): "build_bucket_index",
-    ("test_round11.py", "test_delta_probe_reads_stored_index"): "build_sem_index",
-    ("test_round11_plans.py", "test_ivf_stored_reads_index_and_broadcasts_probes"): "build_sem_index",
-    ("test_round11_plans.py", "test_rouge2_reads_pair_snapshot"): "build_pair_index",
-    ("test_round11_plans.py", "test_bm25_serving_reads_stored_postings"): "build_text_index",
-    ("test_round11_plans.py", "test_text_index_delta_reads_stored_base"): "build_text_base_index",
+    ("test_pair_index.py", "test_delta_probe_reads_stored_buckets"): "BUCKET_INDEX",
+    ("test_round11.py", "test_delta_probe_reads_stored_index"): "SEM_INDEX",
+    ("test_round11_plans.py", "test_ivf_stored_reads_index_and_broadcasts_probes"): "SEM_INDEX",
+    ("test_round11_plans.py", "test_rouge2_reads_pair_snapshot"): "PAIR_INDEX",
+    ("test_round11_plans.py", "test_bm25_serving_reads_stored_postings"): "TEXT_INDEX",
+    ("test_round11_plans.py", "test_text_index_delta_reads_stored_base"): "TEXT_BASE_INDEX",
     ("test_round11_plans.py", "test_bm25_after_refresh_reads_base_with_pushed_terms"):
-        "build_text_base_index",
-    ("test_round12.py", "test_ivf_refresh_reads_stored_base_index"): "build_ivf_base_index",
-    ("test_round12.py", "test_ivf_refresh_census_read_is_zone_map_pruned"): "build_ivf_base_index",
+        "TEXT_BASE_INDEX",
+    ("test_round12.py", "test_ivf_refresh_reads_stored_base_index"): "IVF_BASE_INDEX",
+    ("test_round12.py", "test_ivf_refresh_census_read_is_zone_map_pruned"): "IVF_BASE_INDEX",
 }
 _PLAN_READERS = {"physical_plan", "count_shuffle_exchanges"}
 
@@ -539,4 +539,57 @@ def test_plan_cuts_go_through_the_barrier():
     assert not hits, (
         "cut a plan with plans.barrier.barrier(df, <reason literal>), so the "
         f"reason is stated and the catalog sweep sees the cut plan: {hits}"
+    )
+
+
+# ---------------------------------------------------------------------------
+# One stored-artifact module
+# ---------------------------------------------------------------------------
+
+# A stored index is a StoredIndex declaration; queries/stored.py owns its
+# path, its publish and its read-back. Retention lists artifact families,
+# and q_snapshot_gc_census builds a demo family to certify it. Nothing
+# else makes a snapshot path, publishes one or reads a commit marker, so
+# a new artifact cannot grow a second publish path.
+_STORED_OWNERS = {
+    (Path("queries") / "stored.py", None),
+    (Path("operators") / "retention.py", None),
+    (Path("queries") / "round12.py", "q_snapshot_gc_census"),
+}
+_STORED_CALLS = {"snapshot_dir", "publish_atomic"}
+
+
+def _stored_sites(pkg: Path) -> list[str]:
+    """Calls of ``snapshot_dir``/``publish_atomic`` and ``"_SUCCESS"``
+    literals outside the owners, under the package at ``pkg``."""
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg)
+        if (rel, None) in _STORED_OWNERS:
+            continue
+        tree = ast.parse(path.read_text())
+        owned = {
+            id(n)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.FunctionDef) and (rel, node.name) in _STORED_OWNERS
+            for n in ast.walk(node)
+        }
+        for node in ast.walk(tree):
+            if id(node) in owned:
+                continue
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+                if name in _STORED_CALLS:
+                    hits.append(f"{rel}:{node.lineno}: {name}(")
+            elif isinstance(node, ast.Constant) and node.value == "_SUCCESS":
+                hits.append(f"{rel}:{node.lineno}: reads _SUCCESS")
+    return hits
+
+
+def test_stored_artifacts_go_through_the_stored_module():
+    hits = _stored_sites(PKG)
+    assert not hits, (
+        "declare a stored index with queries.stored.StoredIndex and read it "
+        f"with .read(spark, sf_dir); its path, publish and marker are the module's: {hits}"
     )

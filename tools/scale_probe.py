@@ -28,8 +28,8 @@ with the declared schema, as it reads the fixtures.
 
 Time the shards with the A/B runner, one leg per multiple. Its median of
 three passes drops the first, which also builds any stored index a row
-reads (``sem_index``, ``text_base_index``, ``ivf_base_index`` build
-themselves when absent), so the median is the steady-state refresh:
+reads (a ``queries/stored.py`` index builds itself when absent), so
+the median is the steady-state refresh:
 
     python tools/scale_probe.py build /tmp/shards 1 4 16
     for m in 1 4 16; do
